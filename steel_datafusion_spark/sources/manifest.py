@@ -1328,7 +1328,8 @@ def _finalize_stats(data_dir: str, scols: list[str],
     """Write the sidecar for a fully-written (pre-commit) version dir and
     return the commit-meta fragment; columns dropped by the write are
     dropped from the stat set rather than erroring.  ``base_dir`` turns
-    on hardlink carry-forward (see ``_collect_file_stats``)."""
+    on hardlink carry-forward (see ``_write_stats_file`` and
+    ``filestats.build_stats_table``)."""
     present = [c for c in scols if c in columns]
     if not present:
         return {}
@@ -1560,7 +1561,11 @@ def manifest_upsert(spark: SparkSession, root: str, updates: DataFrame,
     reads, no mixed-footer versions.  Unsupported with ``partition_by``
     (hardlinked untouched partitions would keep the old schema inside
     the same version — a mixed-schema snapshot readers would need
-    mergeSchema for; evolve partitioned tables with a full rewrite)."""
+    mergeSchema for; evolve partitioned tables with a full rewrite).
+    The table-granular rewrite (no ``partition_by``) does not preserve
+    per-file clustering — Spark's scan packing decides which key ranges
+    share an output file — so stats pruning may keep more files than
+    before while results stay exact."""
     from pyspark.sql import functions as F
 
     from .readers import _hive_part_path, read_parquet

@@ -58,6 +58,30 @@ def _downgrade_stats_to_legacy_json(data_dir, splits=True,
     os.unlink(stats_parquet_path(data_dir))
 
 
+def _footer_may_contain(path, col, val):
+    """May the data file at ``path`` hold ``col == val``, judged from its
+    own parquet footer (read here, independent of any sidecar)?  The
+    row groups' min/max aggregate to one file range, as the stats
+    sidecar keeps them; a row group without min/max makes the whole
+    file may-contain."""
+    import pyarrow.parquet as pq
+
+    md = pq.ParquetFile(path).metadata
+    lo = hi = None
+    for rgi in range(md.num_row_groups):
+        rg = md.row_group(rgi)
+        for ci in range(md.num_columns):
+            cm = rg.column(ci)
+            if cm.path_in_schema != col:
+                continue
+            st = cm.statistics
+            if st is None or not st.has_min_max:
+                return True
+            lo = st.min if lo is None else min(lo, st.min)
+            hi = st.max if hi is None else max(hi, st.max)
+    return lo is None or lo <= val <= hi
+
+
 def _downgrade_bloom_to_legacy_json(data_dir, col):
     """Convert one column's _bloom-<col>.parquet into the pre-r13
     per-column JSON sidecar (b64 filter bytes), deleting the parquet."""
@@ -1592,13 +1616,16 @@ def test_stats_legacy_combined_sidecar_still_prunes(spark, tmp_path):
     format) keeps pruning through the legacy fallback, and the NEXT
     writer's carry-forward lifts the JSON entries into the parquet
     format without rescanning untouched files."""
+    import urllib.parse
+
+    import pyarrow.parquet as pq
     from pyspark.sql import functions as F
 
     from steel_datafusion_spark.sources.filestats import (
         stats_parquet_path,
     )
     from steel_datafusion_spark.sources.manifest import (
-        latest_commit, manifest_upsert, read_table,
+        _iter_data_files, latest_commit, manifest_upsert, read_table,
     )
 
     out = str(tmp_path / "statlegacy")
@@ -1611,14 +1638,50 @@ def test_stats_legacy_combined_sidecar_still_prunes(spark, tmp_path):
     t = read_table(spark, out, where=[("k", "=", 7777)])
     assert len(t.inputFiles()) == 1
     assert t.count() == 1
-    # upgrade-on-write: the next upsert emits _stats.parquet, carrying
-    # the legacy JSON entries for hardlinked files
+    # upgrade-on-write: the next upsert emits _stats.parquet.  This
+    # upsert is unpartitioned, so it rewrites the whole table (nothing
+    # is hardlinked, every entry comes from a footer) and Spark's scan
+    # packing decides which key ranges share a rewritten file — the
+    # check is that pruning keeps exactly the files whose own footers
+    # may hold the key, not that one file survives
     upd = df.filter(F.col("k") < 10).withColumn("v", F.col("v") + 1)
     manifest_upsert(spark, out, upd, ["k"], keep_versions=10)
     _v2, d2 = latest_commit(out)
     assert os.path.exists(stats_parquet_path(d2))
     t2 = read_table(spark, out, where=[("k", "=", 7777)])
-    assert len(t2.inputFiles()) == 1 and t2.count() == 1
+    assert t2.count() == 1
+    want = {os.path.realpath(p) for _rel, p in _iter_data_files(d2)
+            if _footer_may_contain(p, "k", 7777)}
+    got = {os.path.realpath(urllib.parse.unquote(
+        urllib.parse.urlparse(f).path)) for f in t2.inputFiles()}
+    assert got == want
+
+    # carry-forward of the JSON entries, on the shape that reaches it:
+    # a partitioned upsert hardlinks the untouched partitions' files.
+    # One such file's legacy hi is WIDENED (still correct, never
+    # footer-derivable) — v2's parquet row must carry the widened value
+    outp = str(tmp_path / "statlegacy_part")
+    dfp = df.withColumn("p", (F.col("k") / 2500).cast("int"))
+    manifest_upsert(spark, outp, dfp.repartitionByRange(4, "k"), ["k"],
+                    partition_by=["p"], stats_cols=["k"], keep_versions=10)
+    _vp, dp = latest_commit(outp)
+    _downgrade_stats_to_legacy_json(dp, splits=False)
+    with open(os.path.join(dp, "_stats.json")) as fh:
+        legacy = json.load(fh)
+    marked = sorted(r for r in legacy["files"] if r.startswith("p=0/"))[0]
+    legacy["files"][marked]["cols"]["k"]["hi"] = 10 ** 6
+    with open(os.path.join(dp, "_stats.json"), "w") as fh:
+        json.dump(legacy, fh)
+    updp = dfp.filter(F.col("p") == 1).limit(5) \
+        .withColumn("v", F.col("v") + 1)
+    manifest_upsert(spark, outp, updp, ["k"], partition_by=["p"],
+                    keep_versions=10)
+    _vp2, dp2 = latest_commit(outp)
+    carried = pq.read_table(stats_parquet_path(dp2)).to_pylist()
+    row = next(r for r in carried if r["rel"] == marked)
+    assert row["hi:k"] == 10 ** 6  # carried, not re-read from the footer
+    tp = read_table(spark, outp, where=[("k", "=", 7777)])
+    assert tp.count() == 1
 
 
 def test_bloom_legacy_json_sidecar_still_prunes(spark, tmp_path):
