@@ -31,7 +31,11 @@ from pyspark.sql import functions as F
 
 from ..cache import track
 from ..hints import DEFAULT_BROADCAST_ROWS, broadcast_if_small
-from ..sources.bucketing import write_bucketed
+from ..sources.bucketing import attach_table, write_bucketed
+from ..sources.index_tables import (
+    index_table, locked_verb, recover_swaps, reset_delta, reset_index,
+    swap_table,
+)
 from .text import fingerprint, sql_norm, tokens
 
 __all__ = [
@@ -45,6 +49,9 @@ __all__ = [
     "PERM_CONSTS", "MERSENNE61", "SQL", "DEFAULT_MAX_BUCKET",
     "keep_best_representatives",
 ]
+
+# the persisted index's tables, {name}_{t} (sources/index_tables.py)
+_INDEX_TABLES = ("bands", "shingles", "meta", "hot")
 
 SIMHASH_BITS = 48   # stays well inside signed int64 under ANSI arithmetic
 MERSENNE61 = (1 << 61) - 1
@@ -437,23 +444,12 @@ def build_dedup_index(
     buckets with more members are recorded in a small ``{name}_hot`` table
     (band_idx, band_hash, rep) that every probe broadcasts, so a
     boilerplate flood in the corpus can never make a probe quadratic (see
-    ``_match_batch_to_corpus``)."""
+    ``_match_batch_to_corpus``).
+
+    A build first drops every table, swap and txn record of an earlier
+    index of the same name (``sources/index_tables.reset_index``)."""
     spark = corpus.sparkSession
-    for t in (f"{name}_bands", f"{name}_shingles", f"{name}_meta",
-              f"{name}_hot"):
-        # overwrite alone is not enough: a fresh session may find a stale
-        # warehouse directory with no catalog entry (LOCATION_ALREADY_EXISTS)
-        spark.sql(f"DROP TABLE IF EXISTS `{t}`")
-        try:
-            jvm = spark._jvm
-            path = jvm.org.apache.hadoop.fs.Path(
-                spark.conf.get("spark.sql.warehouse.dir"), t.lower())
-            fs = path.getFileSystem(
-                spark.sparkContext._jsc.hadoopConfiguration())
-            if fs.exists(path):
-                fs.delete(path, True)
-        except Exception:
-            pass  # best-effort; saveAsTable raises a clear error if stuck
+    reset_index(spark, name, _INDEX_TABLES)
     hc = _hashed_shingles(corpus, id_col, text_col, n)
     bc = _banded_table(hc, k, bands, rows).withColumnRenamed(
         "doc_id", "corpus_id")
@@ -471,6 +467,16 @@ def build_dedup_index(
     ).write.saveAsTable(f"{name}_meta")
 
 
+def _hot_table(spark, name: str, meta) -> DataFrame | None:
+    """The flood-guard table of a capped index, through the read path
+    (``sources/index_tables.index_table``); None when the index is
+    uncapped or its meta predates the guard."""
+    cap = None if meta is None else meta.asDict().get("max_bucket")
+    if cap is None or cap < 0:
+        return None
+    return index_table(spark, f"{name}_hot")
+
+
 def dedup_against_index(
     batch: DataFrame, name: str,
     id_col: str = "doc_id", text_col: str = "text",
@@ -482,7 +488,9 @@ def dedup_against_index(
     ``{name}_shingles`` tables — the corpus is never re-shingled or
     re-banded (assert via .explain(): no scan of the raw corpus source).
     Output: (batch_id, corpus_id, jaccard ≥ threshold), same contract as
-    ``minhash_dedup_against``.
+    ``minhash_dedup_against``.  A capped index probes through its
+    ``{name}_hot`` guard.  The probe only reads (``sources/index_tables``
+    rule 3).
 
     Raises ``ValueError`` if (n, k, bands, rows) disagree with the
     parameters recorded by ``build_dedup_index`` in ``{name}_meta`` —
@@ -491,8 +499,9 @@ def dedup_against_index(
     admitting duplicates.  Pre-meta indexes (no ``{name}_meta`` table) skip
     the check for backward compatibility."""
     spark = batch.sparkSession
-    if spark.catalog.tableExists(f"{name}_meta"):
-        meta = spark.table(f"{name}_meta").head()
+    meta = (spark.table(f"{name}_meta").head()
+            if spark.catalog.tableExists(f"{name}_meta") else None)
+    if meta is not None:
         got = (meta["n"], meta["k"], meta["bands"], meta["rows"])
         want = (n, k, bands, rows)
         if got != want:
@@ -501,20 +510,13 @@ def dedup_against_index(
                 f"{got} but probed with {want}; mismatched banding would "
                 "silently miss duplicates — rebuild the index or pass the "
                 "recorded parameters")
-    bc = spark.table(f"{name}_bands")
-    hc = spark.table(f"{name}_shingles")
-    # hot-bucket guard table written by build_dedup_index (absent on
-    # pre-cap or max_bucket=None indexes → uncapped probe, old
-    # behavior); a swap left by a crashed append is healed first so a
-    # capped index never probes unguarded
-    _recover_hot_swap(spark, name)
-    hot = (spark.table(f"{name}_hot")
-           if spark.catalog.tableExists(f"{name}_hot") else None)
+    bc = index_table(spark, f"{name}_bands")
+    hc = index_table(spark, f"{name}_shingles")
     hb = _hashed_shingles(batch, id_col, text_col, n)
     bb = _banded_table(hb, k, bands, rows).toDF(
         "batch_id", "band_idx", "band_hash")
     return _match_batch_to_corpus(hb, bb, hc, bc, threshold, broadcast_batch,
-                                  corpus_hot=hot)
+                                  corpus_hot=_hot_table(spark, name, meta))
 
 
 def attach_dedup_index(spark, name: str) -> bool:
@@ -523,54 +525,15 @@ def attach_dedup_index(spark, name: str) -> bool:
     and the ``_sdf_table.json`` bucket descriptors survive the session
     that built them, so any process — a restarted driver, a second
     concurrent maintainer — can probe and append without rebuilding.
-    A ``dedup_index_compact`` that crashed between an index table's
-    drop and its rename is finished FIRST at directory level, exactly
-    like ``attach_ann_index`` (similarity.py): the ``_cswap`` directory
-    holds the COMPLETE merged table, one ``os.rename`` restores it with
-    no data copy — the in-catalog recovery branch inside
-    ``_dedup_index_compact_locked`` only helps the session that already
-    has the cswap table attached (ADVICE r13).  Returns True iff the
+    A swap that crashed after dropping its table is finished first
+    (``sources/index_tables.recover_swaps``).  Returns True iff the
     core tables (bands, shingles, meta) are reachable; the optional hot
     table attaches when present."""
-    import os as _os
-
-    from ..sources.bucketing import _warehouse_path, attach_table
-
-    for t in ("bands", "shingles"):
-        base = _warehouse_path(spark, f"{name}_{t}")
-        swap = _warehouse_path(spark, f"{name}_{t}_cswap")
-        if not spark.catalog.tableExists(f"{name}_{t}") and \
-                not _os.path.isdir(base) and _os.path.isdir(swap):
-            try:
-                _os.rename(swap, base)
-            except OSError:
-                pass  # lost a concurrent-attach race: the winner already
-                # restored the base dir — fall through to attach_table
+    recover_swaps(spark, name, _INDEX_TABLES)
     ok = all(attach_table(spark, f"{name}_{s}")
              for s in ("bands", "shingles", "meta"))
     attach_table(spark, f"{name}_hot")
-    attach_table(spark, f"{name}_hot_swap")  # crashed-swap recovery input
     return ok
-
-
-def _recover_hot_swap(spark, name: str) -> None:
-    """Finish a hot-table swap that crashed between the drop and the
-    rename: the ``{name}_hot_swap`` table holds the COMPLETE new hot
-    set, so the flood guard is restored by materializing it as the hot
-    table — without this, a crashed ``dedup_index_append`` would leave
-    a capped index with no hot table and every later probe would run
-    unguarded.  Copy-then-drop rather than a metadata rename: the swap
-    may be reached through ``attach_dedup_index`` in a DIFFERENT
-    process, where it registers as an EXTERNAL table and a rename would
-    leave the new name pointing at the old directory that the next
-    append's swap-cleanup deletes.  The hot table is tiny (over-cap
-    buckets only), so the copy is metadata-scale."""
-    if spark.catalog.tableExists(f"{name}_hot_swap") and \
-            not spark.catalog.tableExists(f"{name}_hot"):
-        from ..sources.bucketing import drop_managed_table
-
-        spark.table(f"{name}_hot_swap").write.saveAsTable(f"{name}_hot")
-        drop_managed_table(spark, f"{name}_hot_swap")
 
 
 def _table_num_buckets(spark, table: str) -> int:
@@ -605,25 +568,19 @@ def dedup_index_append(
     Cost per ingest cycle: O(|batch|) shingling + bucketed appends + the
     index-metadata scan — never a re-shingle or re-band of corpus text.
 
-    CONCURRENT APPENDERS SERIALIZE: the whole cycle runs under the
-    per-index advisory lock (``sources/locking.IndexLock`` — lease +
-    heartbeat, clobber-free steal), and each completed cycle appends an
-    O_EXCL transaction record (``log_index_txn``), so two processes
-    appending simultaneously produce the same index as any serial
-    order (appends are commutative row-additions) instead of
-    interleaving staging dirs or racing the hot-table swap.  Not
+    The cycle is a locked verb (``sources/index_tables``): concurrent
+    appenders serialize and each cycle logs a txn record, so two
+    processes appending at once produce the same index as any serial
+    order; the hot table is replaced by ``swap_table``.  Not
     crash-ATOMIC within a cycle: a crash mid-append can still leave
     band rows without posting lists (probes miss the batch; a blind
     re-run would double-insert) — repair by rebuilding, or use
-    ``streaming_dedup_ingest`` for replay-guarded atomic batches.  (The
-    hot-table swap itself IS self-healing — see ``_recover_hot_swap``.)
+    ``streaming_dedup_ingest`` for replay-guarded atomic batches.
 
     Returns ``{"appended_docs": d, "appended_bands": b,
     "hot_buckets": h, "txn": v}`` (h = hot-table size after the merge;
     -1 when the index carries no hot table — max_bucket=None or a
     pre-guard build)."""
-    from ..sources.locking import IndexLock, log_index_txn
-
     spark = batch.sparkSession
     if not spark.catalog.tableExists(f"{name}_meta"):
         raise ValueError(
@@ -631,23 +588,15 @@ def dedup_index_append(
             f"with guessed banding parameters would produce rows that "
             f"never match the stored ones (silently admitting "
             f"duplicates); rebuild with build_dedup_index")
-    with IndexLock(spark, name) as lk:
-        out = _dedup_index_append_locked(batch, name, id_col, text_col)
-        out["txn"] = log_index_txn(
-            spark, name, {"verb": "dedup_index_append", **{
-                k: v for k, v in out.items() if k != "txn"}}, lock=lk)
-    return out
+    return locked_verb(
+        spark, name, _INDEX_TABLES, "dedup_index_append",
+        lambda: _dedup_index_append_locked(batch, name, id_col, text_col))
 
 
 def _dedup_index_append_locked(
     batch: DataFrame, name: str, id_col: str, text_col: str,
 ) -> dict:
     spark = batch.sparkSession
-    for t in ("bands", "shingles", "hot"):
-        # the lock serializes writers but each session caches file
-        # listings per table: see the sibling's completed appends
-        if spark.catalog.tableExists(f"{name}_{t}"):
-            spark.catalog.refreshTable(f"{name}_{t}")
     meta = spark.table(f"{name}_meta").head()
     n, k = int(meta["n"]), int(meta["k"])
     bands, rows = int(meta["bands"]), int(meta["rows"])
@@ -665,11 +614,8 @@ def _dedup_index_append_locked(
                    _table_num_buckets(spark, f"{name}_shingles"),
                    mode="append")
     n_hot = -1
-    _recover_hot_swap(spark, name)
     if max_bucket is not None and \
             spark.catalog.tableExists(f"{name}_hot"):
-        from ..sources.bucketing import drop_managed_table
-
         bkeys = bb.select("band_idx", "band_hash").distinct()
         touched = (spark.table(f"{name}_bands")
                    .join(F.broadcast(bkeys), ["band_idx", "band_hash"])
@@ -681,16 +627,7 @@ def _dedup_index_append_locked(
         new_hot = (spark.table(f"{name}_hot").unionByName(touched)
                    .groupBy("band_idx", "band_hash")
                    .agg(F.min("rep").alias("rep")))
-        # swap-by-rename: one write into the swap name, then a metadata
-        # move — never overwrite a table that feeds its own rewrite; a
-        # crash between the drop and the rename is self-healing (the
-        # swap table holds the complete new hot set — see
-        # _recover_hot_swap above, also called by the probe path)
-        tmp = f"{name}_hot_swap"
-        drop_managed_table(spark, tmp)
-        new_hot.write.saveAsTable(tmp)
-        drop_managed_table(spark, f"{name}_hot")
-        spark.sql(f"ALTER TABLE `{tmp}` RENAME TO `{name}_hot`")
+        swap_table(spark, f"{name}_hot", new_hot.write.saveAsTable)
         n_hot = spark.table(f"{name}_hot").count()
     n_docs = hb.count()
     bb.unpersist()
@@ -708,18 +645,14 @@ def dedup_index_compact(spark, name: str, work_root: str) -> dict:
     - merged bands/shingles = base ∪ delta DEDUPLICATED on their keys
       ((corpus_id, band_idx) / corpus_id), so re-running a compaction
       that crashed mid-way CONVERGES instead of doubling rows;
-    - each table swaps by rename (rewrite into ``_cswap``, metadata
-      move); a crash between the drop and the rename is self-healing —
-      the next call finds the complete swap table and finishes it;
     - the hot flood-guard table is REBUILT EXACTLY over the merged
       bands (one scan of int triples) — this is where the delta's
       guard-only mid-stream occupancy drift (streaming/operators.py
       ``streaming_dedup_ingest``) gets healed;
-    - the delta roots reset to EMPTY versions that CARRY their txn
-      watermarks, so a replayed streaming micro-batch still recognizes
-      itself after compaction instead of re-appending;
-    - the whole cycle runs under the per-index ``IndexLock`` and logs
-      an O_EXCL transaction record.
+    - the delta roots reset to EMPTY versions that carry their txn
+      watermarks (``sources/index_tables.reset_delta``);
+    - the cycle is a locked verb and every table is replaced by
+      ``swap_table`` (``sources/index_tables``).
 
     A probe racing the delta-reset window may briefly see a document in
     both base and delta; the probe paths already collapse duplicate
@@ -728,35 +661,16 @@ def dedup_index_compact(spark, name: str, work_root: str) -> dict:
     O(index-metadata) hot recount.  Returns {"base_bands": n,
     "delta_bands": d, "hot_buckets": h, "delta_reset_versions": [...],
     "txn": t} (h = -1 for uncapped indexes)."""
-    from ..sources.locking import IndexLock, log_index_txn
-
-    with IndexLock(spark, name) as lk:
-        out = _dedup_index_compact_locked(spark, name, work_root)
-        out["txn"] = log_index_txn(
-            spark, name, {"verb": "dedup_index_compact", **{
-                k: v for k, v in out.items() if k != "txn"}}, lock=lk)
-    return out
+    return locked_verb(
+        spark, name, _INDEX_TABLES, "dedup_index_compact",
+        lambda: _dedup_index_compact_locked(spark, name, work_root))
 
 
 def _dedup_index_compact_locked(spark, name: str, work_root: str) -> dict:
     import os as _os
 
-    from ..sources.bucketing import drop_managed_table, write_bucketed
-    from ..sources.manifest import (
-        _inherited_txns, commit_version, is_manifest_root,
-        latest_commit_info, new_version_dir, read_table, vacuum,
-    )
+    from ..sources.manifest import is_manifest_root, read_table
 
-    # finish any crashed swap first: the _cswap table holds the
-    # COMPLETE merged rows for its index table
-    for t in ("bands", "shingles"):
-        if not spark.catalog.tableExists(f"{name}_{t}") and \
-                spark.catalog.tableExists(f"{name}_{t}_cswap"):
-            spark.sql(f"ALTER TABLE `{name}_{t}_cswap` "
-                      f"RENAME TO `{name}_{t}`")
-        if spark.catalog.tableExists(f"{name}_{t}"):
-            spark.catalog.refreshTable(f"{name}_{t}")
-    _recover_hot_swap(spark, name)
     meta = spark.table(f"{name}_meta").head()
     max_bucket = None if meta["max_bucket"] < 0 else int(meta["max_bucket"])
     roots = {"bands": _os.path.join(work_root, "delta_bands"),
@@ -766,52 +680,30 @@ def _dedup_index_compact_locked(spark, name: str, work_root: str) -> dict:
     bucket_col = {"bands": "band_hash", "shingles": "corpus_id"}
     sort_cols = {"bands": ["band_hash"], "shingles": None}
     d_rows = 0
-    reset_versions: list[int] = []
     live_roots = {t: r for t, r in roots.items() if is_manifest_root(r)}
     if live_roots:
         for t in ("bands", "shingles"):
-            base = spark.table(f"{name}_{t}")
-            root = roots[t]
+            table = f"{name}_{t}"
+            merged = spark.table(table)
             if t in live_roots:
-                delta = read_table(spark, root).select(*base.columns)
+                delta = read_table(spark, live_roots[t]) \
+                    .select(*merged.columns)
                 if t == "bands":
                     d_rows = delta.count()
-                merged = (base.unionByName(delta)
-                          .dropDuplicates(keys[t]))
-            else:
-                merged = base.dropDuplicates(keys[t])
-            swap = f"{name}_{t}_cswap"
-            drop_managed_table(spark, swap)
-            write_bucketed(merged, swap, [bucket_col[t]],
-                           _table_num_buckets(spark, f"{name}_{t}"),
-                           sort_cols=sort_cols[t])
-            drop_managed_table(spark, f"{name}_{t}")
-            spark.sql(f"ALTER TABLE `{swap}` RENAME TO `{name}_{t}`")
+                merged = merged.unionByName(delta)
+            merged = merged.dropDuplicates(keys[t])
+            n_buckets = _table_num_buckets(spark, table)
+            swap_table(spark, table, lambda swap: write_bucketed(
+                merged, swap, [bucket_col[t]], n_buckets,
+                sort_cols=sort_cols[t]))
     n_hot = -1
     if max_bucket is not None:
-        from ..sources.bucketing import drop_managed_table as _dmt
-
         new_hot = _corpus_hot_buckets(
             spark.table(f"{name}_bands"), max_bucket)
-        tmp = f"{name}_hot_swap"
-        _dmt(spark, tmp)
-        new_hot.write.saveAsTable(tmp)
-        _dmt(spark, f"{name}_hot")
-        spark.sql(f"ALTER TABLE `{tmp}` RENAME TO `{name}_hot`")
+        swap_table(spark, f"{name}_hot", new_hot.write.saveAsTable)
         n_hot = spark.table(f"{name}_hot").count()
-    for t, root in live_roots.items():
-        cur = latest_commit_info(root)
-        version = 1 if cur is None else cur["version"] + 1
-        data_dir = new_version_dir(root, version)
-        read_table(spark, root).limit(0) \
-            .write.mode("append").parquet(data_dir)
-        meta_d: dict = {"compacted_into": name}
-        txns = _inherited_txns(cur)
-        if txns:
-            meta_d["txns"] = txns
-        commit_version(root, version, data_dir, meta=meta_d)
-        vacuum(root, keep=2)
-        reset_versions.append(version)
+    reset_versions = [reset_delta(spark, root, name)
+                      for root in live_roots.values()]
     return {"base_bands": int(spark.table(f"{name}_bands").count()),
             "delta_bands": int(d_rows),
             "hot_buckets": int(n_hot),

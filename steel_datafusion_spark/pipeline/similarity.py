@@ -26,6 +26,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..cache import iteration_barrier, release_local_checkpoint, track
+from ..sources.bucketing import attach_table, write_bucketed
+from ..sources.index_tables import (
+    index_table, locked_verb, recover_swaps, reset_delta, reset_index,
+    swap_table,
+)
 
 __all__ = ["sq8_stats", "sq8_error_stats", "sql_sq8_error_stats",
            "dot", "norm2", "cosine", "cosine_topk", "cosine_neardup_pairs",
@@ -37,6 +42,9 @@ __all__ = ["sq8_stats", "sq8_error_stats", "sql_sq8_error_stats",
            "embedding_covariance", "sql_embedding_covariance",
            "pca_components", "pca_project", "hard_negatives",
            "hard_negatives_ivf", "hard_negatives_index"]
+
+# the persisted index's tables, {name}_{t} (sources/index_tables.py)
+_INDEX_TABLES = ("centroids", "assign", "meta")
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -453,7 +461,10 @@ def build_ann_index(
     a from-scratch rebuild can be made bit-comparable to an
     append-grown index (``ann_index_append`` freezes the quantizer by
     design; a rebuild with the same frozen quantizer must produce the
-    identical assignment)."""
+    identical assignment).
+
+    A build first drops every table, swap and txn record of an earlier
+    index of the same name (``sources/index_tables.reset_index``)."""
     spark = corpus.sparkSession
     if centroids is not None:
         # materialize BEFORE the drops below: the natural in-place
@@ -462,20 +473,7 @@ def build_ann_index(
         # it was meant to rebuild (nlist rows — a trivial collect)
         centroids = spark.createDataFrame(centroids.collect(),
                                           centroids.schema)
-    for t in (f"{name}_centroids", f"{name}_assign", f"{name}_meta"):
-        spark.sql(f"DROP TABLE IF EXISTS `{t}`")
-        try:
-            jvm = spark._jvm
-            path = jvm.org.apache.hadoop.fs.Path(
-                spark.conf.get("spark.sql.warehouse.dir"), t.lower())
-            fs = path.getFileSystem(
-                spark.sparkContext._jsc.hadoopConfiguration())
-            if fs.exists(path):
-                fs.delete(path, True)
-        except Exception:
-            pass  # best-effort; saveAsTable raises a clear error if stuck
-    from ..sources.bucketing import write_bucketed
-
+    reset_index(spark, name, _INDEX_TABLES)
     if centroids is not None:
         train = "given"
         cent, assign = ivf_assign(corpus, nlist, id_col, vec_col,
@@ -529,27 +527,12 @@ def attach_ann_index(spark, name: str) -> bool:
     catalog (``sources/bucketing.attach_table``): the warehouse parquet
     and bucket descriptors outlive the building session, so a restarted
     driver or a second concurrent maintainer can probe/append without
-    rebuilding.  A compaction that crashed mid-swap is finished FIRST at
-    directory level (the swap dir holds the complete merged assignment;
-    one os.rename restores it — no data copy).  Attach before starting
-    concurrent maintenance, not during it.  Returns True iff centroids,
-    assign and meta are reachable."""
-    import os as _os
-
-    from ..sources.bucketing import _warehouse_path, attach_table
-
-    a_path = _warehouse_path(spark, f"{name}_assign")
-    s_path = _warehouse_path(spark, f"{name}_assign_swap")
-    if not spark.catalog.tableExists(f"{name}_assign") and \
-            not _os.path.isdir(a_path) and _os.path.isdir(s_path):
-        try:
-            _os.rename(s_path, a_path)
-        except OSError:
-            pass  # lost a concurrent-attach race: the winner already
-            # restored the base dir — fall through to attach_table
-    attach_table(spark, f"{name}_meta_stage")  # meta-crash recovery input
-    return all(attach_table(spark, f"{name}_{s}")
-               for s in ("centroids", "assign", "meta"))
+    rebuilding.  A swap that crashed after dropping its table is
+    finished first (``sources/index_tables.recover_swaps``).  Attach
+    before starting concurrent maintenance, not during it.  Returns True
+    iff centroids, assign and meta are reachable."""
+    recover_swaps(spark, name, _INDEX_TABLES)
+    return all(attach_table(spark, f"{name}_{s}") for s in _INDEX_TABLES)
 
 
 def ann_index_append(
@@ -612,49 +595,19 @@ def ann_index_append(
     recommendation, schedule a re-train
     (``build_ann_index(train="kmeans")``) during a maintenance window.
 
-    CONCURRENT APPENDERS SERIALIZE: the cycle runs under the per-index
-    advisory lock (``sources/locking.IndexLock`` — lease + heartbeat,
-    clobber-free steal) and logs an O_EXCL transaction record per cycle,
-    so simultaneous appenders yield the same index as any serial order
-    (appends are commutative row-additions) instead of interleaving
-    staging writes.  Not crash-atomic WITHIN a cycle — for atomic,
-    replay-safe batches use ``streaming_ann_index_maintenance``.
+    The cycle is a locked verb (``sources/index_tables``): concurrent
+    appenders serialize and each cycle logs a txn record, so
+    simultaneous appenders yield the same index as any serial order
+    (appends are commutative row-additions); the first append's meta
+    rewrite goes through ``swap_table``.  Not crash-atomic WITHIN a
+    cycle — for atomic, replay-safe batches use
+    ``streaming_ann_index_maintenance``.
     """
-    from ..sources.locking import IndexLock, log_index_txn
-
-    spark = new_vectors.sparkSession
-    with IndexLock(spark, name) as lk:
-        out = _ann_index_append_locked(new_vectors, name, id_col,
-                                       vec_col, drift_threshold,
-                                       drift_rel_threshold)
-        out["txn"] = log_index_txn(
-            spark, name, {"verb": "ann_index_append", **{
-                k: v for k, v in out.items() if k != "txn"}}, lock=lk)
-    return out
-
-
-def _ann_meta(spark, name: str, repair: bool = False):
-    """One-row meta read that tolerates the ``insertInto(overwrite=True)``
-    crash window: the first append rewrites ``{name}_meta`` in place, and
-    a crash between the overwrite's delete and move would leave it EMPTY
-    — breaking every probe and append on the index.  The writer stages
-    the new row as ``{name}_meta_stage`` BEFORE the overwrite, so an
-    empty meta is recoverable: readers fall back to the staged row
-    (read-only), and the locked append path passes ``repair=True`` to
-    also finish the overwrite."""
-    row = spark.table(f"{name}_meta").head()
-    if row is not None:
-        return row
-    stage = f"{name}_meta_stage"
-    srow = (spark.table(stage).head()
-            if spark.catalog.tableExists(stage) else None)
-    if srow is None:
-        raise ValueError(
-            f"ANN index {name!r} has an empty meta table and no staged "
-            f"copy — rebuild the index (build_ann_index)")
-    if repair:
-        spark.table(stage).write.insertInto(f"{name}_meta", overwrite=True)
-    return srow
+    return locked_verb(
+        new_vectors.sparkSession, name, _INDEX_TABLES, "ann_index_append",
+        lambda: _ann_index_append_locked(new_vectors, name, id_col, vec_col,
+                                         drift_threshold,
+                                         drift_rel_threshold))
 
 
 def _ann_index_append_locked(
@@ -663,13 +616,8 @@ def _ann_index_append_locked(
     drift_rel_threshold: float | None = 0.01,
 ) -> dict:
     spark = new_vectors.sparkSession
-    from ..sources.bucketing import write_bucketed
-
-    # the lock serializes writers but each session caches file listings
-    # per table: see the sibling's completed appends
-    spark.catalog.refreshTable(f"{name}_assign")
     cent = spark.table(f"{name}_centroids")
-    meta = _ann_meta(spark, name, repair=True)
+    meta = spark.table(f"{name}_meta").head()
     assign_cols = spark.table(f"{name}_assign").columns
     carry = tuple(c for c in assign_cols
                   if c not in ("vid", "v", "_n2", "centroid_id"))
@@ -710,29 +658,14 @@ def _ann_index_append_locked(
         recommend = recommend or rel_drop > drift_rel_threshold
     if first_append and mean_cos is not None and base is not None:
         # record the first out-of-sample measurement as the policy's
-        # reference anchor — one row, rewritten in place under the
-        # lock.  insertInto(overwrite=True), not saveAsTable: a second
-        # maintainer reaches this meta as an ATTACHED external table,
-        # where a managed overwrite fails with LOCATION_ALREADY_EXISTS.
-        # Stage the new row FIRST: the overwrite's delete→move window is
-        # not crash-atomic, and meta is the one table every reader
-        # validates — a crash mid-overwrite is healed from the staged
-        # copy by _ann_meta (ADVICE r14).
+        # reference anchor: a one-row meta rewrite
         new_meta = spark.createDataFrame(
             [(int(meta["nlist"]), int(meta["n_buckets"]),
               str(md.get("train")), base, mean_cos)],
             "nlist int, n_buckets int, train string, "
             "base_signal double, ref_signal double",
         )
-        # drop-then-save (not mode="overwrite"): the stage may be an
-        # ATTACHED external table in this session, where a managed
-        # overwrite fails; a crash between drop and save is harmless —
-        # stage is only consulted when meta is empty, and meta only
-        # empties after a stage write completed
-        from ..sources.bucketing import drop_managed_table
-        drop_managed_table(spark, f"{name}_meta_stage")
-        new_meta.write.saveAsTable(f"{name}_meta_stage")
-        new_meta.write.insertInto(f"{name}_meta", overwrite=True)
+        swap_table(spark, f"{name}_meta", new_meta.write.saveAsTable)
         ref = mean_cos
     return {"appended": int(row["n"]),
             "mean_centroid_cosine": mean_cos,
@@ -755,7 +688,7 @@ def ivf_topk_index(
     and same results as ``ivf_topk`` with the same nlist."""
     spark = queries.sparkSession
     cent = spark.table(f"{name}_centroids")
-    assign = spark.table(f"{name}_assign")
+    assign = index_table(spark, f"{name}_assign")
     return _ivf_probe_topk(queries, cent, assign, k, nprobe,
                            id_col, vec_col)
 
@@ -779,7 +712,7 @@ def ivf_topk_index_delta(
 
     spark = queries.sparkSession
     cent = spark.table(f"{name}_centroids")
-    assign = spark.table(f"{name}_assign")
+    assign = index_table(spark, f"{name}_assign")
     if delta_root is not None and is_manifest_root(delta_root):
         delta = read_table(spark, delta_root).select(*assign.columns)
         assign = assign.unionByName(delta)
@@ -797,18 +730,14 @@ def ann_index_compact(spark, name: str, delta_root: str) -> dict:
     Crash-safe by idempotence + recovery, not atomicity: the merged
     table is ``base ∪ delta`` DEDUPLICATED on vid, so re-running a
     compaction that crashed between the base swap and the delta reset
-    converges to the same rows instead of doubling them, and a crash
-    inside the swap itself (base dropped, swap not yet renamed — a
-    metadata-only instant, but real) is self-healing: the next call
-    finds the swap table and finishes the rename before doing anything
-    else.  A probe racing the delta-reset window may see a vector in
+    converges to the same rows instead of doubling them; the swap
+    itself is ``swap_table`` under a locked verb (``sources/index_tables``).
+    A probe racing the delta-reset window may see a vector in
     both base and delta, which ``ivf_topk_index_delta`` already
-    collapses (candidate-level distinct) — results stay exact; a probe
-    landing exactly inside the metadata rename window fails fast with
-    TABLE_NOT_FOUND rather than answering wrong.  The delta reset
-    commits an EMPTY version that CARRIES the txn watermarks, so a
-    replayed streaming micro-batch still recognizes itself after
-    compaction instead of re-appending.
+    collapses (candidate-level distinct) — results stay exact.  The
+    delta reset commits an EMPTY version that CARRIES the txn
+    watermarks (``reset_delta``), so a replayed streaming micro-batch
+    still recognizes itself after compaction instead of re-appending.
 
     Cost: ONE full rewrite of the assignment table into the swap name
     (the price of re-bucketing, same as any OPTIMIZE), an
@@ -816,38 +745,19 @@ def ann_index_compact(spark, name: str, delta_root: str) -> dict:
     one empty commit.  Lazy plans resolved against the PRE-compaction
     table cannot be re-run after the swap (standard snapshot
     semantics — the old files are gone); materialize probe results
-    before compacting.  Runs under the same per-index advisory lock as
-    ``ann_index_append`` (``sources/locking.IndexLock``), so a
-    compaction never races an append's bucketed write or another
-    compaction's swap, and logs an O_EXCL transaction record.
-    Returns {"base_rows": n, "delta_rows": d,
+    before compacting.  Returns {"base_rows": n, "delta_rows": d,
     "delta_reset_version": v, "txn": t}."""
-    from ..sources.locking import IndexLock, log_index_txn
-
-    with IndexLock(spark, name) as lk:
-        out = _ann_index_compact_locked(spark, name, delta_root)
-        out["txn"] = log_index_txn(
-            spark, name, {"verb": "ann_index_compact", **{
-                k: v for k, v in out.items() if k != "txn"}}, lock=lk)
-    return out
+    return locked_verb(
+        spark, name, _INDEX_TABLES, "ann_index_compact",
+        lambda: _ann_index_compact_locked(spark, name, delta_root))
 
 
 def _ann_index_compact_locked(spark, name: str, delta_root: str) -> dict:
-    from ..sources.bucketing import drop_managed_table, write_bucketed
-    from ..sources.manifest import (
-        _inherited_txns, commit_version, is_manifest_root,
-        latest_commit_info, new_version_dir, read_table, vacuum,
-    )
+    from ..sources.manifest import is_manifest_root, read_table
 
     assign_tbl = f"{name}_assign"
-    swap = f"{name}_assign_swap"
-    if not spark.catalog.tableExists(assign_tbl) and \
-            spark.catalog.tableExists(swap):
-        # recover a compaction that crashed mid-rename: the swap table
-        # holds the complete merged assignment — finish the swap
-        spark.sql(f"ALTER TABLE `{swap}` RENAME TO `{assign_tbl}`")
     cols = spark.table(assign_tbl).columns
-    n_buckets = int(_ann_meta(spark, name, repair=True)["n_buckets"])
+    n_buckets = int(spark.table(f"{name}_meta").head()["n_buckets"])
     if not is_manifest_root(delta_root):
         return {"base_rows": spark.table(assign_tbl).count(),
                 "delta_rows": 0, "delta_reset_version": None}
@@ -855,27 +765,12 @@ def _ann_index_compact_locked(spark, name: str, delta_root: str) -> dict:
     d_rows = delta.count()
     merged = (spark.table(assign_tbl).unionByName(delta)
               .dropDuplicates(["vid"]))
-    # swap-by-rename: one rewrite into the swap name, then a metadata
-    # move — never overwrite a table that feeds its own rewrite
-    drop_managed_table(spark, swap)
-    write_bucketed(merged, swap, ["centroid_id"], n_buckets,
-                   sort_cols=["centroid_id"])
-    drop_managed_table(spark, assign_tbl)
-    spark.sql(f"ALTER TABLE `{swap}` RENAME TO `{assign_tbl}`")
+    swap_table(spark, assign_tbl, lambda swap: write_bucketed(
+        merged, swap, ["centroid_id"], n_buckets,
+        sort_cols=["centroid_id"]))
     n_rows = spark.table(assign_tbl).count()
-    # delta reset: empty version, txn watermarks carried
-    cur = latest_commit_info(delta_root)
-    version = 1 if cur is None else cur["version"] + 1
-    data_dir = new_version_dir(delta_root, version)
-    delta.limit(0).write.mode("append").parquet(data_dir)
-    meta: dict = {"compacted_into": name}
-    txns = _inherited_txns(cur)
-    if txns:
-        meta["txns"] = txns
-    commit_version(delta_root, version, data_dir, meta=meta)
-    vacuum(delta_root, keep=2)
     return {"base_rows": int(n_rows), "delta_rows": int(d_rows),
-            "delta_reset_version": version}
+            "delta_reset_version": reset_delta(spark, delta_root, name)}
 
 
 def hard_negatives_index(
@@ -896,7 +791,7 @@ def hard_negatives_index(
     mining without it would silently return same-label "negatives"."""
     spark = anchors.sparkSession
     cent = spark.table(f"{name}_centroids")
-    assign = spark.table(f"{name}_assign")
+    assign = index_table(spark, f"{name}_assign")
     if label_col not in assign.columns:
         raise ValueError(
             f"index {name!r} does not carry {label_col!r}; rebuild with "

@@ -7,7 +7,9 @@ join layout — and Spark's catalog tables, unlike the manifest roots in
 live table in place.  Two concurrent ``dedup_index_append`` /
 ``ann_index_append`` calls can therefore interleave half-written state
 (colliding ``_temporary`` staging dirs inside one table directory,
-hot-table swap renames racing each other).
+two ``swap_table`` rewrites of one table racing each other).  The
+maintenance verbs take this lock through
+``sources/index_tables.locked_verb``.
 
 This module serializes the batch maintenance verbs with a
 **lease-based advisory lock** — the public Delta/Iceberg idiom for

@@ -132,6 +132,18 @@ def _pinned_shuffle_partitions(spark: SparkSession, n: int | None):
         spark.conf.set(key, old)
 
 
+def _drive(writer, timeout_s: float) -> None:
+    """Run a finite ``availableNow`` drive to completion; past
+    ``timeout_s`` stop it and raise — a partial sink must never
+    masquerade as final."""
+    q = writer.trigger(availableNow=True).start()
+    if not q.awaitTermination(timeout_s):
+        q.stop()
+        raise TimeoutError(
+            f"streaming drive still running after {timeout_s}s — "
+            f"stopped; raise timeout_s or shrink the input")
+
+
 def read_stream_parquet(spark: SparkSession, path: str, schema) -> DataFrame:
     """File-source stream over a parquet directory (schema required — a
     stream cannot infer)."""
@@ -295,16 +307,9 @@ def run_stream_to_memory(stream_df: DataFrame, query_name: str,
     stateful operators' partition count for this drive."""
     spark = stream_df.sparkSession
     with _pinned_shuffle_partitions(spark, state_partitions):
-        q = (stream_df.writeStream.format("memory")
-             .queryName(query_name)
-             .outputMode(output_mode)
-             .trigger(availableNow=True)
-             .start())
-        if not q.awaitTermination(timeout_s):
-            q.stop()  # a partial sink must never masquerade as final
-            raise TimeoutError(
-                f"streaming drive still running after {timeout_s}s — "
-                f"stopped; raise timeout_s or shrink the input")
+        _drive(stream_df.writeStream.format("memory")
+               .queryName(query_name)
+               .outputMode(output_mode), timeout_s)
     return stream_df.sparkSession.table(query_name)
 
 
@@ -341,16 +346,9 @@ def run_stream_to_parquet(stream_df: DataFrame, out_dir: str,
 
     spark = stream_df.sparkSession
     with _pinned_shuffle_partitions(spark, state_partitions):
-        q = (stream_df.writeStream.foreachBatch(_write)
-             .outputMode(output_mode)
-             .option("checkpointLocation", checkpoint_dir)
-             .trigger(availableNow=True)
-             .start())
-        if not q.awaitTermination(timeout_s):
-            q.stop()  # a partial sink must never masquerade as final
-            raise TimeoutError(
-                f"streaming drive still running after {timeout_s}s — "
-                f"stopped; raise timeout_s or shrink the input")
+        _drive(stream_df.writeStream.foreachBatch(_write)
+               .outputMode(output_mode)
+               .option("checkpointLocation", checkpoint_dir), timeout_s)
     if not _glob2.glob(_os2.path.join(out_dir, "batch-*")):
         return spark.createDataFrame([], stream_df.schema)
     return spark.read.parquet(_os2.path.join(out_dir, "batch-*"))
@@ -422,15 +420,8 @@ def streaming_view_maintenance(
         vacuum(view_root, keep=2)
         state["n_batches"] += 1
 
-    q = (stream.writeStream.foreachBatch(_apply)
-         .option("checkpointLocation", ckpt)
-         .trigger(availableNow=True)
-         .start())
-    if not q.awaitTermination(timeout_s):
-        q.stop()  # a partial sink must never masquerade as final
-        raise TimeoutError(
-            f"streaming drive still running after {timeout_s}s — "
-            f"stopped; raise timeout_s or shrink the input")
+    _drive(stream.writeStream.foreachBatch(_apply)
+           .option("checkpointLocation", ckpt), timeout_s)
     if state["n_batches"] == 0 or latest_commit(view_root) is None:
         raise RuntimeError("stream produced no batches")
     return read_table(spark, view_root)
@@ -468,6 +459,56 @@ def _replayed_batch(cur: dict | None, txn_app: str, batch_id: int) -> bool:
     return False
 
 
+def _append_commit(spark: SparkSession, root: str, txn_app: str,
+                   batch_id: int, rows) -> None:
+    """One replay-guarded micro-batch append to the manifest table at
+    ``root``.  A replayed batch (``_replayed_batch``) commits nothing and
+    never calls ``rows``; otherwise ``rows()`` gives the batch's rows
+    (None: nothing to commit), which land as ONE new version: the rows
+    are written, every file of the previous version is hardlinked in,
+    the txn watermark advances, the table's CHECK constraints, min/max
+    stats and bloom filters carry forward at O(batch) cost (each step
+    is a no-op on a table that never registered it), then the version
+    commits and old ones are vacuumed."""
+    from ..sources.manifest import (
+        _enforce_constraints, _finalize_bloom, _finalize_stats,
+        _inherited_constraints, _inherited_stats_cols, _inherited_txns,
+        _link_tree, commit_version, latest_commit_info, new_version_dir,
+        vacuum,
+    )
+
+    cur = latest_commit_info(root)
+    if _replayed_batch(cur, txn_app, batch_id):
+        return  # replayed batch: its rows are already in the table
+    df = rows()
+    if df is None:
+        return
+    cons = _inherited_constraints(cur)
+    _enforce_constraints(df, cons)  # CHECKs guard streams too
+    version = 1 if cur is None else cur["version"] + 1
+    data_dir = new_version_dir(root, version)
+    df.write.mode("append").parquet(data_dir)
+    if cur is not None:
+        _link_tree(cur["data_dir"], data_dir, skip_prefixes=[])
+    txns = _inherited_txns(cur)
+    txns[txn_app] = batch_id
+    meta = {"batch_id": batch_id, "txn_app": txn_app, "txns": txns}
+    # hardlinked files carry their stats/bloom entries by relpath; only
+    # the batch's new files are read.  Inheritance goes through
+    # _inherited_stats_cols so a write_table_stats BACKFILL (sidecar
+    # only, commit meta untouched) survives too
+    scols = _inherited_stats_cols(cur, None)
+    if scols:
+        meta.update(_finalize_stats(
+            data_dir, scols, df.columns,
+            base_dir=cur["data_dir"] if cur else None))
+    meta.update(_finalize_bloom(spark, data_dir, cur, columns=df.columns))
+    if cons:
+        meta["constraints"] = cons
+    commit_version(root, version, data_dir, meta=meta)
+    vacuum(root, keep=2)
+
+
 def streaming_append_table(
     spark: SparkSession, src_path: str, schema,
     table_root: str, work_dir: str,
@@ -490,10 +531,7 @@ def streaming_append_table(
     maintains its ingest tables."""
     import os as _os2
 
-    from ..sources.manifest import (
-        commit_version, latest_commit_info, new_version_dir, read_table,
-        vacuum,
-    )
+    from ..sources.manifest import read_table
 
     stream = (spark.readStream.schema(schema)
               .option("maxFilesPerTrigger", max_files_per_trigger)
@@ -502,62 +540,11 @@ def streaming_append_table(
     txn_app = _os2.path.abspath(ckpt)
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        from ..sources.manifest import (
-            _enforce_constraints, _inherited_constraints,
-        )
+        _append_commit(spark, table_root, txn_app, batch_id,
+                       lambda: batch_df)
 
-        cur = latest_commit_info(table_root)
-        if _replayed_batch(cur, txn_app, batch_id):
-            return  # replayed batch: already in the table
-        cons = _inherited_constraints(cur)
-        _enforce_constraints(batch_df, cons)  # CHECKs guard streams too
-        version = 1 if cur is None else cur["version"] + 1
-        data_dir = new_version_dir(table_root, version)
-        batch_df.write.mode("append").parquet(data_dir)
-        if cur is not None:
-            from ..sources.manifest import _link_tree
-
-            _link_tree(cur["data_dir"], data_dir, skip_prefixes=[])
-        meta = {"batch_id": batch_id, "txn_app": txn_app}
-        # a statted table stays statted under streaming ingest at
-        # O(batch) cost: hardlinked files carry their sidecar entries by
-        # relpath, only the batch's new files read footers; inheritance
-        # goes through _inherited_stats_cols so a write_table_stats
-        # BACKFILL (sidecar only, commit meta untouched) survives too
-        from ..sources.manifest import (
-            _finalize_stats, _inherited_stats_cols, _inherited_txns,
-        )
-
-        txns = _inherited_txns(cur)
-        txns[txn_app] = batch_id
-        meta["txns"] = txns
-
-        scols = _inherited_stats_cols(cur, None)
-        if scols:
-            meta.update(_finalize_stats(
-                data_dir, scols, batch_df.columns,
-                base_dir=cur["data_dir"] if cur else None))
-        # a bloom-indexed table stays indexed under streaming ingest at
-        # O(batch) cost: hardlinked files reuse their filter bytes by
-        # relpath, only the batch's new files scan
-        from ..sources.manifest import _finalize_bloom
-
-        meta.update(_finalize_bloom(spark, data_dir, cur,
-                                    columns=batch_df.columns))
-        if cons:
-            meta["constraints"] = cons
-        commit_version(table_root, version, data_dir, meta=meta)
-        vacuum(table_root, keep=2)
-
-    q = (stream.writeStream.foreachBatch(_apply)
-         .option("checkpointLocation", ckpt)
-         .trigger(availableNow=True)
-         .start())
-    if not q.awaitTermination(timeout_s):
-        q.stop()  # a partial sink must never masquerade as final
-        raise TimeoutError(
-            f"streaming drive still running after {timeout_s}s — "
-            f"stopped; raise timeout_s or shrink the input")
+    _drive(stream.writeStream.foreachBatch(_apply)
+           .option("checkpointLocation", ckpt), timeout_s)
     return read_table(spark, table_root)
 
 
@@ -588,14 +575,13 @@ def streaming_ann_index_maintenance(
     import os as _os2
 
     from ..pipeline.similarity import ivf_assign
-    from ..sources.manifest import (
-        _inherited_txns, _link_tree, commit_version, latest_commit_info,
-        new_version_dir, read_table, vacuum,
-    )
+    from ..sources.index_tables import index_table
+    from ..sources.manifest import latest_commit_info, read_table
 
     cent = spark.table(f"{name}_centroids")
-    nlist = int(spark.table(f"{name}_meta").head()["nlist"])
-    assign_cols = spark.table(f"{name}_assign").columns
+    nlist = int(index_table(spark, f"{name}_meta").head()["nlist"])
+    assign_schema = index_table(spark, f"{name}_assign").schema
+    assign_cols = assign_schema.names
     carry = tuple(c for c in assign_cols
                   if c not in ("vid", "v", "_n2", "centroid_id"))
     stream = (spark.readStream.schema(schema)
@@ -604,36 +590,19 @@ def streaming_ann_index_maintenance(
     ckpt = _os2.path.join(work_dir, "ckpt")
     txn_app = _os2.path.abspath(ckpt)
 
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        cur = latest_commit_info(delta_root)
-        if _replayed_batch(cur, txn_app, batch_id):
-            return  # replayed batch: its assignments are already in
+    def _assigned(batch_df: DataFrame) -> DataFrame:
         _c, a = ivf_assign(batch_df, nlist=nlist, id_col=id_col,
                            vec_col=vec_col, carry=carry, centroids=cent)
-        version = 1 if cur is None else cur["version"] + 1
-        data_dir = new_version_dir(delta_root, version)
-        a.select(*assign_cols).write.mode("append").parquet(data_dir)
-        if cur is not None:
-            _link_tree(cur["data_dir"], data_dir, skip_prefixes=[])
-        txns = _inherited_txns(cur)
-        txns[txn_app] = batch_id
-        commit_version(delta_root, version, data_dir,
-                       meta={"batch_id": batch_id, "txn_app": txn_app,
-                             "txns": txns})
-        vacuum(delta_root, keep=2)
+        return a.select(*assign_cols)
 
-    q = (stream.writeStream.foreachBatch(_apply)
-         .option("checkpointLocation", ckpt)
-         .trigger(availableNow=True)
-         .start())
-    if not q.awaitTermination(timeout_s):
-        q.stop()  # a partial sink must never masquerade as final
-        raise TimeoutError(
-            f"streaming drive still running after {timeout_s}s — "
-            f"stopped; raise timeout_s or shrink the input")
+    def _apply(batch_df: DataFrame, batch_id: int) -> None:
+        _append_commit(spark, delta_root, txn_app, batch_id,
+                       lambda: _assigned(batch_df))
+
+    _drive(stream.writeStream.foreachBatch(_apply)
+           .option("checkpointLocation", ckpt), timeout_s)
     if latest_commit_info(delta_root) is None:
-        return spark.createDataFrame([], spark.table(f"{name}_assign")
-                                     .schema)
+        return spark.createDataFrame([], assign_schema)
     return read_table(spark, delta_root)
 
 
@@ -683,11 +652,11 @@ def streaming_dedup_ingest(
     import os as _os2
 
     from ..pipeline.dedup import (
-        _banded_table, _hashed_shingles, _match_batch_to_corpus,
+        _banded_table, _hashed_shingles, _hot_table, _match_batch_to_corpus,
     )
+    from ..sources.index_tables import index_table
     from ..sources.manifest import (
-        _inherited_txns, _link_tree, commit_version, latest_commit_info,
-        manifest_upsert, new_version_dir, read_table, vacuum,
+        latest_commit_info, manifest_upsert, read_table,
     )
 
     if not spark.catalog.tableExists(f"{name}_meta"):
@@ -697,8 +666,7 @@ def streaming_dedup_ingest(
     meta = spark.table(f"{name}_meta").head()
     n, k = int(meta["n"]), int(meta["k"])
     bands_n, rows_n = int(meta["bands"]), int(meta["rows"])
-    hot = (spark.table(f"{name}_hot")
-           if spark.catalog.tableExists(f"{name}_hot") else None)
+    hot = _hot_table(spark, name, meta)
     bands_root = _os2.path.join(work_root, "delta_bands")
     sh_root = _os2.path.join(work_root, "delta_shingles")
     matches_root = _os2.path.join(work_root, "matches")
@@ -714,37 +682,19 @@ def streaming_dedup_ingest(
     if max_files_per_trigger is None:
         max_files_per_trigger = files_per_trigger(src_path)
 
-    def _append_delta(root: str, df: DataFrame, batch_id: int) -> None:
-        cur = latest_commit_info(root)
-        if _replayed_batch(cur, txn_app, batch_id):
-            return  # this delta already has the batch's rows
-        version = 1 if cur is None else cur["version"] + 1
-        data_dir = new_version_dir(root, version)
-        df.write.mode("append").parquet(data_dir)
-        if cur is not None:
-            _link_tree(cur["data_dir"], data_dir, skip_prefixes=[])
-        txns = _inherited_txns(cur)
-        txns[txn_app] = batch_id
-        commit_version(root, version, data_dir,
-                       meta={"batch_id": batch_id, "txn_app": txn_app,
-                             "txns": txns})
-        vacuum(root, keep=2)
-
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         if not batch_df.head(1):
             return
         hb = _hashed_shingles(batch_df, id_col, text_col, n,
                               parts=batch_parts)
         bb = _banded_table(hb, k, bands_n, rows_n)
-        _append_delta(bands_root,
-                      bb.withColumnRenamed("doc_id", "corpus_id"),
-                      batch_id)
-        _append_delta(sh_root,
-                      hb.withColumnRenamed("doc_id", "corpus_id"),
-                      batch_id)
-        bc = spark.table(f"{name}_bands").unionByName(
+        _append_commit(spark, bands_root, txn_app, batch_id,
+                       lambda: bb.withColumnRenamed("doc_id", "corpus_id"))
+        _append_commit(spark, sh_root, txn_app, batch_id,
+                       lambda: hb.withColumnRenamed("doc_id", "corpus_id"))
+        bc = index_table(spark, f"{name}_bands").unionByName(
             read_table(spark, bands_root))
-        hc = spark.table(f"{name}_shingles").unionByName(
+        hc = index_table(spark, f"{name}_shingles").unionByName(
             read_table(spark, sh_root))
         m = _match_batch_to_corpus(
             hb, bb.toDF("batch_id", "band_idx", "band_hash"), hc, bc,
@@ -769,15 +719,8 @@ def streaming_dedup_ingest(
     stream = (spark.readStream.schema(schema)
               .option("maxFilesPerTrigger", max_files_per_trigger)
               .parquet(src_path))
-    q = (stream.writeStream.foreachBatch(_apply)
-         .option("checkpointLocation", ckpt)
-         .trigger(availableNow=True)
-         .start())
-    if not q.awaitTermination(timeout_s):
-        q.stop()  # a partial sink must never masquerade as final
-        raise TimeoutError(
-            f"streaming drive still running after {timeout_s}s — "
-            f"stopped; raise timeout_s or shrink the input")
+    _drive(stream.writeStream.foreachBatch(_apply)
+           .option("checkpointLocation", ckpt), timeout_s)
     if latest_commit_info(matches_root) is None:
         return spark.createDataFrame(
             [], "doc_a long, doc_b long, jaccard double")
@@ -821,10 +764,7 @@ def streaming_table_changes(
     import json as _json
     import os as _os2
 
-    from ..sources.manifest import (
-        _link_tree, commit_version, latest_commit_info, new_version_dir,
-        read_table, table_changes, vacuum,
-    )
+    from ..sources.manifest import read_table, table_changes
 
     cdir = _os2.path.join(table_root, "_commits")
     stream = (spark.readStream
@@ -834,21 +774,7 @@ def streaming_table_changes(
     ckpt = _os2.path.join(work_dir, "ckpt")
     txn_app = _os2.path.abspath(ckpt)
 
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        payloads = [r.value for r in batch_df.collect()]
-        if any(not p.strip() for p in payloads):
-            # a partially-visible commit file (pre-atomic-link writers):
-            # fail the batch so the retry re-reads completed content —
-            # skipping would lose the version forever
-            raise RuntimeError(
-                f"batch {batch_id} read a blank commit payload from "
-                f"{table_root!r}; retrying against completed content")
-        versions = sorted(_json.loads(p)["version"] for p in payloads)
-        if not versions:
-            return
-        cur = latest_commit_info(out_root)
-        if _replayed_batch(cur, txn_app, batch_id):
-            return
+    def _changes(versions: list[int]) -> DataFrame | None:
         changes = None
         for v in versions:
             if starting_version is not None and v < starting_version:
@@ -873,45 +799,22 @@ def streaming_table_changes(
                     f"({e})") from None
             ch = ch.withColumn("commit_version", F.lit(v).cast("long"))
             changes = ch if changes is None else changes.unionByName(ch)
-        if changes is None:
-            return  # every version in this batch was before the start
-        from ..sources.manifest import (
-            _enforce_constraints, _finalize_stats, _inherited_constraints,
-            _inherited_stats_cols, _inherited_txns,
-        )
+        return changes  # None: every version was before the start
 
-        cons = _inherited_constraints(cur)
-        _enforce_constraints(changes, cons)  # CHECKs guard the feed too
-        version = 1 if cur is None else cur["version"] + 1
-        data_dir = new_version_dir(out_root, version)
-        changes.write.mode("append").parquet(data_dir)
-        if cur is not None:
-            _link_tree(cur["data_dir"], data_dir, skip_prefixes=[])
-        meta = {"batch_id": batch_id, "txn_app": txn_app}
-        txns = _inherited_txns(cur)
-        txns[txn_app] = batch_id
-        meta["txns"] = txns
-        scols = _inherited_stats_cols(cur, None)
-        if scols:  # a statted changelog table stays statted, O(batch)
-            meta.update(_finalize_stats(
-                data_dir, scols, changes.columns,
-                base_dir=cur["data_dir"] if cur else None))
-        from ..sources.manifest import _finalize_bloom
+    def _apply(batch_df: DataFrame, batch_id: int) -> None:
+        payloads = [r.value for r in batch_df.collect()]
+        if any(not p.strip() for p in payloads):
+            # a partially-visible commit file (pre-atomic-link writers):
+            # fail the batch so the retry re-reads completed content —
+            # skipping would lose the version forever
+            raise RuntimeError(
+                f"batch {batch_id} read a blank commit payload from "
+                f"{table_root!r}; retrying against completed content")
+        versions = sorted(_json.loads(p)["version"] for p in payloads)
+        if versions:
+            _append_commit(spark, out_root, txn_app, batch_id,
+                           lambda: _changes(versions))
 
-        meta.update(_finalize_bloom(spark, data_dir, cur,
-                                    columns=changes.columns))
-        if cons:
-            meta["constraints"] = cons
-        commit_version(out_root, version, data_dir, meta=meta)
-        vacuum(out_root, keep=2)
-
-    q = (stream.writeStream.foreachBatch(_apply)
-         .option("checkpointLocation", ckpt)
-         .trigger(availableNow=True)
-         .start())
-    if not q.awaitTermination(timeout_s):
-        q.stop()  # a partial sink must never masquerade as final
-        raise TimeoutError(
-            f"streaming drive still running after {timeout_s}s — "
-            f"stopped; raise timeout_s or shrink the input")
+    _drive(stream.writeStream.foreachBatch(_apply)
+           .option("checkpointLocation", ckpt), timeout_s)
     return read_table(spark, out_root)

@@ -209,9 +209,10 @@ def test_build_ann_index_in_place_rebuild_with_own_centroids(spark):
 
 def test_dedup_hot_swap_crash_recovers(spark):
     """A hot-table swap that crashed between the drop and the rename
-    (swap table present, hot table gone) must self-heal on the next
-    append or probe — a capped index may never silently probe
-    unguarded."""
+    (swap table present, hot table gone): a probe reads the complete
+    swap without writing anything, so it answers as the index did
+    before the crash and a capped index never probes unguarded; the
+    next locked verb restores the hot table (sources/index_tables)."""
     from steel_datafusion_spark.pipeline.dedup import (
         build_dedup_index, dedup_against_index, dedup_index_append,
     )
@@ -225,13 +226,19 @@ def test_dedup_hot_swap_crash_recovers(spark):
         dedup_index_append(mk(100, 108), "ddhot_r")
         hot = sorted(map(tuple, spark.table("ddhot_r_hot").collect()))
         assert hot
+        probe = spark.createDataFrame([(999999, flood)],
+                                      "doc_id long, text string")
+        before = _rows(dedup_against_index(probe, "ddhot_r", threshold=0.5))
         # simulate the crash window: hot dropped, swap holds the truth
         spark.table("ddhot_r_hot").write.saveAsTable("ddhot_r_hot_swap")
         _drop(spark, "ddhot_r_hot")
-        probe = spark.createDataFrame([(999999, flood)],
-                                      "doc_id long, text string")
-        got = dedup_against_index(probe, "ddhot_r", threshold=0.5)
-        got.collect()  # the probe healed the swap before running
+        got = _rows(dedup_against_index(probe, "ddhot_r", threshold=0.5))
+        assert got == before  # the probe read the swap: still guarded
+        assert not spark.catalog.tableExists("ddhot_r_hot")  # read only
+        # the next locked verb heals the swap before its own work
+        dedup_index_append(spark.createDataFrame(
+            [(5000, "an unrelated page about rivers and boats")],
+            "doc_id long, text string"), "ddhot_r")
         assert sorted(map(tuple,
                           spark.table("ddhot_r_hot").collect())) == hot
         assert not spark.catalog.tableExists("ddhot_r_hot_swap")

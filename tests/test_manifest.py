@@ -1130,7 +1130,10 @@ def test_stats_carry_forward_and_streaming_maintenance(spark, tmp_path):
     tbl = str(tmp_path / "stbl")
     batch = spark.range(1000).select(F.col("id").alias("k"),
                                      (F.col("id") * 2.0).alias("v"))
-    batch.coalesce(2).write.mode("overwrite").parquet(src)
+    # two source files with disjoint k ranges at any core count (one
+    # micro-batch each), so the pruned read below can skip one of them
+    batch.repartitionByRange(2, "k").write.mode("overwrite").parquet(src)
+    assert len([f for f in os.listdir(src) if f.endswith(".parquet")]) == 2
     manifest_upsert(spark, tbl, batch.limit(0), ["k"], stats_cols=["k"])
     streaming_append_table(spark, src, batch.schema, tbl,
                            str(tmp_path / "swork"),
