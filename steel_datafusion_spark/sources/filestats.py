@@ -1,14 +1,7 @@
-"""Columnar per-file statistics: the checkpoint-parquet half of data
-skipping.
-
-The JSON sidecars (``_stats.json`` + per-column splits, ``_bloom-*.json``)
-prune correctly but make the DRIVER do O(files) Python work per read —
-parse, dict-build, and a per-file verdict loop.  Honest profiling at 10^5
-files put that at ~0.9 s wall and a ~100 MB per-file dict; at 10^6-10^7
-files (a real 100 TB table) it becomes seconds of driver CPU and GBs of
-RSS per read.  This module is the answer a real table format uses — Delta
-keeps per-file stats as PARQUET in its checkpoint and evaluates skipping
-verdicts columnar, never per-file Python:
+"""Columnar per-file statistics: the data-skipping format of the
+manifest tables.  A real table format keeps per-file stats as PARQUET
+(Delta's checkpoint) and evaluates skipping verdicts columnar, never with
+a per-file Python loop; so do these sidecars:
 
 - ``_stats.parquet`` (one per immutable version dir): one ROW per data
   file, with typed columns ``lo:<col>``/``hi:<col>``/``nulls:<col>``/
@@ -22,9 +15,8 @@ verdicts columnar, never per-file Python:
   metadata).  Filters are PACKED EXECUTOR-SIDE (a vectorized pandas UDF
   turns each file's distinct bit list into bytes), so the driver's cost
   is one Arrow batch of (rel, bytes) — no per-(file, bit) Python.
-- Reads load ONLY the probed columns (parquet column projection — the
-  same granularity the per-column JSON splits bought, without N files)
-  and evaluate every file's verdict VECTORIZED: range checks as
+- Reads load ONLY the probed columns (parquet column projection) and
+  evaluate every file's verdict VECTORIZED: range checks as
   pyarrow.compute kernels, partition checks per *distinct* partition
   value (dictionary-encode, then O(distinct) Python), bloom probes as a
   numpy bit-test over an (n_files, nbytes) uint8 matrix.
@@ -43,8 +35,10 @@ INCOMPLETE stats table — its rel column is the survivors' source of
 truth, so missing rows would drop files, not keep them.  That case is
 guarded separately: the writer stamps ``file_count`` into the parquet
 metadata, and the pruner cross-checks it (plus, below
-``STATS_CENSUS_VERIFY_MAX`` files, an actual directory census) and
-falls back to the keep-all legacy path on any mismatch.
+``STATS_CENSUS_VERIFY_MAX`` files, an actual directory census).  A
+version whose ``_stats.parquet`` is missing or fails that guard prunes
+over a directory census instead: partition and bloom verdicts run as
+usual and stats verdicts keep every file.
 
 Literals are compiled ONCE into engine-agnostic keep-specs
 (:func:`compile_range_spec`) shared by the pyarrow and Spark evaluators:
@@ -94,8 +88,10 @@ def stats_parquet_path(data_dir: str) -> str:
 
 
 def bloom_parquet_path(data_dir: str, col: str) -> str:
-    """Per-column parquet bloom sidecar (same reversible percent-encoded
-    naming as the legacy JSON sidecars, different extension)."""
+    """Per-column parquet bloom sidecar.  The column name is
+    percent-encoded, so any column (slashes, spaces, unicode) maps to one
+    flat, reversible filename; the ``_`` prefix keeps it out of data
+    scans and out of hardlink carry-forward."""
     return os.path.join(
         data_dir,
         _BLOOM_PREFIX + urllib.parse.quote(col, safe="") + BLOOM_PQ_SUFFIX)
@@ -147,6 +143,16 @@ def _part_cols_of_rels(rels: list[str]) -> list[str]:
             if eq and k not in seen:
                 seen[k] = None
     return list(seen)
+
+
+def _part_arrays(rels: list[str], part_cols: list[str]) -> dict:
+    """``part:<col>`` string columns for ``rels`` — the Hive path value
+    of each file, null where its path has no such segment."""
+    import pyarrow as pa
+
+    return {f"part:{p}": pa.array([_part_value_of(r, p)[1] for r in rels],
+                                  type=pa.string())
+            for p in part_cols}
 
 
 def bloom_foldable_type(typ) -> bool:
@@ -214,10 +220,9 @@ def _footer_entry(path: str, cols: list[str],
                   bloom_spec: dict | None = None) -> dict:
     """One file's stats from its parquet FOOTER (row-group statistics
     aggregated; row data never read).  Returns {"rows": n, "cols":
-    {col: None | {"lo","hi","nulls"} | {"nulls"}}} — the same entry
-    shape the legacy JSON sidecar used (decoded by
-    manifest._write_stats_file), so legacy carry-forward plugs straight
-    into ``build_stats_table``.  With ``bloom_spec``
+    {col: None | {"lo","hi","nulls"} | {"nulls"}}}, which
+    ``build_stats_table`` accumulates column by column.  With
+    ``bloom_spec``
     ({col: {"bits","k"}}) the SAME file open also reads the spec'd
     columns and packs their bloom filter bytes into a ``"bloom"`` key —
     the one-pass stats+bloom build (VERDICT r13 item 3: blooms were a
@@ -272,7 +277,7 @@ def _footer_entry(path: str, cols: list[str],
 
 def _usable_bound(v) -> bool:
     """Bounds with a usable ordering for pruning (bool/bytes/None carry
-    none — same domain rules as the legacy ``_stat_encode``)."""
+    none — same domain rules as ``manifest._stat_encode``)."""
     if isinstance(v, bool) or v is None:
         return False
     return isinstance(v, (int, float, str, datetime.datetime,
@@ -457,7 +462,6 @@ def _footer_entries_spark(spark, files: dict, need: list[str],
 
 def build_stats_table(data_dir: str, cols: list[str],
                       base_dir: str | None = None,
-                      legacy_reuse: dict | None = None,
                       max_workers: int = 16,
                       bloom_spec: dict | None = None):
     """The version's ``_stats.parquet`` as an in-memory pyarrow Table:
@@ -466,8 +470,6 @@ def build_stats_table(data_dir: str, cols: list[str],
     (``pc.index_in``) and taken wholesale (hardlinked file ⇒ same inode
     ⇒ same footer), so only NEW files pay a footer read, and those fan
     out over a thread pool (pyarrow releases the GIL around I/O).
-    ``legacy_reuse`` accepts the old JSON entry map for bases that
-    predate the parquet format.
 
     With ``bloom_spec`` ({col: {"bits","k"}}) the SAME pass — same file
     opens, same thread pool or executor fan-out — also packs per-file
@@ -478,9 +480,7 @@ def build_stats_table(data_dir: str, cols: list[str],
     (bytes reused from the base sidecar when its bits/k match) plus
     every file this pass opened; a rel carried for stats but absent
     from the base bloom simply has no row (probes abstain → keep —
-    never wrong, ``write_table_bloom`` backfills full coverage).
-    ``legacy_reuse`` is ignored in bloom mode — those files must be
-    opened anyway."""
+    never wrong, ``write_table_bloom`` backfills full coverage)."""
     import concurrent.futures
 
     import pyarrow as pa
@@ -489,8 +489,6 @@ def build_stats_table(data_dir: str, cols: list[str],
 
     from .manifest import _iter_data_files
 
-    if bloom_spec:
-        legacy_reuse = None
     files = dict(_iter_data_files(data_dir))
     rels = sorted(files)
     base_tbl = None
@@ -508,9 +506,7 @@ def build_stats_table(data_dir: str, cols: list[str],
         for i, p in enumerate(pos.to_pylist()):
             if p is not None:
                 carried_idx[rels[i]] = p
-    legacy_reuse = legacy_reuse or {}
     new_rels = [r for r in rels if r not in carried_idx]
-    need = [r for r in new_rels if r not in legacy_reuse]
 
     # stream footer entries straight into per-column COLUMNAR
     # accumulators — never a per-file dict map: at 10^6 files the
@@ -544,36 +540,31 @@ def build_stats_table(data_dir: str, cols: list[str],
             bl_acc[c].append(eb.get(c))  # None = abstain row
 
     if new_rels:
-        footer_iter = None
         ex = None
-        if need:
-            spark = None
-            if len(need) >= STATS_SPARK_MIN_FILES:
-                try:
-                    from pyspark.sql import SparkSession
+        spark = None
+        if len(new_rels) >= STATS_SPARK_MIN_FILES:
+            try:
+                from pyspark.sql import SparkSession
 
-                    spark = SparkSession.getActiveSession()
-                except Exception:
-                    spark = None
-            if spark is not None:
-                # executor-parallel footer scan, streamed back in rel
-                # order (need is sorted because new_rels is) — the
-                # driver holds one Arrow batch at a time
-                footer_iter = _footer_entries_spark(
-                    spark, files, need, cols, bloom_spec=bloom_spec)
-            else:
-                ex = concurrent.futures.ThreadPoolExecutor(
-                    max_workers=min(max_workers, max(1, len(need))))
-                footer_iter = ex.map(
-                    lambda r: _footer_entry(files[r], cols,
-                                            bloom_spec=bloom_spec),
-                    need)
+                spark = SparkSession.getActiveSession()
+            except Exception:
+                spark = None
+        if spark is not None:
+            # executor-parallel footer scan, streamed back in rel
+            # order (new_rels is sorted) — the driver holds one Arrow
+            # batch at a time
+            footer_iter = _footer_entries_spark(
+                spark, files, new_rels, cols, bloom_spec=bloom_spec)
+        else:
+            ex = concurrent.futures.ThreadPoolExecutor(
+                max_workers=min(max_workers, len(new_rels)))
+            footer_iter = ex.map(
+                lambda r: _footer_entry(files[r], cols,
+                                        bloom_spec=bloom_spec),
+                new_rels)
         try:
-            for rel in new_rels:
-                if legacy_reuse and rel in legacy_reuse:
-                    _consume(legacy_reuse[rel])
-                else:
-                    _consume(next(footer_iter))
+            for entry in footer_iter:
+                _consume(entry)
         finally:
             if ex is not None:
                 ex.shutdown(wait=False, cancel_futures=True)
@@ -598,12 +589,7 @@ def build_stats_table(data_dir: str, cols: list[str],
                  for p, lo, rok in zip(a["present"], a["lo"],
                                        _range_ok)],
                 type=pa.bool_())
-        for p in part_cols:
-            vals = []
-            for r in new_rels:
-                present, v = _part_value_of(r, p)
-                vals.append(v if present else None)
-            arrays[f"part:{p}"] = pa.array(vals, type=pa.string())
+        arrays.update(_part_arrays(new_rels, part_cols))
     new_tbl = pa.table(arrays) if new_rels else None
 
     pieces = []
@@ -706,13 +692,13 @@ def _concat_aligned(pieces):
 
 
 def write_stats_parquet(data_dir: str, cols: list[str],
-                        base_dir: str | None = None,
-                        legacy_reuse: dict | None = None) -> int:
-    """Write the version dir's ``_stats.parquet``; returns files covered."""
+                        base_dir: str | None = None) -> int:
+    """Write the version dir's ``_stats.parquet``; returns files covered.
+    ``base_dir`` enables carry-forward: the base version's rows are
+    reused for hardlinked files when it statted the same column set."""
     import pyarrow.parquet as pq
 
-    tbl = build_stats_table(data_dir, cols, base_dir=base_dir,
-                            legacy_reuse=legacy_reuse)
+    tbl = build_stats_table(data_dir, cols, base_dir=base_dir)
     pq.write_table(tbl, stats_parquet_path(data_dir))
     return tbl.num_rows
 
@@ -1020,20 +1006,6 @@ def bloom_parquet_specs(data_dir: str) -> dict[str, dict]:
     return out
 
 
-def load_bloom_parquet_as_map(data_dir: str, col: str) -> dict | None:
-    """Legacy-loop bridge: the parquet bloom sidecar in the JSON loader's
-    {"bits","k","files":{rel: raw bytes}} shape — used only on the
-    fallback path (tables with bloom parquet but no stats parquet), where
-    file counts are whatever the legacy per-file loop already handles."""
-    b = load_bloom_parquet(data_dir, col)
-    if b is None:
-        return None
-    rels = b["rels"].to_pylist()
-    return {"bits": b["bits"], "k": b["k"],
-            "files": {rel: b["mat"][i].tobytes()
-                      for i, rel in enumerate(rels)}}
-
-
 def _bloom_admit_np(mat, probe_rows) -> "object":
     """(n_files,) bool: does ANY probed literal possibly live in each
     file's filter?  Pure numpy bit tests over the byte matrix."""
@@ -1118,14 +1090,70 @@ def _part_verdict_np(part_arr, op, val):
     return applicable, keep
 
 
+def _checked_stats_file(data_dir: str):
+    """The version's ``_stats.parquet`` as an open ``ParquetFile``, or
+    None when it is missing, unreadable or fails the completeness guard.
+
+    The sidecar's rel column is the survivors' SOURCE OF TRUTH (a pruned
+    read over it never walks the dir), so an incomplete-but-readable
+    sidecar would silently drop data files from results.  Two layered
+    checks: the writer's self-declared file_count vs the footer row
+    count (torn or cross-version-copied sidecars), and — bounded by
+    STATS_CENSUS_VERIFY_MAX, where the walk is cheap — an actual
+    _iter_data_files census.  Above the bound the check would re-add
+    the O(files) directory walk the columnar path exists to avoid;
+    there the write-time invariant (the builder enumerates every file;
+    version dirs are immutable after commit) carries, and
+    SDF_PRUNE_VERIFY_MAX_FILES can raise the bound for audits."""
+    import pyarrow.parquet as pq
+
+    from .manifest import _iter_data_files
+
+    sp = stats_parquet_path(data_dir)
+    if not os.path.exists(sp):
+        return None
+    try:
+        pf = pq.ParquetFile(sp)
+    except (OSError, ValueError):
+        return None
+    n_stats = pf.metadata.num_rows
+    claimed = (pf.schema_arrow.metadata or {}).get(b"file_count")
+    if claimed is not None:
+        try:
+            if int(claimed) != n_stats:
+                return None
+        except ValueError:
+            return None
+    if n_stats <= STATS_CENSUS_VERIFY_MAX and \
+            sum(1 for _ in _iter_data_files(data_dir)) != n_stats:
+        return None
+    return pf
+
+
+def _census_table(data_dir: str):
+    """The stand-in for an unusable stats table: every data file's
+    ``rel`` from the directory walk plus its ``part:<col>`` path values.
+    It has no ``ok:``/``lo:`` columns, so stats verdicts abstain (keep)
+    while partition and bloom verdicts run unchanged."""
+    import pyarrow as pa
+
+    from .manifest import _iter_data_files
+
+    rels = sorted(r for r, _p in _iter_data_files(data_dir))
+    arrays = {"rel": pa.array(rels, type=pa.string())}
+    arrays.update(_part_arrays(rels, _part_cols_of_rels(rels)))
+    return pa.table(arrays)
+
+
 def prune_with_stats_parquet(spark, data_dir: str, where: list[tuple],
                              bloom_bits_fn):
     """File-level pruning against ``_stats.parquet`` (+ parquet bloom
-    sidecars).  Returns (surviving relpaths, total file count), or None
-    when this version has no parquet stats (caller falls back to the
-    legacy JSON path).  ``bloom_bits_fn(col, vals, bits, k)`` maps
-    literals to probe bit rows under the build's exact hash (or None to
-    abstain).
+    sidecars); returns (surviving relpaths, total file count).  A
+    version whose stats sidecar is missing or fails
+    ``_checked_stats_file`` prunes over ``_census_table`` instead: every
+    file is listed, stats keep it, partition and bloom verdicts decide.
+    ``bloom_bits_fn(col, vals, bits, k)`` maps literals to probe bit
+    rows under the build's exact hash (or None to abstain).
 
     Driver cost is one column-projected parquet read plus vectorized
     kernels — no per-file Python.  When the stats file exceeds
@@ -1135,51 +1163,15 @@ def prune_with_stats_parquet(spark, data_dir: str, where: list[tuple],
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
-    import pyarrow.parquet as pq
 
     sp = stats_parquet_path(data_dir)
-    if not os.path.exists(sp):
-        return None
-    try:
-        pf = pq.ParquetFile(sp)
-        names = set(pf.schema_arrow.names)
-    except (OSError, ValueError):
-        return None
-
-    # completeness guard: the sidecar's rel column is the survivors'
-    # SOURCE OF TRUTH (a pruned read never walks the dir), so an
-    # incomplete-but-readable sidecar would silently drop data files
-    # from results.  Two layered checks, both falling back to the
-    # legacy keep-all path (return None) on mismatch: the writer's
-    # self-declared file_count vs the footer row count (torn or
-    # cross-version-copied sidecars), and — bounded by
-    # STATS_CENSUS_VERIFY_MAX, where the walk is cheap — an actual
-    # _iter_data_files census.  Above the bound the check would
-    # re-add the O(files) directory walk the columnar path exists to
-    # avoid; there the write-time invariant (the builder enumerates
-    # every file; version dirs are immutable after commit) carries,
-    # and SDF_PRUNE_VERIFY_MAX_FILES can raise the bound for audits.
-    n_stats = pf.metadata.num_rows
-    fmeta = pf.schema_arrow.metadata or {}
-    claimed = fmeta.get(b"file_count")
-    if claimed is not None:
+    pf = _checked_stats_file(data_dir)
+    spark_mode = False
+    if pf is not None:
         try:
-            if int(claimed) != n_stats:
-                return None
-        except ValueError:
-            return None
-    if n_stats <= STATS_CENSUS_VERIFY_MAX:
-        from .manifest import _iter_data_files
-
-        actual = sum(1 for _ in _iter_data_files(data_dir))
-        if actual != n_stats:
-            return None
-
-    try:
-        size = os.path.getsize(sp)
-    except OSError:
-        size = 0
-    spark_mode = size > PRUNE_DRIVER_MAX_BYTES
+            spark_mode = os.path.getsize(sp) > PRUNE_DRIVER_MAX_BYTES
+        except OSError:
+            spark_mode = False
 
     # resolve bloom sidecars for =/in predicates up front (shared by
     # both evaluation engines).  In Spark mode only the HEADER (bits/k)
@@ -1209,19 +1201,25 @@ def prune_with_stats_parquet(spark, data_dir: str, where: list[tuple],
     blooms = {c: b for c, b in blooms.items() if b is not None}
 
     if spark_mode:
-        return _prune_spark(spark, sp, data_dir, where, names, blooms)
+        return _prune_spark(spark, sp, data_dir, where,
+                            set(pf.schema_arrow.names), blooms)
 
-    need = {"rel"}
-    for col, op, _val in where:
-        if f"part:{col}" in names:
-            need.add(f"part:{col}")
-        if f"lo:{col}" in names:
-            need.update((f"lo:{col}", f"hi:{col}",
-                         f"nulls:{col}", f"ok:{col}", "rows"))
-    try:
-        tbl = pf.read(columns=sorted(need & names))
-    except (OSError, ValueError):
-        return None
+    tbl = None
+    if pf is not None:
+        names = set(pf.schema_arrow.names)
+        need = {"rel"}
+        for col, op, _val in where:
+            if f"part:{col}" in names:
+                need.add(f"part:{col}")
+            if f"lo:{col}" in names:
+                need.update((f"lo:{col}", f"hi:{col}",
+                             f"nulls:{col}", f"ok:{col}", "rows"))
+        try:
+            tbl = pf.read(columns=sorted(need & names))
+        except (OSError, ValueError):
+            tbl = None
+    if tbl is None:
+        tbl = _census_table(data_dir)
     n = tbl.num_rows
     rels = tbl.column("rel").combine_chunks()
     keep = np.ones(n, dtype=bool)
@@ -1271,8 +1269,11 @@ def prune_with_stats_parquet(spark, data_dir: str, where: list[tuple],
 
 
 def _stats_verdict_np(tbl, col: str, op: str, val, rows_np):
-    """Vectorized per-file keep verdict from min/max/null-count columns
-    — exact port of the legacy ``_file_may_match`` semantics."""
+    """Vectorized per-file keep verdict from min/max/null-count columns.
+    Every supported op is null-rejecting (SQL 3VL) except the null
+    tests, so a provably all-null file prunes, and min/max (which
+    exclude nulls, per the parquet spec) prune safely even when nulls
+    exist; an ``isnull`` probe prunes only provably null-free files."""
     import numpy as np
     import pyarrow.compute as pc
 

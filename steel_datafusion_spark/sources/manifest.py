@@ -52,8 +52,11 @@ import shutil
 import time
 import urllib.parse
 import uuid
+import warnings
 
 from pyspark.sql import DataFrame, SparkSession
+
+from . import filestats
 
 __all__ = ["CommitConflict", "latest_commit", "latest_commit_info",
            "commit_version", "new_version_dir", "read_table",
@@ -353,16 +356,18 @@ def read_table(spark: SparkSession, root: str,
     ANDed, op in ``= != < <= > >=``) — turns the read into a
     DATA-SKIPPING scan, the consumer half of the Delta stats story that
     ``compact_table(zorder_by=…)`` produces files for: per-file min/max
-    stats (the ``_stats.json`` sidecar written at commit time, plus Hive
-    ``col=value`` partition path segments) prune files whose range
-    cannot satisfy the predicates, and Spark never opens them.  The full
-    predicate is ALWAYS re-applied as a residual filter on the surviving
-    files, so skipping is purely an accelerator — a missing sidecar, an
-    unstatted column, or an incomparable literal degrade to reading more
-    files, never to a wrong answer (the same correctness contract as the
+    stats (the ``_stats.parquet`` sidecar written at commit time), Hive
+    ``col=value`` partition path segments and per-file bloom filters
+    (``write_table_bloom``) prune files that cannot satisfy the
+    predicates, and Spark never opens them.  The full predicate is
+    ALWAYS re-applied as a residual filter on the surviving files, so
+    skipping is purely an accelerator — a missing sidecar, an unstatted
+    column, or an incomparable literal degrade to reading more files,
+    never to a wrong answer (the same correctness contract as the
     commit-log checkpoint).  At 100 TB this is the difference between a
     full-table scan and opening only the files a point/range query can
-    touch — driver-side pruning is O(files) dict lookups, no Spark job."""
+    touch — the verdicts run as vectorized kernels over the sidecars
+    (:mod:`.filestats`), with no per-file Python."""
     from .readers import read_parquet
 
     if as_of is not None:
@@ -378,62 +383,18 @@ def read_table(spark: SparkSession, root: str,
 # ---------------------------------------------------------------------------
 # File-level data skipping (Delta per-file stats, local-sidecar edition).
 #
-# ``_stats.json`` lives INSIDE the (immutable-after-commit) version data
-# dir, written after the parquet files and before the commit file, so a
-# committed snapshot's stats are as immutable as its data.  ``_link_tree``
-# skips ``_``-prefixed files, so stats never leak across versions via
-# hardlinks — each writer recomputes them from parquet FOOTERS only
-# (O(files) footer reads, no row data).  On an object store the
-# production shape is Delta's: stats ride in the commit log itself and
-# carry forward per unchanged file; the sidecar keeps this repo's commit
-# payload O(1) while exercising the same pruning semantics.
+# ``_stats.parquet`` (and any ``_bloom-<col>.parquet``) lives INSIDE the
+# (immutable-after-commit) version data dir, written after the parquet
+# files and before the commit file, so a committed snapshot's stats are as
+# immutable as its data.  ``_link_tree`` skips ``_``-prefixed files, so
+# sidecars never leak across versions via hardlinks — each writer carries
+# the base version's rows forward by relpath and reads only the NEW files'
+# parquet FOOTERS (no row data).  On an object store the production shape
+# is Delta's: stats ride in the commit log itself; the sidecar keeps this
+# repo's commit payload O(1) while exercising the same pruning semantics.
 # ---------------------------------------------------------------------------
 
-_STATS_FILE = "_stats.json"
-_STATS_COL_PREFIX = "_statscol-"  # per-column read-side split
 _WHERE_OPS = ("=", "!=", "<", "<=", ">", ">=", "in", "isnull", "isnotnull")
-
-
-def _stats_col_path(data_dir: str, col: str) -> str:
-    """Per-column stats sidecar path (same reversible percent-encoding
-    as the bloom split)."""
-    return os.path.join(
-        data_dir,
-        _STATS_COL_PREFIX + urllib.parse.quote(col, safe="") + ".json")
-
-
-def _load_stats_col(data_dir: str, col: str) -> dict | None:
-    """One column's per-file stats as {rel: finfo} (finfo in the
-    ``_file_may_match`` shape), or None when this column has no split
-    sidecar.  Per-COLUMN files mean the pruned read parses only the
-    PROBED columns' bytes — at 10⁶ files × several statted columns the
-    combined sidecar is hundreds of MB of JSON per read, but one
-    column's slice is what the predicate actually needs (the same
-    load-granularity story as ``_load_bloom_col``; on a real table
-    format this is the columnar stats struct in the checkpoint
-    parquet).  The combined ``_stats.json`` remains the write/carry
-    format and the fallback for pre-split tables."""
-    p = _stats_col_path(data_dir, col)
-    if not os.path.exists(p):
-        return None
-    try:
-        with open(p) as fh:
-            d = json.load(fh)
-        return {rel: {"rows": e.get("rows"), "cols": {col: e.get("c")}}
-                for rel, e in d.get("files", {}).items()}
-    except (ValueError, KeyError, TypeError, AttributeError, OSError):
-        return None
-
-
-def _has_split_stats(data_dir: str) -> bool:
-    """Whether this version dir carries per-column stats splits — then a
-    missing split for a predicate column means the column is simply not
-    statted, and the combined sidecar need not be parsed at all."""
-    try:
-        return any(f.startswith(_STATS_COL_PREFIX)
-                   for f in os.listdir(data_dir))
-    except OSError:
-        return False
 
 
 def _stat_encode(v):
@@ -463,18 +424,8 @@ def _stat_decode(v):
     return v
 
 
-def _to_datetime(v):
-    if isinstance(v, datetime.datetime):
-        return v
-    if isinstance(v, datetime.date):
-        return datetime.datetime(v.year, v.month, v.day)
-    if isinstance(v, str):
-        return datetime.datetime.fromisoformat(v)
-    raise TypeError(f"not a datetime-comparable value: {v!r}")
-
-
 def _comparable(bound, val):
-    """Coerce a decoded stats bound and a predicate literal into one
+    """Coerce a numeric bound and a predicate literal into one
     comparable domain; TypeError when they can't be compared (the caller
     then keeps the file — pruning must never guess).  Numerics compare
     EXACTLY (int↔int stays integral; mixed int/float/Decimal goes
@@ -484,29 +435,22 @@ def _comparable(bound, val):
     num = (int, float, decimal.Decimal)
     if isinstance(bound, bool) or isinstance(val, bool):
         raise TypeError("boolean stats are not pruned")
-    if isinstance(bound, num) and isinstance(val, num):
-        if (isinstance(bound, float) and bound != bound) or \
-                (isinstance(val, float) and val != val):
-            raise TypeError("NaN bounds/literals are not pruned")
-        if isinstance(bound, int) and isinstance(val, int):
-            return bound, val
-        return (bound if isinstance(bound, decimal.Decimal)
-                else decimal.Decimal(bound)), \
-               (val if isinstance(val, decimal.Decimal)
-                else decimal.Decimal(val))
-    if isinstance(bound, (datetime.date, datetime.datetime)) \
-            or isinstance(val, (datetime.date, datetime.datetime)):
-        return _to_datetime(bound), _to_datetime(val)
-    if isinstance(bound, str) and isinstance(val, str):
+    if not (isinstance(bound, num) and isinstance(val, num)):
+        raise TypeError(f"incomparable: {bound!r} vs {val!r}")
+    if (isinstance(bound, float) and bound != bound) or \
+            (isinstance(val, float) and val != val):
+        raise TypeError("NaN bounds/literals are not pruned")
+    if isinstance(bound, int) and isinstance(val, int):
         return bound, val
-    raise TypeError(f"incomparable: {bound!r} vs {val!r}")
+    return (bound if isinstance(bound, decimal.Decimal)
+            else decimal.Decimal(bound)), \
+           (val if isinstance(val, decimal.Decimal)
+            else decimal.Decimal(val))
 
 
 def _range_may_match(lo, hi, op: str, val) -> bool:
     """May any value in [lo, hi] satisfy ``x op val``?  Conservative:
     incomparable / NaN bounds answer True (keep the file)."""
-    if op == "in":
-        return any(_range_may_match(lo, hi, "=", v) for v in val)
     try:
         lo2, v = _comparable(lo, val)
         hi2, _ = _comparable(hi, val)
@@ -525,46 +469,6 @@ def _range_may_match(lo, hi, op: str, val) -> bool:
     if op == ">=":
         return hi2 >= v
     return True
-
-
-def _file_may_match(finfo: dict, col: str, op: str, val) -> bool:
-    """Per-file verdict from the stats sidecar.  All supported ops are
-    null-rejecting (SQL 3VL: ``NULL op v`` is never true), so a file
-    provably all-null in ``col`` prunes, and min/max (which exclude
-    nulls, per the parquet spec) prune safely even when nulls exist."""
-    cols = finfo.get("cols") or {}
-    if col not in cols:
-        return True  # column wasn't statted in this sidecar
-    e = cols[col]
-    if e is None:
-        return True  # footer had no usable statistics
-    if op == "isnull":  # prune only when provably null-free
-        return e.get("nulls") != 0
-    if op == "isnotnull":  # prune only when provably all-null
-        rows, nulls = finfo.get("rows"), e.get("nulls")
-        return not (rows is not None and nulls is not None
-                    and nulls >= rows)
-    if "lo" not in e:
-        rows, nulls = finfo.get("rows"), e.get("nulls")
-        return not (rows is not None and nulls is not None
-                    and nulls >= rows)
-    return _range_may_match(_stat_decode(e["lo"]), _stat_decode(e["hi"]),
-                            op, val)
-
-
-def _path_part_values(rel: str) -> dict:
-    """Hive ``col=value`` segments of a file's relative path —
-    partition-column pruning needs no sidecar at all.  The Hive null
-    sentinel decodes to None (prunable: every supported op rejects
-    null)."""
-    out = {}
-    for seg in rel.split(os.sep)[:-1]:
-        if "=" not in seg:
-            continue
-        k, _, v = seg.partition("=")
-        v = urllib.parse.unquote(v)
-        out[k] = None if v == "__HIVE_DEFAULT_PARTITION__" else v
-    return out
 
 
 def _part_may_match(pv, op: str, val) -> bool:
@@ -616,63 +520,6 @@ def _part_may_match(pv, op: str, val) -> bool:
         return True
 
 
-def _write_stats_file(data_dir: str, cols: list[str],
-                      base_dir: str | None = None) -> int:
-    """Write the ``_stats.parquet`` sidecar into a (not-yet-committed or
-    backfilled) version dir; returns the number of files covered.  The
-    format and the vectorized writer live in :mod:`.filestats` — one
-    ROW per data file, typed min/max/null-count/partition columns,
-    loaded columnar and pruned without per-file Python.  ``base_dir``
-    enables carry-forward: the base version's rows are reused for
-    hardlinked files (matched by relpath, vectorized) when it statted
-    the same column set; a base that predates the parquet format carries
-    through its decoded ``_stats.json`` entries instead."""
-    from . import filestats
-
-    legacy_reuse = None
-    if base_dir is not None and \
-            not os.path.exists(filestats.stats_parquet_path(base_dir)):
-        p = os.path.join(base_dir, _STATS_FILE)
-        if os.path.exists(p):
-            try:
-                with open(p) as fh:
-                    prev = json.load(fh)
-                if set(prev.get("stats_cols", [])) == set(cols):
-                    legacy_reuse = {
-                        rel: {"rows": fi.get("rows"),
-                              "cols": {c: (None if e is None else {
-                                  k: (_stat_decode(v)
-                                      if k in ("lo", "hi") else v)
-                                  for k, v in e.items()})
-                                  for c, e in
-                                  (fi.get("cols") or {}).items()}}
-                        for rel, fi in prev.get("files", {}).items()}
-            except (ValueError, OSError, AttributeError):
-                legacy_reuse = None
-    return filestats.write_stats_parquet(
-        data_dir, cols, base_dir=base_dir, legacy_reuse=legacy_reuse)
-
-
-def _sidecar_stats_cols(data_dir: str) -> list[str]:
-    """stats columns recorded in a version dir's sidecar (parquet
-    metadata first, legacy JSON header as fallback), else [] — lets
-    writers inherit the skipping contract from the base version even
-    when it was backfilled post-commit via ``write_table_stats``."""
-    from . import filestats
-
-    cols = filestats.stats_cols_of(data_dir)
-    if cols:
-        return cols
-    p = os.path.join(data_dir, _STATS_FILE)
-    if not os.path.exists(p):
-        return []
-    try:
-        with open(p) as fh:
-            return list(json.load(fh).get("stats_cols", []))
-    except (ValueError, OSError):
-        return []
-
-
 def write_table_stats_and_bloom(
         spark: SparkSession, root: str, stats_cols: list[str],
         bloom_cols: list[str], bits: int = 1 << 16, k_hashes: int = 5,
@@ -693,8 +540,6 @@ def write_table_stats_and_bloom(
     carry paths (``_finalize_stats``/``_finalize_bloom`` — O(touched
     files) per commit); this verb is the whole-version backfill.
     Returns the number of files covered."""
-    from . import filestats
-
     data_dir = _version_data_dir(root, version)
     spec = {c: {"bits": int(bits), "k": int(k_hashes)}
             for c in bloom_cols}
@@ -739,197 +584,108 @@ def write_table_stats(root: str, cols: list[str],
     mid-backfill simply prunes nothing), and subsequent
     ``manifest_upsert``/``compact_table`` commits inherit the column
     set.  Returns the number of files covered."""
-    data_dir = _version_data_dir(root, version)
-    return _write_stats_file(data_dir, cols)
+    return filestats.write_stats_parquet(_version_data_dir(root, version),
+                                         cols)
 
 
 def upgrade_table_stats(root: str, version: int | None = None) -> dict:
-    """One-call migration of a version's LEGACY JSON skipping sidecars
-    to the current parquet formats — the sunset path for the per-file
-    verdict loop (VERDICT r13 item 8): a long-lived table created
-    before the parquet sidecars keeps hitting the legacy fallback in
-    ``_read_pruned`` on every read; after this call it prunes through
-    the columnar ``_stats.parquet`` / ``_bloom-*.parquet`` path like a
-    fresh table, and subsequent commits carry the parquet format
-    forward.
+    """Migrate a version's pre-parquet JSON skipping sidecars to the
+    parquet formats — the only code that still reads them.  Readers and
+    writers see only ``_stats.parquet`` / ``_bloom-<col>.parquet``: a
+    pruned read of a JSON-only version keeps every file on stats
+    (partition verdicts still run) and warns, and a writer committing
+    over it carries nothing from the JSON.  After this call the version
+    prunes like a fresh table, and later commits carry the parquet
+    sidecars forward.
 
-    Stats convert WITHOUT re-reading any data file (the legacy JSON
-    entries decode straight into the parquet writer); blooms likewise
-    re-pack the stored filter bytes.  The superseded JSON files are
-    removed on success — they were only consulted when the parquet was
-    absent, so leaving them would just be dead weight.  Idempotent;
+    Stats: the column set comes from the combined ``_stats.json``
+    header, or else from the per-column ``_statscol-<col>.json`` file
+    names, and ``_stats.parquet`` is rebuilt from the data files'
+    parquet footers (no row data read).  Blooms: the filter bytes of
+    each per-column ``_bloom-<col>.json`` (or of the combined
+    ``_bloom.json``) are re-packed into ``_bloom-<col>.parquet`` —
+    filters cannot be rebuilt without a scan of the column.  A JSON
+    file is removed once its parquet replacement exists.  Idempotent;
     returns {"stats_files": n|None, "bloom_cols": [...],
     "removed_legacy": k}."""
-    from . import filestats
+    import base64
+
+    import pyarrow as pa
 
     data_dir = _version_data_dir(root, version)
     out: dict = {"stats_files": None, "bloom_cols": [],
                  "removed_legacy": 0}
+    names = os.listdir(data_dir)
+    splits = [f for f in names
+              if f.startswith("_statscol-") and f.endswith(".json")]
+    stats_json = splits + [f for f in names if f == "_stats.json"]
     legacy: list[str] = []
 
     sp = filestats.stats_parquet_path(data_dir)
-    jp = os.path.join(data_dir, _STATS_FILE)
-    if os.path.exists(jp) and not os.path.exists(sp):
+    if stats_json and not os.path.exists(sp):
         try:
-            with open(jp) as fh:
-                prev = json.load(fh)
-            cols = list(prev.get("stats_cols", []))
-            entries = {
-                rel: {"rows": fi.get("rows"),
-                      "cols": {c: (None if e is None else {
-                          k: (_stat_decode(v) if k in ("lo", "hi")
-                              else v)
-                          for k, v in e.items()})
-                          for c, e in (fi.get("cols") or {}).items()}}
-                for rel, fi in prev.get("files", {}).items()}
-        except (ValueError, OSError, AttributeError):
-            cols, entries = [], None
-        if cols and entries is not None:
-            out["stats_files"] = filestats.write_stats_parquet(
-                data_dir, cols, legacy_reuse=entries)
-    elif not os.path.exists(sp):
-        # splits-only legacy shape (combined file lost/corrupted but
-        # per-column splits intact — the legacy reader handles it, so
-        # the migration must too): column set from the split
-        # filenames, entries re-collected from the parquet footers
-        split_cols = [
-            urllib.parse.unquote(f[len(_STATS_COL_PREFIX):-len(".json")])
-            for f in os.listdir(data_dir)
-            if f.startswith(_STATS_COL_PREFIX) and f.endswith(".json")]
-        if split_cols:
-            out["stats_files"] = filestats.write_stats_parquet(
-                data_dir, split_cols)
+            with open(os.path.join(data_dir, "_stats.json")) as fh:
+                cols = list(json.load(fh).get("stats_cols", []))
+        except (OSError, ValueError, AttributeError, TypeError):
+            cols = []
+        cols = cols or [urllib.parse.unquote(
+            f[len("_statscol-"):-len(".json")]) for f in splits]
+        if cols:
+            out["stats_files"] = filestats.write_stats_parquet(data_dir,
+                                                               cols)
     if os.path.exists(sp):
-        legacy.extend(
-            os.path.join(data_dir, f) for f in [_STATS_FILE]
-            + [f for f in os.listdir(data_dir)
-               if f.startswith(_STATS_COL_PREFIX)
-               and f.endswith(".json")]
-            if os.path.exists(os.path.join(data_dir, f)))
+        legacy.extend(stats_json)
 
-    for col, spec in _bloom_sidecar_specs(data_dir).items():
-        pqp = filestats.bloom_parquet_path(data_dir, col)
-        if not os.path.exists(pqp):
-            lb = _load_bloom_col(data_dir, col)
-            if lb is None:
-                continue
-            import base64 as _b64
-
-            import pyarrow as pa
-
-            bits, k_h = int(lb["bits"]), int(lb["k"])
-            nbytes = bits // 8 + (1 if bits % 8 else 0)
-            rels = sorted(lb["files"])
-            tbl = pa.table({
-                "rel": pa.array(rels, type=pa.string()),
-                "f": pa.array(
-                    [_b64.b64decode(lb["files"][r])
-                     if isinstance(lb["files"][r], str)
-                     else bytes(lb["files"][r]) for r in rels],
-                    type=pa.binary(nbytes))})
-            filestats.write_bloom_parquet_table(data_dir, col, tbl,
-                                                bits, k_h)
-            out["bloom_cols"].append(col)
-        jb = _bloom_col_path(data_dir, col)
-        if os.path.exists(jb) and os.path.exists(pqp):
-            legacy.append(jb)
-    lp = os.path.join(data_dir, _BLOOM_FILE)
-    if os.path.exists(lp) and all(
-            os.path.exists(filestats.bloom_parquet_path(data_dir, c))
-            for c in _bloom_sidecar_specs(data_dir)):
-        legacy.append(lp)
-
-    for p in legacy:
+    # {col: (bits, k, {rel: b64 filter})}; a per-column file wins over
+    # the combined one
+    filters: dict[str, tuple] = {}
+    combined_cols: list = []
+    if "_bloom.json" in names:
         try:
-            os.unlink(p)
-            out["removed_legacy"] += 1
-        except OSError:
+            with open(os.path.join(data_dir, "_bloom.json")) as fh:
+                d = json.load(fh)
+            for col, files in d.get("cols", {}).items():
+                combined_cols.append(col)
+                filters[col] = (int(d["bits"]), int(d["k"]), files)
+        except (OSError, ValueError, KeyError, TypeError, AttributeError):
             pass
-    return out
-
-
-_BLOOM_FILE = "_bloom.json"  # legacy combined sidecar (read-only compat)
-_BLOOM_PREFIX = "_bloom-"    # per-column sidecars: _bloom-<quoted col>.json
-
-
-def _bloom_col_path(data_dir: str, col: str) -> str:
-    """Per-column sidecar path.  The column name is percent-encoded so
-    any column (slashes, spaces, unicode) maps to one flat, reversible
-    filename; the ``_`` prefix keeps it out of data scans and out of
-    ``_link_tree`` (sidecars never leak across versions by hardlink)."""
-    return os.path.join(
-        data_dir, _BLOOM_PREFIX + urllib.parse.quote(col, safe="") + ".json")
-
-
-def _load_bloom_col(data_dir: str, col: str) -> dict | None:
-    """One column's filters ({"bits", "k", "files": {rel: b64 | bytes}}),
-    or None.  Preference order: the parquet sidecar (the current write
-    format — raw bytes, loaded columnar), the per-column JSON split,
-    then the legacy combined ``_bloom.json`` — so tables from every
-    format generation keep skipping."""
-    from . import filestats
-
-    m = filestats.load_bloom_parquet_as_map(data_dir, col)
-    if m is not None:
-        return m
-    p = _bloom_col_path(data_dir, col)
-    if os.path.exists(p):
-        try:
-            with open(p) as fh:
-                d = json.load(fh)
-            return {"bits": int(d["bits"]), "k": int(d["k"]),
-                    "files": d.get("files", {})}
-        except (ValueError, KeyError, TypeError, OSError):
-            return None
-    lp = os.path.join(data_dir, _BLOOM_FILE)
-    if os.path.exists(lp):
-        try:
-            with open(lp) as fh:
-                d = json.load(fh)
-            files = d.get("cols", {}).get(col)
-            if files is None:
-                return None
-            return {"bits": int(d["bits"]), "k": int(d["k"]),
-                    "files": files}
-        except (ValueError, KeyError, TypeError, OSError):
-            return None
-    return None
-
-
-def _bloom_sidecar_specs(data_dir: str) -> dict[str, dict]:
-    """{col: {"bits", "k"}} for every bloom-indexed column of a version
-    dir (per-column sidecar headers, legacy combined file as fallback) —
-    how writers inherit the bloom contract from a base version that was
-    backfilled post-commit (the ``_sidecar_stats_cols`` analogue)."""
-    from . import filestats
-
-    out: dict[str, dict] = filestats.bloom_parquet_specs(data_dir)
-    try:
-        names = os.listdir(data_dir)
-    except OSError:
-        return out
-    for f in names:
-        if not (f.startswith(_BLOOM_PREFIX) and f.endswith(".json")):
-            continue
-        if urllib.parse.unquote(
-                f[len(_BLOOM_PREFIX):-len(".json")]) in out:
-            continue  # parquet sidecar (current format) already spoke
-        col = urllib.parse.unquote(f[len(_BLOOM_PREFIX):-len(".json")])
+    per_col = {urllib.parse.unquote(f[len("_bloom-"):-len(".json")]): f
+               for f in names
+               if f.startswith("_bloom-") and f.endswith(".json")}
+    for col, f in per_col.items():
         try:
             with open(os.path.join(data_dir, f)) as fh:
                 d = json.load(fh)
-            out[col] = {"bits": int(d["bits"]), "k": int(d["k"])}
-        except (ValueError, KeyError, TypeError, OSError):
+            filters[col] = (int(d["bits"]), int(d["k"]),
+                            d.get("files", {}))
+        except (OSError, ValueError, KeyError, TypeError, AttributeError):
             continue
-    lp = os.path.join(data_dir, _BLOOM_FILE)
-    if os.path.exists(lp):
+    for col in sorted(filters):
+        if os.path.exists(filestats.bloom_parquet_path(data_dir, col)):
+            continue
+        bits, k_h, files = filters[col]
+        nbytes = bits // 8 + (1 if bits % 8 else 0)
+        rels = sorted(files)
+        tbl = pa.table({
+            "rel": pa.array(rels, type=pa.string()),
+            "f": pa.array([base64.b64decode(files[r]) for r in rels],
+                          type=pa.binary(nbytes))})
+        filestats.write_bloom_parquet_table(data_dir, col, tbl, bits, k_h)
+        out["bloom_cols"].append(col)
+
+    def _has_bloom_parquet(col):
+        return os.path.exists(filestats.bloom_parquet_path(data_dir, col))
+
+    legacy.extend(f for col, f in per_col.items() if _has_bloom_parquet(col))
+    if "_bloom.json" in names and all(map(_has_bloom_parquet,
+                                          combined_cols)):
+        legacy.append("_bloom.json")
+
+    for f in legacy:
         try:
-            with open(lp) as fh:
-                d = json.load(fh)
-            for col in d.get("cols", {}):
-                out.setdefault(col, {"bits": int(d["bits"]),
-                                     "k": int(d["k"])})
-        except (ValueError, KeyError, TypeError, OSError):
+            os.unlink(os.path.join(data_dir, f))
+            out["removed_legacy"] += 1
+        except OSError:
             pass
     return out
 
@@ -945,7 +701,7 @@ def _inherited_bloom_spec(info: dict | None) -> dict[str, dict]:
     on every subsequent version."""
     if info is None:
         return {}
-    spec = _bloom_sidecar_specs(info["data_dir"])
+    spec = filestats.bloom_parquet_specs(info["data_dir"])
     for c, s in (info.get("meta", {}).get("bloom", {}) or {}).items():
         try:
             spec[c] = {"bits": int(s["bits"]), "k": int(s["k"])}
@@ -974,15 +730,12 @@ def _write_bloom_cols(spark: SparkSession, data_dir: str,
     to a known relpath gets NO entry — the probe abstains and reads it,
     fail-safe over fast.  Returns the number of (col, file) entries
     written."""
-    import base64
-
     import pandas as pd
     import pyarrow as pa
     import pyarrow.compute as pc
     from pyspark.sql import functions as F
     from pyspark.sql.functions import pandas_udf
 
-    from . import filestats
     from .readers import _nanos_ts_columns, ensure_session_confs
 
     cur = dict(_iter_data_files(data_dir))  # rel -> abs path
@@ -990,31 +743,12 @@ def _write_bloom_cols(spark: SparkSession, data_dir: str,
     carried: dict[str, "pa.Table"] = {}
     missing_by_col: dict[str, list[str]] = {}
     for col, s in spec.items():
-        bits, k_hashes = int(s["bits"]), int(s["k"])
-        nbytes = bits // 8 + (1 if bits % 8 else 0)
-        tblc = None
-        if base_dir is not None:
-            b = filestats.load_bloom_parquet(base_dir, col)
-            if b is not None:
-                if b["bits"] == bits and b["k"] == k_hashes:
-                    mask = pc.is_in(b["tbl"].column("rel"),
-                                    value_set=rels_now)
-                    tblc = b["tbl"].select(["rel", "f"]).filter(mask)
-            else:
-                lj = _load_bloom_col(base_dir, col)  # legacy JSON base
-                if lj is not None and int(lj["bits"]) == bits \
-                        and int(lj["k"]) == k_hashes:
-                    keep = {r: v for r, v in lj["files"].items()
-                            if r in cur}
-                    tblc = pa.table({
-                        "rel": pa.array(sorted(keep), type=pa.string()),
-                        "f": pa.array(
-                            [base64.b64decode(keep[r])
-                             if isinstance(keep[r], str)
-                             else bytes(keep[r])
-                             for r in sorted(keep)],
-                            type=pa.binary(nbytes))})
-        if tblc is not None:
+        b = None if base_dir is None \
+            else filestats.load_bloom_parquet(base_dir, col)
+        if b is not None and b["bits"] == int(s["bits"]) \
+                and b["k"] == int(s["k"]):
+            mask = pc.is_in(b["tbl"].column("rel"), value_set=rels_now)
+            tblc = b["tbl"].select(["rel", "f"]).filter(mask)
             carried[col] = tblc
             have = pc.is_in(rels_now, value_set=tblc.column("rel"))
             missing_by_col[col] = pc.filter(
@@ -1141,7 +875,7 @@ def write_table_bloom(spark: SparkSession, root: str, cols: list[str],
     [min,max] spans the whole domain but each file holds only its own
     keys.  One column scan builds the filters (distinct (file, bit)
     pairs aggregate JVM-side — the shuffle is bounded by files × bits,
-    never rows), the per-column ``_bloom-<col>.json`` sidecar stores
+    never rows), the per-column ``_bloom-<col>.parquet`` sidecar stores
     ~bits/8 bytes per file, and ``read_table(where=[(col, "=", v)])``
     drops every file whose filter provably lacks ``v``.  False positives
     only ever read extra files; false negatives are impossible because
@@ -1319,7 +1053,7 @@ def _inherited_stats_cols(info: dict | None,
     if info is None:
         return []
     meta_cols = list(info.get("meta", {}).get("stats_cols", []) or [])
-    return meta_cols or _sidecar_stats_cols(info["data_dir"])
+    return meta_cols or filestats.stats_cols_of(info["data_dir"])
 
 
 def _finalize_stats(data_dir: str, scols: list[str],
@@ -1328,21 +1062,21 @@ def _finalize_stats(data_dir: str, scols: list[str],
     """Write the sidecar for a fully-written (pre-commit) version dir and
     return the commit-meta fragment; columns dropped by the write are
     dropped from the stat set rather than erroring.  ``base_dir`` turns
-    on hardlink carry-forward (see ``_write_stats_file`` and
-    ``filestats.build_stats_table``)."""
+    on hardlink carry-forward (see ``filestats.build_stats_table``)."""
     present = [c for c in scols if c in columns]
     if not present:
         return {}
-    _write_stats_file(data_dir, present, base_dir=base_dir)
+    filestats.write_stats_parquet(data_dir, present, base_dir=base_dir)
     return {"stats_cols": present}
 
 
 def _read_pruned(spark: SparkSession, data_dir: str,
                  where: list[tuple]) -> DataFrame:
     """The pruned scan behind ``read_table(where=…)``: driver-side file
-    elimination from sidecar stats + partition path segments, then a
-    Spark read of ONLY the survivors (``basePath`` keeps partition
-    columns), with the full predicate re-applied as the residual filter."""
+    elimination from the parquet sidecars + partition path segments,
+    then a Spark read of ONLY the survivors (``basePath`` keeps
+    partition columns), with the full predicate re-applied as the
+    residual filter."""
     from pyspark.sql import functions as F
 
     from .readers import _nanos_ts_columns, ensure_session_confs, read_parquet
@@ -1375,10 +1109,16 @@ def _read_pruned(spark: SparkSession, data_dir: str,
         p = _pred(col, op, val)
         resid = p if resid is None else (resid & p)
 
-    # ---- current format: _stats.parquet, pruned columnar (pyarrow
-    # kernels driver-side; a Spark DataFrame filter over the stats table
-    # past the PRUNE_DRIVER_MAX_BYTES threshold) — no per-file Python
-    from . import filestats
+    if not os.path.exists(filestats.stats_parquet_path(data_dir)) and any(
+            f in ("_stats.json", "_bloom.json")
+            or (f.startswith(("_statscol-", "_bloom-"))
+                and f.endswith(".json"))
+            for f in os.listdir(data_dir)):
+        warnings.warn(
+            f"{data_dir} has only pre-parquet JSON skipping sidecars, "
+            f"which readers ignore: stats keep every file.  Run "
+            f"upgrade_table_stats on this version to restore stats and "
+            f"bloom pruning.", stacklevel=3)
 
     schema_cache: list = []
 
@@ -1388,115 +1128,16 @@ def _read_pruned(spark: SparkSession, data_dir: str,
         return _bloom_probe_bits(spark, schema_cache[0], col, vals,
                                  int(bits), int(k))
 
-    pq_res = filestats.prune_with_stats_parquet(
+    survivors, total = filestats.prune_with_stats_parquet(
         spark, data_dir, where, _bits_fn)
-    if pq_res is not None:
-        survivors_rel, total = pq_res
-        if not survivors_rel:
-            return read_parquet(spark, data_dir).filter(resid).limit(0)
-        if len(survivors_rel) == total:
-            return read_parquet(spark, data_dir).filter(resid)
-        ensure_session_confs(spark)
-        df = spark.read.option("basePath", data_dir).parquet(
-            *[os.path.join(data_dir, r) for r in survivors_rel])
-        for c in _nanos_ts_columns(data_dir):
-            df = df.withColumn(
-                c, F.expr(f"timestamp_micros(`{c}` div 1000)"))
-        return df.filter(resid)
-
-    # ---- legacy formats: per-column JSON splits / combined _stats.json,
-    # per-file verdict loop (bounded: pre-parquet tables only)
-    pred_cols = list(dict.fromkeys(c for c, _op, _v in where))
-    stats_by_col: dict[str, dict] = {}
-    for col in pred_cols:
-        m = _load_stats_col(data_dir, col)
-        if m is not None:
-            stats_by_col[col] = m
-    if not stats_by_col and not _has_split_stats(data_dir):
-        sidecar = os.path.join(data_dir, _STATS_FILE)
-        if os.path.exists(sidecar):
-            try:
-                with open(sidecar) as fh:
-                    legacy = json.load(fh).get("files", {})
-                stats_by_col = {col: legacy for col in pred_cols}
-            except (ValueError, OSError):
-                pass
-    # bloom probing loads ONLY the probed columns' sidecars — per-column
-    # files keep the parse O(probed columns' filter bytes), not O(every
-    # bloom byte the table carries); _load_bloom_col handles the legacy
-    # combined-file layout transparently
-    probe: dict = {}  # col -> (files map, probe bit rows | None)
-    if any(op in ("=", "in") for _c, op, _v in where):
-        import base64
-
-        schema = None
-        for col, op, val in where:
-            if op not in ("=", "in") or col in probe:
-                continue
-            bspec = _load_bloom_col(data_dir, col)
-            if bspec is None:
-                continue
-            if schema is None:
-                schema = read_parquet(spark, data_dir).schema
-            vals = val if op == "in" else [val]
-            # None = some literal was uncastable: the bloom can't
-            # decide the whole predicate — abstain rather than guess
-            probe[col] = (bspec["files"], _bloom_probe_bits(
-                spark, schema, col, vals,
-                int(bspec["bits"]), int(bspec["k"])))
-
-    if probe:
-        def _bloom_admits(rel: str, col: str) -> bool:
-            files, pbs = probe[col]
-            enc = files.get(rel)
-            if pbs is None or enc is None:
-                return True  # abstain: no filter for this file/literal
-            buf = base64.b64decode(enc) if isinstance(enc, str) \
-                else enc  # parquet sidecars carry raw bytes
-            return any(all(buf[b >> 3] & (1 << (b & 7)) for b in pb)
-                       for pb in pbs)
-    else:
-        def _bloom_admits(rel: str, col: str) -> bool:
-            return True
-    # file census: a loaded stats split's key set IS the version's
-    # complete data-file list (the collector enumerates every file at
-    # sidecar-write time and the version dir is immutable after
-    # commit), so a statted read needs NO directory walk — at 10⁵+
-    # files the os.walk is the prune's dominant term, and on an object
-    # store it is a LIST call per read; the walk remains the fallback
-    # for unstatted/legacy tables
-    census = next((m for m in stats_by_col.values() if m), None)
-    files_iter = (((rel, os.path.join(data_dir, rel)) for rel in census)
-                  if census is not None else _iter_data_files(data_dir))
-    survivors, total = [], 0
-    for rel, path in files_iter:
-        total += 1
-        pvals = _path_part_values(rel)
-        keep = True
-        for col, op, val in where:
-            finfo = stats_by_col.get(col, {}).get(rel)
-            if col in pvals:
-                if not _part_may_match(pvals[col], op, val):
-                    keep = False
-                    break
-            elif finfo is not None and \
-                    not _file_may_match(finfo, col, op, val):
-                keep = False
-                break
-            elif op in ("=", "in") and col in probe and \
-                    not _bloom_admits(rel, col):
-                keep = False
-                break
-        if keep:
-            survivors.append(path)
-
     if not survivors:
         # nothing can match: an empty frame with the table's full schema
         return read_parquet(spark, data_dir).filter(resid).limit(0)
     if len(survivors) == total:
         return read_parquet(spark, data_dir).filter(resid)
     ensure_session_confs(spark)
-    df = spark.read.option("basePath", data_dir).parquet(*survivors)
+    df = spark.read.option("basePath", data_dir).parquet(
+        *[os.path.join(data_dir, r) for r in survivors])
     for c in _nanos_ts_columns(data_dir):
         df = df.withColumn(c, F.expr(f"timestamp_micros(`{c}` div 1000)"))
     return df.filter(resid)
@@ -1676,9 +1317,9 @@ def table_detail(spark: SparkSession, root: str) -> DataFrame:
         total_bytes += os.path.getsize(p)
         n_rows += pq.ParquetFile(p).metadata.num_rows
     meta = info.get("meta", {})
-    # per-column sidecars + legacy combined file + commit-meta
-    # registration — any of the three means the column is bloom-indexed
-    bloom_cols = sorted(set(_bloom_sidecar_specs(data_dir))
+    # a bloom sidecar or a commit-meta registration — either means the
+    # column is bloom-indexed
+    bloom_cols = sorted(set(filestats.bloom_parquet_specs(data_dir))
                         | set(meta.get("bloom", {}) or {}))
     cdir = _commits_dir(root)
     fname = f"v{info['version']:010d}.json"
@@ -1687,7 +1328,7 @@ def table_detail(spark: SparkSession, root: str) -> DataFrame:
     # untouched) IS actively skipping, and DESCRIBE DETAIL must say so;
     # same resolution order the writers use (_inherited_stats_cols)
     stats_cols = list(meta.get("stats_cols", []) or []) \
-        or _sidecar_stats_cols(data_dir)
+        or filestats.stats_cols_of(data_dir)
     row = (int(info["version"]),
            float(_commit_ts(cdir, fname, info)),
            int(n_files), int(total_bytes), int(n_rows),

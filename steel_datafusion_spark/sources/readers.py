@@ -101,11 +101,20 @@ _REQUIRED_CONFS = {
 
 
 def ensure_session_confs(spark: SparkSession) -> None:
+    """Apply ``_REQUIRED_CONFS`` to ``spark``.  A conf the session
+    refuses to set (static on some deployments — the builder must set
+    it) passes only when it already holds the required value; otherwise
+    results would silently disagree with the UTC oracle, so this raises
+    RuntimeError naming the conf."""
     for k, v in _REQUIRED_CONFS.items():
         try:
             spark.conf.set(k, v)
-        except Exception:
-            pass  # static conf on some deployment — builder must set it
+        except Exception as exc:
+            held = spark.conf.get(k, None)
+            if held != v:
+                raise RuntimeError(
+                    f"cannot set {k}={v} on this session, which holds "
+                    f"{held!r}; set it when the session is built") from exc
 
 
 def _nanos_ts_columns(path: str) -> list[str]:

@@ -19,16 +19,16 @@ def _downgrade_stats_to_legacy_json(data_dir, splits=True,
                                     combined=True):
     """Convert a version dir's _stats.parquet into the PRE-r13 on-disk
     formats (combined _stats.json and/or per-column _statscol-*.json),
-    deleting the parquet — lets the legacy-reader tests exercise the
+    deleting the parquet — lets the legacy-format tests exercise the
     old layouts that real pre-upgrade tables still carry."""
+    import urllib.parse
+
     import pyarrow.parquet as pq
 
     from steel_datafusion_spark.sources.filestats import (
         stats_cols_of, stats_parquet_path,
     )
-    from steel_datafusion_spark.sources.manifest import (
-        _stat_encode, _stats_col_path,
-    )
+    from steel_datafusion_spark.sources.manifest import _stat_encode
 
     cols = stats_cols_of(data_dir)
     tbl = pq.read_table(stats_parquet_path(data_dir)).to_pylist()
@@ -53,7 +53,8 @@ def _downgrade_stats_to_legacy_json(data_dir, splits=True,
             split = {rel: {"rows": fi.get("rows"),
                            "c": (fi.get("cols") or {}).get(c)}
                      for rel, fi in files.items()}
-            with open(_stats_col_path(data_dir, c), "w") as fh:
+            name = "_statscol-" + urllib.parse.quote(c, safe="") + ".json"
+            with open(os.path.join(data_dir, name), "w") as fh:
                 json.dump({"col": c, "files": split}, fh)
     os.unlink(stats_parquet_path(data_dir))
 
@@ -86,16 +87,17 @@ def _downgrade_bloom_to_legacy_json(data_dir, col):
     """Convert one column's _bloom-<col>.parquet into the pre-r13
     per-column JSON sidecar (b64 filter bytes), deleting the parquet."""
     import base64
+    import urllib.parse
 
     from steel_datafusion_spark.sources.filestats import (
         bloom_parquet_path, load_bloom_parquet,
     )
-    from steel_datafusion_spark.sources.manifest import _bloom_col_path
 
     b = load_bloom_parquet(data_dir, col)
     files = {rel: base64.b64encode(b["mat"][i].tobytes()).decode()
              for i, rel in enumerate(b["rels"].to_pylist())}
-    with open(_bloom_col_path(data_dir, col), "w") as fh:
+    name = "_bloom-" + urllib.parse.quote(col, safe="") + ".json"
+    with open(os.path.join(data_dir, name), "w") as fh:
         json.dump({"col": col, "bits": b["bits"], "k": b["k"],
                    "files": files}, fh)
     os.unlink(bloom_parquet_path(data_dir, col))
@@ -780,8 +782,8 @@ def test_data_skipping_partition_paths_need_no_sidecar(spark, tmp_path):
 
 def test_data_skipping_nulls_and_degradation(spark, tmp_path):
     """All-null files prune under null-rejecting ops; files with SOME
-    nulls never prune wrongly; an unstatted column, a corrupt sidecar
-    and an unknown op all degrade safely."""
+    nulls never prune wrongly; an unstatted column, pre-parquet JSON
+    sidecars, a corrupt sidecar and an unknown op all degrade safely."""
     import pytest
     from pyspark.sql import functions as F
 
@@ -803,21 +805,14 @@ def test_data_skipping_nulls_and_degradation(spark, tmp_path):
     # unstatted column: all files read, answer still right
     u = read_table(spark, out, where=[("k", ">=", 0), ("v", ">=", 150.0)])
     assert u.count() == 50
-    # downgrade to the legacy JSON layout, then corrupt the combined
-    # sidecar: the per-column splits still prune (legacy read order)
+    # downgrade to the pre-parquet JSON layout: readers ignore it, so
+    # stats keep both files, the answer is unchanged, and the read
+    # warns that upgrade_table_stats restores pruning
     info = latest_commit_info(out)
     _downgrade_stats_to_legacy_json(info["data_dir"])
-    with open(os.path.join(info["data_dir"], "_stats.json"), "w") as fh:
-        fh.write("{not json")
-    c = read_table(spark, out, where=[("v", ">=", 0.0)])
-    assert c.count() == 100 and len(c.inputFiles()) == 1
-    # corrupt the splits too: pruning fully disabled, results unchanged
-    from steel_datafusion_spark.sources.manifest import _stats_col_path
-    for col in ("k", "v"):
-        with open(_stats_col_path(info["data_dir"], col), "w") as fh:
-            fh.write("{not json")
-    c2 = read_table(spark, out, where=[("v", ">=", 0.0)])
-    assert c2.count() == 100 and len(c2.inputFiles()) == 2
+    with pytest.warns(UserWarning, match="upgrade_table_stats"):
+        c = read_table(spark, out, where=[("v", ">=", 0.0)])
+    assert c.count() == 100 and len(c.inputFiles()) == 2
     # same degradation for the current format: a corrupt _stats.parquet
     # disables pruning, never breaks the read
     out2 = str(tmp_path / "nulls2")
@@ -1193,8 +1188,7 @@ def test_pruning_exactness_guards(spark, tmp_path):
     import json as _json
 
     from steel_datafusion_spark.sources.manifest import (
-        _write_stats_file, alter_table_constraints, manifest_upsert,
-        read_table,
+        alter_table_constraints, manifest_upsert, read_table,
     )
 
     big = 2 ** 53
@@ -1228,12 +1222,12 @@ def test_pruning_exactness_guards(spark, tmp_path):
     import pyarrow.parquet as _pq
 
     from steel_datafusion_spark.sources.filestats import (
-        stats_parquet_path,
+        stats_parquet_path, write_stats_parquet,
     )
 
     d1 = str(tmp_path / "absent")
     spark.createDataFrame([(1,)], "k long").write.parquet(d1)
-    _write_stats_file(d1, ["nope"])
+    write_stats_parquet(d1, ["nope"])
     stbl = _pq.read_table(stats_parquet_path(d1))
     assert not any(stbl.column("ok:nope").to_pylist())
     assert all(v is None for v in stbl.column("lo:nope").to_pylist())
@@ -1585,40 +1579,12 @@ def test_multiprocess_writer_race_serializes(spark, tmp_path):
     assert all(r["count"] == 1 for r in got)  # no torn/duplicated rows
 
 
-def test_stats_per_column_sidecars_load_independently(spark, tmp_path):
-    """LEGACY per-COLUMN stats splits (the pre-r13 on-disk format) keep
-    loading independently: deleting the combined _stats.json AND every
-    other column's split leaves pruning on the probed column fully
-    intact — pre-upgrade tables lose nothing."""
-    from pyspark.sql import functions as F
-
-    from steel_datafusion_spark.sources.manifest import (
-        _stats_col_path, latest_commit, manifest_upsert, read_table,
-    )
-
-    out = str(tmp_path / "statcols")
-    df = spark.range(10000).select(F.col("id").alias("k"),
-                                   (F.col("id") * 1.5).alias("v"))
-    manifest_upsert(spark, out, df.repartitionByRange(8, "k"), ["k"],
-                    stats_cols=["k", "v"])
-    _ver, d = latest_commit(out)
-    _downgrade_stats_to_legacy_json(d)
-    assert os.path.exists(_stats_col_path(d, "k"))
-    os.unlink(os.path.join(d, "_stats.json"))
-    os.unlink(_stats_col_path(d, "v"))  # v's bytes are GONE
-    t = read_table(spark, out, where=[("k", ">=", 2000), ("k", "<", 3000)])
-    assert len(t.inputFiles()) < 8  # k pruning never needed v or combined
-    assert t.count() == 1000
-    # v probes abstain (split deleted, no combined) but stay exact
-    assert read_table(spark, out,
-                      where=[("v", "<", 150.0)]).count() == 100
-
-
 def test_stats_legacy_combined_sidecar_still_prunes(spark, tmp_path):
     """A pre-split table (combined _stats.json only, the r11 on-disk
-    format) keeps pruning through the legacy fallback, and the NEXT
-    writer's carry-forward lifts the JSON entries into the parquet
-    format without rescanning untouched files."""
+    format): readers ignore the JSON, so a pruned read keeps every file
+    and returns the same rows, with a warning.  The NEXT writer emits
+    _stats.parquet from the data files' own footers — nothing is carried
+    from the JSON — and pruning resumes."""
     import urllib.parse
 
     import pyarrow.parquet as pq
@@ -1638,12 +1604,13 @@ def test_stats_legacy_combined_sidecar_still_prunes(spark, tmp_path):
                     stats_cols=["k"], keep_versions=10)
     _ver, d = latest_commit(out)
     _downgrade_stats_to_legacy_json(d, splits=False)
-    t = read_table(spark, out, where=[("k", "=", 7777)])
-    assert len(t.inputFiles()) == 1
-    assert t.count() == 1
-    # upgrade-on-write: the next upsert emits _stats.parquet.  This
-    # upsert is unpartitioned, so it rewrites the whole table (nothing
-    # is hardlinked, every entry comes from a footer) and Spark's scan
+    with pytest.warns(UserWarning, match="upgrade_table_stats"):
+        t = read_table(spark, out, where=[("k", "=", 7777)])
+    assert len(t.inputFiles()) == len(read_table(spark, out).inputFiles())
+    assert sorted(map(tuple, t.collect())) == sorted(map(tuple, df.filter(
+        F.col("k") == 7777).collect()))
+    # the next upsert emits _stats.parquet.  This upsert is
+    # unpartitioned, so it rewrites the whole table and Spark's scan
     # packing decides which key ranges share a rewritten file — the
     # check is that pruning keeps exactly the files whose own footers
     # may hold the key, not that one file survives
@@ -1659,10 +1626,10 @@ def test_stats_legacy_combined_sidecar_still_prunes(spark, tmp_path):
         urllib.parse.urlparse(f).path)) for f in t2.inputFiles()}
     assert got == want
 
-    # carry-forward of the JSON entries, on the shape that reaches it:
     # a partitioned upsert hardlinks the untouched partitions' files.
-    # One such file's legacy hi is WIDENED (still correct, never
-    # footer-derivable) — v2's parquet row must carry the widened value
+    # One such file's JSON hi is WIDENED (still correct, never
+    # footer-derivable): writers do not read the JSON, so v2's parquet
+    # row for that file must hold the footer's hi
     outp = str(tmp_path / "statlegacy_part")
     dfp = df.withColumn("p", (F.col("k") / 2500).cast("int"))
     manifest_upsert(spark, outp, dfp.repartitionByRange(4, "k"), ["k"],
@@ -1680,24 +1647,31 @@ def test_stats_legacy_combined_sidecar_still_prunes(spark, tmp_path):
     manifest_upsert(spark, outp, updp, ["k"], partition_by=["p"],
                     keep_versions=10)
     _vp2, dp2 = latest_commit(outp)
+    md = pq.ParquetFile(os.path.join(dp2, marked)).metadata
+    footer_hi = max(
+        md.row_group(g).column(c).statistics.max
+        for g in range(md.num_row_groups) for c in range(md.num_columns)
+        if md.row_group(g).column(c).path_in_schema == "k")
     carried = pq.read_table(stats_parquet_path(dp2)).to_pylist()
     row = next(r for r in carried if r["rel"] == marked)
-    assert row["hi:k"] == 10 ** 6  # carried, not re-read from the footer
+    assert row["hi:k"] == footer_hi < 10 ** 6
     tp = read_table(spark, outp, where=[("k", "=", 7777)])
     assert tp.count() == 1
 
 
 def test_bloom_legacy_json_sidecar_still_prunes(spark, tmp_path):
-    """A pre-r13 bloom sidecar (per-column JSON, b64 filter bytes)
-    keeps pruning through the legacy loader, and the next writer's
-    carry-forward lifts it into the parquet format."""
+    """A pre-r13 bloom sidecar (per-column JSON, b64 filter bytes):
+    readers ignore it, so a point lookup reads every file and returns
+    the same rows, with a warning; upgrade_table_stats re-packs the
+    filter bytes into the parquet sidecar and bloom pruning returns."""
     from pyspark.sql import functions as F
 
     from steel_datafusion_spark.sources.filestats import (
         bloom_parquet_path,
     )
     from steel_datafusion_spark.sources.manifest import (
-        latest_commit, manifest_upsert, read_table, write_table_bloom,
+        latest_commit, manifest_upsert, read_table, upgrade_table_stats,
+        write_table_bloom,
     )
 
     out = str(tmp_path / "bloomlegacy")
@@ -1711,22 +1685,82 @@ def test_bloom_legacy_json_sidecar_still_prunes(spark, tmp_path):
     _v, d = latest_commit(out)
     _downgrade_bloom_to_legacy_json(d, "uid")
     tgt = df.filter(F.col("k") == 42).head().uid
-    hit = read_table(spark, out, where=[("uid", "=", tgt)])
-    assert len(hit.inputFiles()) < len(
-        read_table(spark, out).inputFiles())
-    assert hit.count() == 1
-    # upgrade-on-write: untouched partitions' filters carry by DECODING
-    # the JSON bytes into the parquet sidecar, no rescan
-    upd = (df.filter(F.col("p") == 1).limit(5)
-           .withColumn("k", F.col("k") + 100000))
-    manifest_upsert(spark, out, upd, ["uid"], partition_by=["p"],
-                    keep_versions=10)
-    _v2, d2 = latest_commit(out)
-    assert os.path.exists(bloom_parquet_path(d2, "uid"))
+    n_all = len(read_table(spark, out).inputFiles())
+    with pytest.warns(UserWarning, match="upgrade_table_stats"):
+        hit = read_table(spark, out, where=[("uid", "=", tgt)])
+    assert len(hit.inputFiles()) == n_all
+    assert [r.k for r in hit.collect()] == [42]
+    assert upgrade_table_stats(out)["bloom_cols"] == ["uid"]
+    assert os.path.exists(bloom_parquet_path(d, "uid"))
     hit2 = read_table(spark, out, where=[("uid", "=", tgt)])
-    assert hit2.count() == 1
-    assert len(hit2.inputFiles()) < len(
-        read_table(spark, out).inputFiles())
+    assert len(hit2.inputFiles()) < n_all
+    assert [r.k for r in hit2.collect()] == [42]
+
+
+def test_pruning_without_stats_parquet_keeps_partition_and_bloom_verdicts(
+        spark, tmp_path):
+    """A current-format version with no usable _stats.parquet — blooms
+    but no stats_cols, the shape of the data_skipping_bloom gate, or a
+    corrupt stats sidecar — still prunes by partition path and by bloom
+    filter: a partition + point predicate opens a strict subset of the
+    partition's files and returns the full-scan rows, without a
+    warning."""
+    import warnings
+
+    from pyspark.sql import functions as F
+
+    from steel_datafusion_spark.sources.filestats import (
+        stats_parquet_path,
+    )
+    from steel_datafusion_spark.sources.manifest import (
+        latest_commit, manifest_upsert, read_table, write_table_bloom,
+        write_table_stats,
+    )
+
+    out = str(tmp_path / "nostats")
+    df = spark.range(4000).select(
+        F.concat(F.lit("u-"), F.md5(F.col("id").cast("string")))
+        .alias("uid"),
+        (F.col("id") % 4).alias("p"),
+        F.col("id").alias("k"))
+    # repartition(8) (never coalesced) puts 8 files in every partition
+    manifest_upsert(spark, out, df.repartition(8), ["uid"],
+                    partition_by=["p"])
+    write_table_bloom(spark, out, ["uid"], bits=1 << 14)
+    _v, d = latest_commit(out)
+    assert not os.path.exists(stats_parquet_path(d))
+    p1_files = [f for f in read_table(spark, out).inputFiles()
+                if "/p=1/" in f]
+    assert len(p1_files) == 8
+    tgt = df.filter(F.col("k") == 41).head().uid  # 41 % 4 == 1
+    oracle = sorted(map(tuple, df.filter(
+        (F.col("p") == 1) & (F.col("uid") == tgt))
+        .select("uid", "k", "p").collect()))
+
+    def point_read():
+        with warnings.catch_warnings(record=True) as caught:
+            warnings.simplefilter("always")
+            t = read_table(spark, out,
+                           where=[("p", "=", 1), ("uid", "=", tgt)])
+        # no JSON sidecars: no upgrade warning
+        assert not any("upgrade_table_stats" in str(w.message)
+                       for w in caught)
+        assert set(t.inputFiles()) < set(p1_files)
+        assert sorted(map(tuple, t.select("uid", "k", "p").collect())) \
+            == oracle
+
+    point_read()
+    # a corrupt _stats.parquet on a statted version: the same verdicts
+    # run over the directory census, and a partition predicate alone
+    # still prunes whole partitions
+    write_table_stats(out, ["k"])
+    with open(stats_parquet_path(d), "w") as fh:
+        fh.write("not parquet")
+    point_read()
+    t = read_table(spark, out, where=[("p", "=", 2)])
+    files = t.inputFiles()
+    assert len(files) == 8 and all("/p=2/" in f for f in files)
+    assert t.count() == 1000
 
 
 def test_bloom_carry_never_false_negative_across_write_chain(
@@ -1867,8 +1901,8 @@ def test_incomplete_stats_sidecar_falls_back_keep_all(spark, tmp_path):
     """A readable-but-INCOMPLETE _stats.parquet must never silently
     drop data files from results: the pruner cross-checks the writer's
     file_count stamp and (below STATS_CENSUS_VERIFY_MAX) an actual
-    directory census, and falls back to the legacy keep-all path on
-    mismatch (ADVICE r13)."""
+    directory census, and on mismatch prunes over the census with stats
+    keeping every file (ADVICE r13)."""
     import pyarrow.parquet as pq
     from pyspark.sql import functions as F
 

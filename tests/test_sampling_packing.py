@@ -94,16 +94,23 @@ def test_connected_components_leaves_no_cache(spark):
         release_local_checkpoint
     release_all(spark)  # drop barriers left by earlier scope-less tests
     spark.catalog.clearCache()
+
+    def persisted_ids():
+        return {int(i) for i in
+                spark.sparkContext._jsc.getPersistentRDDs().keySet()}
+
     # baseline: earlier tests' un-released CC results may still hold
-    # checkpoint blocks (ContextCleaner reclaims those on GC)
-    base = spark.sparkContext._jsc.getPersistentRDDs().size()
+    # checkpoint blocks, which the ContextCleaner may free at any GC —
+    # so compare ids, not counts: only RDDs persisted after the
+    # baseline are this test's own
+    base = persisted_ids()
     pairs = spark.createDataFrame([(1, 2), (2, 3)], "doc_a long, doc_b long")
     cc = connected_components(pairs)
     cc.collect()
     # intermediates + edges released inside the loop; the result frame's
     # checkpoint blocks release explicitly once materialized
     assert release_local_checkpoint(cc) == 1
-    assert spark.sparkContext._jsc.getPersistentRDDs().size() == base
+    assert persisted_ids() - base == set()
 
 
 def _py_hash_unit(key, salt: str) -> int:

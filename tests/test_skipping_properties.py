@@ -7,7 +7,7 @@ import hypothesis.strategies as st
 from hypothesis import given, settings
 
 from steel_datafusion_spark.sources.manifest import (
-    _file_may_match, _part_may_match, _stat_encode,
+    _part_may_match, _stat_encode,
 )
 
 _INTS = st.integers(-2 ** 63 + 1, 2 ** 63 - 1)
@@ -31,34 +31,6 @@ def _truth(v, op, lit):
         return v in lit
     return {"=": v == lit, "!=": v != lit, "<": v < lit,
             "<=": v <= lit, ">": v > lit, ">=": v >= lit}[op]
-
-
-def _entry(vals):
-    nonnull = [v for v in vals if v is not None]
-    nulls = len(vals) - len(nonnull)
-    if not nonnull:
-        return {"nulls": nulls}
-    return {"lo": _stat_encode(min(nonnull)),
-            "hi": _stat_encode(max(nonnull)), "nulls": nulls}
-
-
-@settings(max_examples=300, deadline=None)
-@given(data=st.data())
-def test_file_pruning_never_excludes_matching_rows(data):
-    typ = data.draw(st.sampled_from(["int", "float", "str"]))
-    base = _BASE[typ]
-    vals = data.draw(st.lists(st.one_of(st.none(), base),
-                              min_size=1, max_size=8))
-    finfo = {"rows": len(vals), "cols": {"c": _entry(vals)}}
-    op = data.draw(st.sampled_from(_OPS))
-    if op == "in":
-        lit = data.draw(st.lists(base, min_size=1, max_size=4))
-    elif op in ("isnull", "isnotnull"):
-        lit = None
-    else:
-        lit = data.draw(base)
-    if any(_truth(v, op, lit) for v in vals):
-        assert _file_may_match(finfo, "c", op, lit) is True
 
 
 @settings(max_examples=300, deadline=None)
@@ -138,16 +110,35 @@ def test_stat_codec_roundtrips(data):
 @given(data=st.data())
 def test_datetime_pruning_never_excludes_matching_rows(data):
     """Timestamp columns prune correctly against datetime literals AND
-    their ISO-string spellings (the read path accepts both)."""
+    their ISO-string spellings (the read path accepts both): raw footer
+    bounds -> _bound_arrays (timestamp domain) -> _stats_verdict_np."""
+    import pyarrow as pa
+
+    from steel_datafusion_spark.sources.filestats import (
+        _bound_arrays, _stats_verdict_np,
+    )
+
     vals = data.draw(st.lists(
         st.one_of(st.none(), st.datetimes()), min_size=1, max_size=6))
-    finfo = {"rows": len(vals), "cols": {"c": _entry(vals)}}
     op = data.draw(st.sampled_from(["=", "!=", "<", "<=", ">", ">="]))
     lit = data.draw(st.datetimes())
     as_str = data.draw(st.booleans())
     probe = lit.isoformat() if as_str else lit
+    nonnull = [v for v in vals if v is not None]
+    lo = min(nonnull) if nonnull else None
+    hi = max(nonnull) if nonnull else None
+    lo_arr, hi_arr, rok = _bound_arrays([lo], [hi])
+    tbl = pa.table({
+        "rel": pa.array(["f"], type=pa.string()),
+        "rows": pa.array([len(vals)], type=pa.int64()),
+        "lo:c": lo_arr, "hi:c": hi_arr,
+        "nulls:c": pa.array([len(vals) - len(nonnull)], type=pa.int64()),
+        "ok:c": pa.array([lo is None or rok[0]], type=pa.bool_()),
+    })
     if any(_truth(v, op, lit) for v in vals):
-        assert _file_may_match(finfo, "c", op, probe) is True
+        keep = _stats_verdict_np(tbl, "c", op, probe,
+                                 tbl.column("rows").combine_chunks())
+        assert bool(keep[0]) is True
 
 
 @settings(max_examples=300, deadline=None)

@@ -191,3 +191,39 @@ def test_merge_upsert_partitioned_heals_crashed_partition_swap(
     got = {r.k: (r.s, r.v, r.p) for r in read_parquet(spark, out).collect()}
     assert got == {1: ("a2", 11, "p1"), 3: ("c", 30, "p2")}
     assert not os.path.exists(os.path.join(out, "p=p1.old"))
+
+
+def test_ensure_session_confs_raises_only_on_a_differing_unsettable_conf():
+    """A conf the session refuses to set must already hold the required
+    value: a differing one raises, naming the conf, instead of letting
+    timestamps silently disagree with the UTC oracle.  Stub session, no
+    Spark."""
+    import pytest
+
+    from steel_datafusion_spark.sources.readers import (
+        _REQUIRED_CONFS, ensure_session_confs,
+    )
+
+    tz = "spark.sql.session.timeZone"
+
+    class _Conf:
+        def __init__(self, held):
+            self.held = dict(held)
+
+        def set(self, k, v):
+            if k == tz:
+                raise RuntimeError("static conf")
+            self.held[k] = v
+
+        def get(self, k, default=None):
+            return self.held.get(k, default)
+
+    class _Session:
+        def __init__(self, held):
+            self.conf = _Conf(held)
+
+    with pytest.raises(RuntimeError, match=tz):
+        ensure_session_confs(_Session({tz: "America/Los_Angeles"}))
+    ok = _Session({tz: "UTC"})
+    ensure_session_confs(ok)
+    assert ok.conf.held == _REQUIRED_CONFS
