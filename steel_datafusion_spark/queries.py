@@ -1151,7 +1151,7 @@ def q_upsert_roundtrip(spark, sf_dir):
     update batch (50 in-place edits + 10 inserts), read back and aggregate.
     The oracle computes the post-merge expectation directly from the source
     table, so the hash certifies replace-by-key + append semantics through
-    a real write→swap→read cycle."""
+    a real write→commit→read cycle of the manifest table."""
     import shutil
     import tempfile
 
@@ -1196,7 +1196,7 @@ def q_upsert_partitioned(spark, sf_dir):
     pruned to touched partitions and untouched partition files stay
     byte-identical (tests/test_sources_formats.py asserts the bytes; this
     gate hash-checks the merged VALUES end-to-end through the
-    prune→merge→per-partition-swap cycle).  Same update batch and oracle
+    prune→merge→hardlink→commit cycle).  Same update batch and oracle
     expectation as upsert_roundtrip, different physical path."""
     import shutil
     import tempfile

@@ -53,6 +53,20 @@ DEFAULT_CONF: dict[str, str] = {
 }
 
 
+def _driver_memory() -> str:
+    """``spark.driver.memory`` default: ``$SPARK_GRAFT_DRIVER_MEM`` when
+    set, else half the host's physical memory (the other half stays for
+    the Python workers and the OS), at least 1g and at most 32g."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    try:
+        phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, ValueError, OSError):
+        return "32g"  # host memory unknown
+    return f"{max(1, min(32, phys // 2 >> 30))}g"
+
+
 def session_context(
     app_name: str = "steel-datafusion-spark",
     master: str | None = None,
@@ -85,7 +99,7 @@ def session_context(
     conf = dict(DEFAULT_CONF)
     conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
     conf.setdefault("spark.executorEnv.PYTHONPATH", os.environ["PYTHONPATH"])
-    conf.setdefault("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"))
+    conf.setdefault("spark.driver.memory", _driver_memory())
     if extra_conf:
         conf.update(extra_conf)
     for k, v in conf.items():

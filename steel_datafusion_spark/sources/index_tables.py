@@ -120,21 +120,15 @@ def index_table(spark, table: str):
 def reset_delta(spark, root: str, name: str) -> int:
     """Commit an EMPTY version of a streaming delta root after its rows
     were compacted into index ``name``.  The version carries the root's
-    txn watermarks, so a replayed micro-batch still recognizes itself
-    and does not re-append.  Returns the new version."""
-    from .manifest import (
-        _inherited_txns, commit_version, latest_commit_info,
-        new_version_dir, read_table, vacuum,
-    )
+    txn watermarks (and its other registrations), so a replayed
+    micro-batch still recognizes itself and does not re-append.  Returns
+    the new version."""
+    from .manifest import _base_dir, _commit, _Written
+    from .readers import read_parquet
 
-    cur = latest_commit_info(root)
-    version = 1 if cur is None else cur["version"] + 1
-    data_dir = new_version_dir(root, version)
-    read_table(spark, root).limit(0).write.mode("append").parquet(data_dir)
-    meta: dict = {"compacted_into": name}
-    txns = _inherited_txns(cur)
-    if txns:
-        meta["txns"] = txns
-    commit_version(root, version, data_dir, meta=meta)
-    vacuum(root, keep=2)
-    return version
+    def write(info, data_dir):
+        empty = read_parquet(spark, _base_dir(info, root)).limit(0)
+        empty.write.mode("append").parquet(data_dir)
+        return _Written(empty.columns, {"compacted_into": name})
+
+    return _commit(spark, root, "reset_delta", write, keep_versions=2)

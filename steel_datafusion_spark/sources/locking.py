@@ -298,7 +298,10 @@ def log_index_txn(spark, name: str, meta: dict,
     contiguous, and torn-write-free.  Pass the held ``lock`` to
     re-assert ownership immediately before the claim — a stolen-from
     writer then aborts with :class:`LockLost` instead of logging a
-    record for a cycle that may have raced the new owner."""
+    record for a cycle that may have raced the new owner.  The claim
+    bypasses ``manifest._commit``: the log carries no data or
+    registrations, and a ``CommitConflict`` here means the lock was
+    lost, so it raises instead of retrying."""
     from .manifest import commit_version, latest_commit_info, new_version_dir
 
     if lock is not None:

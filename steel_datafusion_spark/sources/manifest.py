@@ -1,9 +1,7 @@
 """Manifest-commit protocol: atomic, versioned parquet tables.
 
-The dir-swap upsert (``merge_upsert(protocol="swap")``) is atomic enough
-for one writer but a reader racing the swap can see a torn table — the
-gap a real lakehouse format (Delta/Iceberg) closes with a commit log.
-This module is the minimal in-repo version of that commit log:
+A commit log over immutable version directories — the minimal in-repo
+version of what a lakehouse format (Delta/Iceberg) gives a table:
 
 Layout::
 
@@ -20,8 +18,18 @@ Protocol:
   commit file is created with ``O_CREAT | O_EXCL`` — an atomic
   claim of that version number on POSIX — so two concurrent writers
   racing to commit version N cannot both succeed: the loser gets
-  ``CommitConflict`` and retries on top of the winner's table.  This is
-  the same optimistic-concurrency shape as Delta's ``_delta_log/N.json``.
+  ``CommitConflict``.  This is the same optimistic-concurrency shape as
+  Delta's ``_delta_log/N.json``.
+- **One commit path.**  Every writer — upsert, delete, merge,
+  compaction, constraint changes, streaming appends and views, index
+  delta resets — commits through ``_commit``; only the index txn log
+  (``locking.log_index_txn``) claims versions itself.  Every commit
+  carries the base version's txn watermarks, CHECK constraints,
+  ``stats_cols`` and bloom filters, and enforces the constraints on the
+  rows it writes before any base file is hardlinked in.  A writer that
+  loses the claim removes its own data dir and reruns on the winner's
+  table (up to ``max_retries``); any other failure removes the dir too
+  and re-raises, so a failed write leaves nothing behind.
 - **Readers resolve the newest commit file.**  A commit file is immutable
   and names an immutable data dir, so a reader mid-upsert sees a complete
   snapshot — either the old version or the new one, never a torn mix, no
@@ -30,16 +38,15 @@ Protocol:
 - **Old versions are retained, then vacuumed.**  ``vacuum`` keeps the
   newest ``keep`` versions (a retention window for in-flight readers,
   exactly like Delta VACUUM) and also removes orphan data dirs left by
-  crashed or conflicted writers — a crash BEFORE commit leaves the table
-  untouched by construction.
+  crashed writers — a crash BEFORE commit leaves the table untouched by
+  construction.
 - **Unchanged files are hardlinked across versions**, so a
   partition-granular upsert still costs O(touched partitions) in both
   write volume and disk: untouched partition files in the new version
   share inodes with the old one (content, mtime and all).
 
 Local-filesystem implementation of the concept; on an object store the
-production answer is the real table format the docstrings name — the
-reader/writer API here is shaped so that swap is a one-liner.
+production answer is the real table format the docstrings name.
 """
 
 from __future__ import annotations
@@ -53,6 +60,7 @@ import time
 import urllib.parse
 import uuid
 import warnings
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -536,8 +544,8 @@ def write_table_stats_and_bloom(
     indexes built either way.  Columns whose Spark string-cast is not
     replicable in Python (floats/decimals/timestamps — see
     ``filestats.bloom_foldable_type``) fall back to the JVM column
-    scan for just those columns.  Per-commit writers keep their own
-    carry paths (``_finalize_stats``/``_finalize_bloom`` — O(touched
+    scan for just those columns.  Commits carry both sidecars in
+    ``_commit`` (``_finalize_stats``/``_finalize_bloom`` — O(touched
     files) per commit); this verb is the whole-version backfill.
     Returns the number of files covered."""
     data_dir = _version_data_dir(root, version)
@@ -852,10 +860,9 @@ def _finalize_bloom(spark: SparkSession, data_dir: str,
     """Carry the base version's bloom registration into a fully-written
     (pre-commit) version dir and return the commit-meta fragment — the
     bloom analogue of ``_finalize_stats``: hardlinked files reuse their
-    filter bytes, only new files scan, and EVERY writer (upsert, delete,
-    merge, compaction, streaming append/CDF) calls this so point-lookup
-    skipping survives normal writes instead of degrading to stats-only
-    after the first commit."""
+    filter bytes, only new files scan, and ``_commit`` calls this for
+    EVERY writer so point-lookup skipping survives normal writes instead
+    of degrading to stats-only after the first commit."""
     spec = _inherited_bloom_spec(info)
     if columns is not None:
         spec = {c: s for c, s in spec.items() if c in columns}
@@ -970,30 +977,34 @@ def _enforce_constraints(df: DataFrame, constraints: dict) -> None:
                 f"write batch, e.g. {bad[0].asDict()}")
 
 
-def _read_written(spark: SparkSession, data_dir: str,
-                  rel_paths: list[str] | None = None) -> DataFrame:
-    """The rows a writer just wrote: the whole (rewritten) version dir,
-    or only the rewritten partition subtrees when given — hardlinked
-    base rows passed their own write's check (the inductive invariant),
-    so constraint enforcement stays O(written), never O(table).
-    ``basePath`` keeps partition columns resolvable and the ns-timestamp
-    conversion matches ``read_parquet`` so a timestamp constraint
-    evaluates identically at ADD time and at write time."""
-    from pyspark.sql import functions as F
-
-    from .readers import _nanos_ts_columns, ensure_session_confs
-
-    ensure_session_confs(spark)
-    if rel_paths:
-        paths = [os.path.join(data_dir, rp) for rp in rel_paths]
-        paths = [p for p in paths if os.path.isdir(p)]
-        df = spark.read.option("basePath", data_dir).parquet(
-            *(paths or [data_dir]))
-    else:
-        df = spark.read.parquet(data_dir)
-    for c in _nanos_ts_columns(data_dir):
-        df = df.withColumn(c, F.expr(f"timestamp_micros(`{c}` div 1000)"))
-    return df
+def _replayed_batch(cur: dict | None, txn_app: str, batch_id: int) -> bool:
+    """The Delta txnAppId+txnVersion idempotence check: a micro-batch is a
+    REPLAY (skip it) only when the table's last commit came from the SAME
+    streaming query identity (its checkpoint path) and already covers this
+    batch_id.  A batch_id at-or-below the watermark from a DIFFERENT
+    identity is not a replay — it is a restart against an existing table
+    with a FRESH checkpoint (batch ids restart at 0), where skipping would
+    silently drop data; raise so the caller reuses the original checkpoint
+    or targets a new table root."""
+    txns = _inherited_txns(cur)
+    done = txns.get(txn_app)
+    if done is not None:
+        return batch_id <= done
+    # no watermark for THIS identity; legacy tables recorded batch_id
+    # without an identity — keep their old skip behavior
+    meta = (cur or {}).get("meta", {})
+    if meta.get("txn_app") is None and meta.get("batch_id") is not None:
+        return batch_id <= meta["batch_id"]
+    other = max(txns.values(), default=None)
+    if other is not None and batch_id <= other:
+        raise ValueError(
+            f"batch {batch_id} <= committed watermark {other}, but the "
+            f"table's commits belong to streaming queries "
+            f"{sorted(txns)!r}, not {txn_app!r} — a fresh checkpoint "
+            f"restarts batch ids at 0, so skipping would silently lose "
+            f"data; reuse the original checkpoint directory or write to "
+            f"a new table root")
+    return False
 
 
 def alter_table_constraints(spark: SparkSession, root: str,
@@ -1006,41 +1017,27 @@ def alter_table_constraints(spark: SparkSession, root: str,
     inherited by every subsequent upsert/delete/merge/compaction/stream
     commit, and enforced on each writer's batch (violation = the write
     raises before any commit).  Adding a constraint first verifies the
-    CURRENT snapshot satisfies it (one scan, LIMIT 1 short-circuit) —
-    an invalid table can't be "blessed".  The change commits as a
-    metadata-only version: every data file HARDLINKS into the new
-    version, so the commit costs O(files) metadata ops and zero data
-    bytes.  Returns the committed version."""
-    info = latest_commit_info(root)
-    if info is None:
-        raise FileNotFoundError(f"no committed version under {root!r}")
-    cons = _inherited_constraints(info)
-    for name in (drop or []):
-        cons.pop(name, None)
-    if add:
-        cur = read_table(spark, root)
-        _enforce_constraints(cur, dict(add))
-        cons.update(add)
-    version = info["version"] + 1
-    data_dir = new_version_dir(root, version)
-    _link_tree(info["data_dir"], data_dir, skip_prefixes=[])
-    scols = _inherited_stats_cols(info, None)
-    meta = _finalize_stats(data_dir, scols, scols,
-                           base_dir=info["data_dir"])
-    meta.update(_finalize_bloom(spark, data_dir, info))
-    if cons:
-        meta["constraints"] = cons
-    txns = _inherited_txns(info)
-    if txns:
-        meta["txns"] = txns
-    try:
-        commit_version(root, version, data_dir, meta=meta or None)
-    except CommitConflict:
-        shutil.rmtree(data_dir, ignore_errors=True)
-        raise
-    if keep_versions is not None:  # a metadata-only verb must not shrink
-        vacuum(root, keep=keep_versions)  # retention unless asked to
-    return version
+    base snapshot satisfies it (one scan, LIMIT 1 short-circuit) — an
+    invalid table can't be "blessed"; a lost commit race re-verifies on
+    the winner's snapshot.  The change commits as a metadata-only
+    version: every data file HARDLINKS into the new version, so the
+    commit costs O(files) metadata ops and zero data bytes.  Returns the
+    committed version."""
+    from .readers import read_parquet
+
+    def write(info, data_dir):
+        base_dir = _base_dir(info, root)
+        cons = _inherited_constraints(info)
+        for name in (drop or []):
+            cons.pop(name, None)
+        if add:
+            _enforce_constraints(read_parquet(spark, base_dir), dict(add))
+            cons.update(add)
+        return _Written(None, {"constraints": cons}, link_except=())
+
+    # a metadata-only verb must not shrink retention unless asked to
+    return _commit(spark, root, "alter_table_constraints", write,
+                   keep_versions=keep_versions)
 
 
 def _inherited_stats_cols(info: dict | None,
@@ -1143,28 +1140,142 @@ def _read_pruned(spark: SparkSession, data_dir: str,
     return df.filter(resid)
 
 
-def _link_tree(src_root: str, dst_root: str, skip_prefixes: list[str],
-               ) -> None:
+def _link_tree(src_root: str, dst_root: str, skip=()) -> None:
     """Hardlink every file of ``src_root`` into ``dst_root`` except those
-    under a skipped partition prefix and metadata files (_SUCCESS etc.) —
-    the copy-free way to carry untouched data into a new version."""
+    at or under a relpath in ``skip`` (a rewritten partition dir or a
+    compacted file) and hidden/metadata files (_SUCCESS, sidecars) — the
+    copy-free way to carry untouched data into a new version."""
+    skip = set(skip)
     for dirpath, dirs, files in os.walk(src_root):
-        # hidden dirs never carry: e.g. a crashed reader's .prune-*
-        # scratch must not propagate into later versions by hardlink
-        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
         rel_dir = os.path.relpath(dirpath, src_root)
         rel_dir = "" if rel_dir == "." else rel_dir
-        if any(rel_dir == p or rel_dir.startswith(p + "/")
-               for p in skip_prefixes):
-            continue
+        # hidden dirs never carry: e.g. a crashed reader's .prune-*
+        # scratch must not propagate into later versions by hardlink
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))
+                   and os.path.join(rel_dir, d) not in skip]
         for f in files:
-            if f.startswith(("_", ".")):
+            rel = os.path.join(rel_dir, f)
+            if f.startswith(("_", ".")) or rel in skip:
                 continue
-            rel = os.path.join(rel_dir, f) if rel_dir else f
             dst = os.path.join(dst_root, rel)
             os.makedirs(os.path.dirname(dst), exist_ok=True)
             if not os.path.exists(dst):
                 os.link(os.path.join(dirpath, f), dst)
+
+
+class _Written(NamedTuple):
+    """What a commit's ``write`` step produced.  ``columns``: the new
+    version's columns, which bound the carried stats/bloom columns (None
+    carries every one).  ``meta``: extra commit meta; a ``constraints``
+    entry replaces the inherited set.  ``link_except``: None hardlinks
+    no base file, otherwise every base file except those at or under
+    these relpaths (``()`` links all)."""
+    columns: list[str] | None
+    meta: dict = {}
+    link_except: tuple | list | None = None
+
+
+def _base_dir(info: dict | None, root: str) -> str:
+    """The base version's data dir, for writers that need a table."""
+    if info is None:
+        raise FileNotFoundError(f"no committed version under {root!r}")
+    return info["data_dir"]
+
+
+def _touched_partitions(frame: DataFrame, partition_by: list[str]):
+    """(relpaths, filter) of the partitions ``frame`` touches, or None
+    when it touches none.  The distinct partition values are collected
+    driver-side (few by the incremental contract); the literal filter,
+    not a join, is what reaches Catalyst's partition pruning, so
+    untouched partitions are never read."""
+    from pyspark.sql import functions as F
+
+    from .readers import _hive_part_path
+
+    touched = frame.select(*partition_by).distinct().collect()
+    if not touched:
+        return None
+    cond = None
+    for r in touched:
+        c = None
+        for col in partition_by:
+            t = (F.col(col).isNull() if r[col] is None
+                 else (F.col(col) == F.lit(r[col])))
+            c = t if c is None else (c & t)
+        cond = c if cond is None else (cond | c)
+    return [_hive_part_path(partition_by, r) for r in touched], cond
+
+
+def _commit(spark: SparkSession, root: str, verb: str, write, *,
+            max_retries: int = 5, keep_versions: int | None = None,
+            stats_cols: list[str] | None = None,
+            txn: tuple[str, int] | None = None) -> int | None:
+    """The optimistic commit every writer goes through.  Each attempt
+    reads the newest commit ``info`` (None: empty table), makes version
+    N+1's data dir and calls ``write(info, data_dir)``, which writes only
+    this version's own rows and returns a :class:`_Written` — or None
+    when there is nothing to commit, and then the base version returns.
+    Then, in order: the CHECK constraints are enforced on the written
+    rows (before any hardlink, so the check reads O(written)); base files
+    hardlink in; the txn watermarks, constraints, stats columns
+    (``stats_cols`` overrides the inherited set, ``[]`` stops it) and
+    bloom filters of the base carry over; the version is claimed.  A lost
+    claim removes the data dir and reruns on the winner's table; any
+    other failure removes it and re-raises.  ``txn=(txn_app, batch_id)``
+    guards a streaming micro-batch: every attempt first checks
+    ``_replayed_batch`` (a replay commits nothing) and the commit
+    advances that watermark.  ``keep_versions`` vacuums after the commit
+    (None: no vacuum).  Returns the committed version."""
+    from .readers import read_parquet
+
+    for _attempt in range(max_retries):
+        info = latest_commit_info(root)
+        base_version = None if info is None else info["version"]
+        if txn is not None and _replayed_batch(info, *txn):
+            return base_version
+        version = 1 if info is None else base_version + 1
+        data_dir = new_version_dir(root, version)
+        try:
+            out = write(info, data_dir)
+            if out is None:
+                shutil.rmtree(data_dir, ignore_errors=True)
+                return base_version
+            meta = dict(out.meta)
+            cons = meta.pop("constraints", None)
+            if cons is None:
+                cons = _inherited_constraints(info)
+            if cons and next(_iter_data_files(data_dir), None) is not None:
+                _enforce_constraints(read_parquet(spark, data_dir), cons)
+            base_dir = None if info is None else info["data_dir"]
+            if base_dir is not None and out.link_except is not None:
+                _link_tree(base_dir, data_dir, out.link_except)
+            scols = _inherited_stats_cols(info, stats_cols)
+            meta.update(_finalize_stats(
+                data_dir, scols, scols if out.columns is None
+                else out.columns, base_dir=base_dir))
+            meta.update(_finalize_bloom(spark, data_dir, info,
+                                        columns=out.columns))
+            if cons:
+                meta["constraints"] = cons
+            txns = _inherited_txns(info)
+            if txn is not None:
+                txns[txn[0]] = txn[1]
+                meta.update(txn_app=txn[0], batch_id=txn[1])
+            if txns:
+                meta["txns"] = txns
+            commit_version(root, version, data_dir, meta=meta or None)
+        except CommitConflict:
+            shutil.rmtree(data_dir, ignore_errors=True)
+            continue  # rerun on the winner's table
+        except BaseException:
+            shutil.rmtree(data_dir, ignore_errors=True)
+            raise
+        if keep_versions is not None:
+            vacuum(root, keep=keep_versions)
+        return version
+    raise RuntimeError(
+        f"{verb} lost {max_retries} commit races on {root!r} — writer "
+        f"contention this high needs a coordinating service")
 
 
 def manifest_upsert(spark: SparkSession, root: str, updates: DataFrame,
@@ -1190,10 +1301,9 @@ def manifest_upsert(spark: SparkSession, root: str, updates: DataFrame,
     (literal filters → Catalyst partition pruning), only touched
     partitions are rewritten, and untouched partition files HARDLINK into
     the new version — O(touched) write volume and disk, byte-identical
-    untouched data, exactly like the swap path but snapshot-safe.
-    CONTRACT (same as the swap path): a key's partition-column values
-    must be stable across updates — a key that "moves" partitions would
-    leave its old row behind in an untouched partition.
+    untouched data.  CONTRACT: a key's partition-column values must be
+    stable across updates — a key that "moves" partitions would leave
+    its old row behind in an untouched partition.
 
     ``schema_evolution=True`` lets the update batch ADD columns: the
     merge unions by name with missing columns nulled, and because the
@@ -1209,7 +1319,7 @@ def manifest_upsert(spark: SparkSession, root: str, updates: DataFrame,
     before while results stay exact."""
     from pyspark.sql import functions as F
 
-    from .readers import _hive_part_path, read_parquet
+    from .readers import read_parquet
 
     if schema_evolution and partition_by:
         raise ValueError(
@@ -1217,84 +1327,35 @@ def manifest_upsert(spark: SparkSession, root: str, updates: DataFrame,
             "hardlinked untouched partitions would produce a mixed-schema "
             "snapshot — evolve partitioned tables without partition_by or "
             "rewrite them wholesale")
-    for _attempt in range(max_retries):
-        info = latest_commit_info(root)
-        scols = _inherited_stats_cols(info, stats_cols)
+
+    def write(info, data_dir):
         if info is None:
-            version = 1
-            data_dir = new_version_dir(root, version)
             w = updates.write.mode("overwrite")
             if partition_by:
                 w = w.partitionBy(*partition_by)
             w.parquet(data_dir)
-            meta = _finalize_stats(data_dir, scols, updates.columns)
-            try:
-                commit_version(root, version, data_dir, meta=meta or None)
-                return version
-            except CommitConflict:
-                shutil.rmtree(data_dir, ignore_errors=True)
-                continue
-        base_version, base_dir = info["version"], info["data_dir"]
-        version = base_version + 1
-        base = read_parquet(spark, base_dir)
-        keys = updates.select(*key_cols).distinct()
-
+            return _Written(updates.columns)
+        base = read_parquet(spark, info["data_dir"])
+        keys = F.broadcast(updates.select(*key_cols).distinct())
         if partition_by:
-            touched = updates.select(*partition_by).distinct().collect()
-            if not touched:
-                return base_version
-            rel_paths = [_hive_part_path(partition_by, r) for r in touched]
-            cond = None
-            for r in touched:
-                c = None
-                for col in partition_by:
-                    t = (F.col(col).isNull() if r[col] is None
-                         else (F.col(col) == F.lit(r[col])))
-                    c = t if c is None else (c & t)
-                cond = c if cond is None else (cond | c)
-            merged = (base.filter(cond)
-                      .join(F.broadcast(keys), key_cols, "left_anti")
+            touched = _touched_partitions(updates, partition_by)
+            if touched is None:
+                return None
+            rel_paths, cond = touched
+            merged = (base.filter(cond).join(keys, key_cols, "left_anti")
                       .unionByName(updates))
-            data_dir = new_version_dir(root, version)
             merged.write.mode("overwrite").partitionBy(*partition_by) \
                 .parquet(data_dir)
-            _link_tree(base_dir, data_dir, skip_prefixes=rel_paths)
-            written_rel = rel_paths
-        else:
-            merged = base.join(F.broadcast(keys), key_cols, "left_anti") \
-                         .unionByName(updates,
-                                      allowMissingColumns=schema_evolution)
-            data_dir = new_version_dir(root, version)
-            merged.write.mode("overwrite").parquet(data_dir)
-            written_rel = None
+            return _Written(merged.columns, link_except=rel_paths)
+        merged = base.join(keys, key_cols, "left_anti") \
+                     .unionByName(updates,
+                                  allowMissingColumns=schema_evolution)
+        merged.write.mode("overwrite").parquet(data_dir)
+        return _Written(merged.columns)
 
-        cons = _inherited_constraints(info)
-        if cons:
-            try:  # check what will actually land — rewritten rows only
-                _enforce_constraints(
-                    _read_written(spark, data_dir, written_rel), cons)
-            except ValueError:
-                shutil.rmtree(data_dir, ignore_errors=True)
-                raise
-        meta = _finalize_stats(data_dir, scols, merged.columns,
-                               base_dir=base_dir)
-        meta.update(_finalize_bloom(spark, data_dir, info,
-                                    columns=merged.columns))
-        if cons:
-            meta["constraints"] = cons
-        txns = _inherited_txns(info)
-        if txns:
-            meta["txns"] = txns
-        try:
-            commit_version(root, version, data_dir, meta=meta or None)
-        except CommitConflict:
-            shutil.rmtree(data_dir, ignore_errors=True)
-            continue  # re-merge on the winner's table
-        vacuum(root, keep=keep_versions)
-        return version
-    raise RuntimeError(
-        f"manifest_upsert lost {max_retries} commit races on {root!r} — "
-        f"writer contention this high needs a coordinating service")
+    return _commit(spark, root, "manifest_upsert", write,
+                   max_retries=max_retries, keep_versions=keep_versions,
+                   stats_cols=stats_cols)
 
 
 def table_detail(spark: SparkSession, root: str) -> DataFrame:
@@ -1386,7 +1447,7 @@ def manifest_delete(spark: SparkSession, root: str, keys: DataFrame,
     rewritten, untouched partition files hardlink into the new version."""
     from pyspark.sql import functions as F
 
-    from .readers import _hive_part_path, read_parquet
+    from .readers import read_parquet
 
     if partition_by:
         missing = [c for c in partition_by if c not in keys.columns]
@@ -1395,57 +1456,25 @@ def manifest_delete(spark: SparkSession, root: str, keys: DataFrame,
                 f"partition-granular delete needs the partition columns "
                 f"{missing} on the keys frame (otherwise every partition "
                 f"would be rewritten — pass partition_by=None for that)")
-    for _attempt in range(max_retries):
-        info = latest_commit_info(root)
-        if info is None:
-            raise FileNotFoundError(f"no committed version under {root!r}")
-        base_version, base_dir = info["version"], info["data_dir"]
-        scols = _inherited_stats_cols(info, None)
-        version = base_version + 1
-        base = read_parquet(spark, base_dir)
-        k = keys.select(*key_cols).distinct()
-        data_dir = new_version_dir(root, version)
+
+    def write(info, data_dir):
+        base = read_parquet(spark, _base_dir(info, root))
+        k = F.broadcast(keys.select(*key_cols).distinct())
         if partition_by:
-            touched = keys.select(*partition_by).distinct().collect()
-            if not touched:
-                shutil.rmtree(data_dir, ignore_errors=True)
-                return base_version
-            rel_paths = [_hive_part_path(partition_by, r) for r in touched]
-            cond = None
-            for r in touched:
-                c = None
-                for col in partition_by:
-                    t = (F.col(col).isNull() if r[col] is None
-                         else (F.col(col) == F.lit(r[col])))
-                    c = t if c is None else (c & t)
-                cond = c if cond is None else (cond | c)
-            kept = base.filter(cond).join(F.broadcast(k), key_cols,
-                                          "left_anti")
-            kept.write.mode("overwrite").partitionBy(*partition_by) \
+            touched = _touched_partitions(keys, partition_by)
+            if touched is None:
+                return None
+            rel_paths, cond = touched
+            base.filter(cond).join(k, key_cols, "left_anti").write \
+                .mode("overwrite").partitionBy(*partition_by) \
                 .parquet(data_dir)
-            _link_tree(base_dir, data_dir, skip_prefixes=rel_paths)
-        else:
-            kept = base.join(F.broadcast(k), key_cols, "left_anti")
-            kept.write.mode("overwrite").parquet(data_dir)
-        meta = _finalize_stats(data_dir, scols, base.columns,
-                               base_dir=base_dir)
-        meta.update(_finalize_bloom(spark, data_dir, info,
-                                    columns=base.columns))
-        cons = _inherited_constraints(info)
-        if cons:  # deletes can't violate, but the registration carries
-            meta["constraints"] = cons
-        txns = _inherited_txns(info)
-        if txns:
-            meta["txns"] = txns
-        try:
-            commit_version(root, version, data_dir, meta=meta or None)
-        except CommitConflict:
-            shutil.rmtree(data_dir, ignore_errors=True)
-            continue
-        vacuum(root, keep=keep_versions)
-        return version
-    raise RuntimeError(
-        f"manifest_delete lost {max_retries} commit races on {root!r}")
+            return _Written(base.columns, link_except=rel_paths)
+        base.join(k, key_cols, "left_anti").write.mode("overwrite") \
+            .parquet(data_dir)
+        return _Written(base.columns)
+
+    return _commit(spark, root, "manifest_delete", write,
+                   max_retries=max_retries, keep_versions=keep_versions)
 
 
 def _tree_mtime(path: str) -> float:
@@ -1626,34 +1655,23 @@ def compact_table(spark: SparkSession, root: str, target_bytes: int,
     the rewritten groups changes."""
     if min_file_bytes is None:
         min_file_bytes = target_bytes // 2
-    for _attempt in range(max_retries):
-        info = latest_commit_info(root)
-        if info is None:
-            raise FileNotFoundError(f"no committed version under {root!r}")
-        base_version, base_dir = info["version"], info["data_dir"]
-        scols = _inherited_stats_cols(info, None)
+
+    def write(info, data_dir):
+        base_dir = _base_dir(info, root)
         groups: dict[str, list[tuple[str, int]]] = {}
-        for dirpath, _dirs, files in os.walk(base_dir):
-            rel_dir = os.path.relpath(dirpath, base_dir)
-            rel_dir = "" if rel_dir == "." else rel_dir
-            for f in files:
-                if f.startswith(("_", ".")) or not f.endswith(".parquet"):
-                    continue  # same "data file" definition as
-                p = os.path.join(dirpath, f)  # _iter_data_files: a stray
-                size = os.path.getsize(p)  # non-parquet file must never
-                if size < min_file_bytes:  # reach spark.read.parquet
-                    groups.setdefault(rel_dir, []).append((p, size))
+        for rel, p in _iter_data_files(base_dir):
+            size = os.path.getsize(p)
+            if size < min_file_bytes:
+                groups.setdefault(os.path.dirname(rel), []).append(
+                    (rel, size))
         groups = {d: fs for d, fs in groups.items() if len(fs) >= 2}
         if not groups:
-            return base_version
-        version = base_version + 1
-        data_dir = new_version_dir(root, version)
+            return None
         for rel_dir, fs in groups.items():
-            paths = [p for p, _s in fs]
-            n_out = max(1, (sum(s for _p, s in fs)
+            n_out = max(1, (sum(s for _r, s in fs)
                             + target_bytes - 1) // target_bytes)
-            out = os.path.join(data_dir, rel_dir) if rel_dir else data_dir
-            df = spark.read.parquet(*paths)
+            df = spark.read.parquet(*[os.path.join(base_dir, r)
+                                      for r, _s in fs])
             if zorder_by:
                 from .layout import zorder_key
 
@@ -1663,44 +1681,17 @@ def compact_table(spark: SparkSession, root: str, target_bytes: int,
                       .drop("zkey", *[f"_b_{c}" for c in zorder_by]))
             else:
                 df = df.coalesce(n_out)
-            df.write.mode("append").parquet(out)
-        compacted = {p for fs in groups.values() for p, _s in fs}
-        # link everything not rewritten (big files + small singletons)
-        for dirpath, _dirs, files in os.walk(base_dir):
-            rel_dir = os.path.relpath(dirpath, base_dir)
-            rel_dir = "" if rel_dir == "." else rel_dir
-            for f in files:
-                if f.startswith(("_", ".")):
-                    continue
-                src = os.path.join(dirpath, f)
-                if src in compacted:
-                    continue
-                dst = os.path.join(data_dir, rel_dir, f) if rel_dir \
-                    else os.path.join(data_dir, f)
-                os.makedirs(os.path.dirname(dst), exist_ok=True)
-                if not os.path.exists(dst):
-                    os.link(src, dst)
-        meta = {"compacted_files": len(compacted),
-                "compacted_dirs": len(groups),
-                "zorder_by": list(zorder_by or [])}
-        meta.update(_finalize_stats(data_dir, scols, scols,
-                                    base_dir=base_dir))
-        meta.update(_finalize_bloom(spark, data_dir, info))
-        cons = _inherited_constraints(info)
-        if cons:  # a rewrite can't violate, but the registration carries
-            meta["constraints"] = cons
-        txns = _inherited_txns(info)
-        if txns:
-            meta["txns"] = txns
-        try:
-            commit_version(root, version, data_dir, meta=meta)
-        except CommitConflict:
-            shutil.rmtree(data_dir, ignore_errors=True)
-            continue
-        vacuum(root, keep=keep_versions)
-        return version
-    raise RuntimeError(
-        f"compact_table lost {max_retries} commit races on {root!r}")
+            df.write.mode("append").parquet(
+                os.path.join(data_dir, rel_dir) if rel_dir else data_dir)
+        compacted = [r for fs in groups.values() for r, _s in fs]
+        # everything not rewritten (big files + small singletons) links
+        return _Written(None, {"compacted_files": len(compacted),
+                               "compacted_dirs": len(groups),
+                               "zorder_by": list(zorder_by or [])},
+                        link_except=compacted)
+
+    return _commit(spark, root, "compact_table", write,
+                   max_retries=max_retries, keep_versions=keep_versions)
 
 
 def manifest_merge(spark: SparkSession, root: str, source: DataFrame,
@@ -1747,14 +1738,9 @@ def manifest_merge(spark: SparkSession, root: str, source: DataFrame,
     missing = [k for k in key_cols if k not in source.columns]
     if missing:
         raise ValueError(f"merge source is missing key columns {missing}")
-    for _attempt in range(max_retries):
-        info = latest_commit_info(root)
-        if info is None:
-            raise FileNotFoundError(f"no committed version under {root!r}")
-        base_version, base_dir = info["version"], info["data_dir"]
-        scols = _inherited_stats_cols(info, None)
-        version = base_version + 1
-        base = read_parquet(spark, base_dir)
+
+    def write(info, data_dir):
+        base = read_parquet(spark, _base_dir(info, root))
         out_cols = base.columns
         data_cols = [c for c in source.columns if c not in key_cols]
         t = base.select(
@@ -1791,34 +1777,11 @@ def manifest_merge(spark: SparkSession, root: str, source: DataFrame,
         merged = (j.select(result.alias("_r"))
                   .filter(F.col("_r").isNotNull())
                   .select("_r.*"))
-        data_dir = new_version_dir(root, version)
         merged.write.mode("overwrite").parquet(data_dir)
-        cons = _inherited_constraints(info)
-        if cons:
-            try:
-                _enforce_constraints(_read_written(spark, data_dir), cons)
-            except ValueError:
-                shutil.rmtree(data_dir, ignore_errors=True)
-                raise
-        meta = {"merge_on": list(key_cols)}
-        meta.update(_finalize_stats(data_dir, scols, out_cols,
-                                    base_dir=base_dir))
-        meta.update(_finalize_bloom(spark, data_dir, info,
-                                    columns=out_cols))
-        if cons:
-            meta["constraints"] = cons
-        txns = _inherited_txns(info)
-        if txns:
-            meta["txns"] = txns
-        try:
-            commit_version(root, version, data_dir, meta=meta)
-        except CommitConflict:
-            shutil.rmtree(data_dir, ignore_errors=True)
-            continue
-        vacuum(root, keep=keep_versions)
-        return version
-    raise RuntimeError(
-        f"manifest_merge lost {max_retries} commit races on {root!r}")
+        return _Written(out_cols, {"merge_on": list(key_cols)})
+
+    return _commit(spark, root, "manifest_merge", write,
+                   max_retries=max_retries, keep_versions=keep_versions)
 
 
 def table_changes(spark: SparkSession, root: str, key_cols: list[str],

@@ -213,107 +213,39 @@ def write_parquet(df: DataFrame, path: str, mode: str = "overwrite",
 
 def merge_upsert(spark: SparkSession, table_dir: str, updates: DataFrame,
                  key_cols: list[str],
-                 partition_by: list[str] | None = None,
-                 protocol: str = "manifest") -> None:
-    """Keyed upsert into a parquet table directory (CDC-style incremental
-    corpus maintenance): rows in ``updates`` replace same-key rows in the
-    table; new keys append.
+                 partition_by: list[str] | None = None) -> None:
+    """Keyed upsert into a manifest table (CDC-style incremental corpus
+    maintenance): rows in ``updates`` replace same-key rows in the table;
+    new keys append.
 
-    **Manifest protocol (default)**: versions commit through the atomic
-    commit-log in sources/manifest.py — write the new version's data
-    first, then claim the version number with an O_EXCL commit file.
-    Readers (``read_parquet`` resolves manifest roots) always see a whole
+    Versions commit through the atomic commit log in sources/manifest.py
+    (``manifest_upsert``) — write the new version's data first, then
+    claim the version number with an O_EXCL commit file.  Readers
+    (``read_parquet`` resolves manifest roots) always see a whole
     committed snapshot, never a torn table; concurrent writers serialize
     optimistically (losers re-merge and retry).  Partition-granular when
     ``partition_by`` is given: only touched partitions are rewritten and
     untouched partition files hardlink into the new version (O(touched)
-    write volume, byte-identical untouched data).  Crash before commit
-    leaves the table untouched (the orphan data dir is vacuumed later);
-    there is no crash window after commit — the rename IS the commit.
-
-    **protocol="swap"** keeps the legacy single-writer dir-swap layout
-    (a plain parquet dir mutated in place), for tables that must remain
-    readable by engines that don't resolve the manifest:
-
-    **Partition-granular path** (``partition_by`` given): the table lives
-    in a Hive-partitioned layout (``col=value`` subdirectories) and only
-    the partitions containing updated keys are rewritten.  The update
-    set's distinct partition values (driver-side — there are few touched
-    partitions by the incremental contract) prune the base scan down to
-    the touched partitions (Catalyst partition pruning — the untouched
-    99% of a 100 TB table is never read, let alone rewritten); the merge
-    plan per touched partition is the same anti-join + union, and each
-    touched ``col=value`` directory is swapped independently with the
-    same deterministic ``.old`` backup/recovery protocol as the
-    table-granular path.  Untouched partition files are left byte-for-byte
-    intact.  CONTRACT: a key's partition-column values must be stable
-    across updates (the norm for key-derived partitioning); a key that
+    write volume, byte-identical untouched data).  CONTRACT: a key's
+    partition-column values must be stable across updates; a key that
     "moves" partitions would leave its old row behind in an untouched
-    partition.  Crash mid-loop leaves earlier touched partitions updated
-    and later ones one upsert behind — each is individually consistent
-    and healed/retried by the next call.
+    partition.  Crash before commit leaves the table untouched (the
+    orphan data dir is vacuumed later); there is no crash window after
+    commit — the claim IS the commit.
 
-    **Table-granular fallback** (default): copy-on-write of the whole
-    table — anti-join the existing table against the update keys
-    (broadcast — the update set is the small side), union the updates,
-    write to a sibling temp dir, then swap directories.  Crash safety:
-    the backup uses the DETERMINISTIC name ``<table_dir>.old`` and the
-    next call recovers it — a crash in the window between the two renames
-    (table absent, backup present) is healed by renaming the backup back
-    before merging, so the table is never lost, merely one upsert behind.
-    The swap itself is two renames, not one atomic operation, and the
-    backup is deleted as soon as the new table is in place — a reader
-    racing the swap on the SAME path can see a brief window with the new
-    files (or, mid-crash, no directory); point-in-time readers should
-    read a snapshot copy or a lakehouse format with real MVCC.
-    """
-    import shutil
-    import uuid
-
-    from pyspark.sql import functions as F
-
+    An existing plain (non-manifest) parquet directory is refused rather
+    than mutated: seed a fresh root, or rewrite the table into one."""
     from .manifest import is_manifest_root, manifest_upsert
 
-    if protocol == "manifest":
-        if os.path.isdir(table_dir) and not is_manifest_root(table_dir) \
-                and any(not f.startswith(("_", "."))
-                        for f in os.listdir(table_dir)):
-            raise ValueError(
-                f"{table_dir!r} is an existing plain parquet table; "
-                f"manifest-protocol upserts need a manifest root (seed a "
-                f"fresh dir, or pass protocol='swap' to keep mutating the "
-                f"legacy layout in place)")
-        manifest_upsert(spark, table_dir, updates, key_cols,
-                        partition_by=partition_by)
-        return
-    if protocol != "swap":
-        raise ValueError(f"protocol must be 'manifest' or 'swap', "
-                         f"got {protocol!r}")
-    if partition_by:
-        _merge_upsert_partitioned(spark, table_dir, updates, key_cols,
-                                  partition_by)
-        return
-
-    backup = f"{table_dir}.old"
-    if not os.path.exists(table_dir) and os.path.exists(backup):
-        # prior call crashed between its two renames: restore the backup
-        os.rename(backup, table_dir)
-    if not os.path.exists(table_dir):
-        updates.write.mode("overwrite").parquet(table_dir)
-        return
-    base = read_parquet(spark, table_dir)
-    keys = updates.select(*key_cols).distinct()
-    merged = base.join(F.broadcast(keys), key_cols, "left_anti") \
-                 .unionByName(updates)
-    tmp = f"{table_dir}.tmp-{uuid.uuid4().hex[:8]}"
-    merged.write.mode("overwrite").parquet(tmp)
-    if os.path.exists(backup):
-        # prior call crashed after its second rename but before cleanup;
-        # the live table is current, the stale backup can go
-        shutil.rmtree(backup)
-    os.rename(table_dir, backup)
-    os.rename(tmp, table_dir)
-    shutil.rmtree(backup)
+    if os.path.isdir(table_dir) and not is_manifest_root(table_dir) \
+            and any(not f.startswith(("_", "."))
+                    for f in os.listdir(table_dir)):
+        raise ValueError(
+            f"{table_dir!r} is an existing plain parquet table; upserts "
+            f"need a manifest root (seed a fresh dir, or rewrite the "
+            f"table into one with manifest_upsert)")
+    manifest_upsert(spark, table_dir, updates, key_cols,
+                    partition_by=partition_by)
 
 
 # Hive's escapePathName charset, verbatim (Spark ExternalCatalogUtils /
@@ -343,69 +275,6 @@ def _hive_part_path(cols: list[str], row) -> str:
         else:
             segs.append(f"{c}=" + _hive_escape(str(v)))
     return os.path.join(*segs)
-
-
-def _merge_upsert_partitioned(spark: SparkSession, table_dir: str,
-                              updates: DataFrame, key_cols: list[str],
-                              partition_by: list[str]) -> None:
-    """Partition-granular copy-on-write upsert (see ``merge_upsert``)."""
-    import shutil
-    import uuid
-
-    from pyspark.sql import functions as F
-
-    if not os.path.exists(table_dir):
-        updates.write.mode("overwrite").partitionBy(*partition_by) \
-            .parquet(table_dir)
-        return
-
-    touched = updates.select(*partition_by).distinct().collect()
-    if not touched:
-        return
-    rel_paths = [_hive_part_path(partition_by, r) for r in touched]
-
-    # heal partitions a prior crashed call left mid-swap
-    for rel in rel_paths:
-        live = os.path.join(table_dir, rel)
-        bak = f"{live}.old"
-        if os.path.exists(bak):
-            if os.path.exists(live):
-                shutil.rmtree(bak)      # crash after swap: live is current
-            else:
-                os.rename(bak, live)    # crash between renames: restore
-
-    # prune the base scan to the touched partitions — the literal filter
-    # (not a join) is what reaches Catalyst's partition pruning, so the
-    # untouched partitions are never read
-    cond = None
-    for r in touched:
-        c = None
-        for col in partition_by:
-            t = (F.col(col).isNull() if r[col] is None
-                 else (F.col(col) == F.lit(r[col])))
-            c = t if c is None else (c & t)
-        cond = c if cond is None else (cond | c)
-    base = read_parquet(spark, table_dir).filter(cond)
-
-    keys = updates.select(*key_cols).distinct()
-    merged = base.join(F.broadcast(keys), key_cols, "left_anti") \
-                 .unionByName(updates)
-    tmp = f"{table_dir}.tmp-{uuid.uuid4().hex[:8]}"
-    merged.write.mode("overwrite").partitionBy(*partition_by).parquet(tmp)
-
-    for rel in rel_paths:
-        src = os.path.join(tmp, rel)
-        dst = os.path.join(table_dir, rel)
-        bak = f"{dst}.old"
-        if not os.path.exists(src):
-            continue  # defensive: empty result partition
-        if os.path.exists(dst):
-            os.rename(dst, bak)
-        os.makedirs(os.path.dirname(dst), exist_ok=True)
-        os.rename(src, dst)
-        if os.path.exists(bak):
-            shutil.rmtree(bak)
-    shutil.rmtree(tmp)
 
 
 def read_csv_permissive(spark: SparkSession, path: str, schema_ddl: str,

@@ -381,10 +381,7 @@ def streaming_view_maintenance(
     import os as _os2
 
     from ..pipeline.cdc import agg_state, merge_agg_state
-    from ..sources.manifest import (
-        commit_version, latest_commit, latest_commit_info, new_version_dir,
-        read_table, vacuum,
-    )
+    from ..sources.manifest import _commit, _Written, latest_commit, read_table
 
     stream = (spark.readStream.schema(schema)
               .option("maxFilesPerTrigger", max_files_per_trigger)
@@ -395,29 +392,18 @@ def streaming_view_maintenance(
     state = {"n_batches": 0}
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        cur = latest_commit_info(view_root)
-        done = _replayed_batch(cur, txn_app, batch_id)
-        if done:
-            # replayed batch (crash after commit, before the streaming
-            # checkpoint advanced): its merge is already in the view —
-            # skipping is what makes the commit chain exactly-once
-            state["n_batches"] += 1
-            return
-        part = agg_state(batch_df, list(key_cols), value_col)
-        if cur is not None:
-            part = merge_agg_state(spark.read.parquet(cur["data_dir"]),
-                                   part, list(key_cols))
-        version = 1 if cur is None else cur["version"] + 1
-        data_dir = new_version_dir(view_root, version)
-        part.write.mode("overwrite").parquet(data_dir)
-        from ..sources.manifest import _inherited_txns
+        def write(info, data_dir):
+            part = agg_state(batch_df, list(key_cols), value_col)
+            if info is not None:
+                part = merge_agg_state(spark.read.parquet(info["data_dir"]),
+                                       part, list(key_cols))
+            part.write.mode("overwrite").parquet(data_dir)
+            return _Written(part.columns)
 
-        txns = _inherited_txns(cur)
-        txns[txn_app] = batch_id
-        commit_version(view_root, version, data_dir,
-                       meta={"batch_id": batch_id, "txn_app": txn_app,
-                             "txns": txns})
-        vacuum(view_root, keep=2)
+        # a replayed batch (crash after commit, before the streaming
+        # checkpoint advanced) is already in the view and commits nothing
+        _commit(spark, view_root, "streaming_view_maintenance", write,
+                keep_versions=2, txn=(txn_app, batch_id))
         state["n_batches"] += 1
 
     _drive(stream.writeStream.foreachBatch(_apply)
@@ -427,86 +413,27 @@ def streaming_view_maintenance(
     return read_table(spark, view_root)
 
 
-def _replayed_batch(cur: dict | None, txn_app: str, batch_id: int) -> bool:
-    """The Delta txnAppId+txnVersion idempotence check: a micro-batch is a
-    REPLAY (skip it) only when the table's last commit came from the SAME
-    streaming query identity (its checkpoint path) and already covers this
-    batch_id.  A batch_id at-or-below the watermark from a DIFFERENT
-    identity is not a replay — it is a restart against an existing table
-    with a FRESH checkpoint (batch ids restart at 0), where skipping would
-    silently drop data; raise so the caller reuses the original checkpoint
-    or targets a new table root."""
-    from ..sources.manifest import _inherited_txns
-
-    txns = _inherited_txns(cur)
-    done = txns.get(txn_app)
-    if done is not None:
-        return batch_id <= done
-    # no watermark for THIS identity; legacy tables recorded batch_id
-    # without an identity — keep their old skip behavior
-    meta = (cur or {}).get("meta", {})
-    if meta.get("txn_app") is None and meta.get("batch_id") is not None:
-        return batch_id <= meta["batch_id"]
-    other = max(txns.values(), default=None)
-    if other is not None and batch_id <= other:
-        raise ValueError(
-            f"batch {batch_id} <= committed watermark {other}, but the "
-            f"table's commits belong to streaming queries "
-            f"{sorted(txns)!r}, not {txn_app!r} — a fresh checkpoint "
-            f"restarts batch ids at 0, so skipping would silently lose "
-            f"data; reuse the original checkpoint directory or write to "
-            f"a new table root")
-    return False
-
-
 def _append_commit(spark: SparkSession, root: str, txn_app: str,
                    batch_id: int, rows) -> None:
     """One replay-guarded micro-batch append to the manifest table at
-    ``root``.  A replayed batch (``_replayed_batch``) commits nothing and
-    never calls ``rows``; otherwise ``rows()`` gives the batch's rows
-    (None: nothing to commit), which land as ONE new version: the rows
-    are written, every file of the previous version is hardlinked in,
-    the txn watermark advances, the table's CHECK constraints, min/max
-    stats and bloom filters carry forward at O(batch) cost (each step
-    is a no-op on a table that never registered it), then the version
-    commits and old ones are vacuumed."""
-    from ..sources.manifest import (
-        _enforce_constraints, _finalize_bloom, _finalize_stats,
-        _inherited_constraints, _inherited_stats_cols, _inherited_txns,
-        _link_tree, commit_version, latest_commit_info, new_version_dir,
-        vacuum,
-    )
+    ``root``.  A replayed batch commits nothing and never calls ``rows``;
+    otherwise ``rows()`` gives the batch's rows (None: nothing to
+    commit), which land as ONE new version through ``manifest._commit``:
+    the rows are written, every file of the previous version is
+    hardlinked in, the txn watermark advances and the table's
+    registrations carry forward at O(batch) cost; a lost commit race
+    reruns on the winner's table."""
+    from ..sources.manifest import _commit, _Written
 
-    cur = latest_commit_info(root)
-    if _replayed_batch(cur, txn_app, batch_id):
-        return  # replayed batch: its rows are already in the table
-    df = rows()
-    if df is None:
-        return
-    cons = _inherited_constraints(cur)
-    _enforce_constraints(df, cons)  # CHECKs guard streams too
-    version = 1 if cur is None else cur["version"] + 1
-    data_dir = new_version_dir(root, version)
-    df.write.mode("append").parquet(data_dir)
-    if cur is not None:
-        _link_tree(cur["data_dir"], data_dir, skip_prefixes=[])
-    txns = _inherited_txns(cur)
-    txns[txn_app] = batch_id
-    meta = {"batch_id": batch_id, "txn_app": txn_app, "txns": txns}
-    # hardlinked files carry their stats/bloom entries by relpath; only
-    # the batch's new files are read.  Inheritance goes through
-    # _inherited_stats_cols so a write_table_stats BACKFILL (sidecar
-    # only, commit meta untouched) survives too
-    scols = _inherited_stats_cols(cur, None)
-    if scols:
-        meta.update(_finalize_stats(
-            data_dir, scols, df.columns,
-            base_dir=cur["data_dir"] if cur else None))
-    meta.update(_finalize_bloom(spark, data_dir, cur, columns=df.columns))
-    if cons:
-        meta["constraints"] = cons
-    commit_version(root, version, data_dir, meta=meta)
-    vacuum(root, keep=2)
+    def write(info, data_dir):
+        df = rows()
+        if df is None:
+            return None
+        df.write.mode("append").parquet(data_dir)
+        return _Written(df.columns, link_except=())
+
+    _commit(spark, root, "stream append", write, keep_versions=2,
+            txn=(txn_app, batch_id))
 
 
 def streaming_append_table(

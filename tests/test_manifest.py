@@ -129,11 +129,11 @@ def test_manifest_refuses_plain_parquet_root(spark, tmp_path):
 
     out = str(tmp_path / "plain")
     _mk(spark, [(1, "a", 10)]).write.parquet(out)
-    with pytest.raises(ValueError, match="swap"):
+    with pytest.raises(ValueError, match="plain parquet table"):
         merge_upsert(spark, out, _mk(spark, [(1, "a2", 11)]), ["k"])
-    # the documented escape hatch still works on that layout
-    merge_upsert(spark, out, _mk(spark, [(1, "a2", 11)]), ["k"],
-                 protocol="swap")
+    # refused, not mutated: the plain table still reads as written
+    assert [tuple(r) for r in spark.read.parquet(out).collect()] == \
+        [(1, "a", 10)]
 
 
 def test_manifest_partitioned_hardlinks_untouched_partitions(
@@ -417,13 +417,201 @@ def test_commit_conflict_retries_on_winners_table(spark, tmp_path):
     # direct double-claim raises
     with pytest.raises(CommitConflict):
         commit_version(out, v + 1, rival_dir)
-    # our upsert loses the first claim, re-merges on the rival's table,
-    # and lands at v+2 including BOTH writers' effects
+    # the rival's commit is already the newest when our upsert reads its
+    # base, so the upsert merges on the rival's table and lands at v+2
+    # with BOTH writers' effects (a claim lost mid-write is covered by
+    # test_lost_commit_race_retries_on_winners_version)
     merge_upsert(spark, out, _mk(spark, [(2, "mine", 99)]), ["k"])
     v2, _ = latest_commit(out)
     assert v2 == v + 2
     got = {r.k: (r.s, r.v) for r in read_parquet(spark, out).collect()}
     assert got == {1: ("rival", 77), 2: ("mine", 99)}
+
+
+def _write_rows(path, rows):
+    """One parquet file of (k long, s string, v long) rows, via pyarrow."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    k, s, v = zip(*rows)
+    pq.write_table(pa.table({"k": pa.array(k, pa.int64()),
+                             "s": pa.array(s, pa.string()),
+                             "v": pa.array(v, pa.int64())}), path)
+
+
+def _seed_files(root, files):
+    """Version 1 of a manifest table holding one data file per row list,
+    so a compaction has several small files to merge."""
+    from steel_datafusion_spark.sources.manifest import (
+        commit_version, new_version_dir,
+    )
+
+    d = new_version_dir(root, 1)
+    for i, rows in enumerate(files):
+        _write_rows(os.path.join(d, f"part-{i}.parquet"), rows)
+    commit_version(root, 1, d)
+
+
+def _race_upsert(spark, root, tmp_path):
+    from steel_datafusion_spark.sources.manifest import manifest_upsert
+
+    manifest_upsert(spark, root, _mk(spark, [(2, "mine", 99)]), ["k"])
+    return {2: ("mine", 99)}
+
+
+def _race_delete(spark, root, tmp_path):
+    from steel_datafusion_spark.sources.manifest import manifest_delete
+
+    manifest_delete(spark, root, spark.createDataFrame([(2,)], "k long"),
+                    ["k"])
+    return {2: None}
+
+
+def _race_merge(spark, root, tmp_path):
+    from steel_datafusion_spark.sources.manifest import manifest_merge
+
+    manifest_merge(spark, root, _mk(spark, [(3, "merged", 98)]), ["k"])
+    return {3: ("merged", 98)}
+
+
+def _race_compact(spark, root, tmp_path):
+    from steel_datafusion_spark.sources.manifest import (
+        _iter_data_files, compact_table, latest_commit_info,
+    )
+
+    compact_table(spark, root, target_bytes=1 << 20)
+    info = latest_commit_info(root)
+    # the retry compacts the winner's table: 3 seed files + the rival's
+    assert info["meta"]["compacted_files"] == 4
+    assert len(list(_iter_data_files(info["data_dir"]))) == 1
+    return {}
+
+
+def _race_alter(spark, root, tmp_path):
+    from steel_datafusion_spark.sources.manifest import (
+        alter_table_constraints, latest_commit_info,
+    )
+
+    alter_table_constraints(spark, root, add={"v_pos": "v > 0"})
+    assert latest_commit_info(root)["meta"]["constraints"] == \
+        {"v_pos": "v > 0"}
+    return {}
+
+
+def _race_stream_append(spark, root, tmp_path):
+    from steel_datafusion_spark.streaming.operators import (
+        streaming_append_table,
+    )
+
+    src = str(tmp_path / "src")
+    os.makedirs(src)
+    _write_rows(os.path.join(src, "part-0.parquet"), [(4, "stream", 40)])
+    streaming_append_table(spark, src, _mk(spark, []).schema, root,
+                           str(tmp_path / "work"))
+    return {4: ("stream", 40)}
+
+
+@pytest.mark.parametrize("writer", [
+    _race_upsert, _race_delete, _race_merge, _race_compact, _race_alter,
+    _race_stream_append], ids=lambda f: f.__name__[len("_race_"):])
+def test_lost_commit_race_retries_on_winners_version(spark, tmp_path,
+                                                     monkeypatch, writer):
+    """Every writer loses its first claim to a rival that commits between
+    the writer's base read and its claim: the writer removes its data
+    dir, reruns on the winner's version and commits exactly one version
+    on top, with both writers' effects visible."""
+    from steel_datafusion_spark.sources import manifest
+    from steel_datafusion_spark.sources.manifest import (
+        _link_tree, latest_commit, latest_commit_info, new_version_dir,
+        read_table,
+    )
+
+    root = str(tmp_path / "tbl")
+    _seed_files(root, [[(1, "a", 10)], [(2, "b", 20)], [(3, "c", 30)]])
+    real_commit = manifest.commit_version
+    claims = []
+
+    def racing_commit(root_, version, data_dir, meta=None):
+        if not claims:  # the rival wins this version number
+            info = latest_commit_info(root_)
+            rival = new_version_dir(root_, info["version"] + 1)
+            _link_tree(info["data_dir"], rival, ())
+            _write_rows(os.path.join(rival, "rival.parquet"),
+                        [(9, "rival", 9)])
+            real_commit(root_, info["version"] + 1, rival,
+                        meta=info["meta"])
+        claims.append(version)
+        return real_commit(root_, version, data_dir, meta=meta)
+
+    monkeypatch.setattr(manifest, "commit_version", racing_commit)
+    effect = writer(spark, root, tmp_path)
+
+    assert claims == [2, 3]  # lost version 2, retried on the winner's
+    assert latest_commit(root)[0] == 3
+    want = {1: ("a", 10), 2: ("b", 20), 3: ("c", 30), 9: ("rival", 9)}
+    want.update(effect)
+    want = {k: sv for k, sv in want.items() if sv is not None}
+    got = {r.k: (r.s, r.v) for r in read_table(spark, root).collect()}
+    assert got == want
+    commits = [f for f in os.listdir(os.path.join(root, "_commits"))
+               if f.startswith("v") and f.endswith(".json")]
+    assert len(commits) == 3
+    committed = set()
+    for f in commits:
+        with open(os.path.join(root, "_commits", f)) as fh:
+            committed.add(os.path.basename(json.load(fh)["data_dir"]))
+    assert set(os.listdir(os.path.join(root, "_versions"))) <= committed
+
+
+def test_compact_skips_hidden_dirs(spark, tmp_path):
+    """A crashed pruner's ``.prune-*`` scratch dir inside the base version
+    is neither compacted, carried into the new version nor counted."""
+    from steel_datafusion_spark.sources.manifest import (
+        compact_table, latest_commit_info, read_table,
+    )
+
+    root = str(tmp_path / "tbl")
+    _seed_files(root, [[(1, "a", 10)], [(2, "b", 20)]])
+    scratch = os.path.join(latest_commit_info(root)["data_dir"],
+                           ".prune-x")
+    os.makedirs(scratch)
+    _write_rows(os.path.join(scratch, "a.parquet"), [(7, "x", 7)])
+    _write_rows(os.path.join(scratch, "b.parquet"), [(8, "y", 8)])
+
+    assert compact_table(spark, root, target_bytes=1 << 20) == 2
+    info = latest_commit_info(root)
+    assert info["meta"]["compacted_files"] == 2
+    assert not [f for f in os.listdir(info["data_dir"])
+                if f.startswith(".prune")]
+    assert sorted(r.k for r in read_table(spark, root).collect()) == [1, 2]
+
+
+def test_view_commits_carry_registrations(spark, tmp_path):
+    """A stats backfill and a CHECK constraint on a streaming view's root
+    survive the view's next micro-batch commit."""
+    from steel_datafusion_spark.sources.manifest import (
+        alter_table_constraints, table_detail, write_table_stats,
+    )
+    from steel_datafusion_spark.streaming.operators import (
+        streaming_view_maintenance,
+    )
+
+    src = str(tmp_path / "src")
+    work = str(tmp_path / "work")
+    view = os.path.join(work, "view")
+    df = spark.createDataFrame([(i % 3, float(i)) for i in range(30)],
+                               "k int, v double")
+    df.coalesce(1).write.parquet(src)
+    streaming_view_maintenance(spark, src, df.schema, ["k"], "v", work)
+    write_table_stats(view, ["k"])
+    alter_table_constraints(spark, view, add={"n_pos": "n > 0"})
+    df.coalesce(1).write.mode("append").parquet(src)  # the next batch
+    got = streaming_view_maintenance(spark, src, df.schema, ["k"], "v",
+                                     work)
+    assert {r.k: r.n for r in got.collect()} == {0: 20, 1: 20, 2: 20}
+    d = table_detail(spark, view).head()
+    assert d.stats_cols == ["k"]
+    assert json.loads(d.constraints) == {"n_pos": "n > 0"}
 
 
 def test_concurrent_reader_never_sees_torn_table(spark, tmp_path):
@@ -1283,7 +1471,7 @@ def test_replay_skip_survives_interleaved_maintenance(spark, tmp_path):
         alter_table_constraints, compact_table, latest_commit_info,
         manifest_upsert, read_table,
     )
-    from steel_datafusion_spark.streaming.operators import _replayed_batch
+    from steel_datafusion_spark.sources.manifest import _replayed_batch
 
     src = str(tmp_path / "src")
     tbl = str(tmp_path / "tbl")

@@ -41,3 +41,20 @@ def test_df_explain_analyze_embeds_runtime_metrics(spark):
     metrics = out["Plan with Metrics"]
     assert "Range: number of output rows=100" in metrics
     assert "HashAggregate" in metrics
+
+
+def test_driver_memory_default_sized_from_host(monkeypatch):
+    """Half the host's memory, capped at 32g; the env var overrides it.
+    Stubbed host, no Spark."""
+    import os
+
+    from steel_datafusion_spark.session import _driver_memory
+
+    pages = {"SC_PAGE_SIZE": 4096, "SC_PHYS_PAGES": (16 << 30) // 4096}
+    monkeypatch.setattr(os, "sysconf", lambda name: pages[name])
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    assert _driver_memory() == "8g"
+    pages["SC_PHYS_PAGES"] = (256 << 30) // 4096
+    assert _driver_memory() == "32g"
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "3g")
+    assert _driver_memory() == "3g"

@@ -339,7 +339,7 @@ def test_no_forced_broadcast_on_sf_proportional_tables():
 # ---------------------------------------------------------------------------
 
 def test_replayed_batch_same_identity_skips():
-    from steel_datafusion_spark.streaming.operators import _replayed_batch
+    from steel_datafusion_spark.sources.manifest import _replayed_batch
 
     cur = {"meta": {"batch_id": 3, "txn_app": "/ckpt/a"}}
     assert _replayed_batch(cur, "/ckpt/a", 3) is True
@@ -430,7 +430,7 @@ def test_ann_index_probe_matches_inline_and_skips_corpus(
 def test_replayed_batch_fresh_checkpoint_raises_not_skips():
     """batch_id 0 from a NEW checkpoint against an existing table is a
     restart, not a replay — silent skip would lose data (ADVICE r10)."""
-    from steel_datafusion_spark.streaming.operators import _replayed_batch
+    from steel_datafusion_spark.sources.manifest import _replayed_batch
 
     cur = {"meta": {"batch_id": 3, "txn_app": "/ckpt/a"}}
     with pytest.raises(ValueError, match="fresh checkpoint"):

@@ -78,56 +78,37 @@ def test_merge_upsert_replace_and_insert(spark, tmp_path_factory):
     base = spark.createDataFrame(
         [(1, "a", 10), (2, "b", 20), (3, "c", 30)],
         "k long, s string, v long")
-    merge_upsert(spark, out, base, ["k"], protocol="swap")  # seed
+    merge_upsert(spark, out, base, ["k"])  # seed
     upd = spark.createDataFrame(
         [(2, "b2", 99), (4, "d", 40)], "k long, s string, v long")
-    merge_upsert(spark, out, upd, ["k"], protocol="swap")
+    merge_upsert(spark, out, upd, ["k"])
     got = {r.k: (r.s, r.v) for r in read_parquet(spark, out).collect()}
     assert got == {1: ("a", 10), 2: ("b2", 99), 3: ("c", 30), 4: ("d", 40)}
     # idempotent: re-applying the same batch changes nothing
-    merge_upsert(spark, out, upd, ["k"], protocol="swap")
+    merge_upsert(spark, out, upd, ["k"])
     again = {r.k: (r.s, r.v) for r in read_parquet(spark, out).collect()}
     assert again == got
 
 
-def test_merge_upsert_recovers_from_crashed_swap(spark, tmp_path_factory):
-    import os
-
-    from steel_datafusion_spark.sources.readers import (
-        merge_upsert, read_parquet,
-    )
-    out = str(tmp_path_factory.mktemp("upsert_crash")) + "/tbl"
-    base = spark.createDataFrame(
-        [(1, "a", 10), (2, "b", 20)], "k long, s string, v long")
-    merge_upsert(spark, out, base, ["k"], protocol="swap")
-    # simulate a crash between the two swap renames: table gone, backup
-    # sits at the deterministic .old name
-    os.rename(out, out + ".old")
-    upd = spark.createDataFrame([(2, "b2", 99)], "k long, s string, v long")
-    merge_upsert(spark, out, upd, ["k"], protocol="swap")  # heal then merge
-    got = {r.k: (r.s, r.v) for r in read_parquet(spark, out).collect()}
-    assert got == {1: ("a", 10), 2: ("b2", 99)}
-    assert not os.path.exists(out + ".old")
-
-    # crash after the second rename but before backup cleanup: stale .old
-    os.makedirs(out + ".old")
-    merge_upsert(spark, out, upd, ["k"], protocol="swap")
-    got = {r.k: (r.s, r.v) for r in read_parquet(spark, out).collect()}
-    assert got == {1: ("a", 10), 2: ("b2", 99)}
-    assert not os.path.exists(out + ".old")
-
-
 def _part_files(root, rel):
+    """{relpath: (sha256, mtime_ns)} of one partition's data files in
+    the newest committed version of the manifest table at ``root`` (the
+    hidden checksum files Spark writes beside them do not carry)."""
     import hashlib
     import os
 
-    d = os.path.join(root, rel)
+    from steel_datafusion_spark.sources.manifest import latest_commit
+
+    version_dir = latest_commit(root)[1]
+    d = os.path.join(version_dir, rel)
     out = {}
     for dirpath, _, files in os.walk(d):
         for f in sorted(files):
+            if f.startswith((".", "_")):
+                continue
             p = os.path.join(dirpath, f)
             with open(p, "rb") as fh:
-                out[os.path.relpath(p, root)] = (
+                out[os.path.relpath(p, version_dir)] = (
                     hashlib.sha256(fh.read()).hexdigest(),
                     os.stat(p).st_mtime_ns)
     return out
@@ -143,54 +124,30 @@ def test_merge_upsert_partitioned_touches_only_updated_partitions(
         [(1, "a", 10, "p1"), (2, "b", 20, "p1"),
          (3, "c", 30, "p2"), (4, "d", 40, "p3")],
         "k long, s string, v long, p string")
-    merge_upsert(spark, out, base, ["k"], partition_by=["p"],
-                 protocol="swap")
+    merge_upsert(spark, out, base, ["k"], partition_by=["p"])
+    before_p1 = _part_files(out, "p=p1")
     before_p2 = _part_files(out, "p=p2")
     before_p3 = _part_files(out, "p=p3")
-    assert before_p2 and before_p3
+    assert before_p1 and before_p2 and before_p3
 
     upd = spark.createDataFrame(
         [(2, "b2", 99, "p1"), (5, "e", 50, "p4")],
         "k long, s string, v long, p string")
-    merge_upsert(spark, out, upd, ["k"], partition_by=["p"],
-                 protocol="swap")
+    merge_upsert(spark, out, upd, ["k"], partition_by=["p"])
 
-    # untouched partitions byte-identical (content hash AND mtime)
+    # untouched partitions byte-identical (content hash AND mtime) in the
+    # new version; the touched one was rewritten
     assert _part_files(out, "p=p2") == before_p2
     assert _part_files(out, "p=p3") == before_p3
+    assert _part_files(out, "p=p1") != before_p1
     got = {r.k: (r.s, r.v, r.p) for r in read_parquet(spark, out).collect()}
     assert got == {1: ("a", 10, "p1"), 2: ("b2", 99, "p1"),
                    3: ("c", 30, "p2"), 4: ("d", 40, "p3"),
                    5: ("e", 50, "p4")}
     # idempotent re-apply
-    merge_upsert(spark, out, upd, ["k"], partition_by=["p"],
-                 protocol="swap")
+    merge_upsert(spark, out, upd, ["k"], partition_by=["p"])
     again = {r.k: (r.s, r.v, r.p) for r in read_parquet(spark, out).collect()}
     assert again == got
-
-
-def test_merge_upsert_partitioned_heals_crashed_partition_swap(
-        spark, tmp_path_factory):
-    import os
-
-    from steel_datafusion_spark.sources.readers import (
-        merge_upsert, read_parquet,
-    )
-    out = str(tmp_path_factory.mktemp("upsert_part_crash")) + "/tbl"
-    base = spark.createDataFrame(
-        [(1, "a", 10, "p1"), (3, "c", 30, "p2")],
-        "k long, s string, v long, p string")
-    merge_upsert(spark, out, base, ["k"], partition_by=["p"],
-                 protocol="swap")
-    # crash between the per-partition renames: p=p1 gone, backup present
-    os.rename(os.path.join(out, "p=p1"), os.path.join(out, "p=p1.old"))
-    upd = spark.createDataFrame([(1, "a2", 11, "p1")],
-                                "k long, s string, v long, p string")
-    merge_upsert(spark, out, upd, ["k"], partition_by=["p"],
-                 protocol="swap")
-    got = {r.k: (r.s, r.v, r.p) for r in read_parquet(spark, out).collect()}
-    assert got == {1: ("a2", 11, "p1"), 3: ("c", 30, "p2")}
-    assert not os.path.exists(os.path.join(out, "p=p1.old"))
 
 
 def test_ensure_session_confs_raises_only_on_a_differing_unsettable_conf():
