@@ -1,30 +1,28 @@
 """Columnar per-file statistics: the data-skipping format of the
-manifest tables.  A real table format keeps per-file stats as PARQUET
-(Delta's checkpoint) and evaluates skipping verdicts columnar, never with
-a per-file Python loop; so do these sidecars:
+manifest tables and the one engine that evaluates it.  A real table
+format keeps per-file stats as PARQUET (Delta's checkpoint) and
+evaluates skipping verdicts columnar, never with a per-file Python
+loop; so do these sidecars:
 
 - ``_stats.parquet`` (one per immutable version dir): one ROW per data
   file, with typed columns ``lo:<col>``/``hi:<col>``/``nulls:<col>``/
   ``ok:<col>`` per statted column, ``part:<col>`` per Hive partition
-  segment, plus ``rel``/``rows``.  Written columnar (footer reads fan out
-  over a thread pool), carried forward across versions by vectorized
-  relpath alignment (``pc.index_in`` + ``Table.take`` — no per-file
-  Python), so a commit still stats only its NEW files.
+  segment, plus ``rel``/``rows``.  Built from the new files' parquet
+  FOOTERS (no row data) read on a driver thread pool, and carried
+  forward across versions by vectorized relpath alignment
+  (``pc.index_in`` + ``Table.take`` — no per-file Python), so a commit
+  still stats only its NEW files.
 - ``_bloom-<col>.parquet`` per bloom-indexed column: ``rel`` + a
   fixed-size-binary filter per file (bits/k in the parquet file
-  metadata).  Filters are PACKED EXECUTOR-SIDE (a vectorized pandas UDF
-  turns each file's distinct bit list into bytes), so the driver's cost
-  is one Arrow batch of (rel, bytes) — no per-(file, bit) Python.
-- Reads load ONLY the probed columns (parquet column projection) and
-  evaluate every file's verdict VECTORIZED: range checks as
-  pyarrow.compute kernels, partition checks per *distinct* partition
-  value (dictionary-encode, then O(distinct) Python), bloom probes as a
-  numpy bit-test over an (n_files, nbytes) uint8 matrix.
-- Past ``SDF_PRUNE_DRIVER_MAX_BYTES`` (default 128 MB of stats parquet)
-  the verdict moves INTO SPARK: the stats table is read as a DataFrame,
-  the same compiled predicate runs as a Column filter, and only the
-  SURVIVING relpaths ever reach the driver — flat driver RSS at any file
-  count, the shape Delta uses for multi-TB checkpoint logs.
+  metadata).  This module only stores and probes them; the filters are
+  built by one JVM column scan (``manifest._write_bloom_cols``), which
+  hashes with Spark's ``xxhash64`` exactly as the probe does.
+- Reads (``prune_with_stats_parquet``) load ONLY the probed columns
+  (parquet column projection) and evaluate every file's verdict on the
+  driver, VECTORIZED: range checks as pyarrow.compute kernels,
+  partition checks per *distinct* partition value (dictionary-encode,
+  then O(distinct) Python), bloom probes as a numpy bit-test over an
+  (n_files, nbytes) uint8 matrix.  A read never writes.
 
 Every verdict is conservative by construction: any unloadable sidecar,
 unstatted column, incomparable literal, or failed kernel keeps the file
@@ -40,22 +38,22 @@ version whose ``_stats.parquet`` is missing or fails that guard prunes
 over a directory census instead: partition and bloom verdicts run as
 usual and stats verdicts keep every file.
 
-Literals are compiled ONCE into engine-agnostic keep-specs
-(:func:`compile_range_spec`) shared by the pyarrow and Spark evaluators:
+Literals are compiled ONCE into keep-specs (:func:`compile_range_spec`):
 exact integer comparisons stay integral (no float64 rounding at 2^53 —
 the bug class a ``cast("double")`` would reintroduce), and inexact
 conversions WIDEN toward keeping the file (``math.nextafter``), mirroring
 the write side, which widens Decimal/huge-int bounds outward when they
 don't convert to float64 exactly.
 
-Reference parity note: the reference engine (``/root/reference`` —
-src/main.rs) delegates scans to DataFusion, which prunes parquet via
-row-group statistics inside the engine; this module plays that role for
-the manifest tables, at file granularity, Spark-first.
+Reference parity note: the reference engine (src/main.rs) delegates
+scans to DataFusion, whose ``PruningPredicate`` evaluates min/max
+statistics as Arrow kernels inside the engine; this module plays that
+role for the manifest tables, at file granularity.
 """
 
 from __future__ import annotations
 
+import concurrent.futures
 import datetime
 import decimal
 import json
@@ -66,13 +64,6 @@ import urllib.parse
 STATS_PARQUET = "_stats.parquet"
 BLOOM_PQ_SUFFIX = ".parquet"
 _BLOOM_PREFIX = "_bloom-"
-
-# stats-parquet size (bytes) past which the file-verdict evaluation
-# escalates from driver-side pyarrow kernels to a Spark DataFrame filter
-# (only survivors reach the driver).  Overridable per-process for tests
-# and for clusters whose drivers are tighter/looser on memory.
-PRUNE_DRIVER_MAX_BYTES = int(
-    os.environ.get("SDF_PRUNE_DRIVER_MAX_BYTES", 128 << 20))
 
 # file count up to which a pruned read CROSS-CHECKS the stats sidecar's
 # row count against an actual directory census before trusting its rel
@@ -155,78 +146,11 @@ def _part_arrays(rels: list[str], part_cols: list[str]) -> dict:
             for p in part_cols}
 
 
-def bloom_foldable_type(typ) -> bool:
-    """Arrow types whose Spark ``cast("string")`` canonicalization is
-    replicable exactly in Python — the precondition for folding a
-    column's bloom build into the footer pass (``_footer_entry``).
-    Integers, strings, booleans and dates round-trip; floats, decimals
-    and timestamps keep the JVM build (Spark's float→string formatting
-    is not worth re-implementing bug-for-bug)."""
-    import pyarrow as pa
-
-    return (pa.types.is_integer(typ) or pa.types.is_string(typ)
-            or pa.types.is_large_string(typ) or pa.types.is_boolean(typ)
-            or pa.types.is_date32(typ))
-
-
-def _bloom_canon(v) -> str:
-    """One value's Spark cast-to-string canonical form (restricted to
-    the ``bloom_foldable_type`` domain)."""
-    if isinstance(v, bool):
-        return "true" if v else "false"
-    return str(v)  # int → decimal digits; str → itself; date → ISO
-
-
-def _file_bloom_bytes(pf, path: str, spec: dict) -> dict:
-    """Per-column packed bloom filter bytes for ONE file, hashed with
-    the bit-exact Spark xxhash64 replica (``sources/xxhash64.py``), so
-    the output is byte-identical to the JVM build in
-    ``manifest._write_bloom_cols`` and probes (which hash literals
-    through a Spark job) keep their no-false-negative contract.  A file
-    missing the column (schema drift) gets an all-zero filter — the
-    JVM build's union-schema scan produces the same, and pruning it for
-    any equality is correct (absent column reads as NULL).  NULL values
-    contribute no bits (the JVM build explodes only isNotNull)."""
-    import numpy as np
-    import pyarrow.compute as pc
-
-    from .xxhash64 import spark_xxhash64_str
-
-    out = {}
-    names = set(pf.schema_arrow.names)
-    want = [c for c in spec if c in names
-            and bloom_foldable_type(pf.schema_arrow.field(c).type)]
-    data = pf.read(columns=want) if want else None
-    for col, s in spec.items():
-        bits, k = int(s["bits"]), int(s["k"])
-        nbytes = bits // 8 + (1 if bits % 8 else 0)
-        buf = np.zeros(nbytes, dtype=np.uint8)
-        if col in names and col not in want:
-            continue  # unfoldable type in this file: abstain (no row)
-        if data is not None and col in data.column_names:
-            vals = pc.unique(data.column(col).combine_chunks())
-            for v in vals.to_pylist():
-                if v is None:
-                    continue
-                s_canon = _bloom_canon(v)
-                for i in range(k):
-                    b = spark_xxhash64_str(s_canon, i) % bits
-                    buf[b >> 3] |= 1 << (b & 7)
-        out[col] = buf.tobytes()
-    return out
-
-
-def _footer_entry(path: str, cols: list[str],
-                  bloom_spec: dict | None = None) -> dict:
+def _footer_entry(path: str, cols: list[str]) -> dict:
     """One file's stats from its parquet FOOTER (row-group statistics
     aggregated; row data never read).  Returns {"rows": n, "cols":
     {col: None | {"lo","hi","nulls"} | {"nulls"}}}, which
-    ``build_stats_table`` accumulates column by column.  With
-    ``bloom_spec``
-    ({col: {"bits","k"}}) the SAME file open also reads the spec'd
-    columns and packs their bloom filter bytes into a ``"bloom"`` key —
-    the one-pass stats+bloom build (VERDICT r13 item 3: blooms were a
-    second full scan of every file)."""
+    ``build_stats_table`` accumulates column by column."""
     import pyarrow.parquet as pq
 
     pf = pq.ParquetFile(path)
@@ -269,15 +193,12 @@ def _footer_entry(path: str, cols: list[str],
             entry[c] = {"nulls": a["nulls"]}  # all-null column
         else:
             entry[c] = {"lo": a["lo"], "hi": a["hi"], "nulls": a["nulls"]}
-    out = {"rows": md.num_rows, "cols": entry}
-    if bloom_spec:
-        out["bloom"] = _file_bloom_bytes(pf, path, bloom_spec)
-    return out
+    return {"rows": md.num_rows, "cols": entry}
 
 
 def _usable_bound(v) -> bool:
-    """Bounds with a usable ordering for pruning (bool/bytes/None carry
-    none — same domain rules as ``manifest._stat_encode``)."""
+    """Bounds with a usable ordering for pruning: numbers, strings,
+    dates, datetimes and Decimals (bool/bytes/None carry none)."""
     if isinstance(v, bool) or v is None:
         return False
     return isinstance(v, (int, float, str, datetime.datetime,
@@ -391,98 +312,19 @@ def _bound_arrays(lo_vals: list, hi_vals: list):
     return pa.array(los, type=typ), pa.array(his, type=typ), ok
 
 
-# new-file count past which footer scanning fans out over Spark
-# executors instead of a driver thread pool (the Delta shape: stats are
-# computed where the data lives).  Overridable for tests/clusters.
-STATS_SPARK_MIN_FILES = int(
-    os.environ.get("SDF_STATS_SPARK_MIN_FILES", 20000))
-
-
-def _footer_entries_spark(spark, files: dict, need: list[str],
-                          cols: list[str],
-                          bloom_spec: dict | None = None):
-    """Footer entries for ``need`` (sorted relpaths) computed EXECUTOR-
-    SIDE: the (rel, path) list ships as one Arrow frame, a mapInPandas
-    pass reads each footer where a worker sits, entries come back
-    _stat_encode-coded and ORDERED BY rel, and the caller streams them
-    through toLocalIterator — the driver never holds more than a batch.
-    At 10^6 tiny files this turns ~8 min of driver-sequenced footer
-    reads into a ~32-way parallel scan.  ``bloom_spec`` rides into
-    ``_footer_entry`` so the same pass also packs bloom bytes
-    (b64-coded through the Arrow frame)."""
-    import base64 as _b64
-    import json as _json
-
-    import pandas as pd
-
-    from .manifest import _stat_decode
-
-    pdf = pd.DataFrame({"rel": need, "path": [files[r] for r in need]})
-    parts = max(1, min(spark.sparkContext.defaultParallelism * 2,
-                       len(need)))
-    df = spark.createDataFrame(pdf).repartition(parts)
-    cols_list = list(cols)
-    spec = None if not bloom_spec else {
-        c: {"bits": int(s["bits"]), "k": int(s["k"])}
-        for c, s in bloom_spec.items()}
-
-    def _scan(batches):
-        from steel_datafusion_spark.sources.manifest import _stat_encode
-
-        for b in batches:
-            out = []
-            for path in b["path"]:
-                e = _footer_entry(path, cols_list, bloom_spec=spec)
-                enc = {
-                    "rows": e["rows"],
-                    "cols": {c: (None if v is None else {
-                        k: (_stat_encode(x) if k in ("lo", "hi") else x)
-                        for k, x in v.items()})
-                        for c, v in e["cols"].items()}}
-                if "bloom" in e:
-                    enc["bloom"] = {
-                        c: _b64.b64encode(v).decode("ascii")
-                        for c, v in e["bloom"].items()}
-                out.append(_json.dumps(enc))
-            yield pd.DataFrame({"rel": b["rel"], "e": out})
-
-    res = df.mapInPandas(_scan, "rel string, e string").orderBy("rel")
-    for row in res.toLocalIterator():
-        enc = _json.loads(row["e"])
-        out = {"rows": enc["rows"],
-               "cols": {c: (None if v is None else {
-                   k: (_stat_decode(x) if k in ("lo", "hi") else x)
-                   for k, x in v.items()})
-                   for c, v in enc["cols"].items()}}
-        if "bloom" in enc:
-            out["bloom"] = {c: _b64.b64decode(v)
-                            for c, v in enc["bloom"].items()}
-        yield out
+# threads reading new files' footers in build_stats_table (pyarrow
+# releases the GIL around the file I/O)
+_FOOTER_WORKERS = 16
 
 
 def build_stats_table(data_dir: str, cols: list[str],
-                      base_dir: str | None = None,
-                      max_workers: int = 16,
-                      bloom_spec: dict | None = None):
+                      base_dir: str | None = None):
     """The version's ``_stats.parquet`` as an in-memory pyarrow Table:
     one row per data file, sorted by relpath.  Carry-forward is
     VECTORIZED — the base version's parquet rows are matched by relpath
     (``pc.index_in``) and taken wholesale (hardlinked file ⇒ same inode
     ⇒ same footer), so only NEW files pay a footer read, and those fan
-    out over a thread pool (pyarrow releases the GIL around I/O).
-
-    With ``bloom_spec`` ({col: {"bits","k"}}) the SAME pass — same file
-    opens, same thread pool or executor fan-out — also packs per-file
-    bloom filter bytes (VERDICT r13 item 3: the bloom build was a
-    SECOND full scan; at 10^6 tiny files the file opens dominate, so
-    one pass ≈ half the wall).  Returns (stats_table,
-    {col: bloom_table}) in that mode: bloom rows cover carried files
-    (bytes reused from the base sidecar when its bits/k match) plus
-    every file this pass opened; a rel carried for stats but absent
-    from the base bloom simply has no row (probes abstain → keep —
-    never wrong, ``write_table_bloom`` backfills full coverage)."""
-    import concurrent.futures
-
+    out over a thread pool of ``_FOOTER_WORKERS``."""
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
@@ -517,57 +359,23 @@ def build_stats_table(data_dir: str, cols: list[str],
     rows_acc: list = []
     acc = {c: {"lo": [], "hi": [], "nulls": [], "present": []}
            for c in cols}
-    bl_acc: dict[str, list] = {c: [] for c in (bloom_spec or {})}
-
-    def _consume(entry: dict) -> None:
-        rows_acc.append(entry.get("rows"))
-        ecols = entry.get("cols") or {}
-        for c in cols:
-            e = ecols.get(c)
-            a = acc[c]
-            if e is None:
-                a["lo"].append(None)
-                a["hi"].append(None)
-                a["nulls"].append(None)
-                a["present"].append(False)
-            else:
-                a["lo"].append(e.get("lo"))
-                a["hi"].append(e.get("hi"))
-                a["nulls"].append(e.get("nulls"))
-                a["present"].append(True)
-        eb = entry.get("bloom") or {}
-        for c in bl_acc:
-            bl_acc[c].append(eb.get(c))  # None = abstain row
-
     if new_rels:
-        ex = None
-        spark = None
-        if len(new_rels) >= STATS_SPARK_MIN_FILES:
-            try:
-                from pyspark.sql import SparkSession
-
-                spark = SparkSession.getActiveSession()
-            except Exception:
-                spark = None
-        if spark is not None:
-            # executor-parallel footer scan, streamed back in rel
-            # order (new_rels is sorted) — the driver holds one Arrow
-            # batch at a time
-            footer_iter = _footer_entries_spark(
-                spark, files, new_rels, cols, bloom_spec=bloom_spec)
-        else:
-            ex = concurrent.futures.ThreadPoolExecutor(
-                max_workers=min(max_workers, len(new_rels)))
-            footer_iter = ex.map(
-                lambda r: _footer_entry(files[r], cols,
-                                        bloom_spec=bloom_spec),
-                new_rels)
+        ex = concurrent.futures.ThreadPoolExecutor(
+            max_workers=min(_FOOTER_WORKERS, len(new_rels)))
         try:
-            for entry in footer_iter:
-                _consume(entry)
+            for entry in ex.map(lambda r: _footer_entry(files[r], cols),
+                                new_rels):
+                rows_acc.append(entry["rows"])
+                for c in cols:
+                    e = entry["cols"].get(c)
+                    a = acc[c]
+                    a["lo"].append(None if e is None else e.get("lo"))
+                    a["hi"].append(None if e is None else e.get("hi"))
+                    a["nulls"].append(None if e is None
+                                      else e.get("nulls"))
+                    a["present"].append(e is not None)
         finally:
-            if ex is not None:
-                ex.shutdown(wait=False, cancel_futures=True)
+            ex.shutdown(wait=False, cancel_futures=True)
 
     part_cols = _part_cols_of_rels(rels)
     arrays: dict[str, pa.Array] = {}
@@ -617,43 +425,7 @@ def build_stats_table(data_dir: str, cols: list[str],
     # truncated/partial sidecar can never silently DROP data files
     # from results (the rel column is the survivors' source of truth)
     meta[b"file_count"] = str(tbl.num_rows).encode()
-    tbl = tbl.replace_schema_metadata(meta)
-    if not bloom_spec:
-        return tbl
-
-    blooms: dict[str, "pa.Table"] = {}
-    rels_now = pa.array(rels, type=pa.string())
-    for col, s in bloom_spec.items():
-        bits, k = int(s["bits"]), int(s["k"])
-        nbytes = bits // 8 + (1 if bits % 8 else 0)
-        comp_rels = [r for r, bb in zip(new_rels, bl_acc[col])
-                     if bb is not None]
-        comp = pa.table({
-            "rel": pa.array(comp_rels, type=pa.string()),
-            "f": pa.array([bb for bb in bl_acc[col] if bb is not None],
-                          type=pa.binary(nbytes))})
-        pieces = [comp]
-        if base_dir is not None:
-            b = load_bloom_parquet(base_dir, col)
-            if b is not None and b["bits"] == bits and b["k"] == k:
-                # vectorized carry: base rows still live in this
-                # version and not freshly computed (same inode ⇒ same
-                # bytes either way; computed wins arbitrarily)
-                mask = pc.is_in(b["rels"], value_set=rels_now)
-                if comp_rels:
-                    mask = pc.and_(mask, pc.invert(pc.is_in(
-                        b["rels"],
-                        value_set=pa.array(comp_rels,
-                                           type=pa.string()))))
-                carried = b["tbl"].select(["rel", "f"]).filter(mask)
-                if carried.num_rows:
-                    pieces.append(pa.table({
-                        "rel": carried.column("rel"),
-                        "f": carried.column("f").cast(
-                            pa.binary(nbytes))}))
-        blooms[col] = (pa.concat_tables(pieces) if len(pieces) > 1
-                       else pieces[0]).sort_by("rel")
-    return tbl, blooms
+    return tbl.replace_schema_metadata(meta)
 
 
 def _concat_aligned(pieces):
@@ -703,37 +475,8 @@ def write_stats_parquet(data_dir: str, cols: list[str],
     return tbl.num_rows
 
 
-def write_stats_and_bloom_parquet(
-        data_dir: str, stats_cols: list[str], bloom_spec: dict,
-        base_dir: str | None = None) -> tuple[int, dict]:
-    """Write ``_stats.parquet`` AND the per-column bloom sidecars from
-    ONE pass over the data files (``build_stats_table(bloom_spec=…)``)
-    — the bloom build used to be a second full scan, which at 10^6
-    tiny files doubles the wall for no reason (file opens dominate,
-    and the bloom columns' bytes are a rounding error next to the
-    open+footer cost).  Returns (files_covered,
-    {col: bloom_rows_written})."""
-    import pyarrow.parquet as pq
-
-    if not bloom_spec:
-        # empty spec (e.g. every requested column unfoldable): plain
-        # stats build — build_stats_table returns a bare table then
-        return write_stats_parquet(data_dir, stats_cols,
-                                   base_dir=base_dir), {}
-    tbl, blooms = build_stats_table(data_dir, stats_cols,
-                                    base_dir=base_dir,
-                                    bloom_spec=bloom_spec)
-    pq.write_table(tbl, stats_parquet_path(data_dir))
-    counts = {}
-    for col, bt in blooms.items():
-        s = bloom_spec[col]
-        counts[col] = write_bloom_parquet_table(
-            data_dir, col, bt, int(s["bits"]), int(s["k"]))
-    return tbl.num_rows, counts
-
-
 # ---------------------------------------------------------------------------
-# Predicate compilation (shared by the pyarrow and Spark evaluators)
+# Predicate compilation
 # ---------------------------------------------------------------------------
 
 # keep-spec: {"keep_all"} | {"keep_none"} |
@@ -839,7 +582,7 @@ def _exact_thresholds(op: str, val):
 
 def compile_range_spec(dom: str, op: str, val):
     """One (op, literal) compiled against a bound domain ("int",
-    "float", "str", "ts") into an engine-agnostic keep-spec.  "in"
+    "float", "str", "ts") into a keep-spec.  "in"
     becomes a disjunction.  Anything incomparable compiles to KEEP_ALL
     (abstain)."""
     if op == "in":
@@ -891,19 +634,6 @@ def _domain_of_arrow(typ) -> str | None:
     if pa.types.is_string(typ) or pa.types.is_large_string(typ):
         return "str"
     if pa.types.is_timestamp(typ) or pa.types.is_date(typ):
-        return "ts"
-    return None
-
-def _domain_of_spark(dt) -> str | None:
-    from pyspark.sql import types as T
-
-    if isinstance(dt, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)):
-        return "int"
-    if isinstance(dt, (T.FloatType, T.DoubleType)):
-        return "float"
-    if isinstance(dt, T.StringType):
-        return "str"
-    if isinstance(dt, (T.TimestampType, T.TimestampNTZType, T.DateType)):
         return "ts"
     return None
 
@@ -963,24 +693,6 @@ def load_bloom_parquet(data_dir: str, col: str):
         return None
 
 
-def _bloom_header(data_dir: str, col: str) -> dict | None:
-    """bits/k of one column's parquet bloom sidecar from the footer
-    metadata alone — no filter bytes load (the Spark-escalation path
-    keeps the byte matrix executor-side)."""
-    import pyarrow.parquet as pq
-
-    p = bloom_parquet_path(data_dir, col)
-    if not os.path.exists(p):
-        return None
-    try:
-        meta = json.loads((pq.ParquetFile(p).schema_arrow.metadata
-                           or {})[b"bloom"])
-        return {"bits": int(meta["bits"]), "k": int(meta["k"]),
-                "nbytes": int(meta["nbytes"])}
-    except (OSError, ValueError, KeyError, TypeError):
-        return None
-
-
 def bloom_parquet_specs(data_dir: str) -> dict[str, dict]:
     """{col: {"bits","k"}} from the parquet bloom sidecars' metadata
     headers (no row reads)."""
@@ -1021,8 +733,7 @@ def _bloom_admit_np(mat, probe_rows) -> "object":
 
 
 # ---------------------------------------------------------------------------
-# Vectorized pruning (pyarrow driver-side; Spark escalation above the
-# PRUNE_DRIVER_MAX_BYTES threshold)
+# Vectorized pruning (pyarrow/numpy, driver-side)
 # ---------------------------------------------------------------------------
 
 def _eval_spec_pc(spec, lo, hi):
@@ -1145,7 +856,7 @@ def _census_table(data_dir: str):
     return pa.table(arrays)
 
 
-def prune_with_stats_parquet(spark, data_dir: str, where: list[tuple],
+def prune_with_stats_parquet(data_dir: str, where: list[tuple],
                              bloom_bits_fn):
     """File-level pruning against ``_stats.parquet`` (+ parquet bloom
     sidecars); returns (surviving relpaths, total file count).  A
@@ -1155,41 +866,24 @@ def prune_with_stats_parquet(spark, data_dir: str, where: list[tuple],
     ``bloom_bits_fn(col, vals, bits, k)`` maps literals to probe bit
     rows under the build's exact hash (or None to abstain).
 
-    Driver cost is one column-projected parquet read plus vectorized
-    kernels — no per-file Python.  When the stats file exceeds
-    ``PRUNE_DRIVER_MAX_BYTES``, the identical compiled predicate runs
-    as a Spark DataFrame filter over the stats table instead and only
-    the SURVIVORS' relpaths return to the driver."""
+    Cost is one column-projected parquet read plus vectorized kernels —
+    no per-file Python, and nothing is written."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    sp = stats_parquet_path(data_dir)
     pf = _checked_stats_file(data_dir)
-    spark_mode = False
-    if pf is not None:
-        try:
-            spark_mode = os.path.getsize(sp) > PRUNE_DRIVER_MAX_BYTES
-        except OSError:
-            spark_mode = False
 
-    # resolve bloom sidecars for =/in predicates up front (shared by
-    # both evaluation engines).  In Spark mode only the HEADER (bits/k)
-    # loads driver-side — the filter bytes stay executor-side; the
-    # driver path loads the full byte matrix for the numpy probe.
-    # ONE sidecar load per column but ONE probe row-set PER PREDICATE
-    # OCCURRENCE: two =/in predicates on the same column each test
-    # their own literals (the conjunction is the intersection of
-    # admits) — reusing the first predicate's probe was conservative
-    # driver-side but joined the sidecar twice with a colliding column
-    # name in Spark mode (ADVICE r13).
+    # ONE bloom sidecar load per column but ONE probe row-set PER
+    # PREDICATE OCCURRENCE: two =/in predicates on the same column each
+    # test their own literals (the conjunction is the intersection of
+    # admits)
     blooms: dict[str, dict] = {}
     for i, (col, op, val) in enumerate(where):
         if op not in ("=", "in"):
             continue
         if col not in blooms:
-            b = _bloom_header(data_dir, col) if spark_mode \
-                else load_bloom_parquet(data_dir, col)
+            b = load_bloom_parquet(data_dir, col)
             if b is not None:
                 b["probes"] = {}
             blooms[col] = b
@@ -1199,10 +893,6 @@ def prune_with_stats_parquet(spark, data_dir: str, where: list[tuple],
             b["probes"][i] = bloom_bits_fn(col, list(vals),
                                            b["bits"], b["k"])
     blooms = {c: b for c, b in blooms.items() if b is not None}
-
-    if spark_mode:
-        return _prune_spark(spark, sp, data_dir, where,
-                            set(pf.schema_arrow.names), blooms)
 
     tbl = None
     if pf is not None:
@@ -1301,196 +991,3 @@ def _stats_verdict_np(tbl, col: str, op: str, val, rows_np):
     # ok & no range ⇒ all-null column: null-rejecting ops prune iff
     # provably all-null; ok & range ⇒ the range decides; ¬ok ⇒ keep
     return ~ok | np.where(has_range, range_keep, ~allnull)
-
-
-def _prune_spark(spark, sp_path: str, data_dir: str, where: list[tuple],
-                 names: set, blooms: dict):
-    """The same compiled verdict as a Spark DataFrame filter over the
-    stats table — the shape for 10^6-10^7-file tables: the driver never
-    materializes per-file anything; only surviving relpaths collect.
-    Bloom verdicts join the bloom parquet on rel and bit-test inside a
-    vectorized pandas UDF."""
-    import shutil
-    import tempfile
-    import uuid
-
-    from pyspark.sql import functions as F
-
-    from .manifest import _part_may_match
-
-    # Spark's file index hides ``_``-prefixed files, so expose the stats
-    # parquet through a clean-named hardlink in a hidden scratch dir
-    # (same filesystem ⇒ zero copy; cleaned up after the survivors
-    # collect below fully consumes the plan)
-    scratch = os.path.join(os.path.dirname(sp_path),
-                           f".prune-{uuid.uuid4().hex[:8]}")
-    os.makedirs(scratch, exist_ok=True)
-
-    def _expose(src: str, name: str) -> str:
-        dst = os.path.join(scratch, name)
-        try:
-            os.link(src, dst)
-        except OSError:
-            shutil.copy2(src, dst)
-        return dst
-
-    link = _expose(sp_path, "stats.parquet")
-    bloom_links = {
-        col: _expose(bloom_parquet_path(data_dir, col),
-                     f"bloom-{i}.parquet")
-        for i, col in enumerate(blooms)
-        if any(p is not None for p in blooms[col]["probes"].values())}
-    try:
-        return _prune_spark_inner(spark, link, bloom_links, where,
-                                  names, blooms, _part_may_match, F)
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
-
-
-def _prune_spark_inner(spark, sp_path, bloom_links, where, names,
-                       blooms, _part_may_match, F):
-    df = spark.read.parquet(sp_path)
-    total = df.count()
-    keep = F.lit(True)
-    joined: set = set()  # bloom sidecar joins ONCE per column
-    for i, (col, op, val) in enumerate(where):
-        stats_c = F.lit(True)
-        if f"ok:{col}" in names:
-            stats_c = _stats_verdict_col(df, col, op, val)
-        bloom_c = F.lit(True)
-        if op in ("=", "in") and col in bloom_links:
-            probe = blooms[col]["probes"].get(i)
-            if probe is not None:
-                if col not in joined:
-                    df = _bloom_join_col(spark, df, bloom_links[col],
-                                         col)
-                    joined.add(col)
-                bloom_c = _bloom_admit_col(df, col, probe)
-        pred = stats_c & bloom_c
-        if f"part:{col}" in names:
-            pv = df[f"part:{col}"]
-            uniq = [r[0] for r in df.select(pv).distinct().collect()
-                    if r[0] is not None]
-            admitted = [u for u in uniq if _part_may_match(
-                None if u == "__HIVE_DEFAULT_PARTITION__" else u,
-                op, val)]
-            pcol = pv.isin(admitted) if admitted else F.lit(False)
-            pred = F.when(pv.isNotNull(), pcol).otherwise(pred)
-        keep = keep & pred
-    survivors = [r[0] for r in
-                 df.filter(keep).select("rel").toLocalIterator()]
-    return survivors, total
-
-
-def _stats_verdict_col(df, col: str, op: str, val):
-    """Spark Column mirror of ``_stats_verdict_np``."""
-    from pyspark.sql import functions as F
-
-    ok = F.coalesce(df[f"ok:{col}"], F.lit(False))
-    nulls = df[f"nulls:{col}"]
-    if op == "isnull":
-        nullfree = F.coalesce(nulls == 0, F.lit(False))
-        return ~(ok & nullfree)
-    allnull = F.coalesce(nulls >= df["rows"], F.lit(False)) \
-        if "rows" in df.columns else F.lit(False)
-    if op == "isnotnull":
-        return ~(ok & allnull)
-    lo, hi = df[f"lo:{col}"], df[f"hi:{col}"]
-    dom = _domain_of_spark(df.schema[f"lo:{col}"].dataType)
-    if dom is None:
-        range_keep = F.lit(True)
-    else:
-        spec = compile_range_spec(dom, op, val)
-        range_keep = _eval_spec_col(spec, lo, hi)
-    return ~ok | F.when(lo.isNotNull(),
-                        F.coalesce(range_keep, F.lit(True))) \
-                  .otherwise(~allnull)
-
-
-def _eval_spec_col(spec, lo, hi):
-    from pyspark.sql import functions as F
-
-    if spec.get("keep_all"):
-        return F.lit(True)
-    if spec.get("keep_none"):
-        return F.lit(False)
-    if "any" in spec:
-        out = None
-        for s in spec["any"]:
-            r = _eval_spec_col(s, lo, hi)
-            out = r if out is None else (out | r)
-        return out
-    if "not_point" in spec:
-        v = F.lit(spec["not_point"])
-        return ~((lo == v) & (hi == v))
-    conj = None
-    if "lo_op" in spec:
-        v = F.lit(spec["lo_val"])
-        c = (lo < v) if spec["lo_op"] == "<" else (lo <= v)
-        conj = c
-    if "hi_op" in spec:
-        v = F.lit(spec["hi_val"])
-        c = (hi > v) if spec["hi_op"] == ">" else (hi >= v)
-        conj = c if conj is None else (conj & c)
-    return F.lit(True) if conj is None else conj
-
-
-# bloom sidecar size (bytes) up to which the escalation-mode join
-# BROADCASTS the filter table; past it (10^7 files × wide filters —
-# exactly the regime escalation mode exists for) a broadcast would ship
-# GBs to every executor and pin them on the driver, so the join falls
-# back to a shuffle/sort-merge on rel (both sides are large there).
-BLOOM_BROADCAST_MAX_BYTES = int(
-    os.environ.get("SDF_BLOOM_BROADCAST_MAX_BYTES", 64 << 20))
-
-
-def _bloom_join_col(spark, df, bloom_path: str, col: str):
-    """Left-join one column's bloom parquet onto the stats frame as
-    ``__bloom:<col>`` — done ONCE per column even when several
-    predicates probe it (each predicate then bit-tests its own
-    literals against the shared filter column).  Small sidecars
-    broadcast; past ``BLOOM_BROADCAST_MAX_BYTES`` the join shuffles on
-    rel instead (see the constant's comment)."""
-    from pyspark.sql import functions as F
-
-    bcol = f"__bloom:{col}"
-    bdf = (spark.read.parquet(bloom_path)
-           .withColumnRenamed("f", bcol)
-           .withColumnRenamed("rel", "__bloomrel"))
-    try:
-        small = os.path.getsize(bloom_path) <= BLOOM_BROADCAST_MAX_BYTES
-    except OSError:
-        small = True
-    if small:
-        bdf = F.broadcast(bdf)
-    return df.join(bdf, df["rel"] == bdf["__bloomrel"], "left") \
-             .drop("__bloomrel")
-
-
-def _bloom_admit_col(df, col: str, probe):
-    """Admit Column for one predicate's probe rows: bit-test the joined
-    filter bytes in an Arrow-batched pandas UDF (missing filter ⇒
-    abstain/keep)."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-    from pyspark.sql.functions import pandas_udf
-
-    def _admit(fb):
-        out = []
-        for buf in fb:
-            if buf is None:
-                out.append(True)  # abstain
-                continue
-            hit = False
-            for pb in probe:
-                if all(buf[b >> 3] & (1 << (b & 7)) for b in pb):
-                    hit = True
-                    break
-            out.append(hit)
-        return pd.Series(out)
-
-    # real annotation objects: PEP-563 string hints don't resolve in
-    # pandas_udf's type inference under `from __future__ import ...`
-    _admit.__annotations__ = {"fb": pd.Series, "return": pd.Series}
-    _admit = pandas_udf(_admit, "boolean")
-    return F.coalesce(_admit(df[f"__bloom:{col}"]), F.lit(True))

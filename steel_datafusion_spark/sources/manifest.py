@@ -405,33 +405,6 @@ def read_table(spark: SparkSession, root: str,
 _WHERE_OPS = ("=", "!=", "<", "<=", ">", ">=", "in", "isnull", "isnotnull")
 
 
-def _stat_encode(v):
-    """JSON-encode a parquet footer min/max value, or None when the type
-    carries no usable ordering for pruning (bytes, bool, unknown)."""
-    if isinstance(v, bool) or v is None:
-        return None
-    if isinstance(v, (int, float, str)):
-        return v
-    if isinstance(v, datetime.datetime):
-        return {"$ts": v.isoformat()}
-    if isinstance(v, datetime.date):
-        return {"$date": v.isoformat()}
-    if isinstance(v, decimal.Decimal):
-        return {"$num": str(v)}
-    return None
-
-
-def _stat_decode(v):
-    if isinstance(v, dict):
-        if "$ts" in v:
-            return datetime.datetime.fromisoformat(v["$ts"])
-        if "$date" in v:
-            return datetime.date.fromisoformat(v["$date"])
-        if "$num" in v:
-            return decimal.Decimal(v["$num"])
-    return v
-
-
 def _comparable(bound, val):
     """Coerce a numeric bound and a predicate literal into one
     comparable domain; TypeError when they can't be compared (the caller
@@ -526,61 +499,6 @@ def _part_may_match(pv, op: str, val) -> bool:
         return _range_may_match(float(pv), float(pv), op, float(val))
     except (TypeError, ValueError, OverflowError):
         return True
-
-
-def write_table_stats_and_bloom(
-        spark: SparkSession, root: str, stats_cols: list[str],
-        bloom_cols: list[str], bits: int = 1 << 16, k_hashes: int = 5,
-        version: int | None = None) -> int:
-    """Backfill BOTH skipping sidecars — min/max stats and per-file
-    bloom filters — in ONE pass over the version's data files (the
-    r13 shape was two full scans: the executor-side footer scan for
-    stats, then ``write_table_bloom``'s column scan; at 10^6 tiny
-    files each scan's cost IS the file opens, so folding them halves
-    the backfill wall — see bench_runs/file_census_r14.json).  Bloom
-    bytes are hashed with the bit-exact Spark-xxhash64 replica
-    (``sources/xxhash64.py``), so probes — which hash literals through
-    a 1-row Spark job — keep their no-false-negative contract against
-    indexes built either way.  Columns whose Spark string-cast is not
-    replicable in Python (floats/decimals/timestamps — see
-    ``filestats.bloom_foldable_type``) fall back to the JVM column
-    scan for just those columns.  Commits carry both sidecars in
-    ``_commit`` (``_finalize_stats``/``_finalize_bloom`` — O(touched
-    files) per commit); this verb is the whole-version backfill.
-    Returns the number of files covered."""
-    data_dir = _version_data_dir(root, version)
-    spec = {c: {"bits": int(bits), "k": int(k_hashes)}
-            for c in bloom_cols}
-    foldable: dict = {}
-    unfoldable: dict = {}
-    first = next(iter(_iter_data_files(data_dir)), None)
-    if first is not None:
-        import pyarrow.parquet as _pq
-
-        schema = _pq.ParquetFile(first[1]).schema_arrow
-        for c, s in spec.items():
-            if c in schema.names and \
-                    filestats.bloom_foldable_type(schema.field(c).type):
-                foldable[c] = s
-            else:
-                unfoldable[c] = s
-    # carry from the predecessor version when it exists: hardlinked
-    # files reuse its stats rows AND bloom bytes by relpath, so a
-    # backfill after an incremental commit pays only the new files
-    base_dir = None
-    try:
-        info = latest_commit_info(root) if version is None else None
-        v = info["version"] if info is not None else version
-        if v is not None and v > 1:
-            base_dir = _version_data_dir(root, v - 1)
-    except (FileNotFoundError, KeyError, TypeError):
-        base_dir = None
-    n, _counts = filestats.write_stats_and_bloom_parquet(
-        data_dir, stats_cols, foldable, base_dir=base_dir)
-    if unfoldable:
-        _write_bloom_cols(spark, data_dir, unfoldable,
-                          base_dir=base_dir)
-    return n
 
 
 def write_table_stats(root: str, cols: list[str],
@@ -722,7 +640,11 @@ def _write_bloom_cols(spark: SparkSession, data_dir: str,
                       spec: dict[str, dict],
                       base_dir: str | None = None) -> int:
     """Build/carry the per-column Bloom PARQUET sidecars for a version
-    dir.  ``base_dir`` enables the Delta carry-forward shape: a relpath
+    dir — the one bloom builder: commits (``_finalize_bloom``) and the
+    ``write_table_bloom`` backfill both run it, hashing each value's
+    string cast with Spark's ``xxhash64`` exactly as
+    ``_bloom_probe_bits`` hashes the probe literals.  ``base_dir``
+    enables the Delta carry-forward shape: a relpath
     in the base version's sidecar (matching bits/k) reuses its filter
     bytes WITHOUT rescanning (versions share files only by hardlink —
     same relpath ⇒ same inode ⇒ same keys), VECTORIZED (the base
@@ -1126,7 +1048,7 @@ def _read_pruned(spark: SparkSession, data_dir: str,
                                  int(bits), int(k))
 
     survivors, total = filestats.prune_with_stats_parquet(
-        spark, data_dir, where, _bits_fn)
+        data_dir, where, _bits_fn)
     if not survivors:
         # nothing can match: an empty frame with the table's full schema
         return read_parquet(spark, data_dir).filter(resid).limit(0)
@@ -1149,8 +1071,8 @@ def _link_tree(src_root: str, dst_root: str, skip=()) -> None:
     for dirpath, dirs, files in os.walk(src_root):
         rel_dir = os.path.relpath(dirpath, src_root)
         rel_dir = "" if rel_dir == "." else rel_dir
-        # hidden dirs never carry: e.g. a crashed reader's .prune-*
-        # scratch must not propagate into later versions by hardlink
+        # hidden dirs never carry: whatever a crashed tool left there
+        # must not propagate into later versions by hardlink
         dirs[:] = [d for d in dirs if not d.startswith(("_", "."))
                    and os.path.join(rel_dir, d) not in skip]
         for f in files:

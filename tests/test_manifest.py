@@ -28,7 +28,6 @@ def _downgrade_stats_to_legacy_json(data_dir, splits=True,
     from steel_datafusion_spark.sources.filestats import (
         stats_cols_of, stats_parquet_path,
     )
-    from steel_datafusion_spark.sources.manifest import _stat_encode
 
     cols = stats_cols_of(data_dir)
     tbl = pq.read_table(stats_parquet_path(data_dir)).to_pylist()
@@ -41,13 +40,15 @@ def _downgrade_stats_to_legacy_json(data_dir, splits=True,
             elif row.get(f"lo:{c}") is None:
                 entry[c] = {"nulls": row.get(f"nulls:{c}")}
             else:
-                entry[c] = {"lo": _stat_encode(row[f"lo:{c}"]),
-                            "hi": _stat_encode(row[f"hi:{c}"]),
+                entry[c] = {"lo": row[f"lo:{c}"], "hi": row[f"hi:{c}"],
                             "nulls": row.get(f"nulls:{c}")}
         files[row["rel"]] = {"rows": row.get("rows"), "cols": entry}
+    # bounds that JSON can't hold (datetimes, Decimals) are written as
+    # strings: upgrade_table_stats reads only the column list
     if combined:
         with open(os.path.join(data_dir, "_stats.json"), "w") as fh:
-            json.dump({"stats_cols": cols, "files": files}, fh)
+            json.dump({"stats_cols": cols, "files": files}, fh,
+                      default=str)
     if splits:
         for c in cols:
             split = {rel: {"rows": fi.get("rows"),
@@ -55,7 +56,7 @@ def _downgrade_stats_to_legacy_json(data_dir, splits=True,
                      for rel, fi in files.items()}
             name = "_statscol-" + urllib.parse.quote(c, safe="") + ".json"
             with open(os.path.join(data_dir, name), "w") as fh:
-                json.dump({"col": c, "files": split}, fh)
+                json.dump({"col": c, "files": split}, fh, default=str)
     os.unlink(stats_parquet_path(data_dir))
 
 
@@ -564,8 +565,9 @@ def test_lost_commit_race_retries_on_winners_version(spark, tmp_path,
 
 
 def test_compact_skips_hidden_dirs(spark, tmp_path):
-    """A crashed pruner's ``.prune-*`` scratch dir inside the base version
-    is neither compacted, carried into the new version nor counted."""
+    """A hidden dot-dir inside the base version (a crashed tool's
+    scratch) is neither compacted, carried into the new version nor
+    counted."""
     from steel_datafusion_spark.sources.manifest import (
         compact_table, latest_commit_info, read_table,
     )
@@ -2004,85 +2006,70 @@ def test_bloom_carry_never_false_negative_across_write_chain(
                           where=[("uid", "=", r.uid)]).count() == 0
 
 
-def test_spark_escalation_prune_matches_driver_path(spark, tmp_path,
-                                                    monkeypatch):
-    """Past PRUNE_DRIVER_MAX_BYTES the file verdict runs as a Spark
-    DataFrame filter over the stats table instead of driver-side
-    pyarrow kernels; both engines share the compiled keep-specs, so
-    forcing the threshold to 0 must reproduce the driver path's exact
-    files_opened AND results across range/point/bloom/partition/null/
-    2^53 predicates."""
+def test_driver_prune_cases_match_unpruned_read(spark, tmp_path):
+    """Range, point, bloom, partition, null, ``in`` and 2^53 predicates,
+    plus three pairs probing one bloom-indexed column twice: each pruned
+    read returns exactly the rows of the unpruned read filtered by the
+    same SQL predicate, and opens a pinned number of files, so a loss of
+    pruning power fails as surely as a wrong answer.  The input is
+    written unshuffled from a fixed 4-slice range, so the layout (16
+    files: k in [0,1000), [1000,2000), ... times 4 partitions) is the
+    same at any core count and session state (a sampled
+    ``repartitionByRange`` is not: its bounds depend on RDD ids)."""
     from pyspark.sql import functions as F
 
-    from steel_datafusion_spark.sources import filestats
     from steel_datafusion_spark.sources.manifest import (
         manifest_upsert, read_table, write_table_bloom,
     )
 
-    out = str(tmp_path / "esc")
-    df = spark.range(4000).select(
+    out = str(tmp_path / "cases")
+    df = spark.range(0, 4000, 1, 4).select(
         F.col("id").alias("k"), (F.col("id") % 4).alias("p"),
         (F.col("id") * 1.5).alias("v"),
         F.when(F.col("id") % 2 == 0, F.col("id").cast("double"))
         .alias("w"),
         F.format_string("s%05d", F.col("id")).alias("s"))
-    manifest_upsert(spark, out,
-                    df.repartitionByRange(4, "k"), ["k"],
-                    partition_by=["p"], stats_cols=["k", "v", "w", "s"])
+    manifest_upsert(spark, out, df, ["k"], partition_by=["p"],
+                    stats_cols=["k", "v", "w", "s"])
     write_table_bloom(spark, out, ["s"], bits=1 << 12)
     big = 2 ** 53
-    eout = str(tmp_path / "esc53")
+    eout = str(tmp_path / "cases53")
     edf = spark.createDataFrame([(big,), (big + 2,)], "k long")
     manifest_upsert(spark, eout, edf.repartitionByRange(2, "k"), ["k"],
                     stats_cols=["k"])
 
+    # (root, where, the same predicate as SQL, files opened)
     cases = [
-        (out, [("k", ">=", 1000), ("k", "<", 2000)]),
-        (out, [("s", "=", "s00777")]),
-        (out, [("p", "=", "2")]),
-        (out, [("p", "=", 1), ("k", "<", 100)]),
-        (out, [("w", "isnull", None)]),
-        (out, [("w", "isnotnull", None)]),
-        (out, [("v", ">", 5900.0)]),
-        (out, [("k", "in", [5, 3999, 12345])]),
-        (out, [("k", ">", 10 ** 9)]),
-        (eout, [("k", "<", big + 1)]),
-        (eout, [("k", "!=", big + 1)]),
-        # same bloom-indexed column probed by TWO predicates: each must
-        # test its OWN literals against ONE sidecar join (the r13 Spark
-        # path joined the sidecar twice under a colliding column name —
-        # AnalysisException — and the driver path probed the first
-        # predicate's literals twice; ADVICE r13)
-        (out, [("s", "=", "s00777"), ("s", "=", "s00777")]),
-        (out, [("s", "=", "s00777"), ("s", "=", "s03888")]),
-        (out, [("s", "in", ["s00777", "s03888"]), ("s", "=", "s03888")]),
+        (out, [("k", ">=", 1000), ("k", "<", 2000)],
+         "k >= 1000 AND k < 2000", 4),
+        (out, [("s", "=", "s00777")], "s = 's00777'", 1),
+        (out, [("p", "=", "2")], "p = '2'", 4),
+        (out, [("p", "=", 1), ("k", "<", 100)], "p = 1 AND k < 100", 1),
+        (out, [("w", "isnull", None)], "w IS NULL", 8),
+        (out, [("w", "isnotnull", None)], "w IS NOT NULL", 8),
+        (out, [("v", ">", 5900.0)], "v > 5900.0", 4),
+        (out, [("k", "in", [5, 3999, 12345])], "k IN (5, 3999, 12345)", 5),
+        (out, [("k", ">", 10 ** 9)], "k > 1000000000", 0),
+        (eout, [("k", "<", big + 1)], f"k < {big + 1}", 1),
+        (eout, [("k", "!=", big + 1)], f"k != {big + 1}", 2),
+        # one bloom-indexed column probed by TWO predicates: each tests
+        # its OWN literals against the one loaded sidecar
+        (out, [("s", "=", "s00777"), ("s", "=", "s00777")],
+         "s = 's00777' AND s = 's00777'", 1),
+        (out, [("s", "=", "s00777"), ("s", "=", "s03888")],
+         "s = 's00777' AND s = 's03888'", 0),
+        (out, [("s", "in", ["s00777", "s03888"]), ("s", "=", "s03888")],
+         "s IN ('s00777', 's03888') AND s = 's03888'", 1),
     ]
-    driver, spark_path = [], []
-    for root, where in cases:
+    for root, where, sql, opened in cases:
+        full = read_table(spark, root)
+        cols = full.columns
+        want = sorted(map(tuple, full.filter(sql).select(*cols).collect()))
         d = read_table(spark, root, where=where)
-        driver.append((len(d.inputFiles()),
-                       sorted(map(tuple, d.collect()))))
-    monkeypatch.setattr(filestats, "PRUNE_DRIVER_MAX_BYTES", 0)
-    for root, where in cases:
-        s = read_table(spark, root, where=where)
-        spark_path.append((len(s.inputFiles()),
-                           sorted(map(tuple, s.collect()))))
-    assert spark_path == driver
-    # the contradictory point pair admits nothing: per-predicate probes
-    # intersect (one shared probe would have admitted the first file)
-    contradictory = cases.index(
-        (out, [("s", "=", "s00777"), ("s", "=", "s03888")]))
-    assert driver[contradictory][0] == 0
-    # past BLOOM_BROADCAST_MAX_BYTES the sidecar join shuffles on rel
-    # instead of broadcasting (10^7-file regime) — results identical
-    monkeypatch.setattr(filestats, "BLOOM_BROADCAST_MAX_BYTES", 0)
-    for i, (root, where) in enumerate(cases):
-        if not any(op in ("=", "in") and c == "s"
-                   for c, op, _v in where):
-            continue
-        s = read_table(spark, root, where=where)
-        assert (len(s.inputFiles()),
-                sorted(map(tuple, s.collect()))) == driver[i]
+        assert sorted(map(tuple, d.select(*cols).collect())) == want, sql
+        # the contradictory pair opens 0 files: per-predicate probes
+        # intersect (one shared probe would admit the first file)
+        assert len(d.inputFiles()) == opened, sql
 
 
 def test_incomplete_stats_sidecar_falls_back_keep_all(spark, tmp_path):
@@ -2133,129 +2120,6 @@ def test_incomplete_stats_sidecar_falls_back_keep_all(spark, tmp_path):
     pq.write_table(full, sp)
     pruned = read_table(spark, out, where=[("k", "=", 399)])
     assert len(pruned.inputFiles()) == 1
-
-
-def test_executor_side_stats_scan_matches_threadpool(spark, tmp_path,
-                                                     monkeypatch):
-    """Past STATS_SPARK_MIN_FILES the footer scan fans out over Spark
-    executors (mapInPandas, streamed back in rel order) instead of a
-    driver thread pool — forcing the threshold to 0 must produce a
-    BYTE-EQUIVALENT stats table (same rows, same typed bounds) and the
-    same pruning behavior."""
-    import pyarrow.parquet as pq
-    from pyspark.sql import functions as F
-
-    from steel_datafusion_spark.sources import filestats
-    from steel_datafusion_spark.sources.manifest import (
-        latest_commit, manifest_upsert, read_table, write_table_stats,
-    )
-
-    out = str(tmp_path / "exstats")
-    df = spark.range(6000).select(
-        F.col("id").alias("k"), (F.col("id") % 3).alias("p"),
-        (F.col("id") * 1.5).alias("v"),
-        F.when(F.col("id") % 2 == 0, F.col("id").cast("double"))
-        .alias("w"))
-    manifest_upsert(spark, out, df.repartitionByRange(6, "k"), ["k"],
-                    partition_by=["p"], stats_cols=["k", "v", "w"])
-    _v, d = latest_commit(out)
-    a = pq.read_table(filestats.stats_parquet_path(d))
-    monkeypatch.setattr(filestats, "STATS_SPARK_MIN_FILES", 0)
-    write_table_stats(out, ["k", "v", "w"])  # rebuild via the Spark scan
-    b = pq.read_table(filestats.stats_parquet_path(d))
-    assert a.schema.equals(b.schema)
-    assert a.sort_by("rel").equals(b.sort_by("rel"))
-    t = read_table(spark, out, where=[("k", ">=", 1000), ("k", "<", 2000)])
-    assert t.count() == 1000
-    assert len(t.inputFiles()) < len(read_table(spark, out).inputFiles())
-
-
-def test_combined_stats_bloom_build_matches_two_pass(spark, tmp_path,
-                                                     monkeypatch):
-    """write_table_stats_and_bloom builds BOTH sidecars in one pass
-    over the files; the bloom bytes (Python xxhash64 replica) must be
-    BYTE-IDENTICAL to write_table_bloom's JVM build and the stats table
-    row-identical to write_table_stats — in the thread-pool path AND
-    the executor (mapInPandas) path — so probes built against either
-    prune identically.  Unfoldable column types (double) fall back to
-    the JVM scan inside the same verb (VERDICT r13 item 3)."""
-    import pyarrow.parquet as pq
-    from pyspark.sql import functions as F
-
-    from steel_datafusion_spark.sources import filestats
-    from steel_datafusion_spark.sources.manifest import (
-        latest_commit, manifest_upsert, read_table,
-        write_table_bloom, write_table_stats, write_table_stats_and_bloom,
-    )
-
-    out = str(tmp_path / "combined")
-    df = spark.range(4000).select(
-        F.col("id").alias("k"),
-        F.concat(F.lit("u-"), F.md5(F.col("id").cast("string")))
-        .alias("uid"),
-        (F.col("id") % 2 == 0).alias("flag"),
-        (F.col("id") * 1.5).alias("dbl"))
-    manifest_upsert(spark, out, df.repartition(8, "uid"), ["uid"])
-    _v, d = latest_commit(out)
-
-    # reference: the two-pass build
-    write_table_stats(out, ["k"])
-    write_table_bloom(spark, out, ["uid", "k", "flag", "dbl"],
-                      bits=1 << 12, k_hashes=5)
-    ref_stats = pq.read_table(filestats.stats_parquet_path(d))
-    ref_blooms = {c: pq.read_table(filestats.bloom_parquet_path(d, c))
-                  for c in ("uid", "k", "flag", "dbl")}
-    for c in ("uid", "k", "flag", "dbl"):
-        import os as _os
-
-        _os.unlink(filestats.bloom_parquet_path(d, c))
-    _os.unlink(filestats.stats_parquet_path(d))
-
-    # one-pass build (thread-pool path)
-    n = write_table_stats_and_bloom(spark, out, ["k"],
-                                    ["uid", "k", "flag", "dbl"],
-                                    bits=1 << 12, k_hashes=5)
-    assert n == 8
-    got_stats = pq.read_table(filestats.stats_parquet_path(d))
-    assert got_stats.sort_by("rel").equals(ref_stats.sort_by("rel"))
-    for c in ("uid", "k", "flag", "dbl"):
-        got = pq.read_table(filestats.bloom_parquet_path(d, c))
-        assert got.sort_by("rel").equals(ref_blooms[c].sort_by("rel")), \
-            f"bloom bytes diverge for column {c!r}"
-
-    # executor (mapInPandas) path: byte-identical again
-    for c in ("uid", "k", "flag", "dbl"):
-        _os.unlink(filestats.bloom_parquet_path(d, c))
-    _os.unlink(filestats.stats_parquet_path(d))
-    monkeypatch.setattr(filestats, "STATS_SPARK_MIN_FILES", 0)
-    write_table_stats_and_bloom(spark, out, ["k"],
-                                ["uid", "k", "flag", "dbl"],
-                                bits=1 << 12, k_hashes=5)
-    for c in ("uid", "k", "flag", "dbl"):
-        got = pq.read_table(filestats.bloom_parquet_path(d, c))
-        assert got.sort_by("rel").equals(ref_blooms[c].sort_by("rel")), \
-            f"executor-path bloom bytes diverge for column {c!r}"
-
-    # the probes behave: point lookup on the hash-scattered key prunes
-    # and finds its row; absent key reads nothing
-    target = df.filter(F.col("k") == 777).head().uid
-    hit = read_table(spark, out, where=[("uid", "=", target)])
-    assert len(hit.inputFiles()) < 8
-    assert [r.k for r in hit.collect()] == [777]
-    assert read_table(spark, out,
-                      where=[("uid", "=", "u-nope")]).count() == 0
-    assert read_table(spark, out, where=[("dbl", "=", 1.5)]).count() == 1
-
-    # an ALL-unfoldable request (empty foldable spec) must degrade to
-    # stats + JVM bloom, not crash on the bare-table return
-    out2 = str(tmp_path / "combined2")
-    manifest_upsert(spark, out2, df.repartition(4, "uid"), ["uid"])
-    n2 = write_table_stats_and_bloom(spark, out2, ["k"], ["dbl"],
-                                     bits=1 << 12, k_hashes=5)
-    assert n2 == 4
-    _v2, d2 = latest_commit(out2)
-    assert pq.read_table(filestats.stats_parquet_path(d2)).num_rows == 4
-    assert read_table(spark, out2, where=[("dbl", "=", 1.5)]).count() == 1
 
 
 def test_vacuum_bounds_sidecar_counts_across_commits(spark, tmp_path):
@@ -2373,73 +2237,65 @@ def test_upgrade_table_stats_migrates_legacy_sidecars(spark, tmp_path):
     assert len(pruned.inputFiles()) == 1
 
 
-def test_combined_build_carries_from_predecessor_version(spark, tmp_path):
-    """write_table_stats_and_bloom on version N carries hardlinked
-    files' stats rows AND bloom bytes from version N-1's sidecars by
-    relpath — a backfill after an incremental commit pays only the new
-    files — and the carried output is BYTE-IDENTICAL to a from-scratch
-    build of the same version.  Carry is then PROVEN (equality alone
-    can't distinguish it from a silent rebuild): a tampered byte in
-    v1's bloom must propagate through the v2 backfill."""
+def test_commit_carries_stats_and_bloom_from_predecessor_version(
+        spark, tmp_path):
+    """Every writer's commit (``_finalize_stats``/``_finalize_bloom``)
+    reuses the base version's stats row AND bloom bytes for each
+    hardlinked file instead of re-reading it.  Equal output can't tell
+    a carry from a silent rebuild, so v1's sidecars are tampered for
+    one untouched ``p=0`` file: after an upsert of ``p=1`` keys only,
+    v2's rows for that file must hold both tampered values."""
     import pyarrow as pa
     import pyarrow.parquet as pq
     from pyspark.sql import functions as F
 
     from steel_datafusion_spark.sources import filestats
     from steel_datafusion_spark.sources.manifest import (
-        latest_commit, manifest_upsert, read_table,
-        write_table_stats_and_bloom,
+        latest_commit, manifest_upsert, read_table, write_table_bloom,
     )
 
     out = str(tmp_path / "carry")
-    # partitioned table: the v2 upsert touches only partition p=1, so
-    # p=0's files HARDLINK into v2 with the same relpaths — the shape
-    # whose sidecar rows the carry reuses (an unpartitioned upsert
-    # rewrites every file and carry correctly finds nothing)
     mk = lambda lo, hi: spark.range(lo, hi).select(  # noqa: E731
         F.col("id").alias("k"), (F.col("id") / 1000).cast("int").alias("p"),
         F.md5(F.col("id").cast("string")).alias("uid"))
-    manifest_upsert(spark, out, mk(0, 1000).repartitionByRange(4, "k"),
-                    ["k"], partition_by=["p"], keep_versions=100)
-    write_table_stats_and_bloom(spark, out, ["k"], ["uid"],
-                                bits=1 << 12)
+    manifest_upsert(spark, out, mk(0, 2000).repartitionByRange(4, "k"),
+                    ["k"], partition_by=["p"], stats_cols=["k"],
+                    keep_versions=100)
+    write_table_bloom(spark, out, ["uid"], bits=1 << 12)
     _v1, d1 = latest_commit(out)
-    # incremental commit: v2 hardlinks v1's files + adds new ones
-    manifest_upsert(spark, out,
-                    mk(1000, 1500).repartitionByRange(2, "k"), ["k"],
-                    partition_by=["p"], keep_versions=100)
-    write_table_stats_and_bloom(spark, out, ["k"], ["uid"],
-                                bits=1 << 12)
-    _v2, d2 = latest_commit(out)
-    carried_stats = pq.read_table(filestats.stats_parquet_path(d2))
-    carried_bloom = pq.read_table(filestats.bloom_parquet_path(d2, "uid"))
-    # from-scratch rebuild of the same version (no base): identical
-    n, _counts = filestats.write_stats_and_bloom_parquet(
-        d2, ["k"], {"uid": {"bits": 1 << 12, "k": 5}})
-    fresh_stats = pq.read_table(filestats.stats_parquet_path(d2))
-    fresh_bloom = pq.read_table(filestats.bloom_parquet_path(d2, "uid"))
-    assert carried_stats.sort_by("rel").equals(fresh_stats.sort_by("rel"))
-    assert carried_bloom.sort_by("rel").equals(fresh_bloom.sort_by("rel"))
-    assert carried_bloom.num_rows == n  # every file has a filter row
-    # pruning works over the carried sidecars
-    target = read_table(spark, out).filter("k = 1250").head().uid
-    hit = read_table(spark, out, where=[("uid", "=", target)])
-    assert [r.k for r in hit.collect()] == [1250]
-    assert len(hit.inputFiles()) < 6
-    # carry PROOF: tamper one hardlinked file's filter byte in v1, redo
-    # the v2 backfill — the tampered bytes must ride the carry
+
+    sp1 = filestats.stats_parquet_path(d1)
+    s1 = pq.read_table(sp1)
+    rels = s1.column("rel").to_pylist()
+    i = next(j for j, r in enumerate(rels) if r.startswith("p=0"))
+    marked_rel = rels[i]
+    his = s1.column("hi:k").to_pylist()
+    his[i] = 10 ** 6
+    s1 = s1.set_column(s1.schema.get_field_index("hi:k"), "hi:k",
+                       pa.array(his, type=pa.int64()))
+    pq.write_table(s1, sp1)  # schema metadata (stats_cols) kept
     b1 = pq.read_table(filestats.bloom_parquet_path(d1, "uid"))
-    marked_rel = b1.column("rel")[0].as_py()
-    marked = bytearray(b1.column("f")[0].as_py())
+    fs = b1.column("f").to_pylist()
+    j = b1.column("rel").to_pylist().index(marked_rel)
+    marked = bytearray(fs[j])
     marked[0] ^= 0xFF
-    tampered = pa.table({
-        "rel": b1.column("rel"),
-        "f": pa.array([bytes(marked)] + [v.as_py()
-                                         for v in b1.column("f")[1:]],
-                      type=b1.column("f").type)})
-    filestats.write_bloom_parquet_table(d1, "uid", tampered, 1 << 12, 5)
-    write_table_stats_and_bloom(spark, out, ["k"], ["uid"],
-                                bits=1 << 12)
+    fs[j] = bytes(marked)
+    filestats.write_bloom_parquet_table(
+        d1, "uid", b1.set_column(1, "f", pa.array(fs, type=b1.column("f")
+                                                  .type)), 1 << 12, 5)
+
+    manifest_upsert(spark, out, mk(1000, 1500).withColumn(
+                        "uid", F.lit("changed")), ["k"],
+                    partition_by=["p"], keep_versions=100)
+    _v2, d2 = latest_commit(out)
+    assert os.path.samefile(os.path.join(d1, marked_rel),
+                            os.path.join(d2, marked_rel))
+    s2 = pq.read_table(filestats.stats_parquet_path(d2))
+    k2 = s2.column("rel").to_pylist().index(marked_rel)
+    assert s2.column("hi:k")[k2].as_py() == 10 ** 6  # carried
     b2 = pq.read_table(filestats.bloom_parquet_path(d2, "uid"))
-    idx = b2.column("rel").to_pylist().index(marked_rel)
-    assert b2.column("f")[idx].as_py() == bytes(marked)  # carried
+    k2 = b2.column("rel").to_pylist().index(marked_rel)
+    assert b2.column("f")[k2].as_py() == bytes(marked)  # carried
+    # the rewritten p=1 files were scanned afresh: the new uid is found
+    hit = read_table(spark, out, where=[("uid", "=", "changed")])
+    assert hit.count() == 500

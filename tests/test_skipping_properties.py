@@ -6,9 +6,7 @@ partition compare would both fail these in seconds)."""
 import hypothesis.strategies as st
 from hypothesis import given, settings
 
-from steel_datafusion_spark.sources.manifest import (
-    _part_may_match, _stat_encode,
-)
+from steel_datafusion_spark.sources.manifest import _part_may_match
 
 _INTS = st.integers(-2 ** 63 + 1, 2 ** 63 - 1)
 _FLOATS = st.floats(allow_nan=False, allow_infinity=False, width=64)
@@ -80,30 +78,6 @@ def test_partition_pruning_never_excludes_matching_dirs(data):
 
     if interp_truth():
         assert _part_may_match(pv, op, lit) is True
-
-
-@settings(max_examples=300, deadline=None)
-@given(data=st.data())
-def test_stat_codec_roundtrips(data):
-    """Every encodable stats bound must decode back equal — a lossy
-    codec would corrupt [lo, hi] and prune wrongly."""
-    import datetime
-    import decimal
-
-    from steel_datafusion_spark.sources.manifest import _stat_decode
-
-    v = data.draw(st.one_of(
-        _INTS, _FLOATS, _STRS,
-        st.datetimes(), st.dates(),
-        st.decimals(allow_nan=False, allow_infinity=False)))
-    e = _stat_encode(v)
-    if e is None:
-        return  # type carries no pruning order — nothing to roundtrip
-    got = _stat_decode(e)
-    if isinstance(v, (datetime.datetime, datetime.date, decimal.Decimal)):
-        assert got == v and type(got) is type(v)
-    else:
-        assert got == v
 
 
 @settings(max_examples=200, deadline=None)
@@ -209,3 +183,74 @@ def test_columnar_pruning_never_excludes_matching_rows(data):
     if any(truth(v) for v in vals):
         keep = _stats_verdict_np(tbl, "c", op, lit, rows_np)
         assert bool(keep[0]) is True
+
+
+def test_pruning_is_spark_free_and_writes_nothing(tmp_path):
+    """The pruner runs on pyarrow/numpy alone: a version dir written
+    with pyarrow (two Hive partitions, two files each), stats from the
+    footers and a bloom sidecar packed by hand, pruned with a
+    plain-Python probe hash.  Range, partition and bloom predicates
+    keep exactly the files that can match, and the pruned read leaves
+    every file and dir of the version as it was."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from steel_datafusion_spark.sources import filestats
+
+    bits, k_hashes = 128, 2
+
+    def bit_rows(vals):
+        # injective for s00..s39: no false positives, so the bloom
+        # verdict below is exact
+        return [[(2 * int(v[1:]) + i) % bits for i in range(k_hashes)]
+                for v in vals]
+
+    d = str(tmp_path / "v1")
+    layout = {"p=0/a.parquet": range(0, 10), "p=0/b.parquet": range(10, 20),
+              "p=1/a.parquet": range(20, 30), "p=1/b.parquet": range(30, 40)}
+    filters = {}
+    for rel, ks in layout.items():
+        os.makedirs(os.path.join(d, os.path.dirname(rel)), exist_ok=True)
+        ss = [f"s{k:02d}" for k in ks]
+        pq.write_table(pa.table({"k": pa.array(ks, pa.int64()), "s": ss}),
+                       os.path.join(d, rel))
+        buf = bytearray(bits // 8)
+        for row in bit_rows(ss):
+            for b in row:
+                buf[b >> 3] |= 1 << (b & 7)
+        filters[rel] = bytes(buf)
+    assert filestats.write_stats_parquet(d, ["k"]) == 4
+    rels = sorted(filters)
+    filestats.write_bloom_parquet_table(
+        d, "s", pa.table({"rel": rels,
+                          "f": pa.array([filters[r] for r in rels],
+                                        pa.binary(bits // 8))}),
+        bits, k_hashes)
+
+    def snapshot():
+        out = set()
+        for dirpath, dirs, files in os.walk(d):
+            for name in dirs + files:
+                path = os.path.join(dirpath, name)
+                st_ = os.stat(path)
+                out.add((os.path.relpath(path, d), st_.st_size,
+                         st_.st_mtime_ns))
+        st_ = os.stat(d)
+        return out | {(".", st_.st_size, st_.st_mtime_ns)}
+
+    def survivors(where):
+        got, total = filestats.prune_with_stats_parquet(
+            d, where, lambda col, vals, b, k: bit_rows(vals))
+        assert total == 4
+        return sorted(got)
+
+    before = snapshot()
+    assert survivors([("k", ">=", 15), ("k", "<", 25)]) == \
+        ["p=0/b.parquet", "p=1/a.parquet"]
+    assert survivors([("p", "=", 1)]) == ["p=1/a.parquet", "p=1/b.parquet"]
+    assert survivors([("s", "=", "s33")]) == ["p=1/b.parquet"]
+    assert survivors([("s", "in", ["s05", "s33"])]) == \
+        ["p=0/a.parquet", "p=1/b.parquet"]
+    assert snapshot() == before

@@ -4,18 +4,19 @@ extended to 10^6 files + columnar pruning in r13).
 
 The pruned read (`sources/manifest.py _read_pruned` over
 `sources/filestats.py`) claims O(files) COLUMNAR work — one
-column-projected parquet read + vectorized verdict kernels, no per-file
-Python — and a Spark-DataFrame escalation past a size threshold.  This
-tool defends the claim at 10^2..10^6 files: a synthetic manifest version
-with N tiny parquet files (pyarrow direct writes fanned over a thread
-pool, so data volume stays ~fixed while the FILE COUNT scales a decade
-per step), stats backfilled over the clustered key (+ a bloom column at
-<=10^5 files), then measured:
+column-projected parquet read + vectorized verdict kernels on the
+driver, no per-file Python.  This tool defends the claim at
+10^2..10^6 files: a synthetic manifest version with N tiny parquet
+files (pyarrow direct writes fanned over a thread pool, so data volume
+stays ~fixed while the FILE COUNT scales a decade per step), stats and
+a bloom column backfilled, then measured:
 
 - stats_build_s: write_table_stats wall (threaded footer metadata reads,
   O(files), + one columnar parquet write)
 - bloom_build_s: write_table_bloom wall (one column scan, executor-side
   filter packing)
+- bloom_fpp_absent_keys: share of (absent key, file) probes the filters
+  admit, probe bits hashed by the read path's own ``_bloom_probe_bits``
 - prune_s: read_table(where=point) DataFrame CONSTRUCTION wall — this IS
   the pruning (columnar sidecar load + vectorized verdicts + the
   survivor-only Spark relation); no row-data job has run yet
@@ -29,11 +30,8 @@ per step), stats backfilled over the clustered key (+ a bloom column at
 Usage:
     python tools/file_census.py [--out bench_runs/file_census.json]
                                 [--counts 100,1000,10000] [--deep]
-                                [--spark-prune]
 
 --deep appends 100000 and 1000000 to the counts.
---spark-prune forces SDF_PRUNE_DRIVER_MAX_BYTES=0 (every prune runs as
-  a Spark DataFrame filter) to measure the escalation path.
 """
 
 from __future__ import annotations
@@ -131,11 +129,10 @@ print("CENSUS_SUB " + json.dumps({{
 """
 
 
-def _subprocess_prune(root: str, mid: int, env: dict) -> dict:
+def _subprocess_prune(root: str, mid: int) -> dict:
     script = _SUB_SCRIPT.format(repo=REPO, root=root, mid=mid)
     r = subprocess.run([sys.executable, "-c", script],
-                       capture_output=True, text=True, timeout=900,
-                       env=env)
+                       capture_output=True, text=True, timeout=900)
     for line in r.stdout.splitlines():
         if line.startswith("CENSUS_SUB "):
             return json.loads(line[len("CENSUS_SUB "):])
@@ -156,17 +153,12 @@ def main() -> int:
         del args[i:i + 2]
     if "--deep" in args:
         counts.extend([100000, 1000000])
-    env = dict(os.environ)
-    if "--spark-prune" in args:
-        env["SDF_PRUNE_DRIVER_MAX_BYTES"] = "0"
-        os.environ["SDF_PRUNE_DRIVER_MAX_BYTES"] = "0"
-        import steel_datafusion_spark.sources.filestats as _fs
-        _fs.PRUNE_DRIVER_MAX_BYTES = 0
 
     from steel_datafusion_spark import session_context
+    from steel_datafusion_spark.sources import filestats
     from steel_datafusion_spark.sources.manifest import (
-        read_table, write_table_bloom, write_table_stats,
-        write_table_stats_and_bloom,
+        _bloom_probe_bits, latest_commit, read_table, write_table_bloom,
+        write_table_stats,
     )
 
     spark = session_context(app_name="file-census")
@@ -179,15 +171,6 @@ def main() -> int:
         t0 = time.perf_counter()
         build_table(root, n)
         gen_s = round(time.perf_counter() - t0, 3)
-        # ONE-pass stats+bloom build (r14): same file opens build both
-        # sidecars — the r13 shape paid a second full scan for blooms
-        t0 = time.perf_counter()
-        covered = write_table_stats_and_bloom(
-            spark, root, ["k"], ["uid"], bits=1 << 8)
-        combined_s = round(time.perf_counter() - t0, 3)
-        assert covered == n
-        # reference two-pass walls at every decade (r13 capped the
-        # bloom at 1e5 and left bloom_build_s null at 1e6)
         t0 = time.perf_counter()
         covered = write_table_stats(root, ["k"])
         stats_s = round(time.perf_counter() - t0, 3)
@@ -198,17 +181,12 @@ def main() -> int:
         # bloom FPP spot-check: absent keys vs every file's filter,
         # vectorized (numpy bit tests over the byte matrix) — with 20
         # distinct uids/file at bits=256,k=5 expect ~0.3%
-        from steel_datafusion_spark.sources import filestats
-        from steel_datafusion_spark.sources.manifest import latest_commit
-        from steel_datafusion_spark.sources.xxhash64 import (
-            bloom_probe_rows,
-        )
-
         _v, ddir = latest_commit(root)
         b = filestats.load_bloom_parquet(ddir, "uid")
         absent = [f"u-absent-{i:04d}" for i in range(200)]
         admitted = 0
-        for pr in bloom_probe_rows(absent, b["bits"], b["k"]):
+        for pr in _bloom_probe_bits(spark, read_table(spark, root).schema,
+                                    "uid", absent, b["bits"], b["k"]):
             admitted += int(filestats._bloom_admit_np(
                 b["mat"], [pr]).sum())
         fpp = admitted / (len(absent) * b["mat"].shape[0])
@@ -221,14 +199,13 @@ def main() -> int:
         read_s = round(time.perf_counter() - t0, 3)
         opened = len(df.inputFiles())
         row = {"n_files": n, "gen_s": gen_s,
-               "stats_bloom_combined_s": combined_s,
                "stats_build_s": stats_s,
                "bloom_build_s": bloom_s,
                "bloom_fpp_absent_keys": round(fpp, 5),
                "prune_s": prune_s,
                "read_s": read_s, "files_opened": opened,
                "rows": len(rows), "driver_maxrss_mb": round(_maxrss_mb(), 1)}
-        row.update(_subprocess_prune(root, mid, env))
+        row.update(_subprocess_prune(root, mid))
         target = read_table(spark, root).filter(
             f"k = {mid}").head().uid
         t0 = time.perf_counter()
@@ -237,8 +214,8 @@ def main() -> int:
         row["bloom_files_opened"] = len(bdf.inputFiles())
         row["bloom_rows"] = bdf.count()
         results[f"n{n}"] = row
-        print(f"n={n}: gen {gen_s}s, combined {combined_s}s, "
-              f"stats {stats_s}s, bloom {bloom_s}s, fpp {fpp:.5f}, "
+        print(f"n={n}: gen {gen_s}s, stats {stats_s}s, bloom {bloom_s}s, "
+              f"fpp {fpp:.5f}, "
               f"prune {prune_s}s (sub {row.get('prune_sub_s')}s, "
               f"+{row.get('sub_rss_delta_mb')} MB), read {read_s}s, "
               f"opened {opened}, maxrss {row['driver_maxrss_mb']} MB, "

@@ -1,24 +1,20 @@
 #!/usr/bin/env python
 """Uncontended pruning-wall measurement over SYNTHETIC stats tables at
-10^6 and 10^7 files (VERDICT r13 item 4: the r13 escalation-prune row
-was taken while the test suite ran, and 10^7 had no row at all because
-writing 10^7 real files is pointless when the prune only ever touches
-the SIDECAR — the stats table is the input, so synthesize exactly it).
+10^6 and 10^7 files: the prune only ever touches the SIDECAR, so the
+stats table is the input and this tool synthesizes exactly it instead
+of writing millions of real files.
 
-Per (n_files, mode) cell this tool runs a FRESH subprocess that:
+Per n_files this tool runs a FRESH subprocess that:
 - builds nothing (the parent wrote the stats parquet once per n),
-- warms a Spark session, baselines VmHWM from /proc/self/status
+- imports the pruner, baselines VmHWM from /proc/self/status
   (ru_maxrss is inherited across fork/exec — useless for children),
-- times ``filestats.prune_with_stats_parquet`` for a point predicate
-  (admits exactly one file) and records survivors, wall, and the RSS
-  delta.
+- times ``filestats.prune_with_stats_parquet`` (driver-side pyarrow
+  kernels, no Spark session) for a point predicate (admits exactly one
+  file) and records survivors, wall, and the RSS delta.
 
-Modes: ``driver`` (pyarrow kernels; the default below
-SDF_PRUNE_DRIVER_MAX_BYTES) and ``spark`` (threshold forced to 0 — the
-DataFrame-filter escalation sized for 10^7+, where the driver must
-stay survivors-only).  Stats rows mirror build_stats_table's exact
-schema + metadata (stats_cols, file_count) so the completeness guard
-and column typing are the production ones.
+Stats rows mirror build_stats_table's exact schema + metadata
+(stats_cols, file_count) so the completeness guard and column typing
+are the production ones.
 
 Usage:
     python tools/prune_scale.py [--out bench_runs/prune_scale.json]
@@ -81,15 +77,11 @@ def _vm(key):
                 return int(line.split()[1]) / 1024.0
     return float("nan")
 
-from steel_datafusion_spark import session_context
 from steel_datafusion_spark.sources import filestats
-spark = session_context(app_name="prune-scale-sub")
-spark.sparkContext.setLogLevel("ERROR")
-spark.range(1).count()
 rss0 = _vm("VmHWM")
 t0 = time.perf_counter()
 res = filestats.prune_with_stats_parquet(
-    spark, {data_dir!r}, [("k", "=", {point})],
+    {data_dir!r}, [("k", "=", {point})],
     lambda col, vals, bits, k: None)
 wall = time.perf_counter() - t0
 survivors, total = res
@@ -100,17 +92,11 @@ print("PRUNE_SUB " + json.dumps({{
 """
 
 
-def run_cell(data_dir: str, n: int, mode: str) -> dict:
-    env = dict(os.environ)
-    if mode == "spark":
-        env["SDF_PRUNE_DRIVER_MAX_BYTES"] = "0"
-    else:
-        env.pop("SDF_PRUNE_DRIVER_MAX_BYTES", None)
+def run_cell(data_dir: str, n: int) -> dict:
     point = (n * ROWS_PER_FILE) // 2 + 3
     script = _SUB.format(repo=REPO, data_dir=data_dir, point=point)
     r = subprocess.run([sys.executable, "-c", script],
-                       capture_output=True, text=True, timeout=1800,
-                       env=env)
+                       capture_output=True, text=True, timeout=1800)
     for line in r.stdout.splitlines():
         if line.startswith("PRUNE_SUB "):
             return json.loads(line[len("PRUNE_SUB "):])
@@ -142,9 +128,8 @@ def main() -> int:
             data_dir, "_stats.parquet")) / 1e6, 1)
         row: dict = {"n_files": n, "gen_s": gen_s,
                      "stats_parquet_mb": size_mb}
-        for mode in ("driver", "spark"):
-            row[mode] = run_cell(data_dir, n, mode)
-            print(f"n={n} {mode}: {row[mode]}", flush=True)
+        row["driver"] = run_cell(data_dir, n)
+        print(f"n={n} driver: {row['driver']}", flush=True)
         results[f"n{n}"] = row
     import shutil
 
