@@ -31,11 +31,12 @@ from pyspark.sql import functions as F
 
 from ..cache import track
 from ..hints import DEFAULT_BROADCAST_ROWS, broadcast_if_small
-from ..sources.bucketing import attach_table, write_bucketed
+from ..sources.bucketing import write_bucketed
 from ..sources.index_tables import (
-    index_table, locked_verb, recover_swaps, reset_delta, reset_index,
-    swap_table,
+    absorb_delta, append_rows, attach_index, index_table, locked_verb,
+    reset_delta, reset_index, swap_table,
 )
+from ..sources.manifest import is_manifest_root
 from .text import fingerprint, sql_norm, tokens
 
 __all__ = [
@@ -521,28 +522,12 @@ def dedup_against_index(
 
 def attach_dedup_index(spark, name: str) -> bool:
     """Re-attach a persisted dedup index's tables in a FRESH session's
-    catalog (``sources/bucketing.attach_table``): the warehouse parquet
-    and the ``_sdf_table.json`` bucket descriptors survive the session
-    that built them, so any process — a restarted driver, a second
-    concurrent maintainer — can probe and append without rebuilding.
-    A swap that crashed after dropping its table is finished first
-    (``sources/index_tables.recover_swaps``).  Returns True iff the
-    core tables (bands, shingles, meta) are reachable; the optional hot
+    catalog, finishing any crashed swap first
+    (``sources/index_tables.attach_index``).  Returns True iff the core
+    tables (bands, shingles, meta) are reachable; the optional hot
     table attaches when present."""
-    recover_swaps(spark, name, _INDEX_TABLES)
-    ok = all(attach_table(spark, f"{name}_{s}")
-             for s in ("bands", "shingles", "meta"))
-    attach_table(spark, f"{name}_hot")
-    return ok
-
-
-def _table_num_buckets(spark, table: str) -> int:
-    """Bucket count of a managed bucketed table, from the catalog — an
-    append must match the existing spec exactly or Spark rejects it."""
-    for r in spark.sql(f"DESCRIBE EXTENDED `{table}`").collect():
-        if r.col_name == "Num Buckets":
-            return int(r.data_type)
-    raise ValueError(f"{table!r} is not a bucketed table")
+    return attach_index(spark, name, ("bands", "shingles", "meta"),
+                        optional=("hot",))
 
 
 def dedup_index_append(
@@ -607,12 +592,8 @@ def _dedup_index_append_locked(
                        k, bands, rows) \
         .withColumnRenamed("doc_id", "corpus_id").persist()
     n_bands_rows = bb.count()  # materialize once: append + hot probe
-    write_bucketed(bb, f"{name}_bands", ["band_hash"],
-                   _table_num_buckets(spark, f"{name}_bands"),
-                   sort_cols=["band_hash"], mode="append")
-    write_bucketed(hb, f"{name}_shingles", ["corpus_id"],
-                   _table_num_buckets(spark, f"{name}_shingles"),
-                   mode="append")
+    append_rows(spark, f"{name}_bands", bb)
+    append_rows(spark, f"{name}_shingles", hb)
     n_hot = -1
     if max_bucket is not None and \
             spark.catalog.tableExists(f"{name}_hot"):
@@ -627,7 +608,7 @@ def _dedup_index_append_locked(
         new_hot = (spark.table(f"{name}_hot").unionByName(touched)
                    .groupBy("band_idx", "band_hash")
                    .agg(F.min("rep").alias("rep")))
-        swap_table(spark, f"{name}_hot", new_hot.write.saveAsTable)
+        swap_table(spark, f"{name}_hot", new_hot)
         n_hot = spark.table(f"{name}_hot").count()
     n_docs = hb.count()
     bb.unpersist()
@@ -642,9 +623,9 @@ def dedup_index_compact(spark, name: str, work_root: str) -> dict:
     completes the dedup-index lifecycle (build → append/stream →
     compact), mirroring ``ann_index_compact`` (similarity.py):
 
-    - merged bands/shingles = base ∪ delta DEDUPLICATED on their keys
-      ((corpus_id, band_idx) / corpus_id), so re-running a compaction
-      that crashed mid-way CONVERGES instead of doubling rows;
+    - bands and shingles each absorb their delta root through
+      ``sources/index_tables.absorb_delta``, keyed on (corpus_id,
+      band_idx) / corpus_id;
     - the hot flood-guard table is REBUILT EXACTLY over the merged
       bands (one scan of int triples) — this is where the delta's
       guard-only mid-stream occupancy drift (streaming/operators.py
@@ -669,41 +650,24 @@ def dedup_index_compact(spark, name: str, work_root: str) -> dict:
 def _dedup_index_compact_locked(spark, name: str, work_root: str) -> dict:
     import os as _os
 
-    from ..sources.manifest import is_manifest_root, read_table
-
     meta = spark.table(f"{name}_meta").head()
     max_bucket = None if meta["max_bucket"] < 0 else int(meta["max_bucket"])
-    roots = {"bands": _os.path.join(work_root, "delta_bands"),
-             "shingles": _os.path.join(work_root, "delta_shingles")}
-    keys = {"bands": ["corpus_id", "band_idx"],
-            "shingles": ["corpus_id"]}
-    bucket_col = {"bands": "band_hash", "shingles": "corpus_id"}
-    sort_cols = {"bands": ["band_hash"], "shingles": None}
+    roots = {t: _os.path.join(work_root, f"delta_{t}")
+             for t in ("bands", "shingles")}
+    live_roots = [r for r in roots.values() if is_manifest_root(r)]
     d_rows = 0
-    live_roots = {t: r for t, r in roots.items() if is_manifest_root(r)}
     if live_roots:
-        for t in ("bands", "shingles"):
-            table = f"{name}_{t}"
-            merged = spark.table(table)
-            if t in live_roots:
-                delta = read_table(spark, live_roots[t]) \
-                    .select(*merged.columns)
-                if t == "bands":
-                    d_rows = delta.count()
-                merged = merged.unionByName(delta)
-            merged = merged.dropDuplicates(keys[t])
-            n_buckets = _table_num_buckets(spark, table)
-            swap_table(spark, table, lambda swap: write_bucketed(
-                merged, swap, [bucket_col[t]], n_buckets,
-                sort_cols=sort_cols[t]))
+        delta = absorb_delta(spark, f"{name}_bands", roots["bands"],
+                             ["corpus_id", "band_idx"])
+        d_rows = 0 if delta is None else delta.count()
+        absorb_delta(spark, f"{name}_shingles", roots["shingles"],
+                     ["corpus_id"])
     n_hot = -1
     if max_bucket is not None:
-        new_hot = _corpus_hot_buckets(
-            spark.table(f"{name}_bands"), max_bucket)
-        swap_table(spark, f"{name}_hot", new_hot.write.saveAsTable)
+        swap_table(spark, f"{name}_hot", _corpus_hot_buckets(
+            spark.table(f"{name}_bands"), max_bucket))
         n_hot = spark.table(f"{name}_hot").count()
-    reset_versions = [reset_delta(spark, root, name)
-                      for root in live_roots.values()]
+    reset_versions = [reset_delta(spark, root, name) for root in live_roots]
     return {"base_bands": int(spark.table(f"{name}_bands").count()),
             "delta_bands": int(d_rows),
             "hot_buckets": int(n_hot),
@@ -938,7 +902,9 @@ def connected_components(pairs: DataFrame, src: str = "doc_a",
     Returns ``(doc_id, cluster_id)`` for every doc appearing in a pair,
     where ``cluster_id`` = the minimum doc_id of the connected component
     (the canonical keeper).  Singletons (docs in no pair) are absent —
-    their keeper is themselves.
+    their keeper is themselves.  Raises ``RuntimeError`` when the
+    ``max_iters``-th round still changed the labels: truncated labels
+    would silently split components, so they are never returned.
 
     Two algorithms, same contract:
 
@@ -976,6 +942,16 @@ def connected_components(pairs: DataFrame, src: str = "doc_a",
 
     def _ckpt(df: DataFrame) -> DataFrame:
         return iteration_barrier(df, reliable, checkpoint_dir)
+
+    def _not_converged(*held: DataFrame) -> RuntimeError:
+        for df in held:
+            release_local_checkpoint(df)
+        return RuntimeError(
+            f"connected_components({algorithm!r}) did not reach a fixpoint "
+            f"in max_iters={max_iters} rounds: the last round still "
+            f"changed the labels, so they are not the components.  Raise "
+            f"max_iters, or use algorithm=\"two-phase\" (O(log n) rounds "
+            f"for any diameter)")
 
     # persist the raw pair projection: BOTH init frames (canonical edges
     # and the vertex set) derive from it, and without the persist each
@@ -1021,6 +997,8 @@ def connected_components(pairs: DataFrame, src: str = "doc_a",
             if sig == prev_sig:
                 break
             prev_sig = sig
+        else:
+            raise _not_converged(cedges, vertices)
         # at the fixpoint every non-minimum node has a direct edge to its
         # component minimum; minima label themselves
         mins = cedges.groupBy(F.col("hi").alias("v")).agg(
@@ -1064,6 +1042,8 @@ def connected_components(pairs: DataFrame, src: str = "doc_a",
         if new_sum == prev_sum:
             break
         prev_sum = new_sum
+    else:
+        raise _not_converged(labels, edges)
     release_local_checkpoint(edges)
     return labels.select(F.col("v").alias("doc_id"),
                          F.col("label").alias("cluster_id"))

@@ -86,6 +86,23 @@ SELECT node, label FROM lp_out
 _STREAM_SRC_BUILT: set = set()
 
 
+def _events_stream_src(spark, sf_dir) -> tuple[str, str]:
+    """(scratch base, events stream source dir), the source landed once
+    per (app, sf_dir) and again whenever it was removed."""
+    import shutil
+
+    from ..queries import scratch_dir
+    base = scratch_dir(spark, sf_dir, "stream_gate")
+    src = _os.path.join(base, "src")
+    key = (spark.sparkContext.applicationId, _os.path.abspath(sf_dir))
+    if key not in _STREAM_SRC_BUILT or not _os.path.exists(src):
+        shutil.rmtree(base, ignore_errors=True)
+        load_tables(spark, sf_dir)["events"].write.mode(
+            "overwrite").parquet(src)
+        _STREAM_SRC_BUILT.add(key)
+    return base, src
+
+
 def q_streaming_sessions(spark, sf_dir):
     """Structured Streaming session rollup as a HASH gate (the streaming
     surface previously had only batch-parity tests): events re-land once
@@ -99,7 +116,6 @@ def q_streaming_sessions(spark, sf_dir):
     with the same strict-gap semantics and cutoff.  sum_value routes
     through exact decimals inside the streaming aggregate, so the hash is
     partition- and trigger-order-independent."""
-    import shutil
     import tempfile
     import uuid
 
@@ -107,15 +123,7 @@ def q_streaming_sessions(spark, sf_dir):
         read_stream_parquet, run_stream_to_parquet, stream_state_partitions, session_rollup,
     )
 
-    from ..queries import scratch_dir
-    base = scratch_dir(spark, sf_dir, "stream_gate")
-    src = _os.path.join(base, "src")
-    key = (spark.sparkContext.applicationId, _os.path.abspath(sf_dir))
-    if key not in _STREAM_SRC_BUILT or not _os.path.exists(src):
-        shutil.rmtree(base, ignore_errors=True)
-        load_tables(spark, sf_dir)["events"].write.mode(
-            "overwrite").parquet(src)
-        _STREAM_SRC_BUILT.add(key)
+    base, src = _events_stream_src(spark, sf_dir)
     run_id = uuid.uuid4().hex[:8]
     out = _os.path.join(base, f"out-{run_id}")
     ckpt = _os.path.join(base, f"ckpt-{run_id}")
@@ -280,21 +288,14 @@ ORDER BY query_id
 
 # one kmeans-trained index build per (app, sf_dir) — gate reps time the
 # probe+recall, not the training (the amortized real-world shape)
-_ANN_KM_INDEX_BUILT: set = set()
+def _ensure_ann_kmeans_index(spark, sf_dir):
+    from .similarity import build_ann_index
 
-
-def _ensure_ann_kmeans_index(spark, sf_dir, name="gate_ann_kmx"):
-    app = spark.sparkContext.applicationId.replace("-", "_").replace(".", "_")
-    scoped = f"{name}_{app[-12:]}"
-    key = (spark.sparkContext.applicationId, _os.path.abspath(sf_dir), scoped)
-    if key not in _ANN_KM_INDEX_BUILT:
-        from .similarity import build_ann_index
-
+    def build(scoped):
         e = load_tables(spark, sf_dir)["embeddings"]
         build_ann_index(e, scoped, nlist=10, train="kmeans",
                         train_iters=3)
-        _ANN_KM_INDEX_BUILT.add(key)
-    return scoped
+    return build_once(spark, sf_dir, "gate_ann_kmx", build)
 
 
 def q_ann_index_recall(spark, sf_dir):
@@ -1029,20 +1030,11 @@ def q_streaming_view_maintenance(spark, sf_dir):
     aggregate FROM SCRATCH over all events, so the hash proves the
     batch-chopped merge chain is bit-identical to a full rescan
     (mergeable state + exact decimal sums = trigger-count-invariant)."""
-    import shutil
     import uuid
 
     from ..streaming.operators import streaming_view_maintenance
 
-    from ..queries import scratch_dir
-    base = scratch_dir(spark, sf_dir, "stream_gate")
-    src = _os.path.join(base, "src")
-    key = (spark.sparkContext.applicationId, _os.path.abspath(sf_dir))
-    if key not in _STREAM_SRC_BUILT or not _os.path.exists(src):
-        shutil.rmtree(base, ignore_errors=True)
-        load_tables(spark, sf_dir)["events"].write.mode(
-            "overwrite").parquet(src)
-        _STREAM_SRC_BUILT.add(key)
+    base, src = _events_stream_src(spark, sf_dir)
     run_id = uuid.uuid4().hex[:8]
     work = _os.path.join(base, f"ivm-{run_id}")
     batch = spark.read.parquet(src)
@@ -1081,7 +1073,6 @@ def q_streaming_stateful_stats(spark, sf_dir):
     Scale: state is hash-partitioned by user across executors
     (RocksDB-backed on a real cluster); each trigger touches only the
     keys present in that batch, and timeouts would GC idle keys."""
-    import shutil
     import uuid
 
     from pyspark.sql.window import Window as _W
@@ -1091,15 +1082,7 @@ def q_streaming_stateful_stats(spark, sf_dir):
     )
     from ..streaming.stateful import running_user_stats
 
-    from ..queries import scratch_dir
-    base = scratch_dir(spark, sf_dir, "stream_gate")
-    src = _os.path.join(base, "src")
-    key = (spark.sparkContext.applicationId, _os.path.abspath(sf_dir))
-    if key not in _STREAM_SRC_BUILT or not _os.path.exists(src):
-        shutil.rmtree(base, ignore_errors=True)
-        load_tables(spark, sf_dir)["events"].write.mode(
-            "overwrite").parquet(src)
-        _STREAM_SRC_BUILT.add(key)
+    base, src = _events_stream_src(spark, sf_dir)
     run_id = uuid.uuid4().hex[:8]
     out = _os.path.join(base, f"state-{run_id}")
     ckpt = _os.path.join(base, f"stateck-{run_id}")
@@ -1139,7 +1122,6 @@ def q_streaming_windowed(spark, sf_dir):
     end the final watermark passed.  The oracle is a DuckDB date_trunc
     rollup with the same cutoff; sum_value routes through exact decimals
     so the hash is trigger-order-independent."""
-    import shutil
     import tempfile
     import uuid
 
@@ -1147,15 +1129,7 @@ def q_streaming_windowed(spark, sf_dir):
         read_stream_parquet, run_stream_to_parquet, stream_state_partitions, windowed_rollup,
     )
 
-    from ..queries import scratch_dir
-    base = scratch_dir(spark, sf_dir, "stream_gate")
-    src = _os.path.join(base, "src")
-    key = (spark.sparkContext.applicationId, _os.path.abspath(sf_dir))
-    if key not in _STREAM_SRC_BUILT or not _os.path.exists(src):
-        shutil.rmtree(base, ignore_errors=True)
-        load_tables(spark, sf_dir)["events"].write.mode(
-            "overwrite").parquet(src)
-        _STREAM_SRC_BUILT.add(key)
+    base, src = _events_stream_src(spark, sf_dir)
     run_id = uuid.uuid4().hex[:8]
     out = _os.path.join(base, f"wout-{run_id}")
     ckpt = _os.path.join(base, f"wckpt-{run_id}")
@@ -1258,22 +1232,13 @@ def q_streaming_hopping(spark, sf_dir):
     windows, so state and output carry the documented 2× overlap factor.
     The oracle expands each event to its two slide-grid windows and
     applies the same final-watermark cutoff as the tumbling gate."""
-    import shutil
     import uuid
 
-    from ..queries import scratch_dir
     from ..streaming.operators import (
         read_stream_parquet, run_stream_to_parquet, stream_state_partitions, windowed_rollup,
     )
 
-    base = scratch_dir(spark, sf_dir, "stream_gate")
-    src = _os.path.join(base, "src")
-    key = (spark.sparkContext.applicationId, _os.path.abspath(sf_dir))
-    if key not in _STREAM_SRC_BUILT or not _os.path.exists(src):
-        shutil.rmtree(base, ignore_errors=True)
-        load_tables(spark, sf_dir)["events"].write.mode(
-            "overwrite").parquet(src)
-        _STREAM_SRC_BUILT.add(key)
+    base, src = _events_stream_src(spark, sf_dir)
     run_id = uuid.uuid4().hex[:8]
     out = _os.path.join(base, f"hout-{run_id}")
     ckpt = _os.path.join(base, f"hckpt-{run_id}")
@@ -1316,7 +1281,6 @@ WHERE window_start + INTERVAL 1 HOUR
 # --- recall under quantizer drift (VERDICT r12 item 5; relative
 # policy VERDICT r13 item 2) ---------------------------------------------
 
-_ANN_DRIFT_BUILT: set = set()
 _DRIFT_DIM = 64
 
 
@@ -1344,20 +1308,15 @@ def _ensure_ann_drift_index(spark, sf_dir):
     """Build-once per (app, sf_dir): subsample-trained index over the
     base 60%, then ann_index_append the DRIFTED tail — reps time the
     probe + recall, not the build (the amortized real-world shape)."""
-    app = spark.sparkContext.applicationId.replace("-", "_").replace(".", "_")
-    scoped = f"gate_ann_drift_{app[-12:]}"
-    key = (spark.sparkContext.applicationId, _os.path.abspath(sf_dir),
-           scoped)
-    if key not in _ANN_DRIFT_BUILT:
-        from .similarity import ann_index_append, build_ann_index
+    from .similarity import ann_index_append, build_ann_index
 
+    def build(scoped):
         e = load_tables(spark, sf_dir)["embeddings"]
         cut = 3 * e.count() // 5
         build_ann_index(e.filter(F.col("vec_id") < cut), scoped,
                         nlist=10, n_buckets=4)
         ann_index_append(_drifted_tail(e, cut), scoped)
-        _ANN_DRIFT_BUILT.add(key)
-    return scoped
+    return build_once(spark, sf_dir, "gate_ann_drift", build)
 
 
 def q_ann_recall_after_drift(spark, sf_dir):
@@ -1476,9 +1435,6 @@ ORDER BY query_id
 
 # --- dedup-index compaction lifecycle (VERDICT r12 next-round item 4) --
 
-_DEDUP_COMPACT_BUILT: set = set()
-
-
 def _ensure_dedup_compacted_index(spark, sf_dir):
     """Build-once per (app, sf_dir): base index over the even docs, a
     two-batch stream ingested through ``streaming_dedup_ingest``'s
@@ -1489,13 +1445,9 @@ def _ensure_dedup_compacted_index(spark, sf_dir):
 
     from ..queries import scratch_dir
     from ..streaming.operators import streaming_dedup_ingest
-    from .dedup import build_dedup_index, dedup_index_compact
+    from .dedup import dedup_index_compact
 
-    app = spark.sparkContext.applicationId.replace("-", "_").replace(".", "_")
-    scoped = f"gate_dd_cmp_{app[-12:]}"
-    key = (spark.sparkContext.applicationId, _os.path.abspath(sf_dir),
-           scoped)
-    if key not in _DEDUP_COMPACT_BUILT:
+    def build(scoped):
         d = load_tables(spark, sf_dir)["documents"].select("doc_id", "text")
         build_dedup_index(d.filter(F.col("doc_id") % 2 == 0), scoped)
         s1 = d.filter(F.col("doc_id") < 20).select(
@@ -1515,8 +1467,7 @@ def _ensure_dedup_compacted_index(spark, sf_dir):
         streaming_dedup_ingest(spark, src, s1.schema, scoped, work,
                                threshold=0.5)
         dedup_index_compact(spark, scoped, work)
-        _DEDUP_COMPACT_BUILT.add(key)
-    return scoped
+    return build_once(spark, sf_dir, "gate_dd_cmp", build)
 
 
 _DRIFT_REL_THRESHOLDS = [0.001, 0.01, 0.05, 0.5]
@@ -1670,6 +1621,7 @@ __all__ = [
     'q_dedup_index_compact',
     '_sql_dedup_index_compact',
     '_STREAM_SRC_BUILT',
+    '_events_stream_src',
     '_sql_incremental_agg',
     'q_association_rules',
     '_sql_association_rules',

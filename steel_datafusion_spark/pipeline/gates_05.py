@@ -19,22 +19,13 @@ def q_streaming_enrich(spark, sf_dir):
     batch (picking up dim updates between batches, the documented
     stream-static semantic); state is only the windowed aggregate, bounded
     by the watermark."""
-    import shutil
     import uuid
 
-    from ..queries import scratch_dir
     from ..streaming.operators import (
         read_stream_parquet, run_stream_to_parquet, stream_state_partitions,
     )
 
-    base = scratch_dir(spark, sf_dir, "stream_gate")
-    src = _os.path.join(base, "src")
-    key = (spark.sparkContext.applicationId, _os.path.abspath(sf_dir))
-    if key not in _STREAM_SRC_BUILT or not _os.path.exists(src):
-        shutil.rmtree(base, ignore_errors=True)
-        load_tables(spark, sf_dir)["events"].write.mode(
-            "overwrite").parquet(src)
-        _STREAM_SRC_BUILT.add(key)
+    base, src = _events_stream_src(spark, sf_dir)
     run_id = uuid.uuid4().hex[:8]
     out = _os.path.join(base, f"eout-{run_id}")
     ckpt = _os.path.join(base, f"eckpt-{run_id}")
@@ -90,7 +81,6 @@ def q_streaming_join(spark, sf_dir):
     unbounded streams; an inner interval join emits each pair exactly
     once, making the finite-source drive hash-comparable to the
     batch/DuckDB range join."""
-    import shutil
     import tempfile
     import uuid
 
@@ -98,15 +88,7 @@ def q_streaming_join(spark, sf_dir):
         read_stream_parquet, run_stream_to_parquet, stream_state_partitions, stream_stream_join,
     )
 
-    from ..queries import scratch_dir
-    base = scratch_dir(spark, sf_dir, "stream_gate")
-    src = _os.path.join(base, "src")
-    key = (spark.sparkContext.applicationId, _os.path.abspath(sf_dir))
-    if key not in _STREAM_SRC_BUILT or not _os.path.exists(src):
-        shutil.rmtree(base, ignore_errors=True)
-        load_tables(spark, sf_dir)["events"].write.mode(
-            "overwrite").parquet(src)
-        _STREAM_SRC_BUILT.add(key)
+    base, src = _events_stream_src(spark, sf_dir)
     run_id = uuid.uuid4().hex[:8]
     out = _os.path.join(base, f"jout-{run_id}")
     ckpt = _os.path.join(base, f"jckpt-{run_id}")
@@ -525,21 +507,14 @@ def q_streaming_cdc_feed(spark, sf_dir):
 
 # one BASE index build per (app, sf_dir); each gate call then drives a
 # fresh stream (uuid delta) over the corpus tail — the drive IS the op
-_ANN_STREAM_BASE_BUILT: set = set()
+def _ensure_ann_stream_base(spark, sf_dir):
+    from .similarity import build_ann_index
 
-
-def _ensure_ann_stream_base(spark, sf_dir, name="gate_ann_smx"):
-    app = spark.sparkContext.applicationId.replace("-", "_").replace(".", "_")
-    scoped = f"{name}_{app[-12:]}"
-    key = (spark.sparkContext.applicationId, _os.path.abspath(sf_dir), scoped)
-    if key not in _ANN_STREAM_BASE_BUILT:
-        from .similarity import build_ann_index
-
+    def build(scoped):
         e = load_tables(spark, sf_dir)["embeddings"]
         cut = e.count() * 3 // 5
         build_ann_index(e.filter(F.col("vec_id") < cut), scoped, nlist=10)
-        _ANN_STREAM_BASE_BUILT.add(key)
-    return scoped
+    return build_once(spark, sf_dir, "gate_ann_smx", build)
 
 
 def q_streaming_index_maintenance(spark, sf_dir):
@@ -602,15 +577,11 @@ def q_streaming_dedup_ingest(spark, sf_dir):
     from ..queries import scratch_dir
     from ..streaming.operators import streaming_dedup_ingest
 
-    app = spark.sparkContext.applicationId.replace("-", "_").replace(".", "_")
-    scoped = f"gate_dd_smx_{app[-12:]}"
-    key = (spark.sparkContext.applicationId, _os.path.abspath(sf_dir), scoped)
-    if key not in _ANN_STREAM_BASE_BUILT:
-        from .dedup import build_dedup_index
-
+    def build(scoped):
         d = load_tables(spark, sf_dir)["documents"].select("doc_id", "text")
         build_dedup_index(d.filter(F.col("doc_id") % 2 == 0), scoped)
-        _ANN_STREAM_BASE_BUILT.add(key)
+
+    scoped = build_once(spark, sf_dir, "gate_dd_smx", build)
     d = load_tables(spark, sf_dir)["documents"].select("doc_id", "text")
     s1 = d.filter(F.col("doc_id") < 20).select(
         (F.col("doc_id") + 1000000).alias("doc_id"),

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.windows import window_spec
+from ..queries import build_once
 from ..sources.readers import load_tables
 from . import text as TX
 from .dedup import (
@@ -77,4 +78,4 @@ def _aug_emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     return base.union(var)
 
 
-__all__ = ['_os', 'DataFrame', 'SparkSession', 'F', 'window_spec', 'load_tables', 'TX', 'DSQL', 'build_dedup_index', 'connected_components', 'dedup_against_index', 'exact_dedup', 'md5_int60', 'minhash_dedup_against', 'minhash_dedup_pairs', 'ngram_jaccard_pairs', 'shingles', 'simhash_from_hashes', 'simhash_pairs', 'winnow_fingerprints', 'decontaminate', 'mixture_resample', 'repetition_stats', 'extract_features', 'frame_sample', 'make_media_table', 'cosine_neardup_pairs', 'cosine_topk', 'hyperplanes', 'ivf_topk', 'kmeans', 'lsh_topk', 'bpe_ish_token_count', 'sql_bpe_ish_token_count', '_COS', '_AUG_DOCS_SQL', '_AUG_EMB_SQL', '_aug_docs', '_aug_emb']
+__all__ = ['_os', 'DataFrame', 'SparkSession', 'F', 'window_spec', 'build_once', 'load_tables', 'TX', 'DSQL', 'build_dedup_index', 'connected_components', 'dedup_against_index', 'exact_dedup', 'md5_int60', 'minhash_dedup_against', 'minhash_dedup_pairs', 'ngram_jaccard_pairs', 'shingles', 'simhash_from_hashes', 'simhash_pairs', 'winnow_fingerprints', 'decontaminate', 'mixture_resample', 'repetition_stats', 'extract_features', 'frame_sample', 'make_media_table', 'cosine_neardup_pairs', 'cosine_topk', 'hyperplanes', 'ivf_topk', 'kmeans', 'lsh_topk', 'bpe_ish_token_count', 'sql_bpe_ish_token_count', '_COS', '_AUG_DOCS_SQL', '_AUG_EMB_SQL', '_aug_docs', '_aug_emb']

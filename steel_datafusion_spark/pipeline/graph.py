@@ -16,7 +16,7 @@ Pure DataFrame power iteration — no GraphX/graphframes dependency:
   the teleport term and the dangling-node mass (a 1-row broadcast
   aggregate), and lineage-truncates through ``cache.iteration_barrier``
   exactly like k-means/connected-components (``reliable=True`` for
-  executor-loss-safe multi-hour runs).
+  executor-loss-safe multi-hour runs), releasing each superseded round.
 
 At 100 TB the per-iteration cost is two shuffles keyed on node id; edges
 are re-used from cache every round (persisted once), ranks are |V| rows.
@@ -35,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..cache import iteration_barrier, track
+from ..cache import iteration_barrier, release_local_checkpoint, track
 
 __all__ = ["pagerank", "pagerank_bucketed", "sql_pagerank",
            "triangle_count", "sql_triangle_count",
@@ -133,10 +133,13 @@ def pagerank(
 
     ranks = nodes.select("node", F.round(F.lit(1.0 / n), 12).alias("rank"),
                          "_has_out")
-    for _ in range(iterations):
-        ranks = iteration_barrier(
+    for i in range(iterations):
+        new = iteration_barrier(
             _pr_iteration(ranks, trans, nodes, teleport, damping, n),
             reliable=reliable)
+        if i:  # superseded barrier; never the caller-derived start
+            release_local_checkpoint(ranks)
+        ranks = new
     return ranks.select("node", "rank")
 
 
@@ -199,11 +202,14 @@ def pagerank_bucketed(
     teleport = (1.0 - damping) / n
     ranks = nodes_t.select("node", F.round(F.lit(1.0 / n), 12).alias("rank"),
                            "_has_out")
-    for _ in range(iterations):
-        ranks = iteration_barrier(
+    for i in range(iterations):
+        new = iteration_barrier(
             _pr_iteration(ranks, trans_t, nodes_t,
                           teleport, damping, n),
             reliable=reliable)
+        if i:  # superseded barrier; never the table-derived start
+            release_local_checkpoint(ranks)
+        ranks = new
     return ranks.select("node", "rank")
 
 
@@ -450,8 +456,8 @@ def label_propagation(edges: DataFrame, src: str = "src", dst: str = "dst",
                   .persist())
     labels = nodes.select("node", F.col("node").alias("label"))
 
-    for _ in range(iterations):
-        labels = iteration_barrier(
+    for i in range(iterations):
+        new = iteration_barrier(
             und.join(labels, und["src"] == labels["node"])
             .select(F.col("dst").alias("nb_node"), "label")
             .repartition(parts, "nb_node")
@@ -463,6 +469,9 @@ def label_propagation(edges: DataFrame, src: str = "src", dst: str = "dst",
             .select(F.col("nb_node").alias("node"),
                     F.col("_win.label").alias("label")),
             reliable=reliable)
+        if i:  # superseded barrier; never the caller-derived start
+            release_local_checkpoint(labels)
+        labels = new
     return labels
 
 

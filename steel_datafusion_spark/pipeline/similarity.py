@@ -26,11 +26,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..cache import iteration_barrier, release_local_checkpoint, track
-from ..sources.bucketing import attach_table, write_bucketed
+from ..sources.bucketing import write_bucketed
 from ..sources.index_tables import (
-    index_table, locked_verb, recover_swaps, reset_delta, reset_index,
-    swap_table,
+    absorb_delta, append_rows, attach_index, index_table, locked_verb,
+    reset_delta, reset_index, swap_table, with_delta,
 )
+from ..sources.manifest import is_manifest_root
 
 __all__ = ["sq8_stats", "sq8_error_stats", "sql_sq8_error_stats",
            "dot", "norm2", "cosine", "cosine_topk", "cosine_neardup_pairs",
@@ -524,15 +525,10 @@ def build_ann_index(
 
 def attach_ann_index(spark, name: str) -> bool:
     """Re-attach a persisted ANN index's tables in a FRESH session's
-    catalog (``sources/bucketing.attach_table``): the warehouse parquet
-    and bucket descriptors outlive the building session, so a restarted
-    driver or a second concurrent maintainer can probe/append without
-    rebuilding.  A swap that crashed after dropping its table is
-    finished first (``sources/index_tables.recover_swaps``).  Attach
-    before starting concurrent maintenance, not during it.  Returns True
-    iff centroids, assign and meta are reachable."""
-    recover_swaps(spark, name, _INDEX_TABLES)
-    return all(attach_table(spark, f"{name}_{s}") for s in _INDEX_TABLES)
+    catalog, finishing any crashed swap first
+    (``sources/index_tables.attach_index``).  Returns True iff
+    centroids, assign and meta are reachable."""
+    return attach_index(spark, name, _INDEX_TABLES)
 
 
 def ann_index_append(
@@ -633,9 +629,7 @@ def _ann_index_append_locked(
     a = a.persist()  # one lineage, two consumers: stats + append
     row = a.agg(F.count(F.lit(1)).alias("n"),
                 F.avg("cscore").alias("mc")).head()
-    write_bucketed(a.select(*assign_cols), f"{name}_assign",
-                   ["centroid_id"], int(meta["n_buckets"]),
-                   sort_cols=["centroid_id"], mode="append")
+    append_rows(spark, f"{name}_assign", a.select(*assign_cols))
     a.unpersist()
     mean_cos = None if row["mc"] is None else float(row["mc"])
     md = meta.asDict()
@@ -665,7 +659,7 @@ def _ann_index_append_locked(
             "nlist int, n_buckets int, train string, "
             "base_signal double, ref_signal double",
         )
-        swap_table(spark, f"{name}_meta", new_meta.write.saveAsTable)
+        swap_table(spark, f"{name}_meta", new_meta)
         ref = mean_cos
     return {"appended": int(row["n"]),
             "mean_centroid_cosine": mean_cos,
@@ -705,17 +699,12 @@ def ivf_topk_index_delta(
     delta's committed rows — base stays Exchange-free, the delta adds
     one scan of O(|delta|) rows, and because both carry the SAME frozen
     quantizer's assignments the result is bit-identical to a one-shot
-    index over base+delta.  Compact the delta into the base with
-    ``ann_index_append(read_table(delta_root)...)`` + a delta reset
-    when it outgrows its share of probe time."""
-    from ..sources.manifest import is_manifest_root, read_table
-
+    index over base+delta (``sources/index_tables.with_delta``).
+    Compact the delta into the base with :func:`ann_index_compact` when
+    it outgrows its share of probe time."""
     spark = queries.sparkSession
     cent = spark.table(f"{name}_centroids")
-    assign = index_table(spark, f"{name}_assign")
-    if delta_root is not None and is_manifest_root(delta_root):
-        delta = read_table(spark, delta_root).select(*assign.columns)
-        assign = assign.unionByName(delta)
+    assign = with_delta(spark, f"{name}_assign", delta_root)
     return _ivf_probe_topk(queries, cent, assign, k, nprobe,
                            id_col, vec_col, dedup_candidates=True)
 
@@ -727,11 +716,9 @@ def ann_index_compact(spark, name: str, delta_root: str) -> dict:
     to the pure bucketed plan, and the delta starts empty for the next
     ingest window.
 
-    Crash-safe by idempotence + recovery, not atomicity: the merged
-    table is ``base ∪ delta`` DEDUPLICATED on vid, so re-running a
-    compaction that crashed between the base swap and the delta reset
-    converges to the same rows instead of doubling them; the swap
-    itself is ``swap_table`` under a locked verb (``sources/index_tables``).
+    Crash-safe by idempotence + recovery, not atomicity: the merge is
+    ``sources/index_tables.absorb_delta`` keyed on vid, under a locked
+    verb, so a re-run after a crash before the delta reset converges.
     A probe racing the delta-reset window may see a vector in
     both base and delta, which ``ivf_topk_index_delta`` already
     collapses (candidate-level distinct) — results stay exact.  The
@@ -739,13 +726,11 @@ def ann_index_compact(spark, name: str, delta_root: str) -> dict:
     watermarks (``reset_delta``), so a replayed streaming micro-batch
     still recognizes itself after compaction instead of re-appending.
 
-    Cost: ONE full rewrite of the assignment table into the swap name
-    (the price of re-bucketing, same as any OPTIMIZE), an
-    ALTER TABLE RENAME (metadata + directory move, no data copy), and
-    one empty commit.  Lazy plans resolved against the PRE-compaction
-    table cannot be re-run after the swap (standard snapshot
-    semantics — the old files are gone); materialize probe results
-    before compacting.  Returns {"base_rows": n, "delta_rows": d,
+    Cost: ONE full rewrite of the assignment table (the price of
+    re-bucketing, same as any OPTIMIZE) and one empty commit.  Lazy
+    plans resolved against the PRE-compaction table cannot be re-run
+    after the swap (standard snapshot semantics — the old files are
+    gone); materialize probe results before compacting.  Returns {"base_rows": n, "delta_rows": d,
     "delta_reset_version": v, "txn": t}."""
     return locked_verb(
         spark, name, _INDEX_TABLES, "ann_index_compact",
@@ -753,21 +738,12 @@ def ann_index_compact(spark, name: str, delta_root: str) -> dict:
 
 
 def _ann_index_compact_locked(spark, name: str, delta_root: str) -> dict:
-    from ..sources.manifest import is_manifest_root, read_table
-
     assign_tbl = f"{name}_assign"
-    cols = spark.table(assign_tbl).columns
-    n_buckets = int(spark.table(f"{name}_meta").head()["n_buckets"])
     if not is_manifest_root(delta_root):
         return {"base_rows": spark.table(assign_tbl).count(),
                 "delta_rows": 0, "delta_reset_version": None}
-    delta = read_table(spark, delta_root).select(*cols)
+    delta = absorb_delta(spark, assign_tbl, delta_root, ["vid"])
     d_rows = delta.count()
-    merged = (spark.table(assign_tbl).unionByName(delta)
-              .dropDuplicates(["vid"]))
-    swap_table(spark, assign_tbl, lambda swap: write_bucketed(
-        merged, swap, ["centroid_id"], n_buckets,
-        sort_cols=["centroid_id"]))
     n_rows = spark.table(assign_tbl).count()
     return {"base_rows": int(n_rows), "delta_rows": int(d_rows),
             "delta_reset_version": reset_delta(spark, delta_root, name)}

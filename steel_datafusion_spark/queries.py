@@ -74,6 +74,25 @@ def scratch_dir(spark: SparkSession, sf_dir: str, tag: str) -> str:
         f"sdf_{tag}_{_os.path.basename(_os.path.normpath(sf_dir))}_{app}")
 
 
+_BUILT_ONCE: set = set()
+
+
+def build_once(spark: SparkSession, sf_dir: str, name: str, build) -> str:
+    """App-scoped name of a build-once gate fixture (a persisted index):
+    ``build(scoped)`` runs once per (application, sf_dir, name), so gate
+    reps time the probe, not the build.  The name is app-scoped for the
+    ``scratch_dir`` reason: concurrent applications share the warehouse
+    directory, and one app's rebuild would delete parquet parts out from
+    under the other's scan."""
+    app = spark.sparkContext.applicationId.replace("-", "_").replace(".", "_")
+    scoped = f"{name}_{app[-12:]}"
+    key = (spark.sparkContext.applicationId, _os.path.abspath(sf_dir), scoped)
+    if key not in _BUILT_ONCE:
+        build(scoped)
+        _BUILT_ONCE.add(key)
+    return scoped
+
+
 # ---------------------------------------------------------------------------
 # Relational core (SURVEY.md §2) — every df/* operator exercised
 # ---------------------------------------------------------------------------

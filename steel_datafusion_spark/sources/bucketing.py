@@ -17,6 +17,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import urllib.parse
 
 from pyspark.sql import DataFrame, SparkSession
@@ -34,20 +35,34 @@ def _warehouse_path(spark: SparkSession, table_name: str) -> str:
     return os.path.join(d, table_name.lower())
 
 
+def _aside_path(spark: SparkSession, table_name: str) -> str:
+    """The hidden sibling a dropped table's directory is renamed to."""
+    path = _warehouse_path(spark, table_name)
+    return os.path.join(os.path.dirname(path),
+                        "." + os.path.basename(path) + ".dropped")
+
+
+def _rename_aside(spark: SparkSession, table_name: str) -> str:
+    """Rename the table's warehouse directory (if any) to its hidden
+    sibling, replacing a stale one; returns the sibling.  A failed rename
+    raises."""
+    aside = _aside_path(spark, table_name)
+    shutil.rmtree(aside, ignore_errors=True)
+    path = _warehouse_path(spark, table_name)
+    if os.path.isdir(path):
+        os.rename(path, aside)
+    return aside
+
+
 def drop_managed_table(spark: SparkSession, table_name: str) -> None:
-    """DROP TABLE + best-effort warehouse-dir cleanup: a fresh session can
-    find a stale warehouse directory with no catalog entry
-    (LOCATION_ALREADY_EXISTS), so the directory is removed too."""
+    """Drop a table and its warehouse directory (even one without a
+    catalog entry: LOCATION_ALREADY_EXISTS), crash-safely: rename the
+    directory to a hidden sibling (atomic on POSIX), drop the catalog
+    entry, delete the sibling.  A crash never leaves a partial directory
+    under the table's name, only a hidden one that nothing reads."""
+    aside = _rename_aside(spark, table_name)
     spark.sql(f"DROP TABLE IF EXISTS `{table_name}`")
-    try:
-        jvm = spark._jvm
-        path = jvm.org.apache.hadoop.fs.Path(
-            spark.conf.get("spark.sql.warehouse.dir"), table_name.lower())
-        fs = path.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-        if fs.exists(path):
-            fs.delete(path, True)
-    except Exception:
-        pass  # best-effort; saveAsTable raises a clear error if stuck
+    shutil.rmtree(aside, ignore_errors=True)
 
 
 def write_bucketed(
@@ -80,17 +95,14 @@ def write_bucketed(
 
 
 def attach_table(spark: SparkSession, table_name: str) -> bool:
-    """Re-register a warehouse table in THIS session's catalog — the
-    missing half of "persisted" for the default in-memory catalog,
-    whose entries (including bucket specs) die with the session while
-    the warehouse parquet survives.  Schema is inferred from the files;
-    the bucket spec comes from the ``_sdf_table.json`` descriptor
-    ``write_bucketed`` leaves beside them, so re-attached tables keep
-    their Exchange-free join plans AND accept spec-validated appends
-    (CREATE TABLE ... USING parquet CLUSTERED BY ... LOCATION).  A
-    directory without a descriptor attaches unbucketed.  Returns True
-    if the table is now reachable, False if there is nothing to attach.
-    No-op when the catalog already knows the name."""
+    """Re-register a warehouse table in THIS session's catalog (the
+    default in-memory catalog dies with the session; the parquet does
+    not): schema from the files, bucket spec from the ``_sdf_table.json``
+    descriptor ``write_bucketed`` leaves beside them, so the table keeps
+    its Exchange-free join plans and its layout for later writes; no
+    descriptor attaches unbucketed.  Returns True if the table is now
+    reachable (a no-op when the catalog knows the name), False if there
+    is nothing to attach."""
     if spark.catalog.tableExists(table_name):
         return True
     path = _warehouse_path(spark, table_name)

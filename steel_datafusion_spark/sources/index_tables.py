@@ -5,20 +5,32 @@ The dedup index (``pipeline/dedup.py``) and the ANN index
 bucketed catalog tables named ``{name}_{t}``.  Spark's catalog has no
 commit log (unlike the manifest roots of ``sources/manifest.py``), so a
 table is replaced by a swap, and a crash can stop a swap half-way.
+
+**Layout is decided once, at build**: ``build_*`` chooses each table's
+bucket columns, bucket count and sort columns (or none), and every later
+write — :func:`swap_table`, :func:`append_rows`, :func:`absorb_delta` —
+reads it back from the table's catalog entry.
+
 Three rules keep every index table recoverable, for both indexes:
 
 1. **Write with** :func:`swap_table`.  The new rows go to
    ``{table}_swap``, then the base table is dropped, then the swap is
-   renamed.  A swap whose base is gone is therefore complete; a swap
-   beside its base is an unfinished write that the next swap discards.
-2. **Repair only under the lock or in ``attach_*``.**
-   :func:`recover_swaps` turns a complete swap back into its base
-   table (directory rename, then ``attach_table``).  It runs at the
-   start of every :func:`locked_verb` and in ``attach_dedup_index`` /
-   ``attach_ann_index``, never on a read path.
+   renamed.  A swap whose base directory is gone is therefore complete;
+   a swap beside its base is an unfinished write that the next swap
+   discards.  The drop (``bucketing.drop_managed_table``) renames the
+   base directory aside to a hidden sibling before deleting it, so a
+   crash never leaves a partial base that could pass for an intact one.
+2. **Repair only under the lock or in** :func:`attach_index`.
+   :func:`recover_swaps` deletes hidden siblings a crashed drop left
+   behind and turns a complete swap back into its base table (directory
+   rename, then refresh or ``attach_table``).  It runs at the start of
+   every :func:`locked_verb` and in :func:`attach_index`, never on a
+   read path.
 3. **A reader resolves a missing table to its swap.**
-   :func:`index_table` reads ``{table}_swap`` when ``{table}`` is gone
-   and writes nothing, so a probe can never race a maintainer.
+   :func:`index_table` reads ``{table}_swap`` when ``{table}``'s
+   directory is gone and writes nothing, so a probe can never race a
+   maintainer; :func:`with_delta` adds a streaming delta's committed rows
+   to that read.
 
 :func:`reset_index` is the build prologue, and :func:`reset_delta` is
 the empty commit that resets a streaming delta root after compaction.
@@ -27,13 +39,22 @@ the empty commit that resets a streaming delta root after compaction.
 from __future__ import annotations
 
 import os
+import re
 import shutil
 
-from .bucketing import _warehouse_path, attach_table, drop_managed_table
+from .bucketing import (
+    _aside_path, _warehouse_path, attach_table, drop_managed_table,
+    write_bucketed,
+)
 from .locking import IndexLock, _txn_root, log_index_txn
+from .manifest import (
+    _base_dir, _commit, _Written, is_manifest_root, read_table,
+)
+from .readers import read_parquet
 
-__all__ = ["reset_index", "locked_verb", "swap_table", "recover_swaps",
-           "index_table", "reset_delta"]
+__all__ = ["reset_index", "locked_verb", "swap_table", "append_rows",
+           "absorb_delta", "attach_index", "recover_swaps", "index_table",
+           "with_delta", "reset_delta"]
 
 _SWAP = "_swap"
 # "_cswap" is the dedup compaction swap name of older builds; a swap it
@@ -70,27 +91,117 @@ def locked_verb(spark, name: str, tables, verb: str, body) -> dict:
     return out
 
 
-def swap_table(spark, table: str, write) -> None:
-    """Replace ``table`` with the rows that ``write(swap_name)`` saves:
-    write the swap, drop the base, rename the swap.  ``write`` may read
+def _layout(spark, table: str, bucketed: bool = False):
+    """``(bucket_cols, n_buckets, sort_cols)`` of ``table`` from its
+    catalog entry; None for an unbucketed table, which raises
+    ``ValueError`` when ``bucketed``."""
+    info, detail = {}, False
+    for r in spark.sql(f"DESCRIBE EXTENDED `{table}`").collect():
+        detail = detail or r.col_name == "# Detailed Table Information"
+        if detail:
+            info[r.col_name] = r.data_type
+    if "Num Buckets" not in info:
+        if bucketed:
+            raise ValueError(f"{table!r} is not a bucketed table")
+        return None
+
+    def names(key):  # "[`a`, `b`]"
+        return [n.replace("``", "`") for n in
+                re.findall(r"`((?:[^`]|``)*)`", info.get(key) or "")]
+    return (names("Bucket Columns"), int(info["Num Buckets"]),
+            names("Sort Columns"))
+
+
+def _save(df, table: str, layout, mode: str = "errorifexists") -> None:
+    if layout is None:
+        df.write.mode(mode).saveAsTable(table)
+    else:
+        bucket_cols, n_buckets, sort_cols = layout
+        write_bucketed(df, table, bucket_cols, n_buckets,
+                       sort_cols=sort_cols, mode=mode)
+
+
+def swap_table(spark, table: str, df) -> None:
+    """Replace ``table``'s rows with ``df``'s, in ``table``'s own layout:
+    write the swap, drop the base, rename the swap.  ``df`` may read
     ``table`` itself — the base is dropped only after the swap is
     complete.  Call it under :func:`locked_verb`."""
+    layout = _layout(spark, table)
     swap = table + _SWAP
     drop_managed_table(spark, swap)
-    write(swap)
+    _save(df, swap, layout)
     drop_managed_table(spark, table)
     spark.sql(f"ALTER TABLE `{swap}` RENAME TO `{table}`")
 
 
+def append_rows(spark, table: str, df) -> None:
+    """Append ``df`` to the bucketed ``table`` in its own layout.  Raises
+    ``ValueError`` for an unbucketed table."""
+    _save(df, table, _layout(spark, table, bucketed=True), mode="append")
+
+
+def _delta(spark, delta_root: str | None, columns):
+    """The committed rows of a streaming delta root in ``columns``'
+    order, or None when the root has no commit."""
+    if delta_root is None or not is_manifest_root(delta_root):
+        return None
+    return read_table(spark, delta_root).select(*columns)
+
+
+def with_delta(spark, table: str, delta_root: str | None):
+    """The one base ∪ delta read: ``table`` through :func:`index_table`
+    plus the committed rows of ``delta_root``, duplicates kept (the
+    probes collapse duplicate candidates)."""
+    base = index_table(spark, table)
+    delta = _delta(spark, delta_root, base.columns)
+    return base if delta is None else base.unionByName(delta)
+
+
+def absorb_delta(spark, table: str, delta_root: str, keys):
+    """The one compaction merge, under :func:`locked_verb`: swap in
+    ``table`` ∪ the committed rows of ``delta_root``, deduplicated on
+    ``keys``, so re-running a compaction that crashed before its
+    :func:`reset_delta` converges instead of doubling rows.  Raises
+    ``ValueError`` for an unbucketed ``table``.  Returns the delta rows
+    (None without a commit), readable until the reset: only a caller
+    that reports their count pays the job."""
+    _layout(spark, table, bucketed=True)
+    base = spark.table(table)
+    delta = _delta(spark, delta_root, base.columns)
+    merged = base if delta is None else base.unionByName(delta)
+    swap_table(spark, table, merged.dropDuplicates(list(keys)))
+    return delta
+
+
+def attach_index(spark, name: str, tables, optional=()) -> bool:
+    """Re-attach a persisted index's tables in a FRESH session's catalog
+    (``bucketing.attach_table``: the warehouse parquet and bucket
+    descriptors outlive the building session), finishing crashed swaps
+    first (:func:`recover_swaps`).  Attach before starting concurrent
+    maintenance, not during it.  Returns True iff every table of
+    ``tables`` is reachable; ``optional`` ones attach when present."""
+    recover_swaps(spark, name, tuple(tables) + tuple(optional))
+    ok = all([attach_table(spark, f"{name}_{t}") for t in tables])
+    for t in optional:
+        attach_table(spark, f"{name}_{t}")
+    return ok
+
+
 def recover_swaps(spark, name: str, tables) -> None:
-    """Finish every swap of the index that crashed after its base table
-    was dropped: rename the swap directory to the base directory, drop
-    the swap's catalog entry and attach the base.  A directory rename
-    rather than a catalog rename, because a swap reached through
-    ``attach_*`` is an external table, whose catalog rename would leave
-    the base pointing at the swap directory."""
+    """Delete the hidden directories crashed drops left behind, then
+    finish every swap of the index that crashed after its base directory
+    was gone: rename the swap directory to the base directory, drop the
+    swap's catalog entry, and refresh the base's entry (a drop that
+    crashed after its rename left it; the swap was written in its
+    layout) or else attach the base.  A directory rename rather than a
+    catalog rename, because a swap reached through ``attach_*`` is an
+    external table, whose catalog rename would leave the base pointing
+    at the swap directory."""
     for t in tables:
         table = f"{name}_{t}"
+        for suffix in ("",) + _SWAPS:
+            shutil.rmtree(_aside_path(spark, table + suffix),
+                          ignore_errors=True)
         base = _warehouse_path(spark, table)
         if os.path.isdir(base):
             continue
@@ -103,15 +214,18 @@ def recover_swaps(spark, name: str, tables) -> None:
             except OSError:
                 pass  # a concurrent attach restored the base first
             spark.sql(f"DROP TABLE IF EXISTS `{table + suffix}`")
-            attach_table(spark, table)
+            if spark.catalog.tableExists(table):
+                spark.catalog.refreshTable(table)
+            else:
+                attach_table(spark, table)
             break
 
 
 def index_table(spark, table: str):
     """Read an index table: ``table`` itself, or — when a swap crashed
-    after dropping it — its complete swap, read-only.  Raises like
-    ``spark.table`` when neither exists."""
-    if not spark.catalog.tableExists(table) and \
+    after its base directory was gone — its complete swap, read-only.
+    Raises like ``spark.table`` when neither exists."""
+    if not os.path.isdir(_warehouse_path(spark, table)) and \
             spark.catalog.tableExists(table + _SWAP):
         return spark.table(table + _SWAP)
     return spark.table(table)
@@ -123,9 +237,6 @@ def reset_delta(spark, root: str, name: str) -> int:
     txn watermarks (and its other registrations), so a replayed
     micro-batch still recognizes itself and does not re-append.  Returns
     the new version."""
-    from .manifest import _base_dir, _commit, _Written
-    from .readers import read_parquet
-
     def write(info, data_dir):
         empty = read_parquet(spark, _base_dir(info, root)).limit(0)
         empty.write.mode("append").parquet(data_dir)

@@ -581,7 +581,7 @@ def streaming_dedup_ingest(
     from ..pipeline.dedup import (
         _banded_table, _hashed_shingles, _hot_table, _match_batch_to_corpus,
     )
-    from ..sources.index_tables import index_table
+    from ..sources.index_tables import with_delta
     from ..sources.manifest import (
         latest_commit_info, manifest_upsert, read_table,
     )
@@ -619,10 +619,8 @@ def streaming_dedup_ingest(
                        lambda: bb.withColumnRenamed("doc_id", "corpus_id"))
         _append_commit(spark, sh_root, txn_app, batch_id,
                        lambda: hb.withColumnRenamed("doc_id", "corpus_id"))
-        bc = index_table(spark, f"{name}_bands").unionByName(
-            read_table(spark, bands_root))
-        hc = index_table(spark, f"{name}_shingles").unionByName(
-            read_table(spark, sh_root))
+        bc = with_delta(spark, f"{name}_bands", bands_root)
+        hc = with_delta(spark, f"{name}_shingles", sh_root)
         m = _match_batch_to_corpus(
             hb, bb.toDF("batch_id", "band_idx", "band_hash"), hc, bc,
             threshold, broadcast_batch=True, corpus_hot=hot)

@@ -224,3 +224,39 @@ def test_lpa_matches_duckdb_mirror(spark):
     duck = sorted(map(tuple, con.execute(
         f"WITH {body.lstrip()} SELECT node, label FROM lp_out").fetchall()))
     assert spark_out == duck
+
+
+# ---------------------------------------------------------------------------
+# Iteration barriers
+# ---------------------------------------------------------------------------
+
+@pytest.mark.parametrize("algo", ["pagerank", "pagerank_bucketed",
+                                  "label_propagation"])
+def test_iterative_graph_leaves_no_cache(spark, algo):
+    """Each power/propagation step frees the barrier it supersedes: once
+    the result is collected and its own checkpoint and the tracked edge
+    caches are released, no RDD this call persisted is still held.
+    (Compares ids, not counts — earlier tests' checkpoint blocks may be
+    freed by the ContextCleaner at any GC.)"""
+    from steel_datafusion_spark.cache import release_all, \
+        release_local_checkpoint
+    from steel_datafusion_spark.pipeline import graph
+
+    release_all(spark)
+    spark.catalog.clearCache()
+
+    def persisted_ids():
+        return {int(i) for i in
+                spark.sparkContext._jsc.getPersistentRDDs().keySet()}
+
+    base = persisted_ids()
+    edges = _edges(spark, [("a", "b"), ("b", "c"), ("c", "a"),
+                           ("c", "d"), ("d", "e")])
+    if algo == "pagerank_bucketed":
+        out = graph.pagerank_bucketed(edges, "pr_nocache", iterations=4)
+    else:
+        out = getattr(graph, algo)(edges, iterations=4)
+    out.collect()
+    assert release_local_checkpoint(out) == 1
+    release_all(spark)
+    assert persisted_ids() - base == set()

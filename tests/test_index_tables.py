@@ -4,9 +4,10 @@
 1. a rebuild under an old name resets the whole index — no swap of the
    old index survives it, and the new txn log starts at 1;
 2. fault injection: a crash after each step of every ``swap_table`` the
-   maintenance verbs run leaves an index that ``attach_*`` + a probe (or,
-   for compaction, a re-run of the verb) brings back to the no-crash
-   result.
+   maintenance verbs run — the base drop's rename aside included —
+   leaves an index that ``attach_*`` + a probe (or, for compaction, a
+   re-run of the verb) brings back to the no-crash result, with no
+   hidden directory left behind.
 """
 
 import pytest
@@ -95,6 +96,72 @@ def test_ann_rebuild_restarts_txn_log(spark):
         _drop_index(spark, name, ANN)
 
 
+def test_writes_keep_the_build_layout(spark, tmp_path):
+    """Every write after the build reads the table's layout back from
+    its catalog entry: a swap, an append and a delta absorb keep the
+    bucket columns, bucket count and sort columns (and an unbucketed
+    table stays unbucketed); the bucketed-only writes refuse an
+    unbucketed table."""
+    from steel_datafusion_spark.sources.bucketing import (
+        drop_managed_table, write_bucketed,
+    )
+    from steel_datafusion_spark.sources.index_tables import (
+        _layout, absorb_delta, append_rows, swap_table,
+    )
+    from steel_datafusion_spark.sources.manifest import manifest_upsert
+
+    b, u = "ixlay_b", "ixlay_u"
+    rows = spark.range(6).selectExpr("id AS a", "id % 2 AS b")
+    for t in (b, u):
+        drop_managed_table(spark, t)
+    try:
+        write_bucketed(rows, b, ["a"], 3, sort_cols=["b", "a"])
+        rows.write.saveAsTable(u)
+        layout = (["a"], 3, ["b", "a"])
+        assert (_layout(spark, b), _layout(spark, u)) == (layout, None)
+
+        swap_table(spark, b, spark.table(b).filter("a < 4"))
+        append_rows(spark, b, rows.filter("a >= 4"))
+        delta = str(tmp_path / "delta")
+        manifest_upsert(spark, delta, rows.filter("a >= 3"), ["a"])
+        assert absorb_delta(spark, b, delta, ["a"]).count() == 3
+        assert _layout(spark, b) == layout
+        assert sorted(r.a for r in spark.table(b).collect()) == \
+            list(range(6))
+
+        swap_table(spark, u, spark.table(u).limit(2))
+        assert _layout(spark, u) is None
+        assert spark.table(u).count() == 2
+        with pytest.raises(ValueError, match="not a bucketed table"):
+            append_rows(spark, u, rows)
+        with pytest.raises(ValueError, match="not a bucketed table"):
+            absorb_delta(spark, u, delta, ["a"])
+    finally:
+        for t in (b, u):
+            drop_managed_table(spark, t)
+
+
+def test_drop_raises_when_the_rename_aside_fails(spark, monkeypatch):
+    """The drop renames the table's directory aside before anything
+    else; when that rename fails, the drop raises and leaves the table
+    whole instead of hiding the failure."""
+    from steel_datafusion_spark.sources import bucketing
+
+    t = "ixdrop"
+    bucketing.drop_managed_table(spark, t)
+    spark.range(5).write.saveAsTable(t)
+    try:
+        with monkeypatch.context() as m:
+            def fail(src, dst):
+                raise OSError("rename refused")
+            m.setattr(bucketing.os, "rename", fail)
+            with pytest.raises(OSError, match="rename refused"):
+                bucketing.drop_managed_table(spark, t)
+        assert spark.table(t).count() == 5
+    finally:
+        bucketing.drop_managed_table(spark, t)
+
+
 # --------------------------------------------------------------------------
 # fault injection
 
@@ -102,11 +169,13 @@ class _Crash(Exception):
     """The injected crash."""
 
 
-# raise after: the swap is written / the base table is dropped / the swap
-# is renamed.  swap_table's first step drops a stale swap, which on a
-# clean index changes nothing: a crash after it is the state before the
-# swap, which the "written" case (less the swap table) already covers
-STEPS = ["written", "dropped", "renamed"]
+# raise after: the swap is written / the base directory is renamed aside
+# (its catalog entry not yet dropped, the hidden directory not yet
+# deleted) / the base table is dropped / the swap is renamed.
+# swap_table's first step drops a stale swap, which on a clean index
+# changes nothing: a crash after it is the state before the swap, which
+# the "written" case (less the swap table) already covers
+STEPS = ["written", "aside", "dropped", "renamed"]
 # the swaps each maintenance verb runs, in order
 SWAPS = {"dedup_append": ["hot"],
          "dedup_compact": ["bands", "shingles", "hot"],
@@ -239,6 +308,16 @@ class _Case:
         return sum(read_table(self.spark, r).count()
                    for r in glob.glob(f"{self.work}/delta*"))
 
+    def hidden_dirs(self):
+        """The hidden directories dropped tables of the index left."""
+        import glob
+        import os
+
+        from steel_datafusion_spark.sources.bucketing import _warehouse_path
+
+        return glob.glob(os.path.join(os.path.dirname(
+            _warehouse_path(self.spark, self.name)), f".{self.name}_*"))
+
     def txn_verbs(self):
         from steel_datafusion_spark.sources.locking import index_txns
 
@@ -248,19 +327,30 @@ class _Case:
         """Run the verb, raising _Crash right after ``step`` of the swap
         of ``table``."""
         from steel_datafusion_spark.pipeline import dedup, similarity
-        from steel_datafusion_spark.sources import index_tables
+        from steel_datafusion_spark.sources import bucketing, index_tables
 
         target = f"{self.name}_{table}"
         with monkeypatch.context() as m:
             if step == "renamed":
-                mod = dedup if self.kind == "dedup" else similarity
-                real_swap = mod.swap_table
+                real_swap = index_tables.swap_table
 
-                def swap(spark, t, write):
-                    real_swap(spark, t, write)
+                def swap(spark, t, df):
+                    real_swap(spark, t, df)
                     if t == target:
                         raise _Crash(t)
-                m.setattr(mod, "swap_table", swap)
+                # the compactions swap inside index_tables (absorb_delta);
+                # the hot and meta rewrites call the verb module's import
+                for mod in (index_tables, dedup, similarity):
+                    m.setattr(mod, "swap_table", swap)
+            elif step == "aside":
+                real_aside = bucketing._rename_aside
+
+                def aside(spark, t):
+                    out = real_aside(spark, t)
+                    if t == target:
+                        raise _Crash(t)  # base dir hidden, entry kept
+                    return out
+                m.setattr(bucketing, "_rename_aside", aside)
             else:
                 real_drop = index_tables.drop_managed_table
 
@@ -318,6 +408,7 @@ def test_append_swap_crash_recovers(spark, templates, no_crash, tmp_path,
         assert case.snapshot([table]) == {table: want[table]}
         case.attach()
         assert not spark.catalog.tableExists(f"{case.name}_{table}_swap")
+        assert case.hidden_dirs() == []
         assert case.snapshot() == want
         assert case.probe() == want_probe
     finally:
@@ -348,6 +439,7 @@ def test_compact_swap_crashes_converge(spark, templates, no_crash, tmp_path,
                 assert case.snapshot(swapped) == expect, (table, step)
                 case.attach()
                 assert case.snapshot(swapped) == expect, (table, step)
+                assert case.hidden_dirs() == [], (table, step)
                 if table == SWAPS[verb][-1]:
                     assert case.probe() == want_probe, (table, step)
             done.append(table)

@@ -1,6 +1,7 @@
 """Tests for deterministic sampling/splitting, sequence packing, PII
 redaction, and connected-components cluster resolution."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from steel_datafusion_spark.pipeline.dedup import connected_components
@@ -26,14 +27,14 @@ def test_connected_components_chain_pair_triangle(spark):
 def test_two_phase_cc_converges_where_propagation_truncates(spark):
     # path graph LONGER than max_iters: min-label propagation moves the
     # label one hop per iteration, so with max_iters=8 a 60-node chain
-    # cannot finish — two-phase halves the diameter per round (O(log n))
-    # and must fully converge within the same budget
+    # cannot finish — and must say so rather than return split
+    # components; two-phase halves the diameter per round (O(log n)) and
+    # must fully converge within the same budget
     n = 60
     pairs = spark.createDataFrame([(i, i + 1) for i in range(n)],
                                   "doc_a long, doc_b long")
-    prop = connected_components(pairs, max_iters=8)
-    assert any(r.cluster_id != 0 for r in prop.collect()), \
-        "expected truncation to demonstrate the propagation bound"
+    with pytest.raises(RuntimeError, match="max_iters=8.*two-phase"):
+        connected_components(pairs, max_iters=8)
     two = connected_components(pairs, max_iters=8, algorithm="two-phase")
     got = sorted((r.doc_id, r.cluster_id) for r in two.collect())
     assert got == [(i, 0) for i in range(n + 1)]
