@@ -48,9 +48,9 @@ from .bucketing import (
 )
 from .locking import IndexLock, _txn_root, log_index_txn
 from .manifest import (
-    _base_dir, _commit, _Written, is_manifest_root, read_table,
+    _commit, _read_version, _require_base, _Written, is_manifest_root,
+    read_table,
 )
-from .readers import read_parquet
 
 __all__ = ["reset_index", "locked_verb", "swap_table", "append_rows",
            "absorb_delta", "attach_index", "recover_swaps", "index_table",
@@ -238,7 +238,7 @@ def reset_delta(spark, root: str, name: str) -> int:
     micro-batch still recognizes itself and does not re-append.  Returns
     the new version."""
     def write(info, data_dir):
-        empty = read_parquet(spark, _base_dir(info, root)).limit(0)
+        empty = _read_version(spark, _require_base(info, root)).limit(0)
         empty.write.mode("append").parquet(data_dir)
         return _Written(empty.columns, {"compacted_into": name})
 

@@ -34,7 +34,8 @@ Protocol:
   and names an immutable data dir, so a reader mid-upsert sees a complete
   snapshot — either the old version or the new one, never a torn mix, no
   locks.  ``read_table`` (and ``readers.read_parquet`` on a manifest
-  root) do this resolution.
+  root) do this resolution, and read the version with the schema its
+  commit recorded, so no read infers one.
 - **Old versions are retained, then vacuumed.**  ``vacuum`` keeps the
   newest ``keep`` versions (a retention window for in-flight readers,
   exactly like Delta VACUUM) and also removes orphan data dirs left by
@@ -54,6 +55,7 @@ from __future__ import annotations
 import datetime
 import decimal
 import json
+import operator
 import os
 import shutil
 import time
@@ -101,7 +103,10 @@ def is_manifest_root(root: str) -> bool:
 
 def latest_commit_info(root: str) -> dict | None:
     """Full payload of the newest commit ({"version", "data_dir" (abs),
-    "meta"}), or None for an empty/absent table.  No locks, no reads of
+    "meta"}), or None for an empty/absent table.  ``meta["schema"]`` is
+    the version's schema as ``StructType.json()``, recorded at commit
+    (absent only on versions committed before schemas were recorded):
+    readers hand it to Spark and infer nothing.  No locks, no reads of
     mutable state: commit files are immutable, and the ``_last_checkpoint``
     pointer (when present) makes resolution O(commits since the last
     checkpoint) — version numbers are contiguous by construction (every
@@ -233,15 +238,16 @@ def _write_checkpoint(cdir: str, version: int, payload: str) -> None:
 
 
 
-def _version_data_dir(root: str, version: int | None = None) -> str:
-    """Absolute data dir of a committed version (the newest when None),
-    with the explanatory errors every caller wants: unknown version vs
-    a version whose data the vacuum retention already reclaimed."""
+def _version_info(root: str, version: int | None = None) -> dict:
+    """Commit payload of a committed version (the newest when None), with
+    an absolute ``data_dir`` — plus the explanatory errors every caller
+    wants: unknown version vs a version whose data the vacuum retention
+    already reclaimed."""
     if version is None:
-        cur = latest_commit(root)
-        if cur is None:
+        info = latest_commit_info(root)
+        if info is None:
             raise FileNotFoundError(f"no committed version under {root!r}")
-        return cur[1]
+        return info
     path = os.path.join(_commits_dir(root), f"v{version:010d}.json")
     if not os.path.exists(path):
         # vacuum(keep_log) prunes old commit files but retains checkpoint
@@ -256,12 +262,13 @@ def _version_data_dir(root: str, version: int | None = None) -> str:
                 f"with no surviving checkpoint)")
     with open(path) as fh:
         payload = json.load(fh)
-    data_dir = os.path.join(root, payload["data_dir"])
-    if not os.path.isdir(data_dir):
+    payload["data_dir"] = os.path.join(root, payload["data_dir"])
+    payload.setdefault("meta", {})
+    if not os.path.isdir(payload["data_dir"]):
         raise FileNotFoundError(
             f"version {version} of {root!r} is outside the vacuum "
             f"retention window (its data dir was reclaimed)")
-    return data_dir
+    return payload
 
 
 def _iter_data_files(data_dir: str):
@@ -375,17 +382,127 @@ def read_table(spark: SparkSession, root: str,
     commit-log checkpoint).  At 100 TB this is the difference between a
     full-table scan and opening only the files a point/range query can
     touch — the verdicts run as vectorized kernels over the sidecars
-    (:mod:`.filestats`), with no per-file Python."""
-    from .readers import read_parquet
+    (:mod:`.filestats`), with no per-file Python.
 
+    The version's schema is the one recorded in its commit file
+    (``meta["schema"]``, see ``_commit``), so building the frame infers
+    nothing and starts no Spark job, pruned or not; only a version
+    committed before schemas were recorded still infers its schema."""
     if as_of is not None:
         if version is not None:
             raise ValueError("pass either version or as_of, not both")
         version = _version_as_of(root, as_of)
-    data_dir = _version_data_dir(root, version)
+    info = _version_info(root, version)
     if not where:
-        return read_parquet(spark, data_dir)
-    return _read_pruned(spark, data_dir, where)
+        return _read_version(spark, info)
+    return _read_pruned(spark, info, where)
+
+
+# ---------------------------------------------------------------------------
+# Schemas in the commit log (Delta's ``metaData.schemaString``).
+#
+# ``_commit`` records each version's schema exactly as
+# ``spark.read.parquet(data_dir).schema`` would infer it, without a Spark
+# job: from the Spark row schema in a new file's footer (nullable, as
+# Spark's file sources read every column), or the base's when the version
+# wrote no file.  ``_read_version`` hands it to Spark, so no read of a
+# committed version launches Spark's one-task footer-inference job.
+# ---------------------------------------------------------------------------
+
+_SPARK_ROW_SCHEMA = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _version_schema(info: dict):
+    """The StructType recorded in a version's commit, or None for a
+    version committed before schemas were recorded."""
+    from pyspark.sql.types import StructType
+
+    recorded = info.get("meta", {}).get("schema")
+    return None if recorded is None else \
+        StructType.fromJson(json.loads(recorded))
+
+
+def _read_version(spark: SparkSession, info: dict,
+                  files: list[str] | None = None) -> DataFrame:
+    """The one read of a committed version: its data dir — or only
+    ``files`` (relpaths under it; ``basePath`` keeps the partition
+    columns) — read with the schema in ``info``'s commit meta, so
+    building the frame starts no Spark job.  A version without a
+    recorded schema infers it (one footer job), and its nanosecond
+    timestamps read as long convert to µs like ``readers.read_parquet``'s;
+    a recorded schema came from Spark's own footers, which hold none."""
+    from .readers import _with_micros, ensure_session_confs
+
+    ensure_session_confs(spark)
+    data_dir = info["data_dir"]
+    schema = _version_schema(info)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    if files is None:
+        df = reader.parquet(data_dir)
+    else:
+        df = reader.option("basePath", data_dir).parquet(
+            *[os.path.join(data_dir, r) for r in files])
+    return df if schema is not None else _with_micros(df, data_dir)
+
+
+def _nullable(t):
+    """A Spark type's JSON with every field, element and map value
+    nullable — Spark's ``asNullable``, which its file sources apply to
+    the schema they read."""
+    if not isinstance(t, dict):
+        return t
+    kind = t.get("type")
+    if kind == "struct":
+        return {**t, "fields": [{**f, "nullable": True,
+                                 "type": _nullable(f["type"])}
+                                for f in t["fields"]]}
+    if kind == "array":
+        return {**t, "containsNull": True,
+                "elementType": _nullable(t["elementType"])}
+    if kind == "map":
+        return {**t, "valueContainsNull": True,
+                "keyType": _nullable(t["keyType"]),
+                "valueType": _nullable(t["valueType"])}
+    return t
+
+
+def _footer_schema(path: str) -> str | None:
+    """JSON of the Spark row schema in a parquet file's footer (the data
+    columns Spark wrote, partition columns excluded), nullable; None for
+    a file Spark did not write."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import StructType
+
+    try:
+        raw = (pq.read_metadata(path).metadata or {}).get(_SPARK_ROW_SCHEMA)
+        return None if raw is None else \
+            StructType.fromJson(_nullable(json.loads(raw))).json()
+    except (OSError, ValueError, KeyError, TypeError):
+        return None
+
+
+def _schema_meta(spark: SparkSession, data_dir: str, written: str | None,
+                 info: dict | None) -> dict:
+    """The ``{"schema": json}`` commit-meta fragment of the fully written
+    version in ``data_dir``.  ``written`` is the path of a file this
+    version wrote, None when it wrote none and keeps the base's schema.
+    A partitioned version's partition column types come from Spark's own
+    partition discovery over the dir (a driver-side listing, no job).
+    Empty when no Spark-written footer is there to read (such a version
+    reads through inference, like one committed before schemas were
+    recorded)."""
+    base = None if info is None else info.get("meta", {}).get("schema")
+    if written is None and base is not None:
+        return {"schema": base}
+    files = list(_iter_data_files(data_dir))
+    data = _footer_schema(written or files[0][1]) if files else None
+    if data is None:
+        return {}
+    if all(os.sep not in rel for rel, _p in files):
+        return {"schema": data}
+    return {"schema": _read_version(
+        spark, {"data_dir": data_dir, "meta": {"schema": data}})
+        .schema.json()}
 
 
 # ---------------------------------------------------------------------------
@@ -403,6 +520,8 @@ def read_table(spark: SparkSession, root: str,
 # ---------------------------------------------------------------------------
 
 _WHERE_OPS = ("=", "!=", "<", "<=", ">", ">=", "in", "isnull", "isnotnull")
+_COMPARE_OPS = {"=": operator.eq, "!=": operator.ne, "<": operator.lt,
+                "<=": operator.le, ">": operator.gt, ">=": operator.ge}
 
 
 def _comparable(bound, val):
@@ -510,8 +629,8 @@ def write_table_stats(root: str, cols: list[str],
     mid-backfill simply prunes nothing), and subsequent
     ``manifest_upsert``/``compact_table`` commits inherit the column
     set.  Returns the number of files covered."""
-    return filestats.write_stats_parquet(_version_data_dir(root, version),
-                                         cols)
+    return filestats.write_stats_parquet(
+        _version_info(root, version)["data_dir"], cols)
 
 
 def upgrade_table_stats(root: str, version: int | None = None) -> dict:
@@ -538,7 +657,7 @@ def upgrade_table_stats(root: str, version: int | None = None) -> dict:
 
     import pyarrow as pa
 
-    data_dir = _version_data_dir(root, version)
+    data_dir = _version_info(root, version)["data_dir"]
     out: dict = {"stats_files": None, "bloom_cols": [],
                  "removed_legacy": 0}
     names = os.listdir(data_dir)
@@ -636,12 +755,13 @@ def _inherited_bloom_spec(info: dict | None) -> dict[str, dict]:
     return spec
 
 
-def _write_bloom_cols(spark: SparkSession, data_dir: str,
+def _write_bloom_cols(spark: SparkSession, version: dict,
                       spec: dict[str, dict],
                       base_dir: str | None = None) -> int:
     """Build/carry the per-column Bloom PARQUET sidecars for a version
-    dir — the one bloom builder: commits (``_finalize_bloom``) and the
-    ``write_table_bloom`` backfill both run it, hashing each value's
+    (a commit payload: its ``data_dir`` and the ``meta`` schema the scan
+    reads with) — the one bloom builder: commits (``_finalize_bloom``)
+    and the ``write_table_bloom`` backfill both run it, hashing each value's
     string cast with Spark's ``xxhash64`` exactly as
     ``_bloom_probe_bits`` hashes the probe literals.  ``base_dir``
     enables the Delta carry-forward shape: a relpath
@@ -666,8 +786,7 @@ def _write_bloom_cols(spark: SparkSession, data_dir: str,
     from pyspark.sql import functions as F
     from pyspark.sql.functions import pandas_udf
 
-    from .readers import _nanos_ts_columns, ensure_session_confs
-
+    data_dir = version["data_dir"]
     cur = dict(_iter_data_files(data_dir))  # rel -> abs path
     rels_now = pa.array(sorted(cur), type=pa.string())
     carried: dict[str, "pa.Table"] = {}
@@ -688,12 +807,7 @@ def _write_bloom_cols(spark: SparkSession, data_dir: str,
     need = sorted(set().union(*missing_by_col.values())) if spec else []
     built: dict[str, "pa.Table"] = {}
     if need and spec:
-        ensure_session_confs(spark)
-        df = spark.read.option("basePath", data_dir).parquet(
-            *[cur[rel] for rel in need])
-        for c in _nanos_ts_columns(data_dir):
-            df = df.withColumn(
-                c, F.expr(f"timestamp_micros(`{c}` div 1000)"))
+        df = _read_version(spark, version, files=need)
         for col, s in spec.items():
             missing = set(missing_by_col[col])
             if not missing or col not in df.columns:
@@ -776,11 +890,11 @@ def _write_bloom_cols(spark: SparkSession, data_dir: str,
     return total
 
 
-def _finalize_bloom(spark: SparkSession, data_dir: str,
+def _finalize_bloom(spark: SparkSession, version: dict,
                     info: dict | None,
                     columns: list[str] | None = None) -> dict:
     """Carry the base version's bloom registration into a fully-written
-    (pre-commit) version dir and return the commit-meta fragment — the
+    (pre-commit) ``version`` and return the commit-meta fragment — the
     bloom analogue of ``_finalize_stats``: hardlinked files reuse their
     filter bytes, only new files scan, and ``_commit`` calls this for
     EVERY writer so point-lookup skipping survives normal writes instead
@@ -790,7 +904,7 @@ def _finalize_bloom(spark: SparkSession, data_dir: str,
         spec = {c: s for c, s in spec.items() if c in columns}
     if not spec:
         return {}
-    _write_bloom_cols(spark, data_dir, spec,
+    _write_bloom_cols(spark, version, spec,
                       base_dir=info["data_dir"] if info else None)
     return {"bloom": spec}
 
@@ -820,18 +934,18 @@ def write_table_bloom(spark: SparkSession, root: str, cols: list[str],
     (O(touched) per commit), and the registration rides in commit meta
     like ``stats_cols``, so a continuously-written table keeps its
     point-lookup skipping without ever re-scanning the whole column."""
-    data_dir = _version_data_dir(root, version)
     spec = {c: {"bits": int(bits), "k": int(k_hashes)} for c in cols}
-    return _write_bloom_cols(spark, data_dir, spec)
+    return _write_bloom_cols(spark, _version_info(root, version), spec)
 
 
 def _bloom_probe_bits(spark: SparkSession, schema, col: str, vals: list,
                       bits: int, k_hashes: int) -> list[list[int]] | None:
     """Each literal's bit positions under the SAME canonicalization the
-    build used — ONE 1-row Spark job for the whole value list (chunked
-    at 256 values to bound plan width), or None when any literal can't
-    be cast to the column's type (then bloom pruning abstains for the
-    whole predicate)."""
+    build used — evaluated over a one-row ``VALUES`` relation, which
+    Spark folds into a local relation and collects without a job
+    (chunked at 256 values to bound plan width) — or None when any
+    literal can't be cast to the column's type (then bloom pruning
+    abstains for the whole predicate)."""
     from pyspark.sql import functions as F
 
     try:
@@ -841,7 +955,7 @@ def _bloom_probe_bits(spark: SparkSession, schema, col: str, vals: list,
     out: list[list[int]] = []
     for start in range(0, len(vals), 256):
         chunk = vals[start:start + 256]
-        row = spark.range(1).select(*[
+        row = spark.sql("VALUES (1)").select(*[
             F.pmod(F.xxhash64(F.lit(v).cast(dt).cast("string"), F.lit(i)),
                    F.lit(bits)).cast("int").alias(f"b_{j}_{i}")
             for j, v in enumerate(chunk) for i in range(k_hashes)]).head()
@@ -945,15 +1059,13 @@ def alter_table_constraints(spark: SparkSession, root: str,
     version: every data file HARDLINKS into the new version, so the
     commit costs O(files) metadata ops and zero data bytes.  Returns the
     committed version."""
-    from .readers import read_parquet
-
     def write(info, data_dir):
-        base_dir = _base_dir(info, root)
+        base = _require_base(info, root)
         cons = _inherited_constraints(info)
         for name in (drop or []):
             cons.pop(name, None)
         if add:
-            _enforce_constraints(read_parquet(spark, base_dir), dict(add))
+            _enforce_constraints(_read_version(spark, base), dict(add))
             cons.update(add)
         return _Written(None, {"constraints": cons}, link_except=())
 
@@ -989,7 +1101,7 @@ def _finalize_stats(data_dir: str, scols: list[str],
     return {"stats_cols": present}
 
 
-def _read_pruned(spark: SparkSession, data_dir: str,
+def _read_pruned(spark: SparkSession, info: dict,
                  where: list[tuple]) -> DataFrame:
     """The pruned scan behind ``read_table(where=…)``: driver-side file
     elimination from the parquet sidecars + partition path segments,
@@ -997,8 +1109,6 @@ def _read_pruned(spark: SparkSession, data_dir: str,
     partition columns), with the full predicate re-applied as the
     residual filter."""
     from pyspark.sql import functions as F
-
-    from .readers import _nanos_ts_columns, ensure_session_confs, read_parquet
 
     for p in where:
         if len(p) != 3 or p[1] not in _WHERE_OPS:
@@ -1019,15 +1129,14 @@ def _read_pruned(spark: SparkSession, data_dir: str,
             return c.isNotNull()
         if op == "in":
             return c.isin(val)
-        return {"=": c == F.lit(val), "!=": c != F.lit(val),
-                "<": c < F.lit(val), "<=": c <= F.lit(val),
-                ">": c > F.lit(val), ">=": c >= F.lit(val)}[op]
+        return _COMPARE_OPS[op](c, F.lit(val))
 
     resid = None
     for col, op, val in where:
         p = _pred(col, op, val)
         resid = p if resid is None else (resid & p)
 
+    data_dir = info["data_dir"]
     if not os.path.exists(filestats.stats_parquet_path(data_dir)) and any(
             f in ("_stats.json", "_bloom.json")
             or (f.startswith(("_statscol-", "_bloom-"))
@@ -1039,27 +1148,21 @@ def _read_pruned(spark: SparkSession, data_dir: str,
             f"upgrade_table_stats on this version to restore stats and "
             f"bloom pruning.", stacklevel=3)
 
-    schema_cache: list = []
+    schema = _version_schema(info)
 
     def _bits_fn(col, vals, bits, k):
-        if not schema_cache:
-            schema_cache.append(read_parquet(spark, data_dir).schema)
-        return _bloom_probe_bits(spark, schema_cache[0], col, vals,
-                                 int(bits), int(k))
+        return _bloom_probe_bits(
+            spark, _read_version(spark, info).schema if schema is None
+            else schema, col, vals, int(bits), int(k))
 
     survivors, total = filestats.prune_with_stats_parquet(
         data_dir, where, _bits_fn)
     if not survivors:
         # nothing can match: an empty frame with the table's full schema
-        return read_parquet(spark, data_dir).filter(resid).limit(0)
+        return _read_version(spark, info).filter(resid).limit(0)
     if len(survivors) == total:
-        return read_parquet(spark, data_dir).filter(resid)
-    ensure_session_confs(spark)
-    df = spark.read.option("basePath", data_dir).parquet(
-        *[os.path.join(data_dir, r) for r in survivors])
-    for c in _nanos_ts_columns(data_dir):
-        df = df.withColumn(c, F.expr(f"timestamp_micros(`{c}` div 1000)"))
-    return df.filter(resid)
+        return _read_version(spark, info).filter(resid)
+    return _read_version(spark, info, files=survivors).filter(resid)
 
 
 def _link_tree(src_root: str, dst_root: str, skip=()) -> None:
@@ -1097,11 +1200,12 @@ class _Written(NamedTuple):
     link_except: tuple | list | None = None
 
 
-def _base_dir(info: dict | None, root: str) -> str:
-    """The base version's data dir, for writers that need a table."""
+def _require_base(info: dict | None, root: str) -> dict:
+    """The base version's commit payload, for writers that need a
+    table."""
     if info is None:
         raise FileNotFoundError(f"no committed version under {root!r}")
-    return info["data_dir"]
+    return info
 
 
 def _touched_partitions(frame: DataFrame, partition_by: list[str]):
@@ -1139,17 +1243,18 @@ def _commit(spark: SparkSession, root: str, verb: str, write, *,
     when there is nothing to commit, and then the base version returns.
     Then, in order: the CHECK constraints are enforced on the written
     rows (before any hardlink, so the check reads O(written)); base files
-    hardlink in; the txn watermarks, constraints, stats columns
-    (``stats_cols`` overrides the inherited set, ``[]`` stops it) and
-    bloom filters of the base carry over; the version is claimed.  A lost
-    claim removes the data dir and reruns on the winner's table; any
-    other failure removes it and re-raises.  ``txn=(txn_app, batch_id)``
+    hardlink in; the version's schema is recorded as ``meta["schema"]``
+    (``StructType.json()``, exactly what ``spark.read.parquet`` of the
+    data dir infers, derived without a job — see ``_schema_meta`` — so
+    no later read of this version infers it); the txn watermarks,
+    constraints, stats columns (``stats_cols`` overrides the inherited
+    set, ``[]`` stops it) and bloom filters of the base carry over; the
+    version is claimed.  A lost claim removes the data dir and reruns on
+    the winner's table; any other failure removes it and re-raises.  ``txn=(txn_app, batch_id)``
     guards a streaming micro-batch: every attempt first checks
     ``_replayed_batch`` (a replay commits nothing) and the commit
     advances that watermark.  ``keep_versions`` vacuums after the commit
     (None: no vacuum).  Returns the committed version."""
-    from .readers import read_parquet
-
     for _attempt in range(max_retries):
         info = latest_commit_info(root)
         base_version = None if info is None else info["version"]
@@ -1166,17 +1271,24 @@ def _commit(spark: SparkSession, root: str, verb: str, write, *,
             cons = meta.pop("constraints", None)
             if cons is None:
                 cons = _inherited_constraints(info)
-            if cons and next(_iter_data_files(data_dir), None) is not None:
-                _enforce_constraints(read_parquet(spark, data_dir), cons)
+            written = next(_iter_data_files(data_dir), (None, None))[1]
+            if cons and written is not None:
+                # the written files' own columns; partition columns are
+                # discovered from their paths
+                own = {"data_dir": data_dir,
+                       "meta": {"schema": _footer_schema(written)}}
+                _enforce_constraints(_read_version(spark, own), cons)
             base_dir = None if info is None else info["data_dir"]
             if base_dir is not None and out.link_except is not None:
                 _link_tree(base_dir, data_dir, out.link_except)
+            meta.update(_schema_meta(spark, data_dir, written, info))
             scols = _inherited_stats_cols(info, stats_cols)
             meta.update(_finalize_stats(
                 data_dir, scols, scols if out.columns is None
                 else out.columns, base_dir=base_dir))
-            meta.update(_finalize_bloom(spark, data_dir, info,
-                                        columns=out.columns))
+            meta.update(_finalize_bloom(
+                spark, {"data_dir": data_dir, "meta": meta}, info,
+                columns=out.columns))
             if cons:
                 meta["constraints"] = cons
             txns = _inherited_txns(info)
@@ -1241,8 +1353,6 @@ def manifest_upsert(spark: SparkSession, root: str, updates: DataFrame,
     before while results stay exact."""
     from pyspark.sql import functions as F
 
-    from .readers import read_parquet
-
     if schema_evolution and partition_by:
         raise ValueError(
             "schema_evolution needs a full-table rewrite per version; "
@@ -1257,7 +1367,7 @@ def manifest_upsert(spark: SparkSession, root: str, updates: DataFrame,
                 w = w.partitionBy(*partition_by)
             w.parquet(data_dir)
             return _Written(updates.columns)
-        base = read_parquet(spark, info["data_dir"])
+        base = _read_version(spark, info)
         keys = F.broadcast(updates.select(*key_cols).distinct())
         if partition_by:
             touched = _touched_partitions(updates, partition_by)
@@ -1369,8 +1479,6 @@ def manifest_delete(spark: SparkSession, root: str, keys: DataFrame,
     rewritten, untouched partition files hardlink into the new version."""
     from pyspark.sql import functions as F
 
-    from .readers import read_parquet
-
     if partition_by:
         missing = [c for c in partition_by if c not in keys.columns]
         if missing:
@@ -1380,7 +1488,7 @@ def manifest_delete(spark: SparkSession, root: str, keys: DataFrame,
                 f"would be rewritten — pass partition_by=None for that)")
 
     def write(info, data_dir):
-        base = read_parquet(spark, _base_dir(info, root))
+        base = _read_version(spark, _require_base(info, root))
         k = F.broadcast(keys.select(*key_cols).distinct())
         if partition_by:
             touched = _touched_partitions(keys, partition_by)
@@ -1579,7 +1687,8 @@ def compact_table(spark: SparkSession, root: str, target_bytes: int,
         min_file_bytes = target_bytes // 2
 
     def write(info, data_dir):
-        base_dir = _base_dir(info, root)
+        base = _require_base(info, root)
+        base_dir = base["data_dir"]
         groups: dict[str, list[tuple[str, int]]] = {}
         for rel, p in _iter_data_files(base_dir):
             size = os.path.getsize(p)
@@ -1592,8 +1701,11 @@ def compact_table(spark: SparkSession, root: str, target_bytes: int,
         for rel_dir, fs in groups.items():
             n_out = max(1, (sum(s for _r, s in fs)
                             + target_bytes - 1) // target_bytes)
-            df = spark.read.parquet(*[os.path.join(base_dir, r)
-                                      for r, _s in fs])
+            # the rewrite holds only the data columns: the partition
+            # columns stay in the preserved directory name
+            df = _read_version(spark, base, files=[r for r, _s in fs]) \
+                .drop(*[seg.partition("=")[0]
+                        for seg in rel_dir.split(os.sep) if "=" in seg])
             if zorder_by:
                 from .layout import zorder_key
 
@@ -1655,14 +1767,12 @@ def manifest_merge(spark: SparkSession, root: str, source: DataFrame,
     values; inserts match and update to the same values)."""
     from pyspark.sql import functions as F
 
-    from .readers import read_parquet
-
     missing = [k for k in key_cols if k not in source.columns]
     if missing:
         raise ValueError(f"merge source is missing key columns {missing}")
 
     def write(info, data_dir):
-        base = read_parquet(spark, _base_dir(info, root))
+        base = _read_version(spark, _require_base(info, root))
         out_cols = base.columns
         data_cols = [c for c in source.columns if c not in key_cols]
         t = base.select(

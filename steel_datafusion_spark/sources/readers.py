@@ -152,18 +152,29 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
 
     Manifest roots resolve transparently: a directory carrying a
     ``_commits/`` log (sources/manifest.py) reads as its newest committed
-    snapshot, so readers racing a ``merge_upsert`` never see a torn
-    table — they get whole version N or whole version N+1."""
-    from pyspark.sql import functions as F
-
-    from .manifest import is_manifest_root, latest_commit
+    snapshot, with the schema its commit recorded (no inference job), so
+    readers racing a ``merge_upsert`` never see a torn table — they get
+    whole version N or whole version N+1."""
+    from .manifest import _read_version, is_manifest_root, latest_commit_info
 
     ensure_session_confs(spark)
     if os.path.isdir(path) and is_manifest_root(path):
-        path = latest_commit(path)[1]
-    df = spark.read.parquet(path)
+        return _read_version(spark, latest_commit_info(path))
+    return _with_micros(spark.read.parquet(path), path)
+
+
+def _with_micros(df: DataFrame, path: str) -> DataFrame:
+    """``df`` (read from ``path``) with each nanosecond-timestamp column
+    that Spark read as long converted to a µs timestamp.  A column
+    pyarrow reports as ns but Spark reads as a timestamp (INT96, Spark's
+    default timestamp encoding) is left as it is."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import LongType
+
     for c in _nanos_ts_columns(path):
-        df = df.withColumn(c, F.expr(f"timestamp_micros(`{c}` div 1000)"))
+        if isinstance(df.schema[c].dataType, LongType):
+            df = df.withColumn(
+                c, F.expr(f"timestamp_micros(`{c}` div 1000)"))
     return df
 
 

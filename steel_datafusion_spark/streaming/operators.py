@@ -381,7 +381,9 @@ def streaming_view_maintenance(
     import os as _os2
 
     from ..pipeline.cdc import agg_state, merge_agg_state
-    from ..sources.manifest import _commit, _Written, latest_commit, read_table
+    from ..sources.manifest import (
+        _commit, _read_version, _Written, latest_commit, read_table,
+    )
 
     stream = (spark.readStream.schema(schema)
               .option("maxFilesPerTrigger", max_files_per_trigger)
@@ -395,8 +397,8 @@ def streaming_view_maintenance(
         def write(info, data_dir):
             part = agg_state(batch_df, list(key_cols), value_col)
             if info is not None:
-                part = merge_agg_state(spark.read.parquet(info["data_dir"]),
-                                       part, list(key_cols))
+                part = merge_agg_state(_read_version(spark, info), part,
+                                       list(key_cols))
             part.write.mode("overwrite").parquet(data_dir)
             return _Written(part.columns)
 

@@ -2299,3 +2299,380 @@ def test_commit_carries_stats_and_bloom_from_predecessor_version(
     # the rewritten p=1 files were scanned afresh: the new uid is found
     hit = read_table(spark, out, where=[("uid", "=", "changed")])
     assert hit.count() == 500
+
+
+# ---------------------------------------------------------------------------
+# Schemas in the commit log: every commit records its version's schema,
+# and no read of a committed version starts Spark's inference job.
+# ---------------------------------------------------------------------------
+
+def _jobs_of(spark, fn):
+    """(``fn()``, ids of the Spark jobs it launched) — counted through a
+    job group once the listener bus has delivered every event."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"budget-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.fixture(scope="module")
+def skipping_table(spark, tmp_path_factory):
+    """A two-version table with stats on ``k`` (four range-clustered
+    files) and a bloom filter on ``uid``; yields (root, as_of instant
+    of version 1, uid of k=777)."""
+    import time as _time
+
+    from steel_datafusion_spark.sources.manifest import (
+        manifest_upsert, write_table_bloom,
+    )
+
+    root = str(tmp_path_factory.mktemp("budget") / "t")
+    df = spark.range(4000).select(
+        F.col("id").alias("k"),
+        F.md5(F.col("id").cast("string")).alias("uid"),
+        (F.col("id") * 0.5).alias("v"))
+    manifest_upsert(spark, root, df.repartitionByRange(4, "k"), ["k"],
+                    stats_cols=["k"], keep_versions=10)
+    write_table_bloom(spark, root, ["uid"], bits=1 << 14)
+    as_of = _time.time()
+    _time.sleep(0.05)
+    manifest_upsert(spark, root, df.filter(F.col("k") < 10)
+                    .withColumn("v", F.lit(-1.0)), ["k"], keep_versions=10)
+    uid = df.filter(F.col("k") == 777).head().uid
+    yield root, as_of, uid
+
+
+@pytest.mark.parametrize("form", ["newest", "version", "as_of",
+                                  "where_some", "where_all", "where_none",
+                                  "where_bloom"])
+def test_committed_read_launches_no_job(spark, skipping_table, form):
+    """Building a ``read_table`` frame of a committed version — newest,
+    time travel, or pruned with some, all or no files surviving, a bloom
+    probe included — starts no Spark job: the schema comes from the
+    commit, not from an inference job over the files."""
+    from steel_datafusion_spark.sources.manifest import read_table
+
+    root, as_of, uid = skipping_table
+    kwargs, rows = {
+        "newest": ({}, 4000),
+        "version": ({"version": 1}, 4000),
+        "as_of": ({"as_of": as_of}, 4000),
+        "where_some": ({"where": [("k", "<", 100)]}, 100),
+        "where_all": ({"where": [("k", ">=", 0)]}, 4000),
+        "where_none": ({"where": [("k", ">", 10 ** 9)]}, 0),
+        "where_bloom": ({"where": [("uid", "=", uid)]}, 1),
+    }[form]
+    df, jobs = _jobs_of(spark, lambda: read_table(spark, root, **kwargs))
+    assert jobs == []
+    assert df.count() == rows
+    if form in ("where_some", "where_bloom"):  # the survivors-only read
+        assert len(df.inputFiles()) < len(read_table(spark, root)
+                                          .inputFiles())
+
+
+def test_read_parquet_of_manifest_root_launches_no_job(spark,
+                                                       skipping_table):
+    from steel_datafusion_spark.sources.readers import read_parquet
+
+    root, _as_of, _uid = skipping_table
+    df, jobs = _jobs_of(spark, lambda: read_parquet(spark, root))
+    assert jobs == []
+    assert df.count() == 4000
+
+
+def test_with_delta_launches_no_job(spark, tmp_path):
+    """The base ∪ delta read of an index table builds without a job."""
+    from steel_datafusion_spark.sources.bucketing import drop_managed_table
+    from steel_datafusion_spark.sources.index_tables import with_delta
+    from steel_datafusion_spark.sources.manifest import manifest_upsert
+
+    table = "budget_with_delta"
+    drop_managed_table(spark, table)
+    rows = spark.range(20).select(F.col("id").alias("k"),
+                                  (F.col("id") * 2).alias("v"))
+    rows.write.bucketBy(2, "k").sortBy("k").saveAsTable(table)
+    delta = str(tmp_path / "delta")
+    manifest_upsert(spark, delta, rows.filter(F.col("k") < 5), ["k"])
+    try:
+        df, jobs = _jobs_of(spark, lambda: with_delta(spark, table, delta))
+        assert jobs == []
+        assert df.count() == 25
+    finally:
+        drop_managed_table(spark, table)
+
+
+def _assert_schema_recorded(spark, root):
+    """The newest commit's recorded schema is exactly what Spark infers
+    from the version's data dir."""
+    from steel_datafusion_spark.sources.manifest import latest_commit_info
+
+    info = latest_commit_info(root)
+    inferred = spark.read.parquet(info["data_dir"]).schema.json()
+    assert info["meta"]["schema"] == inferred
+
+
+def _wide(spark, lo, hi, p_of=lambda i: str(i % 2)):
+    """Rows with nested and timestamp columns and a string partition
+    column whose values look like integers (Spark infers int)."""
+    import datetime as _dt
+
+    return spark.createDataFrame(
+        [(i, f"s{i}", [i, i + 1], {"a": i}, (i, f"n{i}"),
+          _dt.datetime(2024, 1, 1 + i % 28), p_of(i))
+         for i in range(lo, hi)],
+        "k long not null, s string, arr array<long>, m map<string,long>, "
+        "st struct<x:long,y:string>, ts timestamp, p string")
+
+
+def _w_upsert_first(spark, root, tmp_path):
+    from steel_datafusion_spark.sources.manifest import manifest_upsert
+
+    manifest_upsert(spark, root, _wide(spark, 0, 20), ["k"])
+
+
+def _w_upsert(spark, root, tmp_path):
+    from steel_datafusion_spark.sources.manifest import manifest_upsert
+
+    _w_upsert_first(spark, root, tmp_path)
+    _assert_schema_recorded(spark, root)
+    manifest_upsert(spark, root, _wide(spark, 10, 30), ["k"])
+
+
+def _w_upsert_partitioned(spark, root, tmp_path):
+    """The second upsert adds partition directory p=2."""
+    from steel_datafusion_spark.sources.manifest import manifest_upsert
+
+    manifest_upsert(spark, root, _wide(spark, 0, 20), ["k"],
+                    partition_by=["p"])
+    _assert_schema_recorded(spark, root)
+    manifest_upsert(spark, root, _wide(spark, 30, 35, lambda i: "2"),
+                    ["k"], partition_by=["p"])
+
+
+def _w_upsert_evolution(spark, root, tmp_path):
+    from steel_datafusion_spark.sources.manifest import manifest_upsert
+
+    _w_upsert_first(spark, root, tmp_path)
+    manifest_upsert(spark, root, _wide(spark, 5, 8)
+                    .withColumn("extra", F.lit(1.5)), ["k"],
+                    schema_evolution=True)
+
+
+def _w_merge(spark, root, tmp_path):
+    from steel_datafusion_spark.sources.manifest import manifest_merge
+
+    _w_upsert_first(spark, root, tmp_path)
+    manifest_merge(spark, root, _wide(spark, 10, 30), ["k"])
+
+
+def _w_delete(spark, root, tmp_path):
+    from steel_datafusion_spark.sources.manifest import (
+        manifest_delete, manifest_upsert,
+    )
+
+    manifest_upsert(spark, root, _wide(spark, 0, 20), ["k"],
+                    partition_by=["p"])
+    manifest_delete(spark, root, _wide(spark, 0, 3), ["k"],
+                    partition_by=["p"])
+
+
+def _w_compact(spark, root, tmp_path):
+    from steel_datafusion_spark.sources.manifest import (
+        compact_table, latest_commit, manifest_upsert,
+    )
+
+    manifest_upsert(spark, root, _wide(spark, 0, 40).repartition(8),
+                    ["k"], partition_by=["p"])
+    v = latest_commit(root)[0]
+    assert compact_table(spark, root, target_bytes=1 << 20) == v + 1
+
+
+def _w_compact_zorder(spark, root, tmp_path):
+    from steel_datafusion_spark.sources.manifest import (
+        compact_table, latest_commit, manifest_upsert,
+    )
+
+    manifest_upsert(spark, root, _wide(spark, 0, 40).repartition(8),
+                    ["k"])
+    v = latest_commit(root)[0]
+    assert compact_table(spark, root, target_bytes=1 << 20,
+                         zorder_by=["k"]) == v + 1
+
+
+def _w_alter(spark, root, tmp_path):
+    from steel_datafusion_spark.sources.manifest import (
+        alter_table_constraints, manifest_upsert,
+    )
+
+    manifest_upsert(spark, root, _wide(spark, 0, 20), ["k"],
+                    partition_by=["p"])
+    alter_table_constraints(spark, root, add={"k_pos": "k >= 0"})
+
+
+def _w_stream_append(spark, root, tmp_path):
+    from steel_datafusion_spark.streaming.operators import (
+        streaming_append_table,
+    )
+
+    src = str(tmp_path / "src")
+    rows = _wide(spark, 0, 20)
+    rows.repartition(2).write.parquet(src)
+    streaming_append_table(spark, src, rows.schema, root,
+                           str(tmp_path / "work"), max_files_per_trigger=1)
+
+
+def _w_view(spark, root, tmp_path):
+    from steel_datafusion_spark.streaming.operators import (
+        streaming_view_maintenance,
+    )
+
+    src = str(tmp_path / "src")
+    rows = spark.createDataFrame([(i % 3, float(i)) for i in range(30)],
+                                 "k int, v double")
+    rows.repartition(2).write.parquet(src)
+    streaming_view_maintenance(spark, src, rows.schema, ["k"], "v", root,
+                               max_files_per_trigger=1)
+    return os.path.join(root, "view")
+
+
+def _w_reset_delta(spark, root, tmp_path):
+    from steel_datafusion_spark.sources.index_tables import reset_delta
+
+    _w_upsert_first(spark, root, tmp_path)
+    reset_delta(spark, root, "budget_index")
+
+
+_WRITERS = {
+    "upsert_first": _w_upsert_first, "upsert": _w_upsert,
+    "upsert_partitioned_new_value": _w_upsert_partitioned,
+    "upsert_schema_evolution": _w_upsert_evolution, "merge": _w_merge,
+    "delete_partitioned": _w_delete, "compact_partitioned": _w_compact,
+    "compact_zorder": _w_compact_zorder, "alter_constraints": _w_alter,
+    "streaming_append": _w_stream_append, "streaming_view": _w_view,
+    "reset_delta": _w_reset_delta,
+}
+
+
+@pytest.mark.parametrize("writer", sorted(_WRITERS))
+def test_commit_records_inferred_schema(spark, tmp_path, writer):
+    """Every writer records ``meta["schema"]`` equal to Spark's own
+    inference over the version it committed — nested types, INT96
+    timestamps and inferred partition column types included — and the
+    table reads back with that schema."""
+    from steel_datafusion_spark.sources.manifest import (
+        latest_commit_info, read_table,
+    )
+
+    root = _WRITERS[writer](spark, str(tmp_path / "t"), tmp_path) \
+        or str(tmp_path / "t")
+    _assert_schema_recorded(spark, root)
+    df = read_table(spark, root)
+    assert df.schema.json() == latest_commit_info(root)["meta"]["schema"]
+    assert df.count() >= 0
+
+
+def test_pruned_read_keeps_version_partition_types(spark, tmp_path):
+    """A pruned read keeps the version's partition column types even when
+    its surviving files alone would infer another: p holds "1" and "x",
+    so it is a string column, and the read of p=1 alone stays string."""
+    from pyspark.sql.types import StringType
+
+    from steel_datafusion_spark.sources.manifest import (
+        manifest_upsert, read_table,
+    )
+
+    root = str(tmp_path / "t")
+    manifest_upsert(spark, root, _wide(spark, 0, 20,
+                                       lambda i: "x" if i % 2 else "1"),
+                    ["k"], partition_by=["p"])
+    _assert_schema_recorded(spark, root)
+    pruned = read_table(spark, root, where=[("p", "=", "1")])
+    assert len(pruned.inputFiles()) < len(read_table(spark, root)
+                                          .inputFiles())
+    assert isinstance(pruned.schema["p"].dataType, StringType)
+    assert sorted(r.k for r in pruned.collect()) == list(range(0, 20, 2))
+
+
+def test_read_table_keeps_spark_timestamps(spark, tmp_path):
+    """A table with a timestamp column (Spark writes INT96, which pyarrow
+    reports as nanoseconds) reads back as timestamps, pruned or not."""
+    import datetime as _dt
+
+    from steel_datafusion_spark.sources.manifest import (
+        manifest_upsert, read_table,
+    )
+
+    root = str(tmp_path / "t")
+    manifest_upsert(spark, root, _wide(spark, 0, 20), ["k"],
+                    stats_cols=["k"])
+    got = {r.k: r.ts for r in read_table(spark, root).collect()}
+    assert got[3] == _dt.datetime(2024, 1, 4)
+    pruned = read_table(spark, root, where=[("k", "=", 3)])
+    assert [r.ts for r in pruned.collect()] == [_dt.datetime(2024, 1, 4)]
+
+
+def test_version_without_recorded_schema_still_reads(spark, tmp_path):
+    """A version committed before schemas were recorded (its commit meta
+    has no ``schema``; this test deletes the key from the commit files
+    on purpose) reads through inference with the same rows and schema
+    in every ``read_table`` form, and the next upsert records one."""
+    import time as _time
+
+    from steel_datafusion_spark.sources.manifest import (
+        latest_commit_info, manifest_upsert, read_table,
+        write_table_bloom,
+    )
+    from steel_datafusion_spark.sources.readers import read_parquet
+
+    root = str(tmp_path / "t")
+    df = spark.range(2000).select(
+        F.col("id").alias("k"), (F.col("id") % 3).alias("p"),
+        F.md5(F.col("id").cast("string")).alias("uid"))
+    manifest_upsert(spark, root, df.repartitionByRange(4, "k"), ["k"],
+                    partition_by=["p"], stats_cols=["k"], keep_versions=10)
+    write_table_bloom(spark, root, ["uid"], bits=1 << 12)
+    as_of = _time.time()
+    _time.sleep(0.05)
+    manifest_upsert(spark, root, df.filter(F.col("k") < 30)
+                    .withColumn("uid", F.lit("changed")), ["k"],
+                    partition_by=["p"], keep_versions=10)
+    uid = df.filter(F.col("k") == 777).head().uid
+    reads = {
+        "newest": lambda: read_table(spark, root),
+        "version": lambda: read_table(spark, root, version=1),
+        "as_of": lambda: read_table(spark, root, as_of=as_of),
+        "some": lambda: read_table(spark, root, where=[("k", "<", 100)]),
+        "all": lambda: read_table(spark, root, where=[("k", ">=", 0)]),
+        "none": lambda: read_table(spark, root, where=[("k", "<", 0)]),
+        "bloom": lambda: read_table(spark, root, where=[("uid", "=", uid)]),
+        "part": lambda: read_table(spark, root, where=[("p", "=", 1)]),
+        "read_parquet": lambda: read_parquet(spark, root),
+    }
+
+    def snapshot():
+        return {name: (fn().schema.json(), sorted(map(tuple,
+                                                      fn().collect())))
+                for name, fn in reads.items()}
+
+    before = snapshot()
+    cdir = os.path.join(root, "_commits")
+    for f in os.listdir(cdir):
+        if f.startswith("v") and f.endswith(".json"):
+            with open(os.path.join(cdir, f)) as fh:
+                payload = json.load(fh)
+            assert payload["meta"].pop("schema")
+            with open(os.path.join(cdir, f), "w") as fh:
+                json.dump(payload, fh)
+    assert "schema" not in latest_commit_info(root)["meta"]
+    assert snapshot() == before
+    manifest_upsert(spark, root, df.filter(F.col("k") == 5), ["k"],
+                    partition_by=["p"], keep_versions=10)
+    _assert_schema_recorded(spark, root)
